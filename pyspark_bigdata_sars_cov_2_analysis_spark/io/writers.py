@@ -1380,8 +1380,10 @@ def _read_snapshot_files(
     spark, snap: dict, where: dict | None = None
 ) -> DataFrame:
     """Plan a scan over one manifest's immutable file list, honoring the
-    ``evolved`` flag (merge-read + manifest-order projection). With
-    ``where``, the list is first PRUNED by the manifest's per-file
+    ``evolved`` flag (merge-read + manifest-order projection); any other
+    version reads with the schema its manifest records, so planning runs
+    no schema-inference job (legacy schema-less manifests still infer).
+    With ``where``, the list is first PRUNED by the manifest's per-file
     min/max stats (missing stats keep the file) and the real predicate
     is applied on top — stats only ever skip work, never decide rows."""
     files = snap["files"]
@@ -1418,8 +1420,13 @@ def _read_snapshot_files(
             spark.read.option("mergeSchema", "true").parquet(*files),
             snap["schema"],
         )
+    elif snap.get("schema") is not None:
+        # the manifest's recorded schema IS what inference over these
+        # files gives (it was taken from their post-write read), so
+        # supplying it skips the schema-inference Spark job per read
+        df = spark.read.schema(_schema_ddl(snap["schema"])).parquet(*files)
     else:
-        df = spark.read.parquet(*files)
+        df = spark.read.parquet(*files)  # legacy manifest: no schema
     return df.where(cond) if cond is not None else df
 
 

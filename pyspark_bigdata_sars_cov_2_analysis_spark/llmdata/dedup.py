@@ -210,18 +210,31 @@ def lsh_bands(
     if num_hashes % band_rows:
         slices.append(range(n_bands * band_rows, num_hashes))
 
-    def _be4(c: Column) -> Column:
+    def _be4(name: str) -> Column:
         # u32 bigint -> 4-byte big-endian binary: hex() of a value in
         # [0, 2^32) is at most 8 chars, lpad+unhex fixes the width.
-        # All three run inside whole-stage codegen.
-        return F.unhex(F.lpad(F.hex(c), 8, "0"))
+        # Outside that range the hex would be truncated into a
+        # signature that collides with an in-range one, so the
+        # precondition is guarded row-locally (NULL stays NULL, as
+        # before). All of it runs inside whole-stage codegen.
+        c = F.col(name)
+        return F.when(
+            (c < 0) | (c > 0xFFFFFFFF),
+            F.raise_error(
+                F.concat(
+                    F.lit(f"lsh_bands: {name} is outside the unsigned "
+                          "32-bit range a band signature encodes: "),
+                    c.cast("string"),
+                )
+            ).cast("binary"),
+        ).otherwise(F.unhex(F.lpad(F.hex(c), 8, "0")))
 
     bands = F.array(
         *[
             F.struct(
                 F.lit(b).alias("band"),
                 F.concat(
-                    *[_be4(F.col(f"mh_{j}")) for j in sl]
+                    *[_be4(f"mh_{j}") for j in sl]
                 ).alias("band_sig"),
             )
             for b, sl in enumerate(slices)

@@ -15,15 +15,19 @@ Conventions that make the hashes match (SURVEY.md §7.3 "hard parts"):
 
 from __future__ import annotations
 
+import os
+import stat
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from pyspark_bigdata_sars_cov_2_analysis_spark.functions.compat import (  # noqa: F401
     pround,
     pyround,
     sql_round,
 )
+from pyspark_bigdata_sars_cov_2_analysis_spark.io import fs as _fs
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -95,10 +99,79 @@ def release_plan_caches() -> int:
     return n
 
 
+# Schema cache for table() (PAPERS.md: Running Presto at Scale — serve
+# repeated reads from cached file metadata): spark.read.parquet(path) runs
+# one schema-inference Spark job per call: 95-130 ms against 20-25 ms for
+# the same read with its schema supplied (local[1], one CPU of a 4-core
+# KVM host, sf0.001 lineitem/orders). The cached value is Spark's own
+# inferred StructType, field metadata included, so every plan is exactly
+# what inference would have built. The key holds everything inference
+# depends on — the input's file sizes and mtimes and the session confs
+# that change parquet type mapping — so a rewritten input or a flipped
+# conf infers again. One entry per (path, confs): a rewrite replaces its
+# entry rather than adding one.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+_SCHEMAS_LOCK = _threading.Lock()
+
+
+def _input_identity(path: str) -> tuple[str, tuple] | None:
+    """``(absolute path, identity)`` of a local parquet input: the size
+    and mtime of a file, or the relative name, size and mtime of every
+    file under a directory. None when the input is not on the local file
+    system or cannot be stat'ed — such reads infer every time (and a
+    missing path fails in Spark with Spark's own error)."""
+    try:
+        if _fs.for_path(path) is not _fs.LOCAL:
+            return None
+        local = _fs.LOCAL.absolute(_fs.LOCAL.resolve(path))
+        st = os.stat(local)
+        if not stat.S_ISDIR(st.st_mode):
+            return local, (st.st_size, st.st_mtime_ns)
+        files = []
+        for root, _dirs, names in os.walk(local):
+            for n in names:
+                f = os.path.join(root, n)
+                fst = os.stat(f)
+                files.append((os.path.relpath(f, local), fst.st_size, fst.st_mtime_ns))
+        return local, tuple(sorted(files))
+    except (NotImplementedError, ValueError, OSError):
+        return None
+
+
+def _parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """Spark's inferred schema of the parquet input at ``path``, inferred
+    once per (input identity, inference confs) — see ``_SCHEMAS``."""
+    ident = _input_identity(path)
+    if ident is None:
+        return spark.read.parquet(path).schema
+    local, identity = ident
+    key = (local, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    with _SCHEMAS_LOCK:
+        hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == identity:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[key] = (identity, schema)
+    return schema
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table (TESTDATA.md).
 
-    ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark's vectorized
+    The read carries its schema explicitly: Spark's inferred schema,
+    resolved once per input and cached (``_parquet_schema``), so building
+    a query runs no schema-inference Spark job after the first read of
+    each table.
+
+    ``events.ts`` may be parquet TIMESTAMP(NANOS), which Spark's vectorized
     reader rejects; with ``spark.sql.legacy.parquet.nanosAsLong`` it lands
     as a bigint of nanos and we rebuild the timestamp by integer floor-div
     to micros — the same truncation DuckDB applies reading ns into its
@@ -117,9 +190,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # the instant interpretation is identical either way (and matches
     # DuckDB's naive read), so pin inference off for a plain TIMESTAMP.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = _parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
+        ts_type = next(
+            (f.dataType.simpleString() for f in schema if f.name == "ts"), None
+        )
         from pyspark.sql import functions as F
 
         if ts_type == "bigint":

@@ -51,6 +51,15 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
+    # Python workers (UDFs, pandas UDFs, Python data sources) import this
+    # package by name; point them at the directory that holds it, so the
+    # import does not depend on the driver's current directory. Spark
+    # merges this with the workers' own PYTHONPATH. On a cluster whose
+    # executors lack this path it is inert — ship the package with
+    # --py-files there.
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    ),
 }
 
 

@@ -71,6 +71,43 @@ def test_vanilla_session_events_contract():
     assert got["unix_micros_ok"], got
 
 
+WORKER_PROBE = r"""
+import sys
+sys.path[:0] = [{repo!r}, {tests!r}]
+import oracle_harness
+from pyspark_bigdata_sars_cov_2_analysis_spark import plans, start_session
+
+spark = start_session("worker-import-probe", master="local[1]")
+name = "u05_grouped_forecast"
+oracle_harness.compare(spark, name, plans.QUERIES[name], plans.ORACLES[name], {sf!r})
+print("WORKERS_IMPORTED")
+spark.stop()
+"""
+
+
+def test_python_workers_import_package_from_any_cwd(tmp_path):
+    """Python workers find the package through the session's executor
+    PYTHONPATH, not the driver's current directory: a driver started
+    outside the checkout, with no PYTHONPATH in its environment, runs a
+    pandas-UDF query (u05) to its oracle's result."""
+    from tests.conftest import SF_TEST
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    probe = WORKER_PROBE.format(
+        repo=REPO, tests=os.path.join(REPO, "tests"), sf=SF_TEST
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", probe],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=str(tmp_path),
+        env=env,
+    )
+    assert "WORKERS_IMPORTED" in proc.stdout, proc.stderr[-3000:]
+
+
 def test_attestation_window_arithmetic():
     """The driver attests the FIRST 50 registered queries. The round-5
     head silently miscounted (21+33 > 50) and 4 queued re-attestations

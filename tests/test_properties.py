@@ -2419,6 +2419,31 @@ def test_lsh_bands_remainder_band_covers_trailing_hashes(spark):
     )
 
 
+def test_lsh_bands_refuses_out_of_range_minhash(spark):
+    """band_sig packs each min-hash into 4 bytes, so a value outside
+    [0, 2^32) would be truncated into a signature shared with an
+    in-range value (2^32 + 1 and 0x10000000 both encoded as 10000000).
+    The u32 precondition is guarded: such a value raises."""
+    import pytest as _pytest
+
+    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
+
+    sigs = spark.createDataFrame(
+        [(1, 1, 2, 0xFFFFFFFF), (2, (1 << 32) + 1, 2, 3), (3, -1, 2, 3)],
+        "doc_id long, mh_0 long, mh_1 long, mh_2 long",
+    )
+
+    def band(doc_id):
+        return dedup.lsh_bands(
+            sigs.where(f"doc_id = {doc_id}"), "doc_id", num_hashes=3, band_rows=3
+        ).select("band_sig").collect()
+
+    assert bytes(band(1)[0][0]) == bytes.fromhex("0000000100000002ffffffff")
+    for doc_id in (2, 3):
+        with _pytest.raises(Exception, match="outside the unsigned 32-bit range"):
+            band(doc_id)
+
+
 def test_band_checkpoint_sig_encoding_migration(spark, tmp_path):
     """Optimization r16 (VERDICT r15 #8): band_sig moved from the
     comma-joined decimal string to fixed-width binary, recorded in the
