@@ -26,6 +26,11 @@ reproducible in any engine (this is what the DuckDB oracles rely on).
 
 from __future__ import annotations
 
+import os
+import shutil
+from collections.abc import Callable
+from dataclasses import dataclass
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -34,6 +39,8 @@ from pyspark_bigdata_sars_cov_2_analysis_spark.functions.compat import pround
 from pyspark_bigdata_sars_cov_2_analysis_spark.functions.localrel import (
     local_frame,
 )
+from pyspark_bigdata_sars_cov_2_analysis_spark.io import fs as _fs
+from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers as _writers
 from pyspark_bigdata_sars_cov_2_analysis_spark.operators.relational import spread_compute
 
 
@@ -162,7 +169,7 @@ def minhash_signatures(
 # 4-byte big-endian image, concatenated (fixed-width ⇒ injective). Pre-r16 checkpoints
 # ('csv-v1', comma-joined decimals — stamped implicitly when the sidecar
 # lacks the field) are refused with a re-seed instruction by
-# _validate_band_params: signatures from the two encodings can never
+# _CheckpointKind.validate: signatures from the two encodings can never
 # band-match, in either direction.
 _SIG_ENCODING = "bin32-v2"
 
@@ -299,8 +306,6 @@ def _hwm_dir(path: str) -> str:
     the parameter sidecars). Resolved through the filesystem seam
     (``io/fs.py``, VERDICT r14 #2) so marker I/O follows the table onto
     whatever store the checkpoint lives on."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io import fs as _fs
-
     f = _fs.for_path(path)
     return f.join(f.resolve(path), "_ingest_hwm")
 
@@ -314,8 +319,6 @@ def ingest_high_water_mark(path: str) -> int:
     create for a conditional put). Listing cost is one readdir over
     filenames; there is no torn-delete window because nothing is ever
     rewritten."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io import fs as _fs
-
     names = _fs.for_path(path).list_names(_hwm_dir(path))
     if not names:
         return -1
@@ -377,8 +380,6 @@ def _mark_batch_committed(
     Concurrency contract: markers assume at most one LOGICAL writer per
     state path (the streaming engine serializes micro-batches); the
     claim protocol only makes a rogue second process fail-safe."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io import fs as _fs
-
     f = _fs.for_path(path)
     final = f.join(_hwm_dir(path), f"b{int(batch_id)}")
     if f.exists(final):
@@ -390,8 +391,6 @@ def _mark_batch_committed(
 def _committed_fingerprint(path: str, batch_id: int) -> str | None:
     """Content of batch ``batch_id``'s commit marker (None = no marker,
     "" = legacy empty marker)."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io import fs as _fs
-
     f = _fs.for_path(path)
     try:
         return f.read_text(f.join(_hwm_dir(path), f"b{int(batch_id)}")).strip()
@@ -407,7 +406,11 @@ def _resolve_append_batch_id(
     silently seed-stamped append sits outside the ingest replay
     exclusion, re-opening the torn-append silent-loss path the stamps
     exist to close. An explicit ``batch_id=-1`` append remains the
-    operator's clean-boundary seed-extension assertion.
+    operator's clean-boundary seed-extension assertion. An overwrite
+    is a seed, stamped -1 by definition, and any other ``batch_id`` is
+    refused: a seed writes no commit marker, so the hwm stays below
+    that id and the batch's own ingest would exclude every seed row as
+    its "torn append" — switching dedup off for that batch.
 
     Only ``overwrite`` (seed) and ``append`` (ingest) are meaningful
     checkpoint modes — anything else is refused here for BOTH writers
@@ -420,23 +423,34 @@ def _resolve_append_batch_id(
             f"{what} mode must be 'overwrite' (seed) or 'append' "
             f"(ingest), got {mode!r}"
         )
-    if batch_id is not None:
-        return int(batch_id)
-    if mode == "append":
+    if batch_id is None:
+        if mode == "append":
+            raise ValueError(
+                f"appending to a {what} requires an explicit batch_id: "
+                "pass the writing batch's id (>= 0) so the ingest replay "
+                "exclusion can scope a torn append to its writer, or "
+                "batch_id=-1 to assert a clean-boundary seed extension "
+                "(no crashed in-flight batch)"
+            )
+        return -1
+    if mode == "overwrite" and int(batch_id) != -1:
         raise ValueError(
-            f"appending to a {what} requires an explicit batch_id: pass "
-            "the writing batch's id (>= 0) so the ingest replay "
-            "exclusion can scope a torn append to its writer, or "
-            "batch_id=-1 to assert a clean-boundary seed extension "
-            "(no crashed in-flight batch)"
+            f"a {what} seed (mode='overwrite') is stamped src_batch=-1, "
+            f"got batch_id={batch_id}: a seed writes no commit marker, so "
+            f"batch {batch_id}'s ingest would exclude every seed row as its "
+            "own torn append. Seed without a batch_id and add a batch's "
+            "rows with mode='append'."
         )
-    return -1
+    return int(batch_id)
 
 
 def _guard_batch_id_monotonic(
-    path: str, batch_id: int, what: str, fingerprint: str | None = None
-) -> None:
-    """Raise when ``batch_id`` has fallen BELOW the checkpoint's
+    path: str, batch_id: int, what: str, batch_df: DataFrame, id_col: str,
+    text_col: str,
+) -> str:
+    """Return ``batch_df``'s content fingerprint
+    (:func:`_batch_fingerprint`, what the batch's commit marker will
+    hold); raise when ``batch_id`` has fallen BELOW the checkpoint's
     committed high-water mark — the batch-id-collision hazard of the
     stamp-scoped replay exclusion (ADVICE r9). ``foreachBatch`` epoch
     ids restart at 0 whenever the STREAMING checkpoint is deleted or
@@ -454,7 +468,15 @@ def _guard_batch_id_monotonic(
     the newest committed batch (the hwm==0 blind spot of the
     strictly-below check) and is refused. Legacy empty markers are
     unverifiable and stay allowed. Equal-or-higher ids never collide
-    within one incarnation because its ids are monotonic."""
+    within one incarnation because its ids are monotonic. Negative ids
+    are refused outright: -1 is the seed stamp, and excluding it would
+    drop the seed corpus from the probe."""
+    if int(batch_id) < 0:
+        raise ValueError(
+            f"batch_id must be >= 0 (got {batch_id}): -1 is reserved for "
+            "seed-corpus checkpoint rows and would exclude them"
+        )
+    fingerprint = _batch_fingerprint(batch_df, id_col, text_col)
     hwm = ingest_high_water_mark(path)
     if int(batch_id) < hwm:
         raise ValueError(
@@ -468,7 +490,7 @@ def _guard_batch_id_monotonic(
             "original stream checkpoint), or seed a fresh state path "
             "for a genuinely new corpus run."
         )
-    if int(batch_id) == hwm and fingerprint is not None:
+    if int(batch_id) == hwm:
         committed = _committed_fingerprint(path, hwm)
         if committed and committed != fingerprint:
             raise ValueError(
@@ -483,152 +505,7 @@ def _guard_batch_id_monotonic(
                 "overwrite its output partition. Continue numbering "
                 "above the mark or seed a fresh state path."
             )
-
-
-def write_band_checkpoint(
-    corpus_df: DataFrame,
-    path: str,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    num_hashes: int = 12,
-    band_rows: int = 3,
-    mode: str = "overwrite",
-    batch_id: int | None = None,
-    n_sig_buckets: int | None = None,
-) -> None:
-    """Persist a corpus's LSH band frame ``(id, band, band_sig,
-    src_batch)`` — the between-batches dedup state an ingestion pipeline
-    maintains (the at-rest twin of ``similarity.write_bucketed_layout``).
-    Re-deriving bands from 100 TB of corpus text on EVERY incoming batch
-    is the dominant repeated ingest cost; this checkpoint is a few
-    bigints+a short string per (doc, band) — ~num_hashes/band_rows tiny
-    rows per document — written once and reused by every subsequent
-    ``incremental_neardup_pairs(corpus_bands=...)`` call. Partitioned by
-    ``band`` so a band-parallel consumer prunes; append a new batch's own
-    bands with ``mode='append'`` after it clears dedup.
-
-    ``batch_id`` stamps every row with the WRITING micro-batch's id
-    (``src_batch``; -1 = seed corpus, outside any batch). This is what
-    scopes :func:`ingest_batch_idempotent`'s torn-append replay
-    exclusion to exactly the rows the current batch's own crashed
-    attempt wrote (ADVICE r8): an id re-delivered in a LATER batch —
-    at-least-once upstream, a re-crawl in a different source file —
-    keeps its earlier-batch bands on the corpus side and is correctly
-    dropped as a duplicate, instead of anti-joining its own history
-    away and being silently re-admitted. On ``mode='append'`` the
-    batch_id is REQUIRED (ADVICE r9): defaulting an append to the seed
-    stamp would place its rows outside the replay exclusion, so a torn
-    manual append replayed through the ingest loop would self-match —
-    the exact silent-loss bug the stamps close. Pass the writing
-    batch's id (>= 0), or ``batch_id=-1`` explicitly to ASSERT a
-    clean-boundary seed extension (no crashed in-flight batch, same
-    operator assertion as :func:`migrate_band_checkpoint_stamps`).
-    Stamped appends also record the id in the checkpoint's committed
-    high-water mark (:func:`ingest_high_water_mark`) and refuse ids
-    below it — a restarted-at-zero batch counter over kept state would
-    otherwise collide with a PRIOR incarnation's stamps and re-admit
-    duplicates through the exclusion filter.
-
-    ``n_sig_buckets`` (VERDICT r8 #4, the chunk-checkpoint rule applied
-    here): every band row also lands in a ``sigb =
-    pmod(xxhash64(band_sig), n_sig_buckets)`` sub-partition, so the
-    ingest probe can restrict the state scan to the signature buckets
-    the incoming batch actually hashes into — a literal partition
-    filter, pruning whole directories. The grid rides the sidecar
-    (appends must match it); 0 = flat per-band layout. The default
-    ``None`` resolves to 16 on a fresh write and to the EXISTING
-    sidecar's grid on an append — so appending to a pre-bucketing
-    (flat) or differently-sized checkpoint with defaults keeps working
-    instead of raising a grid mismatch against a default the checkpoint
-    never used; pass an explicit int to ASSERT the grid instead."""
-    batch_id = _resolve_append_batch_id(mode, batch_id, "band checkpoint")
-    batch_fp = None
-    if mode == "append" and batch_id >= 0:
-        batch_fp = _batch_fingerprint(corpus_df, id_col, text_col)
-        _guard_batch_id_monotonic(
-            path, batch_id, "band checkpoint", fingerprint=batch_fp
-        )
-    spark = corpus_df.sparkSession
-    sidecar_exists = False
-    if mode == "append":
-        # ADVICE r6: an append must VALIDATE against the existing sidecar,
-        # not re-stamp it — overwriting would relabel old band rows
-        # (computed under the previous parameters) with the new ones,
-        # recreating exactly the undetected zero-match state the sidecar
-        # exists to prevent. ONE sidecar read serves the banding-params
-        # check, the grid check, and the None-grid resolution (the first
-        # cut launched three driver jobs here).
-        try:
-            params = read_band_params(spark, path)
-        except Exception:
-            params = None
-        if params is not None:
-            sidecar_exists = True
-            _validate_band_params(path, params, k, num_hashes, band_rows)
-            if n_sig_buckets is None:
-                n_sig_buckets = params["n_sig_buckets"]
-            elif params["n_sig_buckets"] != n_sig_buckets:
-                raise ValueError(
-                    f"band checkpoint at {path} is bucketed with "
-                    f"n_sig_buckets={params['n_sig_buckets']}, caller "
-                    f"expects {n_sig_buckets}: appended rows would land "
-                    "outside the probe's partition grid"
-                )
-        else:
-            # ADVICE r8 (chunk twin applied here too): data files with no
-            # sidecar = a writer crashed between data and sidecar writes;
-            # appending would re-stamp the caller's params over rows
-            # possibly banded under different ones — refuse instead
-            try:
-                has_data = bool(spark.read.parquet(path).columns)
-            except Exception:
-                has_data = False
-            if has_data:
-                raise ValueError(
-                    f"band checkpoint at {path} has data files but no "
-                    "parameter sidecar (torn earlier write?): refusing to "
-                    "append — existing rows may use different band "
-                    "parameters. Re-seed with mode='overwrite'."
-                )
-    if n_sig_buckets is None:
-        n_sig_buckets = 16
-    bands = lsh_bands(
-        minhash_signatures(corpus_df, id_col, text_col, k, num_hashes),
-        id_col, num_hashes, band_rows,
-    ).withColumn("src_batch", F.lit(int(batch_id)))
-    if n_sig_buckets:
-        # cluster on the partition grid before the write — one file per
-        # touched (band, sigb) cell instead of one per (task, cell)
-        bands = bands.withColumn(
-            "sigb", _lh_bucket(F.col("band_sig"), n_sig_buckets)
-        )
-        bands.repartition("band", "sigb").write.mode(mode).partitionBy(
-            "band", "sigb"
-        ).parquet(path)
-    else:
-        bands.write.mode(mode).partitionBy("band").parquet(path)
-    # parameter sidecar in an underscore-prefixed subdir (hidden from
-    # parquet partition discovery): band signatures are only comparable
-    # between sides computed with the SAME (k, num_hashes, band_rows) —
-    # a mismatched reuse would silently return zero pairs, appending a
-    # duplicate-laden batch to the corpus. On an append with a validated
-    # sidecar already in place the rewrite is SKIPPED: the values are
-    # guaranteed identical, and the overwrite (delete-then-commit) would
-    # re-open the torn-sidecar crash window on every micro-batch that
-    # the refusal above exists to catch.
-    if not sidecar_exists:
-        # local_frame, not createDataFrame: this write runs once per
-        # checkpoint seed and its Python-RDD form cost ~5 s of Python
-        # worker spawn per write job (r15, functions/localrel.py)
-        local_frame(
-            spark,
-            [(k, num_hashes, band_rows, n_sig_buckets, _SIG_ENCODING)],
-            "k int, num_hashes int, band_rows int, n_sig_buckets int, "
-            "sig_encoding string",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_band_params")
-    if mode == "append" and batch_id >= 0:
-        _mark_batch_committed(path, batch_id, batch_fp or "")
+    return fingerprint
 
 
 # (sidecar-path, mtime) -> params. A checkpoint's parameter sidecar is
@@ -645,8 +522,6 @@ _PARAMS_MEMO: dict[str, tuple[float, dict]] = {}
 
 
 def _memoized_sidecar(spark, sidecar: str, loader):
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io import fs as _fs
-
     try:
         mt = _fs.for_path(sidecar).mtime(sidecar)
     except Exception:
@@ -661,54 +536,554 @@ def _memoized_sidecar(spark, sidecar: str, loader):
     return params
 
 
+def _lh_bucket(col: Column, n_buckets: int) -> Column:
+    """Stable bucket id in [0, n_buckets) for a chunk-hash (hex md5
+    string) or band-sig (binary) column — the partition key of a
+    bucketed checkpoint. xxhash64 accepts both types; pmod folds the
+    signed hash non-negative."""
+    return F.pmod(F.xxhash64(col), F.lit(int(n_buckets)))
+
+
+def _has_data(spark, path: str) -> bool:
+    try:
+        return bool(spark.read.parquet(path).columns)
+    except Exception:
+        return False
+
+
+def _src_batch(df: DataFrame) -> Column:
+    """The rows' ``src_batch`` stamp; rows written before stamps
+    existed (a missing column, or NULL under mergeSchema) read as seed
+    rows (-1)."""
+    if "src_batch" not in df.columns:
+        return F.lit(-1)
+    return F.coalesce(F.col("src_batch").cast("int"), F.lit(-1))
+
+
+@dataclass(frozen=True)
+class _CheckpointKind:
+    """One kind of incremental-dedup checkpoint: LSH band state
+    (``_BANDS``, d11/d20/d22) or chunk first-occurrence state
+    (``_CHUNKS``, d14/d19). The fields hold everything the kinds differ
+    in; the methods are the one implementation both run.
+
+    On disk a checkpoint at ``path`` is:
+
+    - parquet state rows, each stamped ``src_batch`` with the id of the
+      micro-batch that wrote it (-1 = seed corpus, outside any batch);
+    - Hive partitions ``lead + (bucket,)`` with ``bucket =
+      pmod(xxhash64(key), grid)``; grid 0 is the flat layout,
+      partitioned by ``lead`` only;
+    - the parameter sidecar ``_<name>_params``: one row of the caller
+      parameters the state was computed under, the grid, and the key
+      encoding where the kind has one. State computed under other
+      parameters can never match, so a mismatched reuse would dedupe
+      every batch against nothing;
+    - the committed-batch markers ``_ingest_hwm/b<N>``
+      (:func:`_mark_batch_committed`).
+
+    Underscore-prefixed directories are hidden from partition discovery.
+    ``want`` is always the dict of the caller's parameters, in sidecar
+    column order."""
+
+    name: str  # "band" / "chunk": messages and the sidecar directory
+    key: str  # the column the grid hashes
+    bucket: str  # the grid's partition column
+    grid: str  # the grid's name in the sidecar and the writer
+    lead: tuple[str, ...]  # partition columns ahead of the bucket
+    default_grid: int  # a fresh write's grid when the caller passes None
+    mismatch: str  # what a parameter mismatch would break
+    encoding: str | None  # key encoding pinned in the sidecar, if any
+    key_rows: Callable  # (df, id_col, text_col, want) -> per-row keys
+    state_rows: Callable  # (key_rows, id_col) -> rows to persist
+    columns: Callable  # id_col -> reader columns (before src_batch)
+    # (batch_df, key_rows, prior, id_col, text_col, want) -> (output,
+    # state rows to append, a frame it cached for the batch)
+    core: Callable
+
+    @property
+    def what(self) -> str:
+        return f"{self.name} checkpoint"
+
+    @property
+    def sidecar(self) -> str:
+        return f"_{self.name}_params"
+
+    def params(self, spark, path: str) -> dict:
+        """The sidecar as a dict. Sidecars older than the grid read as
+        grid 0 (flat), older than the key encoding as ``csv-v1``.
+        Memoized per (sidecar path, mtime) — see ``_PARAMS_MEMO``."""
+        sidecar = f"{path}/{self.sidecar}"
+
+        def _load() -> dict:
+            got = spark.read.parquet(sidecar).collect()[0].asDict()
+            got[self.grid] = int(got.get(self.grid) or 0)
+            if self.encoding:
+                got["sig_encoding"] = got.get("sig_encoding") or "csv-v1"
+            return got
+
+        return _memoized_sidecar(spark, sidecar, _load)
+
+    def validate(self, path: str, params: dict, want: dict) -> None:
+        """Raise unless the caller's parameters and this engine's key
+        encoding match the sidecar — one check for the reader and the
+        append path, from one sidecar read. A checkpoint persisted
+        under an older encoding (``csv-v1``, comma-joined decimal
+        band_sig, implicit in sidecars without the field) can never
+        match what this code computes, in either direction."""
+        stored = {f: params[f] for f in want}
+        if stored != want:
+            raise ValueError(
+                f"{self.what} at {path} was written with {stored}, "
+                f"caller expects {want}: {self.mismatch}"
+            )
+        enc = params.get("sig_encoding") or "csv-v1"
+        if self.encoding and enc != self.encoding:
+            raise ValueError(
+                f"{self.what} at {path} stores {self.key} as {enc!r}, "
+                f"this engine computes {self.encoding!r}: cross-side keys "
+                "would never match and every batch would silently dedupe "
+                "against nothing. Migrate by re-seeding the checkpoint "
+                f"(write_{self.name}_checkpoint(mode='overwrite') from the "
+                "corpus) at a clean batch boundary."
+            )
+
+    def read(
+        self, spark, path: str, id_col: str, want: dict,
+        buckets: list[int] | None = None, params: dict | None = None,
+    ) -> DataFrame:
+        """The state as ``columns(id_col) + [src_batch]``, after
+        validating ``want`` against the sidecar. ``buckets`` restricts
+        a bucketed checkpoint's scan to those grid cells through a
+        literal partition filter, so the other cells' files are never
+        opened (ignored on a flat layout). ``params``: a sidecar dict
+        the caller already read.
+
+        mergeSchema: a checkpoint upgraded mid-life can hold
+        pre-``src_batch`` files next to stamped ones. Without merging,
+        Spark takes one arbitrary footer's schema and either NULLs the
+        legacy rows (the exclusion filter then drops the legacy corpus
+        from the probe) or hides the stamps (a torn append would
+        self-match). Merged and coalesced, legacy rows read as seed
+        rows. That cannot re-attribute a legacy TORN append: its
+        unstamped rows look like seed rows, so run the stamp migration
+        at a clean boundary before the first ingest after an upgrade."""
+        if params is None:
+            params = self.params(spark, path)
+        self.validate(path, params, want)
+        df = spark.read.option("mergeSchema", "true").parquet(path)
+        if params[self.grid] and buckets is not None:
+            df = df.where(F.col(self.bucket).isin([int(b) for b in buckets]))
+        return df.select(*self.columns(id_col), _src_batch(df).alias("src_batch"))
+
+    def _write_rows(self, rows: DataFrame, path: str, n_grid: int, mode: str):
+        """Write stamped state rows onto the partition grid. A bucketed
+        write is clustered on the grid first, so each touched cell gets
+        one file per write instead of one per (task, cell) — otherwise
+        every append compounds into a tiny-file swamp."""
+        cols = [*self.lead, self.bucket] if n_grid else list(self.lead)
+        if n_grid:
+            rows = rows.withColumn(
+                self.bucket, _lh_bucket(F.col(self.key), n_grid)
+            ).repartition(*cols)
+        writer = rows.write.mode(mode)
+        (writer.partitionBy(*cols) if cols else writer).parquet(path)
+
+    def write(
+        self, corpus_df: DataFrame, path: str, id_col: str, text_col: str,
+        want: dict, mode: str, batch_id: int | None, n_grid: int | None,
+    ) -> None:
+        """Seed (``mode='overwrite'``) or extend (``'append'``) the
+        checkpoint at ``path`` with ``corpus_df``'s state rows.
+
+        Stamps: a seed is stamped -1 (:func:`_resolve_append_batch_id`
+        refuses any other id, and requires an explicit id on an
+        append). A stamped append (id >= 0) passes the high-water-mark
+        guard first and records its commit marker last.
+
+        Sidecar (ADVICE r6/r8): an append VALIDATES the existing
+        sidecar and never rewrites it — a rewrite would relabel old
+        rows computed under other parameters, and its
+        delete-then-commit would reopen the torn-sidecar window on every
+        batch. Data files without a sidecar mean an earlier writer
+        crashed between the two writes; the append is refused, re-seed
+        instead. One sidecar read serves the parameter check, the grid
+        check and the grid default.
+
+        Grid (VERDICT r8 #4): ``n_grid=None`` adopts the sidecar's grid
+        on an append (so flat or differently-sized checkpoints keep
+        working with defaults) and ``default_grid`` on a fresh write; an
+        explicit int asserts the grid. Size it to the state: every cell
+        is a partition directory with a fixed per-write commit cost
+        (~35 ms/dir measured on local FS), so aim for file-sized cells."""
+        batch_id = _resolve_append_batch_id(mode, batch_id, self.what)
+        batch_fp = None
+        if mode == "append" and batch_id >= 0:
+            batch_fp = _guard_batch_id_monotonic(
+                path, batch_id, self.what, corpus_df, id_col, text_col
+            )
+        spark = corpus_df.sparkSession
+        params = None
+        if mode == "append":
+            try:
+                params = self.params(spark, path)
+            except Exception:
+                if _has_data(spark, path):
+                    raise ValueError(
+                        f"{self.what} at {path} has data files but no "
+                        "parameter sidecar (torn earlier write?): refusing "
+                        "to append — existing rows may have been computed "
+                        "under different parameters. Re-seed with "
+                        "mode='overwrite'."
+                    ) from None
+        if params is not None:
+            self.validate(path, params, want)
+            if n_grid is None:
+                n_grid = params[self.grid]
+            elif params[self.grid] != n_grid:
+                raise ValueError(
+                    f"{self.what} at {path} is bucketed with "
+                    f"{self.grid}={params[self.grid]}, caller expects "
+                    f"{n_grid}: appended rows would land outside the "
+                    "probe's partition grid"
+                )
+        if n_grid is None:
+            n_grid = self.default_grid
+        rows = self.state_rows(
+            self.key_rows(corpus_df, id_col, text_col, want), id_col
+        )
+        self._write_rows(
+            rows.withColumn("src_batch", F.lit(int(batch_id))), path, n_grid,
+            mode,
+        )
+        if params is None:
+            fields = {**want, self.grid: n_grid}
+            ddl = ", ".join(f"{f} int" for f in fields)
+            if self.encoding:
+                fields["sig_encoding"] = self.encoding
+                ddl += ", sig_encoding string"
+            # local_frame, not createDataFrame: its Python-RDD form cost
+            # ~5 s of Python worker spawn per write job (r15,
+            # functions/localrel.py)
+            local_frame(spark, [tuple(fields.values())], ddl).coalesce(
+                1
+            ).write.mode("overwrite").parquet(f"{path}/{self.sidecar}")
+        if batch_fp is not None:
+            _mark_batch_committed(path, batch_id, batch_fp)
+
+    def ingest(
+        self, batch_df: DataFrame, batch_id: int, path: str, out_path: str,
+        id_col: str, text_col: str, want: dict,
+    ) -> None:
+        """One micro-batch of the streaming dedup ingest, REPLAY-SAFE:
+        dedup ``batch_df`` against the checkpoint, publish the output,
+        append the batch's own state rows.
+
+        Output: lands in an ``ingest_batch=<id>`` partition via DYNAMIC
+        partition overwrite, so a replay of a crashed batch (same
+        batch_id under ``foreachBatch``) rewrites its own partition
+        instead of appending a second copy; earlier partitions are
+        untouched. State rows still append, so a replay can duplicate
+        some — harmless, since both probes are set lookups (distinct
+        pairs, an anti-join on ``lh``).
+
+        Replay determinism (ADVICE r7 #1, re-scoped by ADVICE r8): the
+        probe EXCLUDES the state rows stamped with this ``batch_id`` — a
+        row-local filter, no join — so a replay sees exactly the
+        pre-batch state however much of the crashed attempt's append
+        landed. Without it a torn append lets survivors match their own
+        (or a sibling's) half-landed rows and the overwrite drops them:
+        silent loss. Scoping by the WRITER's batch id, not by the
+        batch's doc ids, keeps at-least-once upstreams honest: an id
+        re-delivered in a LATER batch still meets its earlier state and
+        is dropped as the duplicate it is.
+
+        Batch-id collisions (ADVICE r9): the exclusion is only sound
+        while ids never recur below the committed high-water mark —
+        ``foreachBatch`` ids restart at 0 under a new stream
+        checkpoint. Every committed batch drops a marker, written LAST so
+        a crash leaves it absent; ids below the mark raise, and ``==
+        hwm`` is allowed only as a replay with the same content
+        fingerprint (:func:`_guard_batch_id_monotonic`).
+
+        The steps: fingerprint and guard; cache the batch's key frame
+        (it feeds the bucket probe, the core and the append, and a
+        re-derivation per consumer was the bulk of d20's cost); collect
+        its grid cells (a driver list bounded by the grid) and read
+        only those cells, minus this batch's own stamp; hand over to
+        ``core``; publish; append; mark. Everything after the cache sits
+        in the ``try``, so a raise (a parameter mismatch, say) never
+        pins the batch frame in a long-lived session."""
+        bid = int(batch_id)
+        batch_fp = _guard_batch_id_monotonic(
+            path, bid, self.what, batch_df, id_col, text_col
+        )
+        s = batch_df.sparkSession
+        keys = self.key_rows(batch_df, id_col, text_col, want).cache()
+        held = [keys]
+        try:
+            params = self.params(s, path)
+            n_grid = params[self.grid]
+            buckets = None
+            if n_grid:
+                cells = keys.select(_lh_bucket(F.col(self.key), n_grid))
+                buckets = sorted(r[0] for r in cells.distinct().collect())
+            prior = self.read(s, path, id_col, want, buckets, params)
+            prior = prior.where(F.col("src_batch") != bid).drop("src_batch")
+            out, add, cached = self.core(
+                batch_df, keys, prior, id_col, text_col, want
+            )
+            held.append(cached)
+            (
+                out.withColumn("ingest_batch", F.lit(bid))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("ingest_batch")
+                .parquet(out_path)
+            )
+            self._write_rows(
+                add.withColumn("src_batch", F.lit(bid)), path, n_grid, "append"
+            )
+            _mark_batch_committed(path, bid, batch_fp)
+        finally:
+            for frame in held:
+                frame.unpersist()
+
+    def stream(
+        self, spark, source_dir: str, schema: str, path: str, out_path: str,
+        stream_checkpoint: str, id_col: str, text_col: str, want: dict,
+        max_files_per_trigger: int, compact_every: int,
+    ):
+        """An ``availableNow`` + ``foreachBatch`` loop running
+        :meth:`ingest` per micro-batch; returns the ``DataStreamWriter``
+        (callers ``.start()`` it). The stream checkpoint records which
+        source files each batch consumed, so a restart re-processes
+        nothing, and :meth:`ingest` makes a mid-batch crash replay
+        idempotent. The checkpoint must already be seeded (that pins
+        the parameters every batch must use); it is validated before
+        any batch runs.
+
+        ``compact_every`` (r10): :meth:`compact` after every Nth batch
+        (ids N-1, 2N-1, …), AFTER its commit marker lands, so the
+        in-flight refusal never fires here and per-cell file counts stay
+        O(N). The compaction is itself crash-safe; 0 disables it."""
+        self.read(spark, path, id_col, want)
+
+        def _process(batch_df: DataFrame, batch_id: int) -> None:
+            self.ingest(
+                batch_df, batch_id, path, out_path, id_col, text_col, want
+            )
+            if compact_every and (int(batch_id) + 1) % compact_every == 0:
+                self.compact(spark, path)
+
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .parquet(source_dir)
+            .writeStream.foreachBatch(_process)
+            .option("checkpointLocation", stream_checkpoint)
+            .trigger(availableNow=True)
+        )
+
+    def _rewrite(self, spark, path: str, op: str, staged: str, backup: str,
+                 prepare) -> tuple[dict, int]:
+        """Rewrite the checkpoint in place through the count-verified
+        staged swap the parquet maintenance ops use (a crash mid-swap
+        leaves a marker that :func:`io.writers.recover_staged_swap`
+        heals on the next run). ``prepare(df, path)`` turns the current
+        rows into the rows to write plus a report whose ``rows`` is the
+        expected count; it may refuse by raising. The grid, the sidecar
+        and the committed-batch markers are kept — losing the sidecar
+        would re-arm the torn-sidecar refusal, losing the markers would
+        reset the hwm to -1 and disarm the batch-id guard. Each grid
+        cell (or a flat layout) is written as ONE file. The sidecar is
+        read only after recovery: a crash between the swap's renames
+        leaves no table at ``path``. Returns the report and the staged
+        file count."""
+        _writers.recover_staged_swap(path)
+        n_grid = self.params(spark, path)[self.grid]
+        cols = [*self.lead, self.bucket] if n_grid else list(self.lead)
+        df = spark.read.option("mergeSchema", "true").parquet(path)
+        rows, report = prepare(df, path)
+        tmp = path.rstrip("/") + staged
+        shutil.rmtree(tmp, ignore_errors=True)
+        if cols:
+            rows.repartition(*cols).write.partitionBy(*cols).parquet(tmp)
+        else:
+            rows.coalesce(1).write.parquet(tmp)
+        shutil.copytree(
+            os.path.join(path, self.sidecar), os.path.join(tmp, self.sidecar)
+        )
+        if os.path.isdir(_hwm_dir(path)):
+            # stale .tmp stages of killed marker publishers stay behind
+            shutil.copytree(
+                _hwm_dir(path), _hwm_dir(tmp),
+                ignore=shutil.ignore_patterns("*.tmp"),
+            )
+        # the count check reads the staged files' footers, not a re-scan
+        files = spark.read.parquet(tmp).inputFiles()
+        got = _writers._footer_row_count(sorted(files))
+        if got != report["rows"]:
+            raise RuntimeError(
+                f"{op} row-count mismatch ({got} != {report['rows']}); "
+                f"staged output left at {tmp}, original untouched"
+            )
+        _writers._swap_in(path, tmp, backup)
+        return report, len(files)
+
+    def compact(self, spark, path: str) -> dict:
+        """Rewrite every grid cell to ONE file (VERDICT r9 #2): each
+        ingest batch appends one file per touched cell, and after N
+        batches the pruned probe — whose point is opening few files —
+        degrades into a small-files scan. ``compact_parquet`` cannot do
+        this: it flattens the grid and drops the sidecar and markers.
+
+        Clean-boundary refusal: rows stamped ABOVE the committed hwm
+        belong to an in-flight (or crashed, not yet replayed) batch, and
+        swapping the table under its writer would lose whatever it
+        appends after the read; compaction refuses until it commits.
+        Stamps are kept verbatim, so replay exclusion and re-delivery
+        are unchanged; legacy unstamped rows stay NULL (read as -1) —
+        not a stamp migration. Idempotent; returns ``{rows,
+        files_before, files_after, hwm}``."""
+
+        def _unchanged(df: DataFrame, path: str):
+            hwm = ingest_high_water_mark(path)
+            stats = df.agg(
+                F.count(F.lit(1)).alias("n"), F.max(_src_batch(df)).alias("mx")
+            ).collect()[0]
+            max_src = -1 if stats["mx"] is None else int(stats["mx"])
+            if max_src > hwm:
+                raise ValueError(
+                    f"checkpoint at {path} holds rows stamped src_batch="
+                    f"{max_src}, above the committed high-water mark "
+                    f"{hwm}: an ingest batch is in flight (or crashed and "
+                    "not yet replayed). Compaction would swap away "
+                    "anything that batch appends after the snapshot read "
+                    "— let it commit or replay to completion first (the "
+                    "stamp-migration clean-boundary rule)."
+                )
+            return df, {
+                "rows": int(stats["n"]),
+                "files_before": len(df.inputFiles()),
+                "hwm": hwm,
+            }
+
+        report, files_after = self._rewrite(
+            spark, path, "checkpoint compaction", ".compacting",
+            ".pre-compaction", _unchanged,
+        )
+        return {**report, "files_after": files_after}
+
+    def migrate(self, spark, path: str) -> dict:
+        """ONE-TIME upgrade of a checkpoint written (fully or partly)
+        before ``src_batch`` stamps existed: every row gets an explicit
+        stamp — existing stamps kept, unstamped rows -1 — in place.
+
+        Why: the reader's mergeSchema+coalesce keeps a legacy CORPUS
+        correct, but an unstamped row of a crashed pre-stamp append is
+        indistinguishable from a seed row, and a replay of that batch
+        would self-match it. No row-level rule tells them apart, so the
+        operator asserts it: run this at a CLEAN boundary (no crashed
+        in-flight batch), where stamping every unstamped row as seed is
+        exactly right. Idempotent; returns ``{rows, seed_rows,
+        had_stamp_col}``."""
+
+        def _stamped(df: DataFrame, path: str):
+            out = df.withColumn("src_batch", _src_batch(df))
+            counts = out.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum((F.col("src_batch") == -1).cast("long")).alias("seed"),
+            ).collect()[0]
+            return out, {
+                "rows": int(counts["n"]),
+                "seed_rows": int(counts["seed"] or 0),
+                "had_stamp_col": "src_batch" in df.columns,
+            }
+
+        return self._rewrite(
+            spark, path, "stamp migration", ".migrating",
+            ".pre-stamp-migration", _stamped,
+        )[0]
+
+
+def _band_keys(df: DataFrame, id_col: str, text_col: str, want: dict):
+    return lsh_bands(
+        minhash_signatures(df, id_col, text_col, want["k"], want["num_hashes"]),
+        id_col, want["num_hashes"], want["band_rows"],
+    )
+
+
+def _band_core(batch_df, bands, prior, id_col, text_col, want):
+    """Band ingest: drop every batch doc sharing a band bucket with the
+    state; append the survivors' bands (a semi-join on the admitted
+    ids, never a re-minhash). A NULL-text doc has no shingles, is never
+    a candidate and PASSES THROUGH — unlike chunk ingest."""
+    pairs = incremental_neardup_pairs(
+        batch_df, None, id_col, text_col, **want,
+        corpus_bands=prior, new_bands=bands,
+    )
+    # the dup id set feeds the output write and the append's semi-join:
+    # cached, so the state probe behind it runs once per batch
+    dup_ids = pairs.select(F.col("new_id").alias(id_col)).distinct().cache()
+    clean = batch_df.join(dup_ids, on=id_col, how="left_anti")
+    add = bands.join(F.broadcast(clean.select(id_col)), id_col, "left_semi")
+    return clean, add, dup_ids
+
+
+_BANDS = _CheckpointKind(
+    name="band",
+    key="band_sig",
+    bucket="sigb",
+    grid="n_sig_buckets",
+    lead=("band",),
+    default_grid=16,
+    mismatch="signatures would never match",
+    encoding=_SIG_ENCODING,
+    key_rows=_band_keys,
+    state_rows=lambda bands, id_col: bands,
+    columns=lambda id_col: [
+        F.col(id_col), F.col("band").cast("int").alias("band"), "band_sig",
+    ],
+    core=_band_core,
+)
+
+
+def write_band_checkpoint(
+    corpus_df: DataFrame,
+    path: str,
+    id_col: str,
+    text_col: str,
+    k: int = 3,
+    num_hashes: int = 12,
+    band_rows: int = 3,
+    mode: str = "overwrite",
+    batch_id: int | None = None,
+    n_sig_buckets: int | None = None,
+) -> None:
+    """Persist a corpus's LSH band frame ``(id, band, band_sig,
+    src_batch)`` — the between-batches dedup state an ingestion
+    pipeline keeps, so no batch re-derives bands from the corpus text.
+    It is a few tiny rows per document, partitioned by ``band`` and
+    ``sigb = pmod(xxhash64(band_sig), n_sig_buckets)`` (default 16; 0 =
+    flat per-band layout) so the ingest probe prunes to the signature
+    buckets its batch hashes into. ``(k, num_hashes, band_rows)`` and
+    the ``band_sig`` encoding ride the ``_band_params`` sidecar. Seed
+    with ``mode='overwrite'``; append a batch's own bands with
+    ``mode='append'`` and its ``batch_id`` (or -1 to assert a
+    clean-boundary seed extension). See :meth:`_CheckpointKind.write`."""
+    _BANDS.write(
+        corpus_df, path, id_col, text_col,
+        dict(k=k, num_hashes=num_hashes, band_rows=band_rows),
+        mode, batch_id, n_sig_buckets,
+    )
+
+
 def read_band_params(spark, path: str) -> dict:
     """The band checkpoint's parameter sidecar as a dict; pre-bucketing
     sidecars read as n_sig_buckets=0 (flat per-band layout). Memoized
     per (path, sidecar mtime) — see ``_PARAMS_MEMO``."""
-
-    def _load() -> dict:
-        got = (
-            spark.read.parquet(f"{path}/_band_params").collect()[0].asDict()
-        )
-        got["n_sig_buckets"] = int(got.get("n_sig_buckets", 0) or 0)
-        # pre-r16 sidecars predate the encoding field: they hold the
-        # comma-joined decimal band_sig (format migration, VERDICT r15 #8)
-        got["sig_encoding"] = got.get("sig_encoding") or "csv-v1"
-        return got
-
-    return _memoized_sidecar(spark, f"{path}/_band_params", _load)
-
-
-def _validate_band_params(
-    path: str, params: dict, k: int, num_hashes: int, band_rows: int
-) -> None:
-    """Raise unless the caller's banding parameters match the sidecar's —
-    shared by the reader and the append path of the writer so both fail
-    with the same message from ONE sidecar read. Also validated: the
-    band_sig ENCODING (optimization r16 format migration, VERDICT r15
-    #8) — a checkpoint persisted under the comma-joined decimal
-    encoding ('csv-v1', the pre-r16 default stamped onto any sidecar
-    missing the field) can never band-match signatures computed by this
-    code ('bin32-v2', fixed-width binary), in EITHER direction; the
-    refusal names the re-seed migration instead of silently admitting
-    every duplicate."""
-    want = {"k": k, "num_hashes": num_hashes, "band_rows": band_rows}
-    stored = {kk: params[kk] for kk in want}
-    if stored != want:
-        raise ValueError(
-            f"band checkpoint at {path} was written with {stored}, "
-            f"caller expects {want}: signatures would never match"
-        )
-    enc = params.get("sig_encoding") or "csv-v1"
-    if enc != _SIG_ENCODING:
-        raise ValueError(
-            f"band checkpoint at {path} stores band_sig as {enc!r}, this "
-            f"engine computes {_SIG_ENCODING!r}: cross-side signatures "
-            "would never match and every batch would silently dedupe "
-            "against nothing. Migrate by re-seeding the checkpoint "
-            "(write_band_checkpoint(mode='overwrite') from the corpus) "
-            "at a clean batch boundary."
-        )
+    return _BANDS.params(spark, path)
 
 
 def read_band_checkpoint(
@@ -721,341 +1096,31 @@ def read_band_checkpoint(
     sig_buckets: list[int] | None = None,
     params: dict | None = None,
 ) -> DataFrame:
-    """Load a band checkpoint written by :func:`write_band_checkpoint`,
-    normalized to the ``(id_col, band, band_sig, src_batch)`` shape
-    ``incremental_neardup_pairs`` / :func:`ingest_batch_idempotent`
-    expect (partition discovery re-types ``band`` — pin it back to int;
-    pre-src_batch checkpoints read as src_batch=-1, i.e. seed rows).
-    The ``k``/``num_hashes``/``band_rows`` the CALLER will band the
-    incoming batch with are validated against the checkpoint's parameter
-    sidecar — a mismatch means no band signature could ever match
-    cross-side and every batch would silently dedupe against nothing.
-
-    ``sig_buckets``: on a sub-bucketed checkpoint, restrict the scan to
-    these ``sigb`` partition values (literal partition filter — prunes
-    unmatched state directories; the VERDICT r8 #4 path). Ignored on a
-    flat layout.
-
-    ``params``: a sidecar dict the caller already read via
-    :func:`read_band_params` — skips the second sidecar collect job
-    (one driver round-trip per micro-batch in the ingest loop)."""
-    if params is None:
-        params = read_band_params(spark, path)
-    _validate_band_params(path, params, k, num_hashes, band_rows)
-    # mergeSchema: a checkpoint upgraded mid-life can hold pre-src_batch
-    # files next to stamped ones; without merging, Spark takes one
-    # arbitrary footer's schema and either NULLs the legacy rows (the
-    # != filter then drops the whole legacy corpus from the probe) or
-    # hides the stamps entirely (a torn append would self-match). With
-    # merging + coalesce, legacy rows read as seed rows (-1), stamped
-    # rows keep their writer id. SCOPE of that guarantee: it keeps the
-    # legacy CORPUS correct, but it cannot re-attribute a legacy TORN
-    # append — unstamped rows a pre-stamp build's crashed batch wrote
-    # look identical to legacy seed rows, so a replay of that same batch
-    # under this code would still self-match them (the pre-stamp bug, in
-    # its one-time upgrade window). Closing it needs the operator:
-    # run :func:`migrate_band_checkpoint_stamps` at a CLEAN boundary
-    # (no crashed in-flight batch) before the first post-upgrade ingest.
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    if params["n_sig_buckets"] and sig_buckets is not None:
-        df = df.where(F.col("sigb").isin([int(b) for b in sig_buckets]))
-    src = (
-        F.coalesce(F.col("src_batch").cast("int"), F.lit(-1))
-        if "src_batch" in df.columns
-        else F.lit(-1)
+    """Load a band checkpoint as ``(id_col, band, band_sig, src_batch)``
+    — the shape ``incremental_neardup_pairs`` / :func:`ingest_batch_idempotent`
+    expect — after validating the caller's banding parameters against
+    the sidecar. ``sig_buckets`` restricts the scan to those ``sigb``
+    cells; ``params`` is a sidecar dict already read via
+    :func:`read_band_params`. See :meth:`_CheckpointKind.read`."""
+    return _BANDS.read(
+        spark, path, id_col,
+        dict(k=k, num_hashes=num_hashes, band_rows=band_rows),
+        sig_buckets, params,
     )
-    return df.select(
-        F.col(id_col), F.col("band").cast("int").alias("band"), "band_sig",
-        src.alias("src_batch"),
-    )
-
-
-def _migrate_checkpoint_stamps(
-    spark, path: str, part_cols_fn, sidecar: str
-) -> dict:
-    """Shared body of the two stamp migrations: rewrite a checkpoint so
-    every data row carries an EXPLICIT ``src_batch`` (existing stamps
-    preserved, unstamped legacy rows stamped -1), keeping the partition
-    layout and the parameter sidecar, via the count-verified staged swap
-    the parquet maintenance ops use (crash mid-swap → marker →
-    :func:`io.writers.recover_staged_swap`).
-
-    ``part_cols_fn`` is a THUNK (it reads the parameter sidecar) and is
-    called only after ``recover_staged_swap`` — a crash between the
-    swap's two renames leaves no table at ``path``, so an eager sidecar
-    read in the caller would raise before recovery could run and the
-    documented rerun-to-self-heal path would be unreachable."""
-    import os as _os
-    import shutil as _shutil
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        _swap_in,
-        recover_staged_swap,
-    )
-
-    recover_staged_swap(path)
-    part_cols = part_cols_fn()
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    had_stamp_col = "src_batch" in df.columns
-    src = (
-        F.coalesce(F.col("src_batch").cast("int"), F.lit(-1))
-        if had_stamp_col
-        else F.lit(-1).cast("int")
-    )
-    out = df.withColumn("src_batch", src)
-    # ONE pre-write scan for both counts (total + seed) — the rewrite
-    # itself is a second scan, and a 100 TB state should not pay a third
-    counts = out.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("src_batch") == -1).cast("long")).alias("seed"),
-    ).collect()[0]
-    want, seed = int(counts["n"]), int(counts["seed"] or 0)
-    tmp = path.rstrip("/") + ".migrating"
-    _shutil.rmtree(tmp, ignore_errors=True)
-    writer = (
-        out.repartition(*part_cols).write.partitionBy(*part_cols)
-        if part_cols
-        else out.write
-    )
-    writer.parquet(tmp)
-    # the parameter sidecar lives INSIDE the checkpoint dir (underscore
-    # prefix hides it from partition discovery) — carry it into the
-    # staged copy or the swapped-in checkpoint would read as sidecar-less
-    # (torn) and refuse every append
-    _shutil.copytree(
-        _os.path.join(path, sidecar), _os.path.join(tmp, sidecar)
-    )
-    # the committed-batch markers too (review r9): losing _ingest_hwm in
-    # the swap silently resets the high-water mark to -1, DISARMING the
-    # batch-id collision guard — a restarted-at-zero counter over the
-    # migrated state would then pass the guard, exclude a prior
-    # incarnation's committed rows from the replay filter, and clobber
-    # its output partition (the exact hazard the markers exist to refuse)
-    hwm_src = _hwm_dir(path)
-    if _os.path.isdir(hwm_src):
-        _shutil.copytree(
-            hwm_src, _hwm_dir(tmp),
-            ignore=_shutil.ignore_patterns("*.tmp"),
-        )
-    got = spark.read.parquet(tmp).count()
-    if got != want:
-        raise RuntimeError(
-            f"stamp migration row-count mismatch ({got} != {want}); "
-            f"staged output left at {tmp}, original untouched"
-        )
-    _swap_in(path, tmp, ".pre-stamp-migration")
-    return {"rows": want, "seed_rows": seed, "had_stamp_col": had_stamp_col}
 
 
 def migrate_band_checkpoint_stamps(spark, path: str) -> dict:
-    """ONE-TIME upgrade migration for band checkpoints written (fully or
-    partially) by pre-``src_batch`` builds: rewrites the state so every
-    row carries an explicit stamp — existing stamps preserved, unstamped
-    legacy rows stamped -1 (seed) — and keeps the partition grid and
-    parameter sidecar.
-
-    Why it exists: :func:`read_band_checkpoint`'s mergeSchema+coalesce
-    keeps a legacy CORPUS correct, but an unstamped row written by a
-    pre-stamp build's crashed (torn) append is indistinguishable from a
-    legacy seed row — a replay of that same batch under stamped code
-    would self-match it, the pre-stamp silent-loss bug in its one-time
-    upgrade window. No row-level rule can tell those two apart, so the
-    operator must assert the distinction: run this at a CLEAN boundary
-    (no crashed in-flight batch — e.g. after the last pre-upgrade batch
-    completed, before the first post-upgrade one starts), at which point
-    stamping everything unstamped as seed is exactly right. After the
-    migration every future torn append is stamped by the writing batch
-    and the replay exclusion is airtight again. Idempotent; returns
-    ``{rows, seed_rows, had_stamp_col}``."""
-    return _migrate_checkpoint_stamps(
-        spark,
-        path,
-        lambda: (
-            ["band", "sigb"]
-            if read_band_params(spark, path)["n_sig_buckets"]
-            else ["band"]
-        ),
-        "_band_params",
-    )
-
-
-def migrate_chunk_checkpoint_stamps(spark, path: str) -> dict:
-    """:func:`migrate_band_checkpoint_stamps` for chunk checkpoints —
-    same one-time upgrade window, same clean-boundary precondition,
-    same semantics."""
-    return _migrate_checkpoint_stamps(
-        spark,
-        path,
-        lambda: (
-            ["lhb"]
-            if read_chunk_params(spark, path)["n_buckets"]
-            else []
-        ),
-        "_chunk_params",
-    )
-
-
-def _compact_checkpoint(spark, path: str, sidecar: str, part_cols_fn) -> dict:
-    """Shared body of the two checkpoint compactions (VERDICT r9 #2):
-    rewrite every bucket directory of a band/chunk dedup checkpoint to
-    ONE file, keeping the partition grid, the parameter sidecar, and the
-    committed-batch high-water markers, via the count-verified staged
-    swap the other parquet maintenance ops use (crash mid-swap → marker
-    → :func:`io.writers.recover_staged_swap`).
-
-    Why it exists: each ingest micro-batch appends one file per touched
-    bucket, so after N batches a bucket directory holds up to N small
-    files and the pruned per-batch probe — whose whole point is opening
-    few files — degrades into a small-files scan. Plain
-    :func:`io.writers.compact_parquet` cannot run here: it flattens the
-    Hive partition layout the literal-filter pruning depends on, and it
-    knows nothing of the sidecar or the ``_ingest_hwm`` markers, whose
-    loss would re-arm the torn-sidecar refusal and DISARM the batch-id
-    collision guard respectively.
-
-    Clean-boundary refusal: rows stamped ABOVE the committed high-water
-    mark belong to an in-flight (or crashed and not-yet-replayed) batch
-    — the same uncommitted state the hwm fingerprint guard refuses to
-    re-admit. Compacting concurrently with that batch's writer would
-    read a snapshot, then swap away whatever the writer appended after
-    the read — silent state loss. So compaction refuses until the batch
-    either commits (marker lands) or is replayed to completion, exactly
-    the stamp-migration precondition. Rows AT or below the hwm compact
-    freely; their ``src_batch`` stamps are preserved verbatim, so the
-    replay exclusion and re-delivery semantics are unchanged (proven by
-    running the ingest-equivalence tests over a mid-sequence-compacted
-    checkpoint). Legacy unstamped rows (pre-``src_batch`` files under
-    mergeSchema) rewrite as explicit NULL stamps, which the readers
-    coalesce to -1 — observably identical to the un-compacted mixed
-    layout, and NOT a stamp migration (a legacy torn append stays in
-    its documented pre-migration limbo; run the migration first if that
-    window applies).
-
-    ``part_cols_fn`` is a thunk (it reads the parameter sidecar) called
-    only after ``recover_staged_swap`` — same rationale as the stamp
-    migration. Idempotent; returns ``{rows, files_before, files_after,
-    hwm}``."""
-    import os as _os
-    import shutil as _shutil
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io import (
-        writers as _writers,
-    )
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        _swap_in,
-        recover_staged_swap,
-    )
-
-    recover_staged_swap(path)
-    part_cols = part_cols_fn()
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    files_before = len(df.inputFiles())
-    hwm = ingest_high_water_mark(path)
-    if "src_batch" in df.columns:
-        stats = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(
-                F.coalesce(F.col("src_batch").cast("int"), F.lit(-1))
-            ).alias("mx"),
-        ).collect()[0]
-        want = int(stats["n"])
-        max_src = int(stats["mx"]) if stats["mx"] is not None else -1
-    else:
-        want, max_src = df.count(), -1
-    if max_src > hwm:
-        raise ValueError(
-            f"checkpoint at {path} holds rows stamped src_batch="
-            f"{max_src}, above the committed high-water mark {hwm}: an "
-            "ingest batch is in flight (or crashed and not yet "
-            "replayed). Compaction would swap away anything that batch "
-            "appends after the snapshot read — let it commit or replay "
-            "to completion first (the stamp-migration clean-boundary "
-            "rule)."
-        )
-    tmp = path.rstrip("/") + ".compacting"
-    _shutil.rmtree(tmp, ignore_errors=True)
-    if part_cols:
-        # repartition ON the grid: each partition value combo lands in
-        # exactly one task, so every bucket directory gets exactly one
-        # output file — the post-compact invariant the tests pin
-        (
-            df.repartition(*part_cols)
-            .write.partitionBy(*part_cols)
-            .parquet(tmp)
-        )
-    else:
-        df.coalesce(1).write.parquet(tmp)
-    # carry the parameter sidecar and the committed-batch markers into
-    # the staged copy — losing the former re-arms the torn-sidecar
-    # append refusal, losing the latter resets the hwm to -1 and disarms
-    # the batch-id collision guard (the migrate_* rules)
-    _shutil.copytree(
-        _os.path.join(path, sidecar), _os.path.join(tmp, sidecar)
-    )
-    hwm_src = _hwm_dir(path)
-    if _os.path.isdir(hwm_src):
-        # stale .tmp stages from killed marker publishers are dead
-        # weight — carry only the committed markers forward
-        _shutil.copytree(
-            hwm_src, _hwm_dir(tmp),
-            ignore=_shutil.ignore_patterns("*.tmp"),
-        )
-    staged = spark.read.parquet(tmp)
-    staged_files = staged.inputFiles()
-    # row-count cross-check from the staged files' parquet footers —
-    # the same verification, minus a full Spark re-scan of the staged
-    # copy (optimization r15, the write_parquet_snapshot footer rule)
-    got = _writers._footer_row_count(sorted(staged_files))
-    if got != want:
-        raise RuntimeError(
-            f"checkpoint compaction row-count mismatch ({got} != {want});"
-            f" staged output left at {tmp}, original untouched"
-        )
-    files_after = len(staged_files)
-    _swap_in(path, tmp, ".pre-compaction")
-    return {
-        "rows": want,
-        "files_before": files_before,
-        "files_after": files_after,
-        "hwm": hwm,
-    }
+    """One-time ``src_batch`` stamp migration of a band checkpoint, run
+    at a clean batch boundary — see :meth:`_CheckpointKind.migrate`."""
+    return _BANDS.migrate(spark, path)
 
 
 def compact_band_checkpoint(spark, path: str) -> dict:
-    """Compact a band checkpoint's accumulated per-batch append files to
-    one file per ``(band, sigb)`` bucket directory (one per ``band`` on
-    a flat layout), preserving grid, sidecar, hwm markers, and every
-    ``src_batch`` stamp — see :func:`_compact_checkpoint` for the
-    clean-boundary refusal and crash-recovery contract. Run it on the
-    maintenance cadence that keeps per-bucket file counts O(1) between
-    compactions (e.g. every N batches); the probe's literal-filter
-    pruning then opens ~1 file per matched bucket instead of N."""
-    return _compact_checkpoint(
-        spark,
-        path,
-        "_band_params",
-        lambda: (
-            ["band", "sigb"]
-            if read_band_params(spark, path)["n_sig_buckets"]
-            else ["band"]
-        ),
-    )
-
-
-def compact_chunk_checkpoint(spark, path: str) -> dict:
-    """:func:`compact_band_checkpoint` for chunk checkpoints — one file
-    per ``lhb`` bucket directory (a single file on a flat layout), same
-    preservation and refusal contract."""
-    return _compact_checkpoint(
-        spark,
-        path,
-        "_chunk_params",
-        lambda: (
-            ["lhb"]
-            if read_chunk_params(spark, path)["n_buckets"]
-            else []
-        ),
-    )
+    """Compact a band checkpoint to one file per ``(band, sigb)`` cell
+    (one per ``band`` on a flat layout), keeping grid, sidecar, markers
+    and stamps — see :meth:`_CheckpointKind.compact`. Run it on a
+    cadence that keeps per-cell file counts O(1)."""
+    return _BANDS.compact(spark, path)
 
 
 def streaming_neardup_ingest(
@@ -1073,69 +1138,17 @@ def streaming_neardup_ingest(
     max_files_per_trigger: int = 1,
     compact_every: int = 0,
 ):
-    """Streaming twin of the d11 band checkpoint (VERDICT r6 #8): an
-    ``availableNow`` ingestion loop where each micro-batch of documents
-    (1) dedups against the PERSISTED band checkpoint — the corpus text
-    is never scanned, same plan as ``incremental_neardup_pairs(
-    corpus_bands=...)``; (2) appends its surviving docs to ``out_path``;
-    (3) appends its own bands to the checkpoint (``mode='append'``, so
-    the parameter sidecar is validated, never re-stamped) — making later
-    batches dedup against everything earlier ones admitted.
-
-    Returns a ``DataStreamWriter``; callers ``.start()`` it. Restart
-    semantics: the STREAMING checkpoint (``stream_checkpoint``) records
-    which source files each micro-batch consumed, so a restart over the
-    same source re-processes nothing — the restart-idempotence the
-    exactly-once test proves. The standard ``foreachBatch`` gap (a crash
-    INSIDE a micro-batch replays the whole batch on restart) is closed
-    for the OUTPUT side by :func:`ingest_batch_idempotent`: survivors go
-    to a per-``batch_id`` partition via dynamic partition overwrite, so
-    a replay overwrites its own partition instead of appending a second
-    copy (replay-idempotence tested by running one batch twice). Band
-    rows still append — a replay can duplicate a band row, which is
-    semantically harmless (pairs are ``distinct()``-ed before the anti
-    join) and costs only bounded storage.
-
-    The band checkpoint must already exist (seed it once from the
-    initial corpus with :func:`write_band_checkpoint`) — that's the
-    production flow, and it pins the (k, num_hashes, band_rows)
-    parameters every batch must use.
-
-    ``compact_every`` (r10): run :func:`compact_band_checkpoint` after
-    every Nth committed batch (ids N-1, 2N-1, …), folding the state
-    maintenance into the loop so per-bucket file counts stay O(N)
-    between compactions instead of growing one file per batch forever.
-    The compaction runs AFTER the batch's commit marker lands, so its
-    in-flight refusal can never fire here, and it is itself crash-safe
-    (marker-protected swap, self-healing on the next run); a compaction
-    crash before the swap completes leaves the checkpoint valid and the
-    stream checkpoint un-advanced for nothing — the batch was already
-    committed. 0 disables (the default — small deployments may prefer
-    an external maintenance window)."""
-    # fail fast (and pin parameters) before any micro-batch runs
-    read_band_checkpoint(
-        spark, band_path, id_col,
-        k=k, num_hashes=num_hashes, band_rows=band_rows,
-    )
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_batch_idempotent(
-            batch_df, batch_id, band_path, out_path,
-            id_col=id_col, text_col=text_col,
-            k=k, num_hashes=num_hashes, band_rows=band_rows,
-        )
-        if compact_every and (int(batch_id) + 1) % compact_every == 0:
-            compact_band_checkpoint(spark, band_path)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", stream_checkpoint)
-        .trigger(availableNow=True)
+    """Streaming form of the d11 band checkpoint (VERDICT r6 #8): each
+    micro-batch dedups against the persisted band checkpoint (the
+    corpus text is never scanned), publishes its survivors to
+    ``out_path`` and appends its own bands, so later batches dedup
+    against everything earlier ones admitted. Seed the checkpoint first
+    with :func:`write_band_checkpoint`. See :meth:`_CheckpointKind.stream`."""
+    return _BANDS.stream(
+        spark, source_dir, schema, band_path, out_path, stream_checkpoint,
+        id_col, text_col,
+        dict(k=k, num_hashes=num_hashes, band_rows=band_rows),
+        max_files_per_trigger, compact_every,
     )
 
 
@@ -1150,164 +1163,14 @@ def ingest_batch_idempotent(
     num_hashes: int = 12,
     band_rows: int = 3,
 ) -> None:
-    """One micro-batch of the streaming dedup ingest, REPLAY-SAFE: dedup
-    ``batch_df`` against the persisted band checkpoint, publish survivors,
-    append the survivors' bands.
-
-    The hardening (closes the foreachBatch mid-batch-crash caveat the
-    first cut documented): survivors land in an ``ingest_batch=<id>``
-    partition via DYNAMIC partition overwrite, so replaying a crashed
-    batch — which ``foreachBatch`` does with the SAME batch_id —
-    overwrites that batch's own partition instead of appending a second
-    copy. Output duplication, the actual correctness hazard, is thereby
-    impossible; earlier batches' partitions are untouched by the scoped
-    overwrite. Band rows still append (a replay can leave a duplicate
-    band row), which is benign by construction: candidate pairs are
-    ``distinct()``-ed before the anti join, so a duplicated band can
-    only re-derive the same pair, never re-admit a document — the cost
-    is bounded storage, not wrong answers.
-
-    Replay determinism (ADVICE r7 #1, re-scoped per ADVICE r8): the
-    corpus side EXCLUDES every band row STAMPED with the current
-    ``batch_id`` (``src_batch == batch_id``, a row-local filter — no
-    join at all) — a replay therefore sees exactly the pre-batch corpus
-    state and recomputes the identical survivor set REGARDLESS of how
-    much of the previous attempt's band append landed. Without this, a
-    torn append (crash mid job-commit) would let a replayed survivor
-    match its own — or a sibling survivor's — partially-landed bands and
-    the scoped dynamic overwrite would rewrite the partition without
-    those docs: permanent silent loss. A plain ``new_id != corpus_id``
-    self-pair filter would NOT suffice: two intra-batch survivors that
-    near-dup each other would still cross-match each other's landed
-    bands and both drop. Scoping the exclusion by the WRITER's batch id
-    rather than by the batch's doc ids (the r8 form) also keeps
-    at-least-once upstreams honest: an id re-delivered in a LATER batch
-    still sees its own earlier-batch bands on the corpus side and is
-    dropped as the duplicate it is, instead of having its history
-    anti-joined away and being silently re-admitted. Verified by tests
-    that replay the same (batch_df, batch_id) over full AND torn band
-    appends, and by a cross-batch re-delivery test. Upgrade caveat: a
-    checkpoint holding UNSTAMPED rows from a pre-stamp build must be
-    migrated at a clean boundary first
-    (:func:`migrate_band_checkpoint_stamps`) — a legacy torn append is
-    indistinguishable from legacy seed rows and sits outside this
-    exclusion's reach.
-
-    Batch-id collision guard (ADVICE r9): the stamp-scoped exclusion is
-    only sound while batch ids never RECUR below the checkpoint's
-    committed high-water mark — ``foreachBatch`` epochs restart at 0
-    under a new streaming checkpoint, and a colliding id would both
-    exclude a prior incarnation's committed same-id bands (silently
-    re-admitting their near-duplicates) and clobber its same-id output
-    partition. Each committed batch therefore drops an O_EXCL marker
-    (:func:`ingest_high_water_mark`) and ``batch_id < hwm`` raises
-    loudly; ``== hwm`` stays allowed as the legitimate newest-batch
-    replay. Verified by an incarnation-restart test.
-
-    Degenerate text: a NULL-text doc has no shingles, is never a dup
-    candidate, and PASSES THROUGH to the output — unlike the chunk
-    ingest twin, where NULL text drops the doc (SQL NULL propagation;
-    see :func:`chunk_dedup_keep_first`)."""
-    if int(batch_id) < 0:
-        raise ValueError(
-            f"batch_id must be >= 0 (got {batch_id}): -1 is reserved for "
-            "seed-corpus checkpoint rows and would exclude them"
-        )
-    batch_fp = _batch_fingerprint(batch_df, id_col, text_col)
-    _guard_batch_id_monotonic(
-        band_path, batch_id, "band checkpoint", fingerprint=batch_fp
+    """One replay-safe micro-batch of the band ingest: drop the batch's
+    near-duplicates of the checkpoint, publish the survivors to an
+    ``ingest_batch=<id>`` partition, append their bands. A NULL-text
+    doc passes through. See :meth:`_CheckpointKind.ingest`."""
+    _BANDS.ingest(
+        batch_df, batch_id, band_path, out_path, id_col, text_col,
+        dict(k=k, num_hashes=num_hashes, band_rows=band_rows),
     )
-    s = batch_df.sparkSession
-    # The batch's bands feed THREE consumers — the sigb pruning probe,
-    # the pair expansion, and the survivors' checkpoint append — so they
-    # are banded ONCE and cached for the batch scope (micro-batch-sized
-    # (id, band, band_sig) rows). The first cut re-minhashed the batch
-    # per consumer: three full shingle+minhash passes per micro-batch,
-    # measured as the bulk of d20's 28-42s at sf0.1 (~13s after).
-    params = read_band_params(s, band_path)
-    n_sig_buckets = params["n_sig_buckets"]
-    batch_bands = lsh_bands(
-        minhash_signatures(batch_df, id_col, text_col, k, num_hashes),
-        id_col, num_hashes, band_rows,
-    ).cache()
-    # dup_ids is assigned mid-try; pre-initialize so the finally can
-    # test `is not None` instead of probing locals() by string (the
-    # chunk twin's `kept = None` pattern — a rename would silently turn
-    # a locals() probe into a no-op and leak the cached id set)
-    dup_ids = None
-    try:
-        # state pruning (VERDICT r8 #4): collect the batch's own
-        # distinct sigb bucket ids — bounded by the sidecar's
-        # n_sig_buckets, the same bounded-params class as the 1-row
-        # bounds sidecars — and scan the checkpoint through that literal
-        # partition filter. A batch spanning every bucket degrades to
-        # the full scan.
-        sig_buckets = None
-        if n_sig_buckets:
-            sig_buckets = sorted(
-                r.sigb
-                for r in batch_bands.select(
-                    _lh_bucket(F.col("band_sig"), n_sig_buckets).alias(
-                        "sigb"
-                    )
-                )
-                .distinct()
-                .collect()
-            )
-        corpus_bands = read_band_checkpoint(
-            s, band_path, id_col,
-            k=k, num_hashes=num_hashes, band_rows=band_rows,
-            sig_buckets=sig_buckets, params=params,
-        )
-        # drop ONLY the current batch's own (possibly torn) prior append
-        # from the corpus side: replays must dedup against the pre-batch
-        # state
-        corpus_bands = corpus_bands.where(
-            F.col("src_batch") != int(batch_id)
-        ).drop("src_batch")
-        pairs = incremental_neardup_pairs(
-            batch_df, None, id_col, text_col,
-            k=k, num_hashes=num_hashes, band_rows=band_rows,
-            corpus_bands=corpus_bands, new_bands=batch_bands,
-        )
-        # dup_ids feeds TWO actions through `clean` (the output write and
-        # the band-append's semi-join) — cache the tiny id set so the
-        # expensive probe chain behind it (state scan + bucket expansion)
-        # runs once per batch, not once per consumer
-        dup_ids = pairs.select(F.col("new_id").alias(id_col)).distinct(
-        ).cache()
-        clean = batch_df.join(dup_ids, on=id_col, how="left_anti")
-        (
-            clean.withColumn("ingest_batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(out_path)
-        )
-        # append the SURVIVORS' bands from the already-computed batch
-        # bands (semi-join on the admitted ids — never a re-minhash),
-        # stamped with this batch's id and folded into the sigb grid
-        # READ FROM the sidecar (validated, never re-stamped; the
-        # sidecar file itself is untouched by appends here)
-        add = batch_bands.join(
-            F.broadcast(clean.select(id_col)), on=id_col, how="left_semi"
-        ).withColumn("src_batch", F.lit(int(batch_id)))
-        if n_sig_buckets:
-            add = add.withColumn(
-                "sigb", _lh_bucket(F.col("band_sig"), n_sig_buckets)
-            )
-            add.repartition("band", "sigb").write.mode(
-                "append"
-            ).partitionBy("band", "sigb").parquet(band_path)
-        else:
-            add.write.mode("append").partitionBy("band").parquet(band_path)
-        # commit marker LAST: a crash anywhere above leaves it absent
-        # and the replay re-enters as batch_id >= hwm
-        _mark_batch_committed(band_path, batch_id, batch_fp)
-    finally:
-        batch_bands.unpersist()
-        if dup_ids is not None:
-            dup_ids.unpersist()
 
 
 def incremental_neardup_pairs(
@@ -2622,45 +2485,55 @@ def _reassemble_chunks(
     )
 
 
-def _lh_bucket(col: Column, n_buckets: int) -> Column:
-    """Stable bucket id in [0, n_buckets) for a chunk-hash (hex md5
-    string) or band-sig (binary) column — the partition key of a
-    bucketed checkpoint. xxhash64 accepts both types; pmod folds the
-    signed hash non-negative."""
-    return F.pmod(F.xxhash64(col), F.lit(int(n_buckets)))
+def _chunk_firsts(chunks: DataFrame, id_col: str) -> DataFrame:
+    """(lh, id, pos): the first occurrence of every distinct chunk hash
+    — chunk checkpoint state. Only (id, pos) ride the min struct: the
+    state never stores chunk text."""
+    fo = F.min(F.struct(F.col(id_col).alias("id"), F.col("pos"))).alias("fo")
+    return chunks.groupBy("lh").agg(fo).select(
+        "lh", F.col("fo.id").alias(id_col), F.col("fo.pos").alias("pos")
+    )
+
+
+def _chunk_core(batch_df, chunks, prior, id_col, text_col, want):
+    """Chunk ingest: drop every chunk whose hash the state holds, keep
+    the within-batch first occurrence of the rest (the batch operator's
+    min(struct) aggregate), reassemble the survivors per document and
+    append the batch's new first occurrences. A NULL-text doc has no
+    chunks and DROPS OUT of the output, as in
+    :func:`chunk_dedup_keep_first` — unlike band ingest."""
+    fresh = chunks.join(prior.select("lh"), on="lh", how="left_anti")
+    # kept feeds the output write and the append: cached, so the state
+    # anti-join and the aggregate run once per batch
+    kept = _first_occurrence_survivors(fresh, id_col).cache()
+    out = _reassemble_chunks(chunks, kept, id_col)
+    return out, kept.select("lh", id_col, "pos"), kept
+
+
+_CHUNKS = _CheckpointKind(
+    name="chunk",
+    key="lh",
+    bucket="lhb",
+    grid="n_buckets",
+    lead=(),
+    default_grid=64,
+    mismatch="chunk boundaries would never align",
+    encoding=None,
+    key_rows=lambda df, id_col, text_col, want: _doc_chunks(
+        df, id_col, text_col, want["chunk_words"]
+    ),
+    state_rows=_chunk_firsts,
+    columns=lambda id_col: ["lh", id_col, "pos"],
+    core=_chunk_core,
+)
 
 
 def read_chunk_params(spark, path: str) -> dict:
     """The chunk checkpoint's parameter sidecar as a dict —
-    ``{"chunk_words", "n_buckets"}`` — the same shape as its band twin
-    :func:`read_band_params` (review r9: the tuple form forced
-    magic-index access at call sites, and adding a sidecar field — as
-    this round did for bands — silently shifts tuple positions).
-    Pre-bucketing sidecars read as n_buckets=0 (flat layout). Memoized
-    per (path, sidecar mtime) — see ``_PARAMS_MEMO``."""
-
-    def _load() -> dict:
-        got = (
-            spark.read.parquet(f"{path}/_chunk_params").collect()[0].asDict()
-        )
-        return {
-            "chunk_words": int(got["chunk_words"]),
-            "n_buckets": int(got.get("n_buckets", 0) or 0),
-        }
-
-    return _memoized_sidecar(spark, f"{path}/_chunk_params", _load)
-
-
-def _validate_chunk_words(path: str, stored_cw: int, chunk_words: int) -> None:
-    """Raise unless the caller's chunk width matches the sidecar's —
-    shared by the reader and the append path of the writer so both fail
-    with the same message from ONE sidecar read."""
-    if stored_cw != chunk_words:
-        raise ValueError(
-            f"chunk checkpoint at {path} was written with chunk_words="
-            f"{stored_cw}, caller expects {chunk_words}: chunk "
-            "boundaries would never align"
-        )
+    ``{"chunk_words", "n_buckets"}``; pre-bucketing sidecars read as
+    n_buckets=0 (flat layout). Memoized per (path, sidecar mtime) — see
+    ``_PARAMS_MEMO``."""
+    return _CHUNKS.params(spark, path)
 
 
 def write_chunk_checkpoint(
@@ -2674,134 +2547,17 @@ def write_chunk_checkpoint(
     n_buckets: int | None = None,
 ) -> None:
     """Persist a corpus's span-dedup state — the FIRST occurrence
-    ``(lh, id, pos)`` of every distinct chunk hash — the between-batches
-    twin of d11's band checkpoint for :func:`chunk_dedup_keep_first`
-    (VERDICT r7 #8). Re-chunking 100 TB of admitted corpus on every
-    incoming batch is the dominant repeated cost; this checkpoint is one
-    16-byte hash + two ids per DISTINCT chunk, written once and probed
-    by every subsequent :func:`chunk_ingest_batch_idempotent` call. The
-    ``chunk_words`` parameter rides a sidecar exactly like the band
-    checkpoint's: a mismatched reuse would chunk on different
-    boundaries and silently drop nothing.
-
-    ``batch_id`` stamps rows with the writing batch's id (``src_batch``;
-    -1 = seed corpus) so the ingest replay exclusion is scoped to the
-    current batch's own torn appends — same rule and rationale as
-    :func:`write_band_checkpoint` (ADVICE r8). As there, an append
-    REQUIRES an explicit batch_id (a silently seed-stamped append would
-    sit outside the replay exclusion; ``batch_id=-1`` remains the
-    explicit clean-boundary seed-extension assertion), stamped appends
-    record the committed high-water mark, and ids below it are refused
-    (ADVICE r9 — restarted batch counters over kept state).
-
-    ``n_buckets`` (VERDICT r8 #4) hash-partitions the state by
-    ``lhb = pmod(xxhash64(lh), n_buckets)`` so
-    :func:`chunk_ingest_batch_idempotent` can prune whole state
-    DIRECTORIES its batch cannot possibly match (literal partition
-    filter from the batch's own bucket set) instead of scanning the
-    full linear state every micro-batch — the known-linear residual
-    VERDICT r8 adjudicated. The bucket count rides the sidecar (appends
-    must fold new rows into the SAME partition grid or the probe's
-    literal filter would miss them); 0 = flat legacy layout. The
-    default ``None`` resolves to 64 on a fresh write and to the
-    EXISTING sidecar's grid on an append (so appending to a flat or
-    differently-sized checkpoint with defaults keeps working); pass an
-    explicit int to ASSERT the grid instead. Pruning
-    pays off when a micro-batch's distinct chunk count is small against
-    ``n_buckets`` or the hash space is hot-skewed; a batch that touches
-    every bucket degrades gracefully to the full scan it did before.
-    SIZE the grid to the state, not the default: each bucket is a
-    partition directory whose per-write commit has a fixed cost
-    (measured ~35 ms/dir on local FS, worse on object stores), so aim
-    for per-bucket state around file-sized (100 MB-1 GB at scale) — a
-    10k-row state over 64 buckets pays more in commits than in data
-    (2.75s vs 0.45s flat, measured; the attestation queries use 16).
-
-    An ``append`` onto a directory that has data files but NO parameter
-    sidecar is refused (ADVICE r8): that state means a previous writer
-    crashed between the data write and the sidecar write, and blindly
-    re-stamping the caller's ``chunk_words`` would legitimize rows
-    possibly chunked at a different width — the exact mismatch the
-    sidecar exists to catch. Recover by re-seeding with
-    ``mode='overwrite'``."""
-    batch_id = _resolve_append_batch_id(mode, batch_id, "chunk checkpoint")
-    batch_fp = None
-    if mode == "append" and batch_id >= 0:
-        batch_fp = _batch_fingerprint(corpus_df, id_col, text_col)
-        _guard_batch_id_monotonic(
-            path, batch_id, "chunk checkpoint", fingerprint=batch_fp
-        )
-    spark = corpus_df.sparkSession
-    sidecar_exists = False
-    if mode == "append":
-        # validate, never re-stamp (the band-checkpoint ADVICE r6 rule);
-        # ONE sidecar read serves the width check, the grid check, and
-        # the None-grid resolution (the first cut launched three driver
-        # jobs here)
-        try:
-            params = read_chunk_params(spark, path)
-            stored_cw = params["chunk_words"]
-            stored_nb = params["n_buckets"]
-        except Exception:
-            stored_cw = stored_nb = None
-        if stored_cw is not None:
-            sidecar_exists = True
-            _validate_chunk_words(path, stored_cw, chunk_words)
-            if n_buckets is None:
-                n_buckets = stored_nb
-            elif stored_nb != n_buckets:
-                raise ValueError(
-                    f"chunk checkpoint at {path} is bucketed with "
-                    f"n_buckets={stored_nb}, caller expects {n_buckets}: "
-                    "appended rows would land outside the probe's "
-                    "partition grid"
-                )
-        else:
-            try:
-                has_data = bool(spark.read.parquet(path).columns)
-            except Exception:
-                has_data = False
-            if has_data:
-                raise ValueError(
-                    f"chunk checkpoint at {path} has data files but no "
-                    "chunk_words sidecar (torn earlier write?): refusing "
-                    "to append — existing rows may be chunked at a "
-                    "different width. Re-seed with mode='overwrite'."
-                )
-    if n_buckets is None:
-        n_buckets = 64
-    firsts = (
-        _doc_chunks(corpus_df, id_col, text_col, chunk_words)
-        .groupBy("lh")
-        .agg(
-            F.min(F.struct(F.col(id_col).alias("id"), F.col("pos"))).alias(
-                "fo"
-            )
-        )
-        .select("lh", F.col("fo.id").alias(id_col), F.col("fo.pos").alias("pos"))
-        .withColumn("src_batch", F.lit(int(batch_id)))
+    ``(lh, id, pos)`` of every distinct chunk hash (VERDICT r7 #8), one
+    16-byte hash and two ids per distinct chunk, so no batch re-chunks
+    the admitted corpus. Partitioned by ``lhb = pmod(xxhash64(lh),
+    n_buckets)`` (default 64; 0 = flat, unpartitioned) so the ingest
+    probe prunes to its batch's buckets; ``chunk_words`` rides the
+    ``_chunk_params`` sidecar. Seeding, appending and the grid follow
+    :meth:`_CheckpointKind.write`."""
+    _CHUNKS.write(
+        corpus_df, path, id_col, text_col, dict(chunk_words=chunk_words),
+        mode, batch_id, n_buckets,
     )
-    if n_buckets:
-        # repartition ON the partition key first: a plain partitionBy
-        # write sprays one file per (task, bucket) pair — up to
-        # tasks x n_buckets tiny files PER WRITE, compounding every
-        # append; clustered, each bucket gets exactly one file here
-        firsts = firsts.withColumn("lhb", _lh_bucket(F.col("lh"), n_buckets))
-        firsts.repartition("lhb").write.mode(mode).partitionBy(
-            "lhb"
-        ).parquet(path)
-    else:
-        firsts.write.mode(mode).parquet(path)
-    # skipped on an append with a validated sidecar in place — the
-    # values are guaranteed identical and the overwrite would re-open
-    # the torn-sidecar crash window (band twin's rule)
-    if not sidecar_exists:
-        # local_frame, not createDataFrame — see the band sidecar above
-        local_frame(
-            spark, [(chunk_words, n_buckets)], "chunk_words int, n_buckets int"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_chunk_params")
-    if mode == "append" and batch_id >= 0:
-        _mark_batch_committed(path, batch_id, batch_fp or "")
 
 
 def read_chunk_checkpoint(
@@ -2812,41 +2568,26 @@ def read_chunk_checkpoint(
     buckets: list[int] | None = None,
     params: dict | None = None,
 ) -> DataFrame:
-    """Load a chunk checkpoint written by :func:`write_chunk_checkpoint`
-    as ``(lh, id_col, pos, src_batch)``, validating the caller's
-    ``chunk_words`` against the sidecar (a mismatch chunks on different
-    boundaries — no hash could ever match and every batch would dedup
-    against nothing). Pre-src_batch checkpoints read as src_batch=-1
-    (seed rows).
-
-    ``buckets``: on a bucketed checkpoint, restrict the read to these
-    ``lhb`` partition values as a LITERAL partition filter — the scan
-    then never opens the other buckets' files (the VERDICT r8 #4
-    pruning path). Ignored on a flat (n_buckets=0) layout, where there
-    is nothing to prune.
-
-    ``params``: a sidecar dict the caller already read via
-    :func:`read_chunk_params` — skips the second sidecar collect job
-    (one driver round-trip per micro-batch in the ingest loop)."""
-    if params is None:
-        params = read_chunk_params(spark, path)
-    stored_cw, stored_nb = params["chunk_words"], params["n_buckets"]
-    _validate_chunk_words(path, stored_cw, chunk_words)
-    # mergeSchema + coalesce: see read_band_checkpoint — mixed
-    # pre/post-src_batch files must read as seed rows (-1), not as NULLs
-    # the exclusion filter silently drops. Same scope caveat: a legacy
-    # TORN append is indistinguishable from legacy seed rows — run
-    # :func:`migrate_chunk_checkpoint_stamps` at a clean boundary before
-    # the first post-upgrade ingest.
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    if stored_nb and buckets is not None:
-        df = df.where(F.col("lhb").isin([int(b) for b in buckets]))
-    src = (
-        F.coalesce(F.col("src_batch").cast("int"), F.lit(-1))
-        if "src_batch" in df.columns
-        else F.lit(-1)
+    """Load a chunk checkpoint as ``(lh, id_col, pos, src_batch)`` after
+    validating ``chunk_words`` against the sidecar. ``buckets``
+    restricts the scan to those ``lhb`` cells; ``params`` is a sidecar
+    dict already read via :func:`read_chunk_params`. See
+    :meth:`_CheckpointKind.read`."""
+    return _CHUNKS.read(
+        spark, path, id_col, dict(chunk_words=chunk_words), buckets, params
     )
-    return df.select("lh", id_col, "pos", src.alias("src_batch"))
+
+
+def migrate_chunk_checkpoint_stamps(spark, path: str) -> dict:
+    """One-time ``src_batch`` stamp migration of a chunk checkpoint, run
+    at a clean batch boundary — see :meth:`_CheckpointKind.migrate`."""
+    return _CHUNKS.migrate(spark, path)
+
+
+def compact_chunk_checkpoint(spark, path: str) -> dict:
+    """Compact a chunk checkpoint to one file per ``lhb`` cell (a single
+    file on a flat layout) — see :meth:`_CheckpointKind.compact`."""
+    return _CHUNKS.compact(spark, path)
 
 
 def chunk_ingest_batch_idempotent(
@@ -2858,148 +2599,22 @@ def chunk_ingest_batch_idempotent(
     text_col: str = "text",
     chunk_words: int = 10,
 ) -> None:
-    """One micro-batch of streaming span dedup, replay-safe — d14's
-    incremental form, completing the dedup-family matrix (d11 already
-    has it for document-level LSH; VERDICT r7 #8). Each batch: (1) drop
-    every chunk whose hash is already in the persisted first-occurrence
-    checkpoint — the admitted corpus is never re-chunked; (2) keep the
-    within-batch first occurrence of each remaining hash (the same
-    min(struct) aggregate as the batch operator — no window over the
-    hot boilerplate keys); (3) reassemble surviving spans per document
-    and publish to a per-``batch_id`` partition via dynamic partition
-    overwrite; (4) append the batch's own new first-occurrences to the
-    checkpoint. Batches with increasing ids reproduce
-    :func:`chunk_dedup_keep_first` on the concatenated corpus exactly
-    (streaming==batch twin test) — PROVIDED doc ids are monotone with
-    batch order, the twin test's (and d19's) delivery contract. When a
-    later batch delivers a SMALLER id sharing a chunk with an admitted
-    doc, the stream keeps the admitted copy (arrival order) while the
-    batch operator's min(struct(id, pos)) would keep the smaller id —
-    the stream is still a correct keep-first under arrival order, it
-    just isn't the id-ordered batch answer (review r14: the claim was
-    previously unconditional).
+    """One replay-safe micro-batch of streaming span dedup — d14's
+    incremental form: drop the batch's chunks already in the
+    checkpoint, keep the within-batch first occurrences, publish the
+    reassembled documents to an ``ingest_batch=<id>`` partition and
+    append the new first occurrences. See :meth:`_CheckpointKind.ingest`.
 
-    Replay safety follows the torn-append rule of
-    :func:`ingest_batch_idempotent`, re-scoped per ADVICE r8: the
-    checkpoint rows STAMPED with the current ``batch_id``
-    (``src_batch == batch_id`` — the current batch's own possibly-torn
-    prior append, and nothing else) are excluded by a row-local filter,
-    so a replay — over a complete OR torn previous append — sees exactly
-    the pre-batch state and recomputes the identical output, which the
-    scoped dynamic overwrite then rewrites byte-identically. Scoping by
-    writer batch id (not by the batch's doc ids) means an id
-    re-delivered in a LATER batch still probes against its own
-    earlier-batch spans and dedups correctly instead of being silently
-    re-admitted. Checkpoint appends may duplicate (lh, id, pos) rows on
-    replay; harmless — the probe is a left_anti on ``lh``. Upgrade
-    caveat (band twin's rule): a checkpoint with unstamped pre-stamp
-    rows needs :func:`migrate_chunk_checkpoint_stamps` at a clean
-    boundary before the first post-upgrade ingest. Batch-id collision
-    guard (ADVICE r9, band twin's rule): committed batches drop an
-    O_EXCL high-water marker and ``batch_id < hwm`` raises — a batch
-    counter restarted at 0 over kept state (new streaming checkpoint,
-    second pipeline on one state path) would otherwise exclude a prior
-    incarnation's committed same-id spans from the probe and clobber
-    its same-id output partition; ``== hwm`` stays allowed as the
-    newest-batch replay.
-
-    State pruning (VERDICT r8 #4): on a bucketed checkpoint the probe
-    first collects the batch's own DISTINCT ``lhb`` bucket ids — a
-    driver-side list bounded by the sidecar's ``n_buckets``, the same
-    bounded-params class as the 1-row bounds sidecars — and reads the
-    state through that literal partition filter, so buckets the batch
-    cannot match are never opened. The anti-join itself is unchanged;
-    only the state scan shrinks. A batch whose chunks span every bucket
-    reads everything, exactly as the flat layout did.
-
-    Degenerate text follows the batch operator
-    (:func:`chunk_dedup_keep_first`): a NULL-text doc has no chunks and
-    is absent from the batch's output partition — gate upstream if it
-    must be surfaced."""
-    if int(batch_id) < 0:
-        raise ValueError(
-            f"batch_id must be >= 0 (got {batch_id}): -1 is reserved for "
-            "seed-corpus checkpoint rows and would exclude them"
-        )
-    batch_fp = _batch_fingerprint(batch_df, id_col, text_col)
-    _guard_batch_id_monotonic(
-        chunk_path, batch_id, "chunk checkpoint", fingerprint=batch_fp
+    Batches with increasing ids reproduce :func:`chunk_dedup_keep_first`
+    on the concatenated corpus exactly PROVIDED doc ids are monotone
+    with batch order (d19's delivery contract). A later batch that
+    delivers a SMALLER id sharing a chunk with an admitted doc keeps the
+    admitted copy (arrival order), where the batch operator would keep
+    the smaller id."""
+    _CHUNKS.ingest(
+        batch_df, batch_id, chunk_path, out_path, id_col, text_col,
+        dict(chunk_words=chunk_words),
     )
-    s = batch_df.sparkSession
-    # chunks feeds the lhb bucket probe, the fresh->firsts->kept chain
-    # (twice within the output write's own branches), and totals — cache
-    # the micro-batch-sized exploded frame for the batch scope so the
-    # split/transform/md5 chunking runs once, not once per consumer (the
-    # same per-consumer-recompute fix as batch_bands in the band twin;
-    # this is a BATCH frame, not the corpus — the never-cache-exploded-
-    # corpus rule doesn't apply)
-    chunks = _doc_chunks(batch_df, id_col, text_col, chunk_words).cache()
-    # EVERYTHING after the cache sits inside the try: the sidecar read /
-    # chunk_words validation and the bucket-probe collect can all raise,
-    # and in a long-lived foreachBatch session a raise that skipped the
-    # finally would pin another exploded batch frame in executor storage
-    # on every failed retry
-    kept = None
-    try:
-        params = read_chunk_params(s, chunk_path)
-        n_buckets = params["n_buckets"]
-        buckets = None
-        if n_buckets:
-            buckets = sorted(
-                r.lhb
-                for r in chunks.select(
-                    _lh_bucket(F.col("lh"), n_buckets).alias("lhb")
-                )
-                .distinct()
-                .collect()
-            )
-        prior = read_chunk_checkpoint(
-            s, chunk_path, id_col, chunk_words, buckets=buckets,
-            params=params,
-        )
-        prior = prior.where(
-            F.col("src_batch") != int(batch_id)
-        ).drop("src_batch")
-        fresh = chunks.join(prior.select("lh"), on="lh", how="left_anti")
-        # kept feeds TWO actions (the output write and the checkpoint
-        # append) — cache it for the batch scope so the state anti-join
-        # and first-occurrence aggregate run once, not twice;
-        # micro-batch sized, released in the finally below
-        kept = _first_occurrence_survivors(fresh, id_col).cache()
-        out = _reassemble_chunks(chunks, kept, id_col).withColumn(
-            "ingest_batch", F.lit(int(batch_id))
-        )
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(out_path)
-        )
-        # the batch's own new first occurrences (post-anti-join, so this
-        # appends ONLY the batch's additions, never corpus re-chunks),
-        # stamped with this batch's id for the replay-exclusion scope and
-        # folded into the checkpoint's partition grid when bucketed
-        add = kept.select("lh", id_col, "pos").withColumn(
-            "src_batch", F.lit(int(batch_id))
-        )
-        if n_buckets:
-            # cluster on the partition key (see write_chunk_checkpoint):
-            # one file per touched bucket per append, not per (task,
-            # bucket) — otherwise the state the pruning exists to keep
-            # cheap degrades into a tiny-file swamp
-            add = add.withColumn("lhb", _lh_bucket(F.col("lh"), n_buckets))
-            add.repartition("lhb").write.mode("append").partitionBy(
-                "lhb"
-            ).parquet(chunk_path)
-        else:
-            add.write.mode("append").parquet(chunk_path)
-        # commit marker LAST (band twin's rule): a crash above leaves it
-        # absent and the replay re-enters as batch_id >= hwm
-        _mark_batch_committed(chunk_path, batch_id, batch_fp)
-    finally:
-        if kept is not None:
-            kept.unpersist()
-        chunks.unpersist()
 
 
 def streaming_chunk_dedup_ingest(
@@ -3016,32 +2631,11 @@ def streaming_chunk_dedup_ingest(
     compact_every: int = 0,
 ):
     """Streaming driver for :func:`chunk_ingest_batch_idempotent` — the
-    d14 twin of :func:`streaming_neardup_ingest`, same ``availableNow``
-    + ``foreachBatch`` shape, same restart semantics (the streaming
-    checkpoint records consumed source files; the per-batch dynamic
-    overwrite makes mid-batch crash replays byte-identical), same
-    ``compact_every`` maintenance cadence (compact AFTER every Nth
-    batch's commit marker lands — the in-flight refusal can never fire
-    from inside the loop; 0 disables). Seed the chunk checkpoint once
-    from the initial corpus with :func:`write_chunk_checkpoint`.
-    Returns a ``DataStreamWriter``; callers ``.start()`` it."""
-    read_chunk_checkpoint(spark, chunk_path, id_col, chunk_words)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        chunk_ingest_batch_idempotent(
-            batch_df, batch_id, chunk_path, out_path,
-            id_col=id_col, text_col=text_col, chunk_words=chunk_words,
-        )
-        if compact_every and (int(batch_id) + 1) % compact_every == 0:
-            compact_chunk_checkpoint(spark, chunk_path)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", stream_checkpoint)
-        .trigger(availableNow=True)
+    d14 form of :func:`streaming_neardup_ingest`. Seed the chunk
+    checkpoint first with :func:`write_chunk_checkpoint`. See
+    :meth:`_CheckpointKind.stream`."""
+    return _CHUNKS.stream(
+        spark, source_dir, schema, chunk_path, out_path, stream_checkpoint,
+        id_col, text_col, dict(chunk_words=chunk_words),
+        max_files_per_trigger, compact_every,
     )

@@ -8,10 +8,12 @@ Not a pytest module (no ``test_`` prefix) — a one-shot runner:
 
     python tests/run_sf01_rehearsal.py [sf_dir] [summary_out.json]
 
-Protocol (matches the recorded BASELINE_BENCH protocol_notes entries):
-``spark.driver.memory=8g`` (d06 emits 5.25M pairs at sf0.1 and the
-harness collects results — the 1g default driver dies), ``local[32]``,
-``clearCache()`` + ``release_plan_caches()`` between queries. Prints
+Protocol: the session is the engine's own ``start_session()`` — its
+``spark.driver.memory`` default is 8g (d06 emits 5.25M pairs at sf0.1
+and the harness collects results — a 1g driver dies), and the core count
+and shuffle partitions come from ``SPARK_GRAFT_CPUS`` (set it to the
+host's core count) — with ``clearCache()`` + ``release_plan_caches()``
+between queries. Prints
 one ``REHEARSAL:{...}`` summary line to stdout; pass a second argument
 to also write that summary as a JSON file.
 """
@@ -30,17 +32,9 @@ sys.path.insert(0, REPO)
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    from pyspark.sql import SparkSession
+    from pyspark_bigdata_sars_cov_2_analysis_spark import plans, start_session
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .appName("sf01-rehearsal")
-        .getOrCreate()
-    )
-    from pyspark_bigdata_sars_cov_2_analysis_spark import plans
+    spark = start_session("sf01-rehearsal")
     from pyspark_bigdata_sars_cov_2_analysis_spark.plans import registry
     from tests.oracle_harness import compare
 
