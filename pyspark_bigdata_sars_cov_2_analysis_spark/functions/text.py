@@ -44,7 +44,7 @@ def token_count(col: Column) -> Column:
     ``['']`` in Spark, DuckDB, and Python alike, and every DuckDB
     oracle replicates this exact expression, so the engines agree by
     construction. Changing it to 0 would also divide-by-zero every
-    ratio built on it (:func:`stopword_ratio`, :func:`avg_token_length`).
+    ratio built on it (:func:`stopword_ratio`).
     The same twin-fidelity rule covers tab/newline EDGES: SQL ``trim``
     strips only ASCII spaces, so ``'hello\n'`` counts 2 (a trailing
     phantom empty) — in BOTH engines identically; the count is a
@@ -146,11 +146,6 @@ def word_set_occurrences(col: Column, words: list[str]) -> Column:
 
 def stopword_ratio(col: Column) -> Column:
     return word_set_occurrences(col, STOPWORDS) / token_count(col)
-
-
-def avg_token_length(col: Column) -> Column:
-    nonspace = F.length(F.regexp_replace(col, r"\s", ""))
-    return nonspace / token_count(col)
 
 
 def quality_score(col: Column) -> Column:

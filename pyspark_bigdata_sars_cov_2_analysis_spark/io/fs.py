@@ -59,10 +59,12 @@ here is convenience built on them:
 
 Everything a backend does NOT need is deliberate: no atomic rename, no
 append, no directory locks, no consistent multi-key transactions. The
-ONE local-FS protocol outside this seam is the checkpoint staged-swap
-(``writers.recover_staged_swap``: marker + two directory renames),
-which is a maintenance op documented as local-only; on object stores
-the equivalent is copy-to-new-prefix + repoint, out of scope here.
+ONE local-FS protocol outside this seam is the dedup checkpoint's
+staged swap (``writers._swap_in`` / ``writers.recover_staged_swap``:
+marker + two directory renames, used only by the checkpoint rewrite in
+``llmdata/dedup.py``), a maintenance op documented as local-only; on
+object stores the equivalent is copy-to-new-prefix + repoint, out of
+scope here.
 
 Paths: callers may pass plain local paths or ``file:`` URIs in any
 slash spelling (Spark's ``inputFiles()`` emits ``file:///``). ``for_path``

@@ -7,8 +7,8 @@ Differences from the reference, by design:
 - S2: the reference unions one JSON read per source dir in a Python loop
   (``spark/jobs/research_challenge_analysis.py:39-69``); we pass the list
   of paths to a single read so Spark plans one scan.
-- S3: images/binary via the ``binaryFile`` source with label derived from
-  the path, not four reads + ``lit`` tags
+- S3: images via the ``image`` source with label derived from the path,
+  not four reads + ``lit`` tags
   (``spark/jobs/radiography_analysis.py:71-89``).
 """
 
@@ -49,25 +49,6 @@ def read_parquet(
     if merge_schema:
         return spark.read.option("mergeSchema", "true").parquet(path)
     return spark.read.parquet(path)
-
-
-def read_xml(
-    spark: SparkSession,
-    path: str,
-    row_tag: str,
-    schema: StructType | str | None = None,
-    **options: str,
-) -> DataFrame:
-    """XML scan via Spark 4's built-in xml source (S-family extension —
-    the reference reads only CSV/JSON/images). ``row_tag`` names the
-    repeating element that becomes one row; pass ``schema`` at scale for
-    the same prune/pushdown reasons as read_csv (inference reads the
-    data twice). Round-trip (write.format('xml') → read) is pinned in
-    tests/test_io_and_ops.py."""
-    reader = spark.read.format("xml").options(rowTag=row_tag, **options)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)
 
 
 def read_csv(
@@ -137,21 +118,6 @@ def read_json(
     return df
 
 
-def read_binary_files(
-    spark: SparkSession, path: str, glob: str | None = None
-) -> DataFrame:
-    """Binary/image directory scan (S3) → columns
-    (path, modificationTime, length, content) with a ``label`` column
-    extracted from the parent directory name."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(path)
-    return df.withColumn(
-        "label", F.regexp_extract(F.col("path"), r"([^/]+)/[^/]+$", 1)
-    )
-
-
 def read_images(
     spark: SparkSession, path: str, drop_invalid: bool = True
 ) -> DataFrame:
@@ -183,12 +149,6 @@ def load_tables(
         if os.path.exists(p):
             out[t] = spark.read.parquet(p)
     return out
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same vectorized/pushdown treatment as parquet; the
-    columnar alternative for ORC-standardized lakes."""
-    return spark.read.orc(path)
 
 
 def read_text(

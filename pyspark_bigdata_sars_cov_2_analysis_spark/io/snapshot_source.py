@@ -23,8 +23,7 @@ Design (the scale path, not the driver-side ``simpleStreamReader``):
   per batch is O(new data), parallel across executors.
 - **Exactly-once by immutability.** A replayed ``(start, end]`` range
   re-resolves the same immutable manifests to the same immutable files
-  — bit-identical re-reads, the synthetic_docs streaming argument
-  applied to real bytes at rest.
+  — bit-identical re-reads of real bytes at rest.
 - **Insert-only semantics, refusal on rewrites** (the transactional-
   format default): ``append`` versions emit their new files; the
   table's FIRST version is the initial content; ``compact`` versions

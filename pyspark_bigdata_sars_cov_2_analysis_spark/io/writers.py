@@ -74,74 +74,6 @@ def write_parquet(
     writer.parquet(path)
 
 
-def overwrite_partitions(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-) -> None:
-    """Dynamic partition overwrite: replace ONLY the partitions present in
-    ``df``, leaving every other partition untouched — the idempotent
-    incremental-backfill write. With static overwrite (the default), an
-    'overwrite' of one late-arriving day would DELETE the other N thousand
-    date partitions of a 100 TB table; the per-write option scopes the
-    overwrite to the partitions being written, so re-running a failed
-    backfill converges instead of compounding."""
-    _refuse_snapshot_table(path, "overwrite_partitions")
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_by)
-        .parquet(path)
-    )
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table — the
-    at-rest layout for repeated co-located joins: two tables bucketed on
-    the same key with the same bucket count join with NO shuffle on either
-    side (and no sort, if sorted). At 100 TB this converts every
-    fact⋈fact join on the bucket key from a full-network shuffle into a
-    local zip of pre-matched buckets; the one-time bucketing shuffle is
-    paid at write."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table_name)
-
-
-def write_range_sorted(
-    df: DataFrame,
-    path: str,
-    sort_col: str,
-    n_partitions: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist parquet globally range-clustered on ``sort_col``:
-    repartitionByRange gives each output file a disjoint value range and
-    sortWithinPartitions orders rows inside it, so every file's and
-    row-group's min/max footer stats become TIGHT. Parquet readers
-    (Spark's vectorized scan included) skip whole row groups whose
-    [min,max] misses a pushed predicate — on a 100 TB fact table a
-    point/range filter on the cluster column then reads the few files
-    that can match instead of every footer's worth of data. The
-    clustering shuffle is paid once at write (range exchange samples the
-    key distribution, so skew self-balances). Verified by a test that
-    reads the written footers and asserts the per-file ranges are
-    pairwise disjoint."""
-    _refuse_snapshot_table(path, "write_range_sorted")
-    parts = df.repartitionByRange(n_partitions, F.col(sort_col)) if (
-        n_partitions
-    ) else df.repartitionByRange(F.col(sort_col))
-    parts.sortWithinPartitions(sort_col).write.mode(mode).parquet(path)
-
-
 _ZORDER_NUMERIC = {
     "tinyint", "smallint", "int", "bigint", "float", "double"
 }
@@ -149,9 +81,8 @@ _ZORDER_NUMERIC = {
 
 def _zorder_column(df: DataFrame, cols: list[str], bits: int = 12):
     """Min/max-scaled Morton code Column for ``df`` over ``cols`` (one
-    1-row stats aggregate), or None when the frame is empty — shared by
-    :func:`write_zorder` and the snapshot compaction's zorder strategy.
-    Per-column NULL guards (ADVICE r7): an all-NULL dimension is a
+    1-row stats aggregate), or None when the frame is empty — the
+    snapshot compaction's zorder strategy. Per-column NULL guards (ADVICE r7): an all-NULL dimension is a
     constant span (coordinate 0 for every row) instead of a TypeError at
     ``hi - lo``; row-level NULLs in a live dimension coalesce to the grid
     minimum so they cluster together at the cell origin rather than
@@ -186,88 +117,9 @@ def _zorder_column(df: DataFrame, cols: list[str], bits: int = 12):
     return zorder_value(scaled, bits=bits)
 
 
-def write_zorder(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 12,
-    n_partitions: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist parquet Z-order-clustered on ``cols`` — the multi-dimensional
-    sibling of :func:`write_range_sorted`. A 1-D range sort gives tight
-    footer stats only on its leading column (every file spans the FULL
-    range of the second column); interleaving the columns' bits into a
-    Morton code and range-clustering on THAT gives every file a compact
-    cell in all ``len(cols)`` dimensions, so a pushed predicate on ANY of
-    them skips most row groups. This is how a 100 TB fact table serves
-    both ``WHERE user_id = ?`` and ``WHERE day = ?`` from one layout
-    without a second copy. Cost: one stats pass (a 1-row min/max
-    aggregate) plus the same single clustering shuffle the 1-D writer
-    pays; verified by a footer-stats test that z-ordered files bound BOTH
-    dimensions while an x-sorted control leaves the second unbounded.
-    """
-    _refuse_snapshot_table(path, "write_zorder")
-    if "__z" in df.columns:
-        raise ValueError(
-            "input has a column named __z, which the zorder writer uses "
-            "as scratch (withColumn would replace it and drop would "
-            "delete it) — rename it first"
-        )
-
-    zcol = _zorder_column(df, cols, bits=bits)
-    if zcol is None:
-        # empty input: nothing to cluster; write the empty frame as-is
-        df.write.mode(mode).parquet(path)
-        return
-    z = df.withColumn("__z", zcol)
-    parts = (
-        z.repartitionByRange(n_partitions, F.col("__z"))
-        if n_partitions
-        else z.repartitionByRange(F.col("__z"))
-    )
-    (
-        parts.sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def audit_parquet_layout(path: str, small_file_mb: int = 16) -> dict:
-    """The detector that tells you WHEN to run :func:`compact_parquet`:
-    file count, byte totals, size quartiles, and the small-file fraction
-    of a parquet directory — pure footer-free filesystem metadata, no
-    Spark job, so auditing a 100 TB table's layout costs a listing, not
-    a scan. A pipeline healthcheck alerts on ``small_file_fraction``
-    (many files under ``small_file_mb``) before the metadata storm
-    degrades every reader."""
-    import glob as _glob
-    import os as _os
-
-    sizes = sorted(
-        _os.path.getsize(f)
-        for f in _glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
-    )
-    if not sizes:
-        return {"n_files": 0, "total_mb": 0.0, "small_file_fraction": 0.0}
-    n = len(sizes)
-    q = lambda f: sizes[min(n - 1, int(f * n))] / (1024 * 1024)
-    small = sum(1 for s in sizes if s < small_file_mb * 1024 * 1024)
-    return {
-        "n_files": n,
-        "total_mb": round(sum(sizes) / (1024 * 1024), 2),
-        "p25_mb": round(q(0.25), 3),
-        "p50_mb": round(q(0.50), 3),
-        "p75_mb": round(q(0.75), 3),
-        "max_mb": round(sizes[-1] / (1024 * 1024), 3),
-        "small_file_fraction": round(small / n, 3),
-    }
-
-
 def _swap_in(path: str, tmp: str, backup_suffix: str) -> None:
-    """The driver-side directory swap :func:`compact_parquet` and
-    :func:`merge_upsert_parquet` share, with the crash window between
+    """The driver-side directory swap the dedup checkpoint rewrite
+    (``llmdata/dedup.py``) commits through, with the crash window between
     the two renames made RECOVERABLE (ADVICE r7): a sidecar marker
     (``<path>.swap-in-progress``) records the three directories before
     the first rename and is removed after the table is back in place —
@@ -328,18 +180,6 @@ def recover_staged_swap(path: str) -> dict:
     return {"action": action}
 
 
-def _maybe_broadcast(df: DataFrame, n_rows: int) -> DataFrame:
-    """Broadcast-hint a frame only when its KNOWN row count is provably
-    small (r13 scale review): a typical upsert's updates side is tiny and
-    the hint spares the target a shuffle, but at 100 TB an upsert can be
-    a giant backfill — forcing the broadcast there OOMs the driver and
-    every executor. Beyond the threshold the join is left to Catalyst/
-    AQE, which will still broadcast if the runtime size allows and
-    shuffle-join otherwise. 1M rows is conservative for the sub-10MB
-    broadcast sweet spot at typical key widths."""
-    return F.broadcast(df) if n_rows <= 1_000_000 else df
-
-
 def _refuse_snapshot_table(path: str, op: str) -> None:
     """Staged-swap maintenance must never touch a snapshot-versioned
     table's directory (VERDICT r10 residual #3): the swap rewrites/
@@ -375,232 +215,12 @@ def _refuse_snapshot_table(path: str, op: str) -> None:
         probe = parent
 
 
-def merge_upsert_parquet(
-    spark,
-    path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    tmp_suffix: str = "_merging",
-) -> dict:
-    """MERGE INTO for a path-based parquet table: rows in ``updates``
-    REPLACE target rows with the same key, new keys INSERT — the upsert
-    every incremental pipeline eventually needs (late-arriving
-    corrections, dimension refreshes) and plain parquet has no answer
-    for. Semantics: ``target LEFT ANTI updates ∪ updates`` (one anti
-    join on the keys — a provably-small updates side is broadcast-hinted
-    so the target never shuffles; a giant backfill is left to AQE
-    instead of force-broadcast, r13 scale review), staged to a sibling dir,
-    count-verified (rows_out == rows_target − matched_rows +
-    rows_updates), then swapped in via the marker-protected
-    :func:`_swap_in` shared with :func:`compact_parquet` (crash mid-swap
-    → :func:`recover_staged_swap` rolls forward/back) — still non-atomic
-    for concurrent readers, which is precisely the gap transactional
-    table formats (Delta/Iceberg/Hudi) close with a metadata pointer
-    swap; this function IS that pointer swap, minus the lock service.
-    ``updates`` must be key-unique (enforced — duplicate update keys
-    would make the result order-dependent). Like :func:`compact_parquet`,
-    a Hive-partitioned target is flattened by the rewrite — merge into
-    partition directories individually to keep the layout. Returns
-    KEY counts: ``updated`` + ``inserted`` == rows_updates even when the
-    target holds duplicate keys (a matched key replaces ALL its target
-    rows), plus the verified output row count."""
-    import shutil
-
-    _refuse_snapshot_table(path, "merge_upsert_parquet")
-    # self-heal a previous crashed swap before reading the target: the
-    # marker protocol makes roll-forward/back safe and idempotent, so a
-    # maintenance job restarted after a mid-swap crash just works
-    recover_staged_swap(path)
-    dup = (
-        updates.groupBy(*key_cols).count().where(F.col("count") > 1).count()
-    )
-    if dup:
-        raise ValueError(
-            f"updates contain {dup} duplicate key(s) on {key_cols}; "
-            "resolve (e.g. keep-latest) before merging"
-        )
-    target = spark.read.parquet(path)
-    n_target = target.count()
-    n_updates = updates.count()
-    # matched ROWS size the row-count verification (they are what the
-    # anti join removes); matched KEYS are the stats — on a target with
-    # duplicate keys the two differ, and key-counting keeps
-    # updated+inserted == n_updates with inserted never negative
-    # (ADVICE r7)
-    hit_stats = (
-        target.join(
-            _maybe_broadcast(updates.select(*key_cols), n_updates),
-            key_cols,
-            "left_semi",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("r"),
-            F.countDistinct(*key_cols).alias("k"),
-        )
-        .first()
-    )
-    matched_rows, matched_keys = hit_stats.r, hit_stats.k
-    merged = target.join(
-        _maybe_broadcast(updates.select(*key_cols), n_updates),
-        key_cols,
-        "left_anti",
-    ).unionByName(updates)
-    tmp = path.rstrip("/") + tmp_suffix
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(tmp)
-    got = spark.read.parquet(tmp).count()
-    want = n_target - matched_rows + n_updates
-    if got != want:
-        raise RuntimeError(
-            f"merge row-count mismatch ({got} != {want}); staged output "
-            f"left at {tmp}, original untouched"
-        )
-    _swap_in(path, tmp, "_premerge")
-    return {
-        "updated": matched_keys,
-        "inserted": n_updates - matched_keys,
-        "rows": got,
-    }
-
-
-def write_parquet_sized(
-    df: DataFrame,
-    path: str,
-    target_file_mb: int = 128,
-    sample_rows: int = 10_000,
-    mode: str = "overwrite",
-) -> int:
-    """Parquet sink with BOUNDED file sizes when the row width is
-    unknown a priori — the complement of :func:`compact_parquet`
-    (that one fixes fragmentation after the fact; this prevents the
-    opposite failure, multi-GB files a downstream reader can't split
-    row-groups out of efficiently). Technique: write a ``sample_rows``
-    probe file, measure encoded bytes/row (real parquet encoding —
-    including compression — not an in-memory guess), derive
-    ``maxRecordsPerFile``, then write the full frame; Spark splits any
-    oversized task output at that record count. The probe rows are drawn
-    from the HEAD OF EVERY PARTITION, not a global ``limit`` prefix
-    (ADVICE r7: a prefix probe under-measures data whose row width grows
-    with position, e.g. sorted by payload size, producing oversized
-    files) — cross-partition sampling captures the width spread whenever
-    it varies across the dataset; only a width gradient hiding entirely
-    WITHIN every partition can still bias it. Small-file overhead
-    (dictionary/stats amortize better in big files) additionally biases
-    the estimate toward smaller files — the safe side. The per-partition
-    head is an ``islice`` over ``mapPartitions`` — one of the few
-    justified RDD uses in this codebase, because a SQL filter on the
-    within-partition row number evaluates over EVERY row (a full extra
-    scan), while the iterator stops pulling after its quota, so each
-    task reads only its leading row group(s) and the probe stays
-    ~sample_rows of IO regardless of frame size. Returns the
-    records-per-file cap used; no extra shuffle."""
-    _refuse_snapshot_table(path, "write_parquet_sized")
-    import glob as _glob
-    import os as _os
-    import shutil
-    from itertools import islice
-
-    probe = path.rstrip("/") + "_sizing"
-    n_parts = max(1, df.rdd.getNumPartitions())
-    per_part = max(1, sample_rows // n_parts)
-    sample = df.sparkSession.createDataFrame(
-        df.rdd.mapPartitions(lambda it: islice(it, per_part)), df.schema
-    )
-    sample.coalesce(1).write.mode("overwrite").parquet(probe)
-    files = _glob.glob(f"{probe}/*.parquet")
-    nbytes = sum(_os.path.getsize(f) for f in files)
-    nrows = max(1, df.sparkSession.read.parquet(probe).count())
-    bytes_per_row = max(1.0, nbytes / nrows)
-    max_records = max(1, int(target_file_mb * 1024 * 1024 / bytes_per_row))
-    shutil.rmtree(probe, ignore_errors=True)
-    (
-        df.write.mode(mode)
-        .option("maxRecordsPerFile", max_records)
-        .parquet(path)
-    )
-    return max_records
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    n_files: int,
-    tmp_suffix: str = "_compacting",
-) -> int:
-    """Rewrite a parquet directory into ``n_files`` larger files — the
-    maintenance pass for the small-files problem every incremental
-    pipeline accumulates (each micro-batch/backfill append leaves its
-    own part files; thousands of tiny files turn a 100 TB scan into a
-    metadata storm and starve the scheduler). Shape: one ``coalesce``
-    (NO shuffle — compaction is IO-bound, so we merge read-partitions
-    instead of paying a full exchange), staged into a sibling temp dir,
-    row-count-verified, then swapped in. The swap is driver-side
-    directory renames and therefore NOT atomic for concurrent readers —
-    the documented gap a transactional table format closes; for
-    path-based tables, run compaction in the same maintenance window as
-    the pipeline's other exclusive operations. A Hive-partitioned layout
-    is FLATTENED by this rewrite (partition values become plain
-    columns) — compact each partition directory individually to keep
-    the layout. Returns the row count.
-    """
-    import shutil
-
-    _refuse_snapshot_table(path, "compact_parquet")
-    # self-heal a previous crashed swap (see merge_upsert_parquet)
-    recover_staged_swap(path)
-    df = spark.read.parquet(path)
-    expected = df.count()
-    tmp = path.rstrip("/") + tmp_suffix
-    shutil.rmtree(tmp, ignore_errors=True)
-    df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    got = spark.read.parquet(tmp).count()
-    if got != expected:
-        raise RuntimeError(
-            f"compaction row-count mismatch ({got} != {expected}); "
-            f"staged output left at {tmp}, original untouched"
-        )
-    _swap_in(path, tmp, "_precompact")
-    return expected
-
-
-def write_csv(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    header: bool = True,
-    partition_by: list[str] | None = None,
-) -> None:
-    """CSV sink — the write side of S1 (the reference only ever READS
-    CSV). Header on by default to match read_csv's contract; keep CSV
-    for interchange edges only — at 100 TB it has no column pruning, no
-    predicate pushdown, and no footer stats, so anything queried again
-    belongs in parquet."""
-    _refuse_snapshot_table(path, "write_csv")
-    writer = df.write.mode(mode).option("header", str(header).lower())
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.csv(path)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    _refuse_snapshot_table(path, "write_orc")
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
 # ---------------------------------------------------------------------------
 # Snapshot-versioned parquet tables (r10): MVCC manifests over plain parquet.
-# compact_parquet/merge_upsert document the same gap every time — the staged
-# SWAP is not atomic for CONCURRENT readers (a reader listing the directory
-# mid-rename sees a missing table). These functions close that gap the way
-# transactional table formats do, minus the lock service: data files are
+# A staged directory SWAP (:func:`_swap_in`) is not atomic for CONCURRENT
+# readers (a reader listing the directory mid-rename sees a missing table).
+# These functions close that gap the way transactional table formats do,
+# minus the lock service: data files are
 # immutable and write-once under data/v<N>-<uuid>/, a tiny JSON manifest
 # names the exact file set of each version, and publishing is one O_EXCL
 # create — readers resolve a manifest FIRST and then read only the files it
@@ -1001,9 +621,7 @@ def write_parquet_snapshot(
     rows). Readers (:func:`read_parquet_snapshot`) never list the data
     directory — they read exactly the manifest's file list, so a
     half-written version is unobservable by construction. This is the
-    concurrent-reader-safe upgrade of the staged swap used by
-    compact_parquet/merge_upsert (which remain for path-layout tables
-    a plain ``spark.read.parquet(path)`` must keep working on).
+    concurrent-reader-safe upgrade of the staged swap (:func:`_swap_in`).
 
     ``src_batch`` stamps the manifest with the PUBLISHING micro-batch's
     id — :func:`streaming_snapshot_sink` uses it to make a replayed
@@ -1565,7 +1183,7 @@ def _effective_hwm(path: str, base: dict, cache: dict) -> int | None:
     post-carry-forward chain — else one barrier-aware newest-first scan
     per DISTINCT base version, memoized in ``cache`` across a publish
     retry loop (the ADVICE r12 discipline: never O(versions) per
-    attempt; shared by compact/DML/restore since r13's review pass
+    attempt; shared by compact and DML since r13's review pass
     found the idiom triplicated)."""
     hwm = base.get("src_batch")
     if hwm is not None:
@@ -1747,8 +1365,8 @@ def compact_parquet_snapshot(
 ) -> dict:
     """Rewrite the LATEST snapshot version's file set as ``target_files``
     files and publish the result as a NEW version — the small-files
-    maintenance op for MVCC tables (VERDICT r10 #3: ``compact_parquet``
-    is staged-swap and would break snapshot isolation if pointed at a
+    maintenance op for MVCC tables (VERDICT r10 #3: a staged-swap
+    rewrite would break snapshot isolation if pointed at a
     snapshot table's data dir; a streaming sink appending one tiny file
     set per micro-batch accumulates exactly like the checkpoint buckets
     d22 closed). Zero semantic change: the new manifest names the
@@ -1952,11 +1570,11 @@ def compact_parquet_snapshot(
 def _rmw_publish_snapshot(
     spark, path: str, compute, mode: str, max_retries: int = 5
 ) -> dict:
-    """Optimistic read-modify-write publish shared by the snapshot DML
-    ops (:func:`merge_upsert_snapshot`, :func:`delete_from_snapshot`) —
-    the conflict-detection loop transactional formats run under their
-    commit service, on a plain filesystem (r13; the compaction race
-    protocol generalized to arbitrary content rewrites):
+    """Optimistic read-modify-write publish behind the snapshot DML op
+    :func:`delete_from_snapshot` — the conflict-detection loop
+    transactional formats run under their commit service, on a plain
+    filesystem (r13; the compaction race protocol generalized to
+    arbitrary content rewrites):
 
     1. read the LATEST manifest (the optimistic "read version");
     2. ``compute(src_manifest, base_df)`` builds the replacement frame
@@ -1975,7 +1593,7 @@ def _rmw_publish_snapshot(
     The published manifest is stamped with the table's effective stream
     high-water (same rule as compaction: DML is maintenance ON the
     stream's lineage, not a reset — a crashed stream's replay after a
-    mid-stream merge must still be a publish no-op), and the rewrite
+    mid-stream delete must still be a publish no-op), and the rewrite
     materializes uniform files, so an evolved base sheds the flag
     exactly like compaction does."""
     import time as _time
@@ -2040,99 +1658,6 @@ def _rmw_publish_snapshot(
         }
 
 
-def merge_upsert_snapshot(
-    spark, path: str, updates: DataFrame, key_cols: list[str],
-    max_retries: int = 5,
-) -> dict:
-    """MERGE INTO for a snapshot-versioned table: rows in ``updates``
-    REPLACE every target row sharing their key, new keys INSERT, and
-    the result publishes as ONE new version — so concurrent readers
-    keep full snapshot isolation (they're pinned to their manifest's
-    file list), every pre-merge state stays time-travelable, and a
-    conflicting concurrent publish is DETECTED rather than lost (the
-    optimistic O_EXCL protocol of :func:`_rmw_publish_snapshot`). This
-    is the DML half the staged-swap :func:`merge_upsert_parquet`
-    deliberately refuses on snapshot tables.
-
-    ``updates`` must be key-unique (refused otherwise — duplicate keys
-    would make the result order-dependent) and must carry exactly the
-    table's manifest columns with their manifest dtypes, in ANY order
-    (the rewrite selects manifest order; unlike appends, no file ever
-    mixes schemas here, so column order is free). On an evolved base
-    the rewrite materializes uniform files and the new version sheds
-    the merge-read flag, exactly like compaction. Returns key-true
-    stats: ``updated`` + ``inserted`` == update row count even when the
-    target holds duplicate keys (a matched key replaces ALL its target
-    rows)."""
-    # one scan for both preflights (r13 review): total row count and
-    # the max per-key multiplicity come out of a single grouped
-    # aggregate instead of two full passes over updates. NULL keys
-    # group together and are refused like any duplicate — a multi-row
-    # NULL-key upsert is almost always a data bug, and refusing keeps
-    # parity with merge_upsert_parquet.
-    pre = (
-        updates.groupBy(*key_cols)
-        .count()
-        .agg(
-            F.coalesce(F.sum("count"), F.lit(0)).alias("n"),
-            F.coalesce(F.max("count"), F.lit(0)).alias("mx"),
-        )
-        .collect()[0]
-    )
-    if pre["mx"] > 1:
-        raise ValueError(
-            f"updates contain duplicate key(s) on {key_cols}; "
-            "resolve (e.g. keep-latest) before merging"
-        )
-    n_updates = pre["n"]
-    upd_types = {c: t for c, t in updates.dtypes}
-
-    def compute(src, target):
-        # legacy pre-manifest-schema tables (r13 review): derive the
-        # schema from the pinned read frame's dtypes — the same
-        # footer-derived answer the append path computes for them —
-        # instead of KeyError'ing on the missing field
-        tbl_schema = src.get("schema") or [list(p) for p in target.dtypes]
-        cols = [c for c, _t in tbl_schema]
-        tbl_types = {c: t for c, t in tbl_schema}
-        if upd_types != tbl_types:
-            raise ValueError(
-                f"merge schema mismatch at {path}: table has "
-                f"{tbl_schema}, updates bring "
-                f"{sorted(upd_types.items())}; updates must carry "
-                "exactly the table's columns and dtypes"
-            )
-        aligned = updates.select(*cols)
-        # one aggregate job: how many target ROWS and distinct KEYS the
-        # updates match (broadcast-hinted only while provably small —
-        # a giant backfill upsert must not force-broadcast)
-        matched = (
-            target.join(
-                _maybe_broadcast(aligned.select(*key_cols), n_updates),
-                key_cols,
-            )
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.countDistinct(*key_cols).alias("keys"),
-            )
-            .collect()[0]
-        )
-        merged = target.join(
-            _maybe_broadcast(aligned.select(*key_cols), n_updates),
-            key_cols,
-            "left_anti",
-        ).unionByName(aligned).select(*cols)
-        expected = src["rows"] - matched["rows"] + n_updates
-        return merged, expected, {
-            "updated": matched["keys"],
-            "inserted": n_updates - matched["keys"],
-        }
-
-    return _rmw_publish_snapshot(
-        spark, path, compute, "merge", max_retries=max_retries
-    )
-
-
 def delete_from_snapshot(
     spark, path: str, predicate, max_retries: int = 5
 ) -> dict:
@@ -2141,7 +1666,7 @@ def delete_from_snapshot(
     published version — SQL three-valued semantics, so NULL-predicate
     rows are KEPT, matching ``DELETE FROM t WHERE p``. Same isolation,
     time-travel, high-water and conflict-detection guarantees as
-    :func:`merge_upsert_snapshot`. Returns ``deleted`` alongside the
+    :func:`_rmw_publish_snapshot`. Returns ``deleted`` alongside the
     publish stats."""
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
 
@@ -2155,319 +1680,6 @@ def delete_from_snapshot(
     return _rmw_publish_snapshot(
         spark, path, compute, "delete", max_retries=max_retries
     )
-
-
-def update_snapshot(
-    spark, path: str, set: dict, predicate=None, max_retries: int = 5,
-) -> dict:
-    """UPDATE on a snapshot-versioned table — the third DML verb beside
-    :func:`merge_upsert_snapshot` and :func:`delete_from_snapshot`:
-    rows where ``predicate`` (Column or SQL string; None = every row)
-    evaluates TRUE get each ``set`` column replaced by its expression
-    (Column or SQL string, evaluated against the PRE-update row, so
-    ``{"v": "v + 1"}`` and swaps behave like SQL UPDATE); all other
-    rows pass through untouched, and the result publishes as ONE new
-    version under the same optimistic-concurrency, count-verify,
-    high-water-stamp and time-travel guarantees as the other DML ops
-    (:func:`_rmw_publish_snapshot`). SQL three-valued semantics: a
-    NULL predicate row is NOT updated. ``set`` may only name existing
-    columns with type-compatible expressions — new columns are schema
-    evolution's job, dtype changes always refuse (the feed and
-    merge-read contracts depend on stable dtypes). Returns ``updated``
-    alongside the publish stats."""
-    if not set:
-        raise ValueError("set must name at least one column")
-    cond = (
-        F.lit(True)
-        if predicate is None
-        else (F.expr(predicate) if isinstance(predicate, str) else predicate)
-    )
-    # strings are SQL expressions, Columns pass through, and any other
-    # Python value is a LITERAL (review r13: update(..., {'v': 0}) is a
-    # natural spelling that used to die with a bare AttributeError)
-    exprs = {
-        c: (
-            F.expr(e)
-            if isinstance(e, str)
-            else (e if isinstance(e, Column) else F.lit(e))
-        )
-        for c, e in set.items()
-    }
-
-    def compute(src, target):
-        tbl_schema = src.get("schema") or [list(p) for p in target.dtypes]
-        cols = [c for c, _t in tbl_schema]
-        types = dict(tbl_schema)
-        # {*...} literals: the SQL-shaped parameter name `set` shadows
-        # the builtin inside this function
-        unknown = sorted({*exprs} - {*cols})
-        if unknown:
-            raise ValueError(
-                f"update set columns {unknown} not in the table schema "
-                f"{cols}; add columns via allow_schema_evolution appends"
-            )
-        # probe each SET expression's OWN dtype (plan-only, no job):
-        # checking the merged when()'s type instead would let ANSI
-        # coercion hide a conflict until a runtime cast exception
-        # mid-write ('text' into a bigint column resolves the when to
-        # bigint with a runtime string->int cast)
-        probe_types = dict(
-            target.select(*[e.alias(c) for c, e in exprs.items()]).dtypes
-        )
-        # exact match or a SAFE numeric widening (an int literal into a
-        # bigint column merges losslessly — refusing it would make
-        # {'v': 0} unusable); string→bigint is NOT safe (ANSI runtime
-        # cast), double→bigint is NOT safe (truncation)
-        _INTS = ["tinyint", "smallint", "int", "bigint"]
-
-        def _ok(have: str, want: str) -> bool:
-            if have == want:
-                return True
-            if have in _INTS and want in _INTS:
-                return _INTS.index(have) <= _INTS.index(want)
-            return have == "float" and want == "double"
-
-        conflicts = sorted(
-            c for c in exprs if not _ok(probe_types[c], types[c])
-        )
-        if conflicts:
-            raise ValueError(
-                f"update changes dtype of {conflicts} (table has "
-                f"{[(c, types[c]) for c in conflicts]}, expressions give "
-                f"{[(c, probe_types[c]) for c in conflicts]}); cast the "
-                "expression to the column's type"
-            )
-        hit = F.coalesce(cond, F.lit(False))  # NULL predicate: keep
-        # every set expression evaluates against the PRE-update row (one
-        # select, SQL UPDATE semantics — swaps work); the explicit cast
-        # pins a safely-widening expression to the column's exact dtype
-        updated = target.select(
-            *[
-                F.when(hit, exprs[c].cast(types[c]))
-                .otherwise(F.col(c))
-                .alias(c)
-                if c in exprs
-                else F.col(c)
-                for c in cols
-            ]
-        )
-        n_hit = target.where(hit).count()
-        return updated, src["rows"], {"updated": n_hit}
-
-    return _rmw_publish_snapshot(
-        spark, path, compute, "update", max_retries=max_retries
-    )
-
-
-def restore_snapshot(
-    spark, path: str, version: int, max_retries: int = 5
-) -> dict:
-    """RESTORE the table to a past version by publishing that version's
-    FILE LIST as a new latest — zero bytes copied, pure manifest op
-    (r13; the instant rollback of a bad merge/delete/append that
-    transactional formats call RESTORE TABLE ... VERSION AS OF). The
-    restored-to version's files are shared forward, so vacuum keeps
-    them for as long as the restore manifest lives; the rolled-back
-    versions stay time-travelable until vacuumed like any other. An
-    ``evolved`` source version keeps its flag (its files still mix
-    schemas — a later compaction sheds it); the new manifest is stamped
-    with the table's effective stream high-water (rollback of CONTENT,
-    not of the replay guard — a restored table must not re-publish
-    already-published batches). A lost publish race simply re-links at
-    the next number: restore is an explicit rollback intent, not a
-    read-modify-write, so there is no lost-update anomaly to detect —
-    the restore wins by design, and the racing publish stays
-    time-travelable."""
-    import time as _time
-
-    src = _load_manifest(path, version)
-    if src is None:
-        have = _manifest_versions(path)
-        if not have:
-            raise FileNotFoundError(f"no snapshots published at {path}")
-        raise ValueError(
-            f"snapshot v{version} not found at {path}; have {have}"
-        )
-    # read-back verification (r13 review): restore is the one publish
-    # that names files it did not just write — a vacuum concurrently
-    # dropping the source version could have deleted them, and linking
-    # an unreadable latest would break the module's every-listed-
-    # manifest-readable invariant. One count job against the pinned
-    # list (evolved-aware) refuses cleanly instead. A narrow
-    # verify-to-link window remains — restore versions inside the
-    # vacuum keep horizon, or serialize restore with vacuum, to close
-    # it; vacuum cannot touch the files once the restore manifest is
-    # linked (shared forward).
-    readback = _read_snapshot_files(spark, src).count()
-    if readback != src["rows"]:
-        raise RuntimeError(
-            f"restore verification failed at {path}: v{version}'s "
-            f"manifest records {src['rows']} rows but its files read "
-            f"back {readback} — the version was likely vacuumed "
-            "mid-restore"
-        )
-    retries = 0
-    # hwm keyed by the observed latest version (the compact discipline):
-    # a lost race means a NEW latest — an unstamped overwrite landing
-    # there is a barrier, and a stale pre-race scan result would stamp
-    # a wrong high-water onto the restore manifest
-    hwm_cache: dict = {}
-    while True:
-        latest = _latest_manifest(path)
-        new_version = latest["version"] + 1
-        payload = {
-            "version": new_version,
-            "files": src["files"],
-            "rows": src["rows"],
-            "mode": "restore",
-            "restored_from": version,
-            "published_utc": _time.time(),
-        }
-        if src.get("schema") is not None:
-            payload["schema"] = src["schema"]
-        if src.get("evolved"):
-            payload["evolved"] = True
-        # same files ⇒ same stats: the source version's skipping stats
-        # restore verbatim with its file list
-        if src.get("stats_columns"):
-            payload["stats_columns"] = list(src["stats_columns"])
-            payload["stats"] = src.get("stats") or {}
-        hwm = _effective_hwm(path, latest, hwm_cache)
-        if hwm is not None:
-            payload["src_batch"] = int(hwm)
-        if not _link_manifest(path, new_version, payload):
-            retries += 1
-            if retries > max_retries:
-                raise RuntimeError(
-                    f"snapshot restore at {path} lost the publish race "
-                    f"{retries} times"
-                )
-            continue
-        return {
-            "version": new_version,
-            "restored_from": version,
-            "rows": src["rows"],
-            "retries": retries,
-        }
-
-
-def clone_snapshot(
-    spark, src_path: str, dst_path: str,
-    version: int | None = None, as_of_utc=None,
-) -> dict:
-    """SHALLOW CLONE: create a NEW snapshot table at ``dst_path`` whose
-    v1 manifest references the source version's files verbatim — zero
-    bytes copied and no data scan (one tiny footer read per referenced
-    file, the vacuum-race verification), the transactional-format
-    pattern for forking a 100 TB table into a dev/test/experiment
-    branch at metadata cost. The clone is a
-    fully independent table from then on: appends/DML/compaction write
-    into ITS data root, the source's history and replay guard are
-    untouched (a clone starts a fresh lineage — no ``src_batch`` is
-    carried), and data-skipping stats/evolved flags come along with the
-    file list. ``version``/``as_of_utc`` pin the source state exactly
-    like :func:`read_parquet_snapshot`.
-
-    Ownership contract (enforced in :func:`vacuum_parquet_snapshots`):
-    the clone does not OWN the source's bytes — its vacuum drops cloned
-    manifests but never deletes files outside its own ``data/`` root,
-    and conversely a SOURCE vacuum that drops the cloned-from version
-    deletes files the clone still references (exactly the documented
-    shallow-clone hazard of transactional formats). Either keep the
-    source's vacuum horizon behind every live clone, or MATERIALIZE the
-    clone (``compact_parquet_snapshot(dst, force=True)`` rewrites
-    everything into its own data root — ``force`` because an
-    already-small clone would otherwise no-op and keep the dependency)
-    before the source vacuums. Refuses a ``dst_path`` that already has
-    snapshots (clone creates tables, it doesn't overwrite them).
-
-    ``spark`` is accepted for signature symmetry with the other
-    snapshot ops but unused — the whole clone is driver-side manifest
-    and footer work (``spark=None`` is fine and the test proves it)."""
-    import time as _time
-
-    if version is not None and as_of_utc is not None:
-        raise ValueError("pass version OR as_of_utc, not both")
-    if as_of_utc is not None:
-        version = _version_as_of(src_path, _as_of_epoch(as_of_utc))
-        if version is None:
-            raise ValueError(
-                f"no snapshot at {src_path} published at or before "
-                f"{as_of_utc!r}"
-            )
-    if version is None:
-        src = _latest_manifest(src_path)
-        if src is None:
-            raise FileNotFoundError(
-                f"no snapshots published at {src_path}"
-            )
-    else:
-        src = _load_manifest(src_path, version)
-        if src is None:
-            raise ValueError(
-                f"snapshot v{version} not found at {src_path}; have "
-                f"{_manifest_versions(src_path)}"
-            )
-    if _manifest_versions(dst_path):
-        raise ValueError(
-            f"{dst_path} is already a snapshot table — clone creates "
-            "new tables; restore/DML mutate existing ones"
-        )
-    # the clone names files it did not write (restore's discipline): a
-    # source vacuum racing the clone could have deleted them — verify
-    # before publishing an unreadable table. Driver-side FOOTER reads,
-    # O(files) and no Spark job (ADVICE r13: a full count() scan made
-    # "zero bytes copied in O(1)" cost one table scan at 100 TB); a
-    # vacuumed file surfaces as an unreadable footer, a truncated /
-    # swapped one as a row-count mismatch — the same races the scan
-    # caught, at metadata cost.
-    import pyarrow.parquet as _pq
-
-    readback = 0
-    for f in src["files"]:
-        try:
-            readback += _pq.ParquetFile(_local_path(f)).metadata.num_rows
-        except Exception as exc:
-            raise RuntimeError(
-                f"clone verification failed: {src_path} v{src['version']} "
-                f"references {f}, which is missing or unreadable — the "
-                f"version was likely vacuumed mid-clone"
-            ) from exc
-    if readback != src["rows"]:
-        raise RuntimeError(
-            f"clone verification failed: {src_path} v{src['version']} "
-            f"records {src['rows']} rows but its file footers total "
-            f"{readback} — the version was likely vacuumed mid-clone"
-        )
-    _fs.for_path(dst_path).make_dirs(_snap_path(dst_path))
-    payload = {
-        "version": 1,
-        "files": src["files"],
-        "rows": src["rows"],
-        "mode": "clone",
-        "cloned_from": {
-            "path": _local_path(src_path), "version": src["version"]
-        },
-        "published_utc": _time.time(),
-    }
-    if src.get("schema") is not None:
-        payload["schema"] = src["schema"]
-    if src.get("evolved"):
-        payload["evolved"] = True
-    if src.get("stats_columns"):
-        payload["stats_columns"] = list(src["stats_columns"])
-        payload["stats"] = src.get("stats") or {}
-    if not _link_manifest(dst_path, 1, payload):
-        raise ValueError(
-            f"{dst_path} was concurrently created — clone refuses to "
-            "race another table's first publish"
-        )
-    return {
-        "version": 1,
-        "cloned_from": payload["cloned_from"],
-        "rows": src["rows"],
-        "files": len(src["files"]),
-    }
 
 
 def snapshot_changes(

@@ -313,10 +313,9 @@ def _hwm_dir(path: str) -> str:
 def ingest_high_water_mark(path: str) -> int:
     """Highest batch id ever COMMITTED into the checkpoint at ``path``
     (-1 = none yet / pre-hwm checkpoint). Read from append-only O_EXCL
-    marker files — one tiny empty file per committed batch, the same
-    local-FS maintenance-op model as the staged-swap markers and jsonl
-    snapshot versions (an object-store deployment swaps the O_EXCL
-    create for a conditional put). Listing cost is one readdir over
+    marker files — one tiny file per committed batch, created through
+    the filesystem seam's first-writer-wins ``put_if_absent``
+    (:func:`_mark_batch_committed`). Listing cost is one readdir over
     filenames; there is no torn-delete window because nothing is ever
     rewritten."""
     names = _fs.for_path(path).list_names(_hwm_dir(path))
@@ -783,9 +782,12 @@ class _CheckpointKind:
         partition overwrite, so a replay of a crashed batch (same
         batch_id under ``foreachBatch``) rewrites its own partition
         instead of appending a second copy; earlier partitions are
-        untouched. State rows still append, so a replay can duplicate
-        some — harmless, since both probes are set lookups (distinct
-        pairs, an anti-join on ``lh``).
+        untouched. State rows still append, so a replay of a crashed
+        batch can duplicate some — harmless, since both probes are set
+        lookups (distinct pairs, an anti-join on ``lh``). A replay of a
+        COMMITTED batch (its marker holds this content's fingerprint) is
+        a no-op: the marker is written last, so output and state have
+        both landed.
 
         Replay determinism (ADVICE r7 #1, re-scoped by ADVICE r8): the
         probe EXCLUDES the state rows stamped with this ``batch_id`` — a
@@ -818,6 +820,8 @@ class _CheckpointKind:
         batch_fp = _guard_batch_id_monotonic(
             path, bid, self.what, batch_df, id_col, text_col
         )
+        if _committed_fingerprint(path, bid) == batch_fp:
+            return
         s = batch_df.sparkSession
         keys = self.key_rows(batch_df, id_col, text_col, want).cache()
         held = [keys]
@@ -935,8 +939,8 @@ class _CheckpointKind:
         """Rewrite every grid cell to ONE file (VERDICT r9 #2): each
         ingest batch appends one file per touched cell, and after N
         batches the pruned probe — whose point is opening few files —
-        degrades into a small-files scan. ``compact_parquet`` cannot do
-        this: it flattens the grid and drops the sidecar and markers.
+        degrades into a small-files scan. The rewrite keeps the grid
+        layout, the sidecar and the markers.
 
         Clean-boundary refusal: rows stamped ABOVE the committed hwm
         belong to an in-flight (or crashed, not yet replayed) batch, and
@@ -1428,87 +1432,6 @@ def _exploded_shingles(arrs: DataFrame, id_col: str) -> DataFrame:
     return arrs.select(F.col(id_col), F.explode("__sh_arr").alias("shingle"))
 
 
-def jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    threshold: float = 0.1,
-    _arrs: DataFrame | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard ≥ threshold with LOSSLESS prefix filtering
-    (the AllPairs/PPJoin bound): if J(A,B) ≥ t, the pair must share a
-    shingle among each side's first ``|X| - ⌈t·|X|⌉ + 1`` shingles in a
-    global rarest-first order — so the inverted index only stores those
-    prefixes, and hot shingles (the quadratic blowup in a naive
-    shingle-join) fall out of candidate generation entirely.
-
-    Verification is row-local: candidates join each side's (small) full
-    shingle array once and compute ``size(array_intersect)`` — no second
-    pass over the inverted index. Output is identical to ``jaccard_pairs``
-    (tested). MEASURED crossover: at sf0.1 (5k docs, short texts) the
-    extra shuffles cost 7× more than the naive join saves, so the naive
-    form stays the default; this one is for corpora whose hottest shingle
-    appears in a large fraction of documents (inverted-list length ~N →
-    naive candidate pairs ~N², while prefixes only index rare shingles).
-
-    Physical shape (optimization r15): shingling runs ONCE into the
-    cached :func:`_shingle_arrays` frame; the inverted index explodes
-    from it, doc sizes are a ``size()`` projection of it (the former
-    per-doc count aggregate + exchange is gone), and verification reads
-    the cached arrays directly instead of rebuilding them with two
-    collect_list aggregates."""
-    arrs = (
-        _shingle_arrays(df, id_col, text_col, k) if _arrs is None else _arrs
-    )
-    sh = _exploded_shingles(arrs, id_col)
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
-    sizes = arrs.select(F.col(id_col), F.col("__n_sh").alias("n_sh"))
-    w = Window.partitionBy(id_col).orderBy(F.asc("df_"), F.asc("shingle"))
-    ranked = (
-        sh.join(freq, on="shingle")
-        .withColumn("rn", F.row_number().over(w))
-        .join(sizes, on=id_col)
-    )
-    # ceil(t*n) via an epsilon guard: fp overshoot (0.1*40 = 4.0000…01)
-    # would shorten the prefix and break losslessness; undershooting only
-    # admits extra candidates.
-    need = F.ceil(F.lit(threshold) * F.col("n_sh") - F.lit(1e-9))
-    prefix = ranked.where(F.col("rn") <= F.col("n_sh") - need + 1)
-    a = prefix.select(F.col(id_col).alias("id_a"), "shingle")
-    b = prefix.select(F.col(id_col).alias("id_b"), "shingle")
-    cands = (
-        a.join(b, on="shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    j = cands.join(
-        arrs.select(
-            F.col(id_col).alias("id_a"),
-            F.col("__sh_arr").alias("sa"),
-            F.col("__n_sh").alias("n_a"),
-        ),
-        on="id_a",
-    ).join(
-        arrs.select(
-            F.col(id_col).alias("id_b"),
-            F.col("__sh_arr").alias("sb"),
-            F.col("__n_sh").alias("n_b"),
-        ),
-        on="id_b",
-    )
-    inter = F.size(F.array_intersect("sa", "sb")).cast("bigint")
-    jac = j.select(
-        "id_a",
-        "id_b",
-        pround(
-            inter / (F.col("n_a") + F.col("n_b") - inter), 4
-        ).alias("jaccard"),
-    )
-    return jac.where(F.col("jaccard") >= threshold)
-
-
 def _cooccurrence_counts(
     arrs: DataFrame, id_col: str
 ) -> DataFrame:
@@ -1542,14 +1465,10 @@ def jaccard_pairs(
     text_col: str,
     k: int = 3,
     threshold: float = 0.1,
-    _arrs: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard over pairs sharing ≥1 shingle (full
-    inverted-index join) — fastest below the hot-shingle crossover
-    (see ``jaccard_pairs_prefix`` for the skew-proof variant)."""
-    arrs = (
-        _shingle_arrays(df, id_col, text_col, k) if _arrs is None else _arrs
-    )
+    inverted-index join over the cached :func:`_shingle_arrays`)."""
+    arrs = _shingle_arrays(df, id_col, text_col, k)
     jac = _cooccurrence_counts(arrs, id_col).withColumn(
         "jaccard",
         pround(
@@ -1620,8 +1539,9 @@ def _containment_prefix_candidates(
         .withColumn("rn", F.row_number().over(w))
         .join(sizes, on=id_col)
     )
-    # epsilon guard as in jaccard_pairs_prefix: fp overshoot must never
-    # shorten the prefix (losslessness); undershoot only adds candidates
+    # ceil(t*n) via an epsilon guard: fp overshoot (0.1*40 = 4.0000…01)
+    # must never shorten the prefix (losslessness); undershoot only adds
+    # candidates
     need = F.ceil(F.lit(threshold) * F.col("n_sh") - F.lit(1e-9))
     prefix = ranked.where(F.col("rn") <= F.col("n_sh") - need + 1)
     probe = prefix.select(F.col(id_col).alias("id_p"), "shingle")
@@ -1661,10 +1581,10 @@ def containment_pairs_prefix(
     oriented small→big; output identical to the naive form
     (property-tested, embedded-pair case included).
 
-    Physical shape (optimization r15): same single-pass cached
-    :func:`_shingle_arrays` skeleton as ``jaccard_pairs_prefix`` — one
-    shingling pass, sizes as a projection, verification from the cached
-    arrays (no collect_list rebuild aggregates)."""
+    Physical shape (optimization r15): one shingling pass into the
+    cached :func:`_shingle_arrays` frame, sizes as a projection,
+    verification from the cached arrays (no collect_list rebuild
+    aggregates)."""
     arrs = (
         _shingle_arrays(df, id_col, text_col, k) if _arrs is None else _arrs
     )
@@ -1900,9 +1820,9 @@ def _sampled_shingle_stats(
     salt: str,
     _arrs: DataFrame | None = None,
 ) -> dict:
-    """The corpus measurement both dispatch choosers share: shingle-
-    frequency aggregate over a deterministic md5-gated doc sample, with
-    unbiased scale-up. Doc-level p-sampling thins each shingle's doc
+    """The corpus measurement behind :func:`choose_containment_variant`:
+    shingle-frequency aggregate over a deterministic md5-gated doc
+    sample, with unbiased scale-up. Doc-level p-sampling thins each shingle's doc
     list binomially, so E[L̂·(L̂−1)] = p²·L·(L−1) and E[Σ L̂] = p·Σ L —
     hence quad /= p² and rows /= p are unbiased. ``l_max`` scales by
     1/p as an INDICATOR only (the max of thinned lists is not the
@@ -1954,81 +1874,6 @@ def _sampled_shingle_stats(
     }
 
 
-def choose_jaccard_variant(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    threshold: float = 0.1,
-    sample_fraction: float | None = 0.25,
-    _arrs: DataFrame | None = None,
-) -> tuple[str, dict]:
-    """Pick ``naive`` vs ``prefix`` Jaccard from ONE measured corpus stat
-    instead of making the caller guess (the round-4 advice item).
-
-    The shingle-frequency aggregate yields, in a single columnar scan +
-    one shuffle on the shingle key (noise next to the O(quad) join it
-    sizes):
-
-    - ``rows``  = total (doc, shingle) rows — every linear pass costs this;
-    - ``quad``  = Σ_s L_s·(L_s−1)/2 — the EXACT candidate-pair count the
-      naive inverted-index join will expand (not a model).
-
-    The prefix variant keeps ≈ (1−t) of each doc's shingles, so under a
-    uniform shingle-rank model it expands ≈ (1−t)²·quad candidates,
-    saving quad·(1−(1−t)²) — but pays fixed extra passes (frequency
-    join, per-doc rank window) that scale with ``rows``. MEASURED on both
-    ends: the sf0.01 corpus (Lmax=7, quad≈0.5·rows) has naive faster at
-    every threshold 0.1-0.7 (prefix 1.6-2× slower), and the 50k-replica
-    probe corpus (README) has naive 4.5× faster even at t=0.1 with
-    quad≈4.5·rows. Prefix only wins when a hot shingle appears in a
-    large fraction of documents (L_max ~ N → quad ~ N²/2 ≫ rows) — the
-    skew case candidate generation must not expand. β=2 places the
-    crossover safely past both measured naive-wins points:
-    choose prefix iff quad·(1−(1−t)²) > 2·rows.
-
-    ``sample_fraction`` (default 0.25): deterministic md5-gated
-    doc-level sample with unbiased scale-up — the shared
-    :func:`_sampled_shingle_stats` measurement (estimator math and the
-    l_max caveat documented there); pass ``None`` for the exact scan."""
-    stats = _sampled_shingle_stats(
-        df, id_col, text_col, k, sample_fraction, salt="jacchoose|",
-        _arrs=_arrs,
-    )
-    saved = stats["quad"] * (1.0 - (1.0 - threshold) ** 2)
-    stats["saved_candidates_est"] = saved
-    return ("prefix" if saved > 2.0 * stats["rows"] else "naive"), stats
-
-
-def jaccard_pairs_auto(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    threshold: float = 0.1,
-) -> DataFrame:
-    """Single Jaccard entry point: measures the corpus
-    (``choose_jaccard_variant``) and dispatches to ``jaccard_pairs`` or
-    ``jaccard_pairs_prefix`` — both emit identical pairs (lossless
-    property test), so the choice is purely physical. The chooser's
-    stats job and the chosen variant SHARE one cached
-    :func:`_shingle_arrays` frame (optimization r15) — the corpus is
-    shingled once for both, instead of once for the measurement and
-    3-6 more times inside the variant's plan."""
-    import logging
-
-    arrs = _shingle_arrays(df, id_col, text_col, k)
-    variant, stats = choose_jaccard_variant(
-        df, id_col, text_col, k, threshold, _arrs=arrs
-    )
-    logging.getLogger(__name__).info(
-        "jaccard_pairs_auto: variant=%s stats=%s threshold=%s",
-        variant, stats, threshold,
-    )
-    fn = jaccard_pairs_prefix if variant == "prefix" else jaccard_pairs
-    return fn(df, id_col, text_col, k, threshold, _arrs=arrs)
-
-
 def choose_containment_variant(
     df: DataFrame,
     id_col: str,
@@ -2038,11 +1883,12 @@ def choose_containment_variant(
     sample_fraction: float | None = 0.25,
     _arrs: DataFrame | None = None,
 ) -> tuple[str, dict]:
-    """d16's measured dispatch (VERDICT r7 Next-round #4) — the
-    :func:`choose_jaccard_variant` pattern with the ASYMMETRIC cost
-    model. Same shingle-frequency aggregate (``rows``, ``quad``,
-    ``l_max``), different saving formula: the containment prefix prunes
-    only the PROBE side (the containing side can never be pruned),
+    """d16's measured dispatch (VERDICT r7 Next-round #4). One
+    shingle-frequency aggregate yields ``rows`` (total (doc, shingle)
+    rows — every linear pass costs this), ``quad`` (Σ_s L_s·(L_s−1)/2,
+    the EXACT candidate-pair count the naive inverted-index join
+    expands) and ``l_max``. The containment prefix prunes only the
+    PROBE side (the containing side can never be pruned),
     keeping ≈ (1−t)·|A|+1 of each doc's shingles, so under the uniform
     shingle-rank model it expands ≈ 2·(1−t)·quad candidates against
     naive's quad — saving quad·(2t−1), which is non-positive for
@@ -2092,10 +1938,9 @@ def containment_pairs_auto(
     (:func:`choose_containment_variant`) and dispatches to
     :func:`containment_pairs` or :func:`containment_pairs_prefix` — both
     emit identical (id_small, id_big, containment) rows (lossless
-    property test), so the choice is purely physical. As in
-    :func:`jaccard_pairs_auto`, the stats job and the chosen variant
-    share ONE cached :func:`_shingle_arrays` frame (optimization r15) —
-    one shingling pass total instead of one for the measurement plus
+    property test), so the choice is purely physical. The stats job and
+    the chosen variant share ONE cached :func:`_shingle_arrays` frame
+    (optimization r15) — one shingling pass total instead of one for the measurement plus
     3-6 inside the variant."""
     import logging
 

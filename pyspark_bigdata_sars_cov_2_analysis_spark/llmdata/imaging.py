@@ -86,10 +86,3 @@ def decode_bmp(data: bytes) -> np.ndarray:
     if not top_down:
         rows = rows[::-1]
     return np.ascontiguousarray(rows[:, :, :3])
-
-
-def bmp_pixel_stats(data: bytes) -> tuple[int, int, float, float]:
-    """(height, width, mean, std) over the decoded pixel values — the D1
-    stat set the reference computes per image, from real bytes."""
-    px = decode_bmp(data).astype(np.float64)
-    return px.shape[0], px.shape[1], float(px.mean()), float(px.std())

@@ -44,15 +44,6 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity between two array<double> columns — the
-    reference formula the hoisted-norm paths below are tested against.
-    NULL for a zero-norm vector (try_divide, review r15: plain `/`
-    raised DIVIDE_BY_ZERO under Spark 4's default ANSI mode, while the
-    DuckDB oracle's x/0.0 is NULL — now both engines agree)."""
-    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
-
-
 def _score_rank_topk(joined: DataFrame, k: int, decimals: int) -> DataFrame:
     """Shared tail of the three top-k paths (exact / sign-bucket / IVF):
     drop self-matches, score each candidate pair with the hoisted-norm
@@ -360,52 +351,6 @@ def ivf_assign_cells(
     )
 
 
-def ivf_probe_cells(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    probe_ids: list[int],
-    nprobe: int = 1,
-    n_centroids: int = 16,
-    assign_decimals: int = 6,
-) -> DataFrame:
-    """(query_id, cell): each probe's ``nprobe`` nearest centroid cells —
-    the recall/cost dial of IVF search. Row-local: sort the per-probe
-    ``(d, cid)`` array under the same total order as assignment, slice
-    ``nprobe``, explode — |probes| rows against a one-row broadcast
-    codebook, no window, no shuffle.
-
-    NULL contract (review r9, deliberate change from the window form): a
-    probe whose cosine to EVERY centroid is NULL (NULL/zero-information
-    vector) emits no cells — the asof_join rule, a NULL score never
-    "matches". The former window kept rn<=nprobe rows even when every d
-    was NULL, probing nprobe arbitrary lowest-cid cells."""
-    vec = F.col(vec_col).cast("array<double>")
-    probes = df.where(F.col(id_col).isin(probe_ids)).select(
-        F.col(id_col).alias("query_id"), vec.alias("q"), _norm(vec).alias("nq")
-    )
-    top = F.slice(
-        F.array_sort(
-            _scored_cells(F.col("q"), F.col("nq"), assign_decimals), _cell_cmp
-        ),
-        1,
-        nprobe,
-    )
-    return (
-        probes.join(
-            F.broadcast(_centroid_codebook(df, id_col, vec_col, n_centroids)),
-            how="cross",
-        )
-        .select(
-            "query_id",
-            F.explode(F.filter(top, lambda s: s["d"].isNotNull())).alias(
-                "__cell"
-            ),
-        )
-        .select("query_id", F.col("__cell")["cid"].alias("cell"))
-    )
-
-
 def ivf_topk(
     df: DataFrame,
     id_col: str,
@@ -460,9 +405,12 @@ def ivf_topk(
         .where(F.size(F.col("cents")) > 0)
         .select("neighbor_id", "v", "nv", best_cid.alias("cell"))
     )
-    # probes carry their nprobe cells directly (same row-local derivation
-    # and NULL contract as ivf_probe_cells, inlined so the probe vectors
-    # are scanned once and never joined back on query_id)
+    # probes carry their nprobe cells directly (row-local: sort the
+    # per-probe (d, cid) array under the assignment order, slice nprobe,
+    # explode), so the probe vectors are scanned once and never joined
+    # back on query_id. NULL contract (review r9): a probe whose cosine
+    # to EVERY centroid is NULL emits no cells — a NULL score never
+    # "matches"
     top = F.slice(
         F.array_sort(
             _scored_cells(F.col("q"), F.col("nq"), assign_decimals),
@@ -490,21 +438,3 @@ def ivf_topk(
     return _score_rank_topk(
         base.join(F.broadcast(probes), on="cell"), k, decimals
     )
-
-
-def write_bucketed_layout(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    vec_col: str,
-    m: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Persist vectors partitioned by sign bucket — the at-rest ANN layout.
-    A probe's bucket becomes a partition filter, so each lookup reads
-    ~1/2^m of the files (verified by a PartitionFilters plan test)."""
-    vec = F.col(vec_col).cast("array<double>")
-    out = df.select(
-        F.col(id_col), F.col(vec_col), sign_bucket(vec, m).alias("bucket")
-    )
-    out.write.mode(mode).partitionBy("bucket").parquet(path)

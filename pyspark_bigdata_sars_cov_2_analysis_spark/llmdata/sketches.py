@@ -64,8 +64,7 @@ def countmin_table(
     """Build the sketch from PRE-AGGREGATED ``(item, count)`` rows.
 
     Output: ``(cms_row, bucket, cell)`` — ``depth × 256`` rows max,
-    broadcastable, and mergeable with any other sketch built with the
-    same ``depth`` via ``merge_countmin``.
+    broadcastable.
     """
     e = counts.select(
         F.col(item_col).alias("item"),
@@ -79,28 +78,6 @@ def countmin_table(
     )
 
 
-def merge_countmin(*sketches: DataFrame) -> DataFrame:
-    """Associative sketch merge: cell-wise sum. ``cms(A ∪ B) ==
-    merge(cms(A), cms(B))`` exactly (not approximately) — the linearity
-    that makes per-shard sketches composable at 100 TB.
-
-    CONTRACT (review r9): ``depth`` is part of a sketch's identity —
-    every merged sketch (and any later probe) must have been built with
-    the SAME depth. A cross-depth merge cannot be detected from the
-    lazy frames (the depth lives in the data as ``cms_row`` levels) and
-    would break the overcount-only guarantee: rows beyond the shallower
-    sketch's depth carry only the deeper sketch's mass, so a probe's
-    min over them can fall BELOW the true count. An absent (row,
-    bucket) cell, by contrast, legitimately means zero — which is why
-    no row-presence check can stand in for the contract."""
-    from functools import reduce
-
-    if not sketches:
-        raise ValueError("merge_countmin requires at least one sketch")
-    u = reduce(lambda a, b: a.unionByName(b), sketches)
-    return u.groupBy("cms_row", "bucket").agg(F.sum("cell").alias("cell"))
-
-
 def countmin_estimate(
     cms: DataFrame,
     probes: DataFrame,
@@ -111,9 +88,8 @@ def countmin_estimate(
     item's ``depth`` cells. The sketch side is ≤ ``depth × 256`` rows —
     broadcast — so probing is shuffle-free on the sketch side.
 
-    ``depth`` must not EXCEED the sketch's build depth (the
-    :func:`merge_countmin` contract): probing levels the sketch never
-    built reads absent rows as zero cells and est collapses to 0 for
+    ``depth`` must not EXCEED the sketch's build depth: probing levels
+    the sketch never built reads absent rows as zero cells and est collapses to 0 for
     items that ARE in the sketch. Probing SHALLOWER than the build
     depth stays safe (min over fewer cells is still an upper bound)."""
     p = probes.select(F.col(item_col).alias("item"), _rows(depth))

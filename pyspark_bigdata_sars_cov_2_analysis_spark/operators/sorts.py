@@ -12,11 +12,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def sort_rows(df: DataFrame, *order_by: Column | str) -> DataFrame:
-    """O1/O2 — global sort; use only on already-aggregated small frames."""
-    return df.orderBy(*order_by)
-
-
 def top_k(df: DataFrame, k: int, *order_by: Column | str) -> DataFrame:
     """O3 — top-k (TakeOrderedAndProject). Callers must include a unique
     tiebreaker for determinism (the reference's bare ``limit`` O4 is
@@ -44,15 +39,14 @@ def zorder_value(cols: list[Column], bits: int = 12) -> Column:
     grid coordinates: bit ``i`` of column ``j`` lands at output bit
     ``i * n + j``, so a contiguous z-range covers a compact hyper-rectangle
     neighborhood in EVERY dimension at once. This is the multi-dimensional
-    generalization of :func:`~..io.writers.write_range_sorted`'s 1-D
-    clustering: sorting by the z-value gives every output file tight
-    min/max footer stats on ALL interleaved columns, so predicates on any
-    subset of them prune row groups — a linear sort can only ever serve
-    its leading column. Pure bit arithmetic (shift/and/or), whole-stage
+    generalization of a 1-D range sort: sorting by the z-value gives
+    every output file tight min/max footer stats on ALL interleaved
+    columns, so predicates on any subset of them prune row groups — a
+    linear sort can only ever serve its leading column. Pure bit arithmetic (shift/and/or), whole-stage
     codegen eligible, no shuffle of its own.
 
     Callers pass already-quantized coordinates (``0 ≤ v < 2**bits``);
-    :func:`~..io.writers.write_zorder` handles min/max scaling.
+    :func:`~..io.writers._zorder_column` handles min/max scaling.
     ``bits * len(cols)`` must stay ≤ 63 to fit a signed BIGINT.
     """
     n = len(cols)

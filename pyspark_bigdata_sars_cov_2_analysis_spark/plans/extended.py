@@ -411,7 +411,8 @@ def _z_sql(x_sql: str, y_sql: str, bits: int) -> str:
 )
 def o07_zorder_cells(spark, sf_dir):
     """Layout family — cross-engine bit-exactness of the Morton (Z-order)
-    interleave behind :func:`..io.writers.write_zorder`: every event is
+    interleave behind the snapshot compaction's zorder clustering
+    (:func:`..io.writers._zorder_column`): every event is
     mapped to an 8-bit (user, day) grid cell, z-encoded with
     ``zorder_value``, and aggregated per 1024-wide z-cell (a 32×32 tile).
     The oracle rebuilds the SAME shift/and/or formula from the same
@@ -1008,9 +1009,7 @@ def w08_scd2_intervals(spark, sf_dir):
     against. Shape: one (user, day) aggregate with a max(struct) argmax
     (map-side partial), then two windows over the ALREADY-AGGREGATED
     per-user daily frame (bounded by days-per-user, never raw events).
-    The interval twin of w07's RANGE frame; together with
-    merge_upsert_parquet this is the engine's dimension-maintenance
-    story."""
+    The interval twin of w07's RANGE frame."""
     e = table(spark, sf_dir, "events")
     daily = e.groupBy("user_id", F.to_date("ts").alias("d")).agg(
         F.max(F.struct("ts", "event_id", "event_type"))["event_type"].alias(

@@ -22,6 +22,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _host_cpus() -> str:
+    """Local-mode core count: ``SPARK_GRAFT_CPUS`` when set, else the
+    number of CPUs this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
+
+
 DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -35,7 +44,7 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
     # don't let tiny local runs create 200 empty shuffle files
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.shuffle.partitions": _host_cpus(),
     # let AQE finalize CACHED plans too (optimization r16, guide §2.2):
     # default-off, this pins every persisted frame at the raw
     # spark.sql.shuffle.partitions count — a tiny cached frame (d18's
@@ -70,12 +79,11 @@ def start_session(
 ) -> SparkSession:
     """Build (or reuse) a tuned SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster pass ``None`` and let spark-submit decide.
+    ``master`` defaults to ``local[<cores>]`` (:func:`_host_cpus`)
+    locally; on a real cluster pass ``None`` and let spark-submit decide.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{_host_cpus()}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONF)
     if extra_conf:

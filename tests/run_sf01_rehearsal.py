@@ -11,8 +11,8 @@ Not a pytest module (no ``test_`` prefix) — a one-shot runner:
 Protocol: the session is the engine's own ``start_session()`` — its
 ``spark.driver.memory`` default is 8g (d06 emits 5.25M pairs at sf0.1
 and the harness collects results — a 1g driver dies), and the core count
-and shuffle partitions come from ``SPARK_GRAFT_CPUS`` (set it to the
-host's core count) — with ``clearCache()`` + ``release_plan_caches()``
+and shuffle partitions come from ``SPARK_GRAFT_CPUS``, or the host's
+core count when it is unset — with ``clearCache()`` + ``release_plan_caches()``
 between queries. Prints
 one ``REHEARSAL:{...}`` summary line to stdout; pass a second argument
 to also write that summary as a JSON file.

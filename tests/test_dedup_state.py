@@ -9,7 +9,8 @@ ever tested on one kind; this file runs them on the other:
 2. the hwm-zero incarnation collision is refused for chunk state;
 3. compaction and stamp migration heal a mid-swap crash for chunk state;
 4. band ingest releases its cached batch frame when validation fails;
-5. the ingest family (d11, d14, d19, d20, d22) returns the same result
+5. replaying the newest committed batch is a no-op, for both kinds;
+6. the ingest family (d11, d14, d19, d20, d22) returns the same result
    under a different physical plan — AQE off, no broadcast joins, an odd
    shuffle partition count and no whole-stage codegen — and matches its
    DuckDB oracle under both.
@@ -66,6 +67,37 @@ def test_seed_with_batch_id_refused(spark, tmp_path, writer, ingest):
     else:  # both of its chunks are dropped
         assert [(r.doc_id, r.n_chunks, r.n_dropped)
                 for r in spark.read.parquet(out).collect()] == [(2, 2, 2)]
+
+
+@pytest.mark.parametrize(
+    "writer, ingest",
+    [
+        (dedup.write_band_checkpoint, dedup.ingest_batch_idempotent),
+        (dedup.write_chunk_checkpoint, dedup.chunk_ingest_batch_idempotent),
+    ],
+    ids=["band", "chunk"],
+)
+def test_committed_batch_replay_is_noop(spark, tmp_path, writer, ingest):
+    """Replaying the newest committed batch with the same content changes
+    nothing: its commit marker, written last, proves the output and the
+    state rows already landed, so the replay appends no state rows
+    again and leaves the output as it was."""
+    seed = spark.createDataFrame([(1, DOC)], "doc_id long, text string")
+    batch = spark.createDataFrame(
+        [(2, "an unrelated document about shuffle spill and executor memory"),
+         (3, DOC)],
+        "doc_id long, text string",
+    )
+    path, out = str(tmp_path / "state"), str(tmp_path / "out")
+    writer(seed, path, "doc_id", "text")
+    ingest(batch, 0, path, out)
+    state_rows = spark.read.parquet(path).count()
+    first = _rows(spark, out)
+    assert first and state_rows
+    ingest(batch, 0, path, out)
+    assert spark.read.parquet(path).count() == state_rows
+    assert _rows(spark, out) == first
+    assert dedup.ingest_high_water_mark(path) == 0
 
 
 def test_chunk_hwm_zero_incarnation_collision_refused(spark, tmp_path):

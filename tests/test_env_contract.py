@@ -108,6 +108,63 @@ def test_python_workers_import_package_from_any_cwd(tmp_path):
     assert "WORKERS_IMPORTED" in proc.stdout, proc.stderr[-3000:]
 
 
+SESSION_PROBE = r"""
+import json, os, sys
+sys.path.insert(0, {repo!r})
+from pyspark_bigdata_sars_cov_2_analysis_spark import session
+
+
+class _Builder:
+    conf = {{}}
+
+    def appName(self, name):
+        return self
+
+    def master(self, master):
+        self.conf["master"] = master
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self.conf
+
+
+class _Session:
+    builder = _Builder()
+
+
+session.SparkSession = _Session
+conf = session.start_session()
+print("SESSION:" + json.dumps({{
+    "master": conf["master"],
+    "shuffle": conf["spark.sql.shuffle.partitions"],
+    "cpus": len(os.sched_getaffinity(0)),
+}}))
+"""
+
+
+def test_session_defaults_follow_host_cpus():
+    """With ``SPARK_GRAFT_CPUS`` unset, ``start_session`` sizes local mode
+    and the shuffle partitions from the CPUs the process may run on, not
+    from a fixed count. The builder is replaced, so no JVM starts."""
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    proc = subprocess.run(
+        [sys.executable, "-c", SESSION_PROBE.format(repo=REPO)],
+        capture_output=True,
+        text=True,
+        timeout=120,
+        env=env,
+    )
+    lines = [l for l in proc.stdout.splitlines() if l.startswith("SESSION:")]
+    assert lines, proc.stderr[-3000:]
+    got = json.loads(lines[-1][len("SESSION:"):])
+    assert got["master"] == f"local[{got['cpus']}]", got
+    assert got["shuffle"] == str(got["cpus"]), got
+
+
 def test_attestation_window_arithmetic():
     """The driver attests the FIRST 50 registered queries. The round-5
     head silently miscounted (21+33 > 50) and 4 queued re-attestations

@@ -147,55 +147,6 @@ def test_salted_join_spreads_hot_key(spark):
     assert salts == 4
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Two tables bucketed on the join key must sort-merge join with zero
-    Exchange nodes — the co-located-join contract write_bucketed_table
-    exists to provide."""
-    from pyspark.sql import functions as F
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        write_bucketed_table,
-    )
-    from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import table
-    from tests.conftest import SF_TEST
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        o = table(spark, SF_TEST, "orders")
-        li = table(spark, SF_TEST, "lineitem")
-        write_bucketed_table(o, "t_orders_b", "o_orderkey", 4, "o_orderkey")
-        write_bucketed_table(li, "t_lineitem_b", "l_orderkey", 4, "l_orderkey")
-        ob = spark.table("t_orders_b")
-        lb = spark.table("t_lineitem_b")
-        j = lb.join(ob, on=lb.l_orderkey == ob.o_orderkey).select(
-            "l_orderkey", "l_quantity", "o_totalprice"
-        )
-        jvm = spark._jvm
-        plan = j._jdf.queryExecution().explainString(
-            jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-        )
-        assert "Exchange" not in plan, plan
-        assert j.count() == li.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def test_orc_roundtrip_preserves_schema_and_values(spark, tmp_path):
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.readers import read_orc
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import write_orc
-    from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import table
-    from tests.conftest import SF_TEST
-
-    o = table(spark, SF_TEST, "orders")
-    path = str(tmp_path / "orders_orc")
-    write_orc(o, path)
-    back = read_orc(spark, path)
-    assert back.schema == o.schema
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, o.collect()))
-
-
 def test_text_reader_lines_and_wholefile(spark, tmp_path):
     from pyspark_bigdata_sars_cov_2_analysis_spark.io.readers import read_text
 
@@ -207,41 +158,6 @@ def test_text_reader_lines_and_wholefile(spark, tmp_path):
     assert lines.count() == 3
     whole = read_text(spark, str(p), whole_file=True)
     assert whole.count() == 2
-
-
-def test_dynamic_partition_overwrite_is_incremental(spark, tmp_path):
-    """overwrite_partitions must replace ONLY the partitions present in
-    the incoming frame — a re-run backfill of one day cannot wipe the
-    rest of the table (which static overwrite would)."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        overwrite_partitions,
-        write_parquet,
-    )
-
-    path = str(tmp_path / "days")
-    base = spark.createDataFrame(
-        [("2020-01-01", 1, 10.0), ("2020-01-01", 2, 20.0),
-         ("2020-01-02", 3, 30.0)],
-        "day string, id int, v double",
-    )
-    write_parquet(base, path, partition_by=["day"])
-    # backfill day 2 with corrected rows; day 1 must survive
-    fix = spark.createDataFrame(
-        [("2020-01-02", 3, 33.0), ("2020-01-02", 4, 44.0)],
-        "day string, id int, v double",
-    )
-    overwrite_partitions(fix, path, ["day"])
-    back = spark.read.parquet(path)
-    # partition-column type inference reads 'day' back as a DATE — compare
-    # its string form
-    got = sorted(
-        map(tuple, back.select(F.col("day").cast("string"), "id", "v").collect())
-    )
-    assert got == [("2020-01-01", 1, 10.0), ("2020-01-01", 2, 20.0),
-                   ("2020-01-02", 3, 33.0), ("2020-01-02", 4, 44.0)]
-    # idempotent: running the same backfill again changes nothing
-    overwrite_partitions(fix, path, ["day"])
-    assert spark.read.parquet(path).count() == 4
 
 
 def test_partitioned_layout_prunes_on_read(spark, tmp_path):
@@ -263,52 +179,6 @@ def test_partitioned_layout_prunes_on_read(spark, tmp_path):
         "PartitionFilters"
     )[1].split("]")[0], plan
     assert one.count() == e.where(F.date_format("ts", "yyyy-MM-dd") == sorted(days)[0]).count()
-
-
-def test_python_datasource_synthetic_docs(spark):
-    """Spark 4 Python Data Source: deterministic, partition-parallel, and
-    re-sliceable — the same corpus regardless of partition count."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.pysource import (
-        register_synthetic_docs,
-    )
-
-    register_synthetic_docs(spark)
-    read = lambda parts: (  # noqa: E731
-        spark.read.format("synthetic_docs")
-        .option("n", 300).option("parts", parts).load()
-    )
-    df = read(4)
-    assert df.rdd.getNumPartitions() == 4
-    assert df.count() == 300 and df.select("doc_id").distinct().count() == 300
-    a = sorted(map(tuple, df.collect()))
-    assert a == sorted(map(tuple, read(4).collect()))   # rerun-stable
-    assert a == sorted(map(tuple, read(7).collect()))   # slicing-invariant
-
-
-def test_python_datasource_planted_duplicates(spark):
-    """dup_every plants exact duplicates with a count known by
-    construction — the end-to-end ground truth for the dedup pipeline."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.pysource import (
-        register_synthetic_docs,
-    )
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata.dedup import (
-        exact_duplicates,
-    )
-
-    register_synthetic_docs(spark)
-    # non-divisible n included: ground truth is one 2-copy group per
-    # multiple of k whose neighbor id exists, i.e. len(range(0, n-1, k))
-    for n, k in ((400, 10), (405, 10), (401, 10)):
-        df = (
-            spark.read.format("synthetic_docs")
-            .option("n", n).option("parts", 4).option("dup_every", k).load()
-        )
-        dup_groups = exact_duplicates(df, "doc_id", "text").where(
-            F.col("n_copies") > 1
-        )
-        want = len(range(0, n - 1, k))
-        assert dup_groups.count() == want, (n, k)
-        assert {r["n_copies"] for r in dup_groups.collect()} == {2}
 
 
 def test_json_corrupt_record_capture(spark, tmp_path):
@@ -342,119 +212,6 @@ def test_json_corrupt_record_capture(spark, tmp_path):
     import pytest
     with pytest.raises(ValueError):
         read_json(spark, p, corrupt_column="_bad")
-
-
-def test_xml_roundtrip(spark, tmp_path):
-    """Spark 4 native XML source: write a frame as XML, read it back with
-    an explicit schema and rowTag, and get the same multiset — the S1/S2
-    scan family extended to the third text format."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.readers import read_xml
-    from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import table
-
-    n = table(spark, SF_TEST, "nation").select(
-        "n_nationkey", "n_name", "n_regionkey"
-    )
-    path = str(tmp_path / "nation_xml")
-    n.write.format("xml").option("rowTag", "nation").mode("overwrite").save(path)
-    back = read_xml(
-        spark,
-        path,
-        "nation",
-        schema="n_nationkey int, n_name string, n_regionkey int",
-    )
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, n.collect()))
-
-
-def test_range_sorted_write_disjoint_file_ranges(spark, tmp_path):
-    """write_range_sorted must produce files whose footer min/max ranges
-    on the sort column are pairwise disjoint (the zone-map layout a
-    pushed range predicate prunes against), and the re-read data must be
-    the same multiset. An unsorted write of the same frame is the
-    negative control — its per-file ranges all overlap."""
-    import pyarrow.parquet as pq
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        write_range_sorted,
-    )
-    from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import table
-
-    o = table(spark, SF_TEST, "orders").select("o_orderkey", "o_totalprice")
-
-    def file_ranges(path):
-        import glob
-        out = []
-        for f in sorted(glob.glob(f"{path}/*.parquet")):
-            md = pq.read_metadata(f)
-            idx = md.schema.names.index("o_totalprice")
-            lo = min(md.row_group(i).column(idx).statistics.min
-                     for i in range(md.num_row_groups))
-            hi = max(md.row_group(i).column(idx).statistics.max
-                     for i in range(md.num_row_groups))
-            out.append((lo, hi))
-        return out
-
-    sorted_path = str(tmp_path / "sorted")
-    write_range_sorted(o, sorted_path, "o_totalprice", n_partitions=4)
-    ranges = sorted(file_ranges(sorted_path))
-    assert len(ranges) >= 3, ranges
-    for (_, hi_a), (lo_b, _) in zip(ranges, ranges[1:]):
-        assert hi_a <= lo_b, f"overlapping file ranges: {ranges}"
-
-    plain_path = str(tmp_path / "plain")
-    o.repartition(4).write.parquet(plain_path)
-    plain = sorted(file_ranges(plain_path))
-    overlaps = sum(
-        1 for (_, hi_a), (lo_b, _) in zip(plain, plain[1:]) if hi_a > lo_b
-    )
-    assert overlaps > 0, plain  # control: hash layout has no clustering
-
-    got = sorted(
-        r.o_orderkey for r in spark.read.parquet(sorted_path).collect()
-    )
-    want = sorted(r.o_orderkey for r in o.collect())
-    assert got == want
-
-
-def test_hot_shingle_corpus_dispatches_prefix(spark):
-    """hot_every plants a shingle with document frequency n/h — the skew
-    regime where the measured auto-dispatch must choose the prefix
-    variant (the README probe corpus: at n=20k/hot_every=2 prefix is
-    3.4× faster than naive, 24.4s→7.1s, identical 200 pairs). Pins both
-    the planted skew (l_max == n/h) and the dispatch decision."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.pysource import (
-        register_synthetic_docs,
-    )
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata.dedup import (
-        choose_jaccard_variant,
-    )
-
-    register_synthetic_docs(spark)
-    hot = (
-        spark.read.format("synthetic_docs")
-        .option("n", 1000).option("parts", 4).option("hot_every", 2).load()
-    )
-    # exact stat pin needs the full scan; the default (sampled) chooser
-    # must reach the same decision
-    variant, stats = choose_jaccard_variant(
-        hot, "doc_id", "text", threshold=0.7, sample_fraction=None
-    )
-    assert stats["l_max"] == 500, stats  # the planted hot shingle
-    assert variant == "prefix", stats
-    variant_sampled, _ = choose_jaccard_variant(
-        hot, "doc_id", "text", threshold=0.7
-    )
-    assert variant_sampled == "prefix"
-    # the same corpus WITHOUT the hot shingle must dispatch naive — the
-    # decision is driven by the planted skew, not corpus size
-    plain = (
-        spark.read.format("synthetic_docs")
-        .option("n", 1000).option("parts", 4).load()
-    )
-    for frac in (None, 0.25):
-        variant_plain, stats_plain = choose_jaccard_variant(
-            plain, "doc_id", "text", threshold=0.7, sample_fraction=frac
-        )
-        assert variant_plain == "naive", (frac, stats_plain)
 
 
 _AUDIT_PROBE = r"""
@@ -588,27 +345,35 @@ def test_zorder_value_bit_exact(spark):
     assert got == {(x, y): z_ref(x, y) for x, y in pts}
 
 
+def _clustered_files(spark, df, path, cols, n_files, strategy="zorder"):
+    """Publish ``df`` as a snapshot table, compact it clustered on
+    ``cols`` into ``n_files`` files, and return the compacted files."""
+    from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers as W
+
+    W.write_parquet_snapshot(df, path)
+    W.compact_parquet_snapshot(
+        spark, path, target_files=n_files, cluster_by=cols,
+        cluster_strategy=strategy,
+    )
+    return [W._local_path(f) for f in W._latest_manifest(path)["files"]]
+
+
 def test_zorder_write_bounds_both_dims(spark, tmp_path):
-    """write_zorder's defining property vs a 1-D range sort: on a full
-    256×256 grid split into 16 files, EVERY z-ordered file's footer
-    min/max must bound BOTH dimensions to a small tile, while the
+    """Z-order clustering's defining property vs a 1-D range sort: on a
+    full 256×256 grid compacted into 16 files, EVERY z-ordered file's
+    footer min/max must bound BOTH dimensions to a small tile, while the
     x-sorted control bounds x but leaves y spanning the full 0..255 range
     in every file. This is the layout fact that lets one copy of a 100 TB
     table serve pushed predicates on either column."""
     import pyarrow.parquet as pq
 
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        write_range_sorted,
-        write_zorder,
-    )
-
     grid = spark.range(0, 256 * 256).select(
         (F.col("id") % 256).alias("x"), (F.col("id") / 256).cast("long").alias("y")
     )
 
-    def ranges(path, col):
+    def ranges(files, col):
         out = []
-        for f in sorted(glob.glob(f"{path}/*.parquet")):
+        for f in sorted(files):
             md = pq.read_metadata(f)
             idx = md.schema.names.index(col)
             lo = min(md.row_group(i).column(idx).statistics.min
@@ -618,16 +383,16 @@ def test_zorder_write_bounds_both_dims(spark, tmp_path):
             out.append((lo, hi))
         return out
 
-    def admitting(path, col, v):
+    def admitting(files, col, v):
         """Files a zone-map reader must open for the predicate col = v."""
-        return sum(1 for lo, hi in ranges(path, col) if lo <= v <= hi)
+        return sum(1 for lo, hi in ranges(files, col) if lo <= v <= hi)
 
-    zpath = str(tmp_path / "zorder")
-    write_zorder(grid, zpath, ["x", "y"], bits=8, n_partitions=16)
-    xpath = str(tmp_path / "xsorted")
-    write_range_sorted(grid, xpath, "x", n_partitions=16)
-    n_z = len(ranges(zpath, "x"))
-    n_x = len(ranges(xpath, "x"))
+    zfiles = _clustered_files(spark, grid, str(tmp_path / "zorder"), ["x", "y"], 16)
+    xfiles = _clustered_files(
+        spark, grid, str(tmp_path / "xsorted"), ["x"], 16, strategy="range"
+    )
+    n_z = len(zfiles)
+    n_x = len(xfiles)
     assert n_z >= 8 and n_x >= 8, (n_z, n_x)
 
     # The z-curve jumps across the full coordinate range at major quadrant
@@ -636,20 +401,19 @@ def test_zorder_write_bounds_both_dims(spark, tmp_path):
     # a point predicate on EITHER dimension must let the footer stats
     # skip most z-ordered files, while the 1-D control prunes only its
     # sort column and must open EVERY file for the other one.
-    assert admitting(zpath, "x", 100) <= n_z // 2
-    assert admitting(zpath, "y", 100) <= n_z // 2
-    assert admitting(xpath, "x", 100) <= 2          # 1-D sort: x is perfect
-    assert admitting(xpath, "y", 100) == n_x        # ...but y is unprunable
+    assert admitting(zfiles, "x", 100) <= n_z // 2
+    assert admitting(zfiles, "y", 100) <= n_z // 2
+    assert admitting(xfiles, "x", 100) <= 2          # 1-D sort: x is perfect
+    assert admitting(xfiles, "y", 100) == n_x        # ...but y is unprunable
     # and MOST z-files are genuinely tight tiles in both dims
     for col in ("x", "y"):
-        tight = sorted(hi - lo for lo, hi in ranges(zpath, col))
+        tight = sorted(hi - lo for lo, hi in ranges(zfiles, col))
         assert tight[n_z // 2] <= 128, tight
 
     # round-trip multiset check
-    assert spark.read.parquet(zpath).count() == 256 * 256
-    got = spark.read.parquet(zpath).agg(
-        F.sum(F.col("x") * 65536 + F.col("y")).alias("s")
-    ).first().s
+    back = spark.read.parquet(*zfiles)
+    assert back.count() == 256 * 256
+    got = back.agg(F.sum(F.col("x") * 65536 + F.col("y")).alias("s")).first().s
     want = grid.agg(F.sum(F.col("x") * 65536 + F.col("y")).alias("s")).first().s
     assert got == want
 
@@ -708,140 +472,15 @@ def test_parquet_merge_schema_read(spark, tmp_path):
     assert sorted(r.id for r in merged.collect()) == [1, 2, 3]
 
 
-def test_csv_roundtrip_preserves_values(spark, tmp_path):
-    """S1 write side: header CSV out, schema-declared read back, same
-    multiset (CSV carries no types, so the read declares them — the
-    same contract read_csv documents)."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import write_csv
-
-    df = spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b,with,commas", -2.25), (3, None, 0.0)],
-        "id: long, name: string, score: double",
-    )
-    out = str(tmp_path / "csv_out")
-    write_csv(df, out)
-    back = spark.read.option("header", "true").schema(
-        "id long, name string, score double"
-    ).csv(out)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
-
-
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    """The small-files maintenance pass: 32 tiny part files compact into
-    4 with the identical multiset, count-verified before the swap, and
-    no stray staging dirs left behind."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        compact_parquet,
-    )
-
-    path = str(tmp_path / "fragmented")
-    spark.range(0, 10_000).repartition(32).write.parquet(path)
-    assert len(glob.glob(f"{path}/part-*.parquet")) == 32
-
-    n = compact_parquet(spark, path, n_files=4)
-    assert n == 10_000
-    assert len(glob.glob(f"{path}/part-*.parquet")) <= 4
-    got = spark.read.parquet(path).agg(F.sum("id").alias("s")).first().s
-    assert got == sum(range(10_000))
-    assert not os.path.exists(path + "_compacting")
-    assert not os.path.exists(path + "_precompact")
-
-
-def test_write_parquet_sized_bounds_file_sizes(spark, tmp_path):
-    """write_parquet_sized must split output so every file lands at or
-    under ~target (probe-measured bytes/row -> maxRecordsPerFile), and
-    the probe dir must not survive. Wide string rows make the size
-    predictable; 1 MB target over ~8 MB of data forces >= 4 files."""
-    import os as _os
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        write_parquet_sized,
-    )
-
-    # incompressible rows (distinct hex) so on-disk bytes/row is real
-    df = spark.range(0, 40_000).select(
-        "id",
-        F.concat(
-            *[
-                F.md5(F.concat(F.lit(str(i)), F.col("id").cast("string")))
-                for i in range(6)
-            ]
-        ).alias("pad"),
-    ).repartition(2)
-    out = str(tmp_path / "sized")
-    cap = write_parquet_sized(df, out, target_file_mb=1, sample_rows=5_000)
-    assert cap >= 1
-    files = glob.glob(f"{out}/*.parquet")
-    assert len(files) >= 4, files
-    for f in files:
-        assert _os.path.getsize(f) <= 2 * 1024 * 1024, (f, _os.path.getsize(f))
-    assert spark.read.parquet(out).count() == 40_000
-    assert not _os.path.exists(out + "_sizing")
-
-
-def test_merge_upsert_parquet(spark, tmp_path):
-    """MERGE semantics on a path table: matched keys replaced, new keys
-    inserted, untouched keys intact; duplicate update keys rejected
-    before anything is written."""
-    import pytest as _pytest
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        merge_upsert_parquet,
-    )
-
-    path = str(tmp_path / "target")
-    spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
-        "id: long, v: string, score: double",
-    ).write.parquet(path)
-
-    updates = spark.createDataFrame(
-        [(2, "B2", 22.0), (9, "new", 90.0)],
-        "id: long, v: string, score: double",
-    )
-    stats = merge_upsert_parquet(spark, path, updates, ["id"])
-    assert stats == {"updated": 1, "inserted": 1, "rows": 4}
-    got = {r.id: (r.v, r.score) for r in spark.read.parquet(path).collect()}
-    assert got == {
-        1: ("a", 10.0), 2: ("B2", 22.0), 3: ("c", 30.0), 9: ("new", 90.0)
-    }
-
-    bad = spark.createDataFrame(
-        [(5, "x", 1.0), (5, "y", 2.0)], "id: long, v: string, score: double"
-    )
-    with _pytest.raises(ValueError, match="duplicate key"):
-        merge_upsert_parquet(spark, path, bad, ["id"])
-    # the failed merge left the table untouched
-    assert spark.read.parquet(path).count() == 4
-
-
 def test_zorder_constant_column_degrades_gracefully(spark, tmp_path):
     """A constant clustered column (span 0) must not divide by zero —
-    the writer pins the span to 1 and the layout degrades to ordering
-    on the varying column only."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        write_zorder,
-    )
-
+    the Morton scaling pins the span to 1 and the layout degrades to
+    ordering on the varying column only."""
     df = spark.range(0, 1000).select(
-        F.lit(7).alias("x"), (F.col("id") % 64).alias("y")
+        F.lit(7).cast("long").alias("x"), (F.col("id") % 64).alias("y")
     )
-    out = str(tmp_path / "const_dim")
-    write_zorder(df, out, ["x", "y"], bits=6, n_partitions=4)
-    assert spark.read.parquet(out).count() == 1000
-
-
-def test_merge_upsert_empty_updates_is_noop(spark, tmp_path):
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        merge_upsert_parquet,
-    )
-
-    path = str(tmp_path / "t")
-    spark.createDataFrame([(1, "a")], "id: long, v: string").write.parquet(path)
-    empty = spark.createDataFrame([], "id: long, v: string")
-    stats = merge_upsert_parquet(spark, path, empty, ["id"])
-    assert stats == {"updated": 0, "inserted": 0, "rows": 1}
-    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [(1, "a")]
+    files = _clustered_files(spark, df, str(tmp_path / "const_dim"), ["x", "y"], 4)
+    assert spark.read.parquet(*files).count() == 1000
 
 
 def test_countmin_unseen_probe_estimates_zero(spark):
@@ -901,39 +540,11 @@ def test_zorder_value_random_sweep_matches_reference(spark):
 
 
 def test_zorder_empty_frame_writes_empty(spark, tmp_path):
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        write_zorder,
+    files = _clustered_files(
+        spark, spark.createDataFrame([], "x: long, y: long"),
+        str(tmp_path / "empty_z"), ["x", "y"], 2,
     )
-
-    out = str(tmp_path / "empty_z")
-    write_zorder(
-        spark.createDataFrame([], "x: long, y: long"), out, ["x", "y"]
-    )
-    assert spark.read.parquet(out).count() == 0
-
-
-def test_audit_parquet_layout_detects_fragmentation(spark, tmp_path):
-    """The compaction detector: a 32-way fragmented write must show a
-    high small-file fraction; after compact_parquet the same audit goes
-    clean — the detect → fix loop as one assertion chain."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        audit_parquet_layout,
-        compact_parquet,
-    )
-
-    path = str(tmp_path / "frag")
-    spark.range(0, 20_000).repartition(32).write.parquet(path)
-    before = audit_parquet_layout(path, small_file_mb=1)
-    assert before["n_files"] == 32
-    assert before["small_file_fraction"] == 1.0
-
-    compact_parquet(spark, path, n_files=2)
-    after = audit_parquet_layout(path, small_file_mb=1)
-    assert after["n_files"] <= 2
-    assert after["total_mb"] > 0
-    # empty dir edge
-    empty = audit_parquet_layout(str(tmp_path / "nope"))
-    assert empty == {"n_files": 0, "total_mb": 0.0, "small_file_fraction": 0.0}
+    assert spark.read.parquet(*files).count() == 0
 
 
 def test_zorder_null_dimensions_handled(spark, tmp_path):
@@ -942,66 +553,34 @@ def test_zorder_null_dimensions_handled(spark, tmp_path):
     (b) row-level NULL coordinates coalesce to the grid minimum instead
     of clustering arbitrarily; (c) an all-NULL FIRST column must not
     silently skip clustering of a live second column."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        write_zorder,
-    )
+    import pyarrow.parquet as pq
 
     rows = [(i, None if i % 7 == 0 else i * 3, None) for i in range(256)]
     df = spark.createDataFrame(rows, "x long, y long, z long")
 
     # all-NULL SECOND column (z): previously TypeError at hi - lo
-    out1 = str(tmp_path / "z_null_second")
-    write_zorder(df, out1, ["x", "z"], bits=6, n_partitions=4)
-    assert spark.read.parquet(out1).count() == 256
+    files1 = _clustered_files(spark, df, str(tmp_path / "z_null_second"), ["x", "z"], 4)
+    assert spark.read.parquet(*files1).count() == 256
 
     # all-NULL FIRST column: previously written entirely unclustered;
     # now x must still bound per-file ranges
-    out2 = str(tmp_path / "z_null_first")
-    write_zorder(df, out2, ["z", "x"], bits=6, n_partitions=4)
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
+    files2 = _clustered_files(spark, df, str(tmp_path / "z_null_first"), ["z", "x"], 4)
     spans = []
-    for f in _glob.glob(out2 + "/*.parquet"):
+    for f in files2:
         md = pq.read_metadata(f)
         if md.num_rows == 0:
             continue
-        st = md.row_group(0).column(1).statistics  # x column
+        st = md.row_group(0).column(0).statistics  # x column
         spans.append(st.max - st.min)
     full_span = 255
     assert spans and all(s < full_span for s in spans), spans
 
     # NULL row-level coordinates (y) land with the minimum cell, and the
-    # write round-trips every row including the NULLs
-    out3 = str(tmp_path / "z_null_rows")
-    write_zorder(df, out3, ["x", "y"], bits=6, n_partitions=4)
-    back = spark.read.parquet(out3)
+    # rewrite round-trips every row including the NULLs
+    files3 = _clustered_files(spark, df, str(tmp_path / "z_null_rows"), ["x", "y"], 4)
+    back = spark.read.parquet(*files3)
     assert back.count() == 256
     assert back.where("y IS NULL").count() == 37
-
-
-def test_merge_upsert_duplicate_key_target_stats(spark, tmp_path):
-    """ADVICE r7: on a target holding DUPLICATE keys, the stats must
-    count keys — updated + inserted == n_updates, inserted never
-    negative — while the row-count verification still uses matched rows
-    (a matched key replaces ALL its target rows)."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        merge_upsert_parquet,
-    )
-
-    path = str(tmp_path / "dup_target")
-    spark.createDataFrame(
-        [(1, "a"), (1, "a-dup"), (2, "b"), (3, "c")], "id long, v string"
-    ).write.parquet(path)
-    updates = spark.createDataFrame(
-        [(1, "A"), (9, "I")], "id long, v string"
-    )
-    stats = merge_upsert_parquet(spark, path, updates, ["id"])
-    # key 1 matched (2 target rows replaced by 1), key 9 inserted
-    assert stats == {"updated": 1, "inserted": 1, "rows": 4}
-    got = sorted(map(tuple, spark.read.parquet(path).collect()))
-    assert got == [(1, "A"), (2, "b"), (3, "c"), (9, "I")]
 
 
 def test_recover_staged_swap_rolls_forward_and_back(spark, tmp_path):
@@ -1052,121 +631,6 @@ def test_recover_staged_swap_rolls_forward_and_back(spark, tmp_path):
     shutil.rmtree(path2)
 
 
-def test_write_parquet_sized_probe_spans_partitions(spark, tmp_path):
-    """ADVICE r7: the sizing probe must NOT be a global prefix. Data
-    sorted so early partitions hold narrow rows and late partitions wide
-    ones previously made the probe underestimate bytes/row and blow the
-    size target; the per-partition-head probe keeps every file at or
-    under ~2x target even on that adversarial layout."""
-    import glob as _glob
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        write_parquet_sized,
-    )
-
-    # 8 range-partitions ordered by payload width: first partitions ~10B
-    # rows, last ~8KB rows (incompressible hex so parquet can't erase
-    # the width gradient)
-    df = (
-        spark.range(16_000)
-        .withColumn(
-            "payload",
-            F.sha2(F.col("id").cast("string"), 512).substr(
-                F.lit(1), (F.col("id") / F.lit(2)).cast("int")
-            ),
-        )
-        .repartitionByRange(8, "id")
-        .sortWithinPartitions("id")
-    )
-    out = str(tmp_path / "sized")
-    write_parquet_sized(df, out, target_file_mb=1, sample_rows=4_000)
-    sizes = [
-        _os.path.getsize(f) for f in _glob.glob(out + "/*.parquet")
-    ]
-    assert sizes and max(sizes) <= 2 * 1024 * 1024, sorted(sizes)[-3:]
-
-
-def test_jsonl_snapshot_version_race_fails_safe(spark, tmp_path):
-    """ADVICE r7: if another writer grabs the computed snapshot version
-    first, the commit must NOT overwrite it — O_EXCL makes the loser
-    retry with the next number, preserving both histories. The retry
-    loop is driven DIRECTLY against a planted collision (_write_snapshot
-    is the unit the commit hook calls — the hook itself runs in a
-    separate Python worker, where a squatted higher version is just
-    max+1'd past without ever entering the except branch), then the
-    end-to-end sink behavior over a squatted version is verified too."""
-    import json as _json
-    import os as _os
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io import jsonl_sink
-
-    # unit: plant the EXACT version _next_version will pick, so the 'x'
-    # open must raise FileExistsError and the loop must walk past it
-    race = str(tmp_path / "race")
-    _os.makedirs(race)
-    with open(_os.path.join(race, "_manifest-00001.json"), "w") as f:
-        _json.dump({"version": 1, "parts": [], "rows": 0}, f)
-    assert jsonl_sink._next_version(race) == 2
-    foreign = {"version": 2, "parts": ["foreign.jsonl"], "rows": 99}
-    with open(_os.path.join(race, "_manifest-00002.json"), "w") as f:
-        _json.dump(foreign, f)  # the racing writer landed first
-    payload = jsonl_sink._write_snapshot(race, ["mine.jsonl"], 7)
-    assert payload["version"] == 3  # retried past the collision
-    with open(_os.path.join(race, "_manifest-00002.json")) as f:
-        assert _json.load(f) == foreign  # loser never overwrote
-    with open(_os.path.join(race, "_manifest-00003.json")) as f:
-        assert _json.load(f) == payload
-
-    # end-to-end: a squatted future version shifts the next commit up
-    jsonl_sink.register_jsonl_sink(spark)
-    path = str(tmp_path / "sink")
-    spark.range(3).write.format("jsonl_dir").mode("append").option(
-        "path", path
-    ).save()
-    with open(_os.path.join(path, "_manifest-00002.json"), "w") as f:
-        _json.dump(foreign, f)
-    spark.range(5).write.format("jsonl_dir").mode("append").option(
-        "path", path
-    ).save()
-    with open(_os.path.join(path, "_manifest-00002.json")) as f:
-        assert _json.load(f) == foreign  # untouched
-    with open(_os.path.join(path, "_manifest-00003.json")) as f:
-        assert _json.load(f)["rows"] == 5
-    with open(_os.path.join(path, "_SUCCESS")) as f:
-        assert _json.load(f)["version"] == 3
-
-
-def test_merge_upsert_self_heals_crashed_swap(spark, tmp_path):
-    """A maintenance job restarted after a mid-swap crash must just
-    work: merge_upsert_parquet (and compact_parquet) roll the table
-    forward from the marker before reading it."""
-    import json as _json
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        merge_upsert_parquet,
-    )
-
-    path = str(tmp_path / "t")
-    staged, backup = path + "_merging", path + "_premerge"
-    spark.createDataFrame(
-        [(1, "new"), (2, "b")], "id long, v string"
-    ).write.parquet(staged)
-    spark.createDataFrame([(1, "old")], "id long, v string").write.parquet(
-        backup
-    )
-    with open(path + ".swap-in-progress", "w") as f:
-        _json.dump({"path": path, "staged": staged, "backup": backup}, f)
-
-    updates = spark.createDataFrame([(2, "B")], "id long, v string")
-    stats = merge_upsert_parquet(spark, path, updates, ["id"])
-    assert stats == {"updated": 1, "inserted": 0, "rows": 2}
-    got = sorted(map(tuple, spark.read.parquet(path).collect()))
-    assert got == [(1, "new"), (2, "B")]
-
-
 def test_recover_staged_swap_cleanup_branch(spark, tmp_path):
     """Crash AFTER the second rename but before marker removal: the
     table is already in place — recovery must only clean the marker and
@@ -1196,130 +660,3 @@ def test_recover_staged_swap_cleanup_branch(spark, tmp_path):
     assert not _os.path.exists(path + ".swap-in-progress")
 
 
-def test_python_datasource_filter_pushdown(spark):
-    """Spark 4.1 Python DSv2 filter pushdown (review r9): range
-    predicates on doc_id narrow the GENERATION range — the connector-side
-    twin of parquet row-group pruning. Pins three things: (1) the
-    pushdown reader narrows [lo, hi) exactly and yields back every
-    filter it cannot handle exactly (non-doc_id, non-int); (2) an
-    end-to-end filtered read equals the plain reader's on the same
-    predicate (handled filters are NOT re-applied by Spark, so handling
-    must be exact); (3) the DEFAULT reader does not even define
-    pushFilters — Spark refuses any reader that defines it while
-    spark.sql.python.filterPushdown.enabled is false, so folding it into
-    the base class would break every vanilla-session consumer."""
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThanOrEqual,
-        IsNotNull,
-        LessThan,
-    )
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.pysource import (
-        SyntheticDocsPushdownReader,
-        SyntheticDocsReader,
-        register_synthetic_docs,
-    )
-
-    assert "pushFilters" not in SyntheticDocsReader.__dict__
-    r = SyntheticDocsPushdownReader({"n": "10000"})
-    left = list(
-        r.pushFilters(
-            [
-                GreaterThanOrEqual(("doc_id",), 9990),
-                LessThan(("doc_id",), 9995),
-                IsNotNull(("lang",)),
-            ]
-        )
-    )
-    assert (r.lo, r.hi) == (9990, 9995)
-    assert left == [IsNotNull(("lang",))]
-    got = sorted(
-        doc_id for p in r.partitions() for (doc_id, *_rest) in r.read(p)
-    )
-    assert got == list(range(9990, 9995))
-    # contradictory bounds generate nothing
-    r2 = SyntheticDocsPushdownReader({"n": "100"})
-    list(r2.pushFilters([EqualTo(("doc_id",), 5), EqualTo(("doc_id",), 6)]))
-    assert [row for p in r2.partitions() for row in r2.read(p)] == []
-    # bool is an int subclass (ADVICE r9): EqualTo(doc_id, True) must be
-    # YIELDED BACK for Spark to evaluate, never claimed and narrowed to
-    # [1, 2) — claiming it would silently drop every other row
-    r3 = SyntheticDocsPushdownReader({"n": "100"})
-    boolf = EqualTo(("doc_id",), True)
-    assert list(r3.pushFilters([boolf])) == [boolf]
-    assert (r3.lo, r3.hi) == (0, 100)
-
-    register_synthetic_docs(spark)
-    old = spark.conf.get("spark.sql.python.filterPushdown.enabled", None)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        pred = "doc_id >= 9990 AND doc_id < 9995"
-        pushed = (
-            spark.read.format("synthetic_docs")
-            .option("n", 10000)
-            .option("pushdown", "true")
-            .load()
-            .filter(pred)
-            .collect()
-        )
-        plain = (
-            spark.read.format("synthetic_docs")
-            .option("n", 10000)
-            .load()
-            .filter(pred)
-            .collect()
-        )
-        assert sorted(map(tuple, pushed)) == sorted(map(tuple, plain))
-        assert len(pushed) == 5
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.python.filterPushdown.enabled")
-        else:
-            spark.conf.set("spark.sql.python.filterPushdown.enabled", old)
-
-
-def test_synthetic_docs_dup_ground_truth_survives_hot_every(spark):
-    """Review r14: the hot prefix was keyed on doc_id, so with BOTH
-    knobs set a planted pair where exactly one id was divisible by
-    hot_every got the prefix on one side only — the copies were no
-    longer exact duplicates and the documented two-copy-group count
-    undercounted. Keyed on the BASE id now: copies stay byte-identical
-    under any knob combination."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.pysource import (
-        register_synthetic_docs,
-    )
-
-    register_synthetic_docs(spark)
-    n, k = 400, 5
-    docs = (
-        spark.read.format("synthetic_docs")
-        .option("n", n).option("parts", 4)
-        .option("dup_every", k).option("hot_every", 2)
-        .load()
-    )
-    groups = (
-        docs.groupBy("text").count().where("count >= 2").collect()
-    )
-    expected = len(range(0, n - 1, k))
-    assert len(groups) == expected, (
-        f"hot_every broke the dup_every ground truth: "
-        f"{len(groups)} != {expected}"
-    )
-    assert all(r["count"] == 2 for r in groups)
-
-
-def test_synthetic_docs_stream_refuses_dup_every_one(spark):
-    """Review r14: the streaming reader skipped the dup_every=1
-    validation the batch reader enforces, so a streamed-vs-batch
-    comparison of 'the same corpus' diverged (batch raised, stream
-    yielded zero planted duplicates). Both construct through the shared
-    validator now."""
-    import pytest
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.pysource import (
-        SyntheticDocsStreamReader,
-    )
-
-    with pytest.raises(ValueError, match="dup_every=1"):
-        SyntheticDocsStreamReader({"dup_every": "1"})

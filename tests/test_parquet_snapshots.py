@@ -10,10 +10,8 @@ versions go).
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import shutil
 
 import pytest
 
@@ -486,28 +484,17 @@ def test_streaming_sink_compact_every_bounds_file_count(spark, tmp_path):
 
 
 def test_staged_swap_ops_refuse_snapshot_tables(spark, tmp_path):
-    """compact_parquet / merge_upsert_parquet are staged-swap ops; on a
-    snapshot table's directory they would rewrite data dirs that
-    published manifests reference by exact path, breaking every
-    version's isolation. They must refuse (VERDICT r10 residual)."""
+    """The generic overwrite-capable sinks must refuse a snapshot
+    table's directory (VERDICT r10 residual, r12): an overwrite pointed
+    at the table ROOT would delete the manifests and every data dir
+    that published manifests reference by exact path, breaking every
+    version's isolation."""
     path = str(tmp_path / "tbl")
     W.write_parquet_snapshot(_df(spark, 0, 5), path)
-    with pytest.raises(ValueError, match="snapshot-versioned"):
-        W.compact_parquet(spark, path, 1)
-    with pytest.raises(ValueError, match="snapshot-versioned"):
-        W.merge_upsert_parquet(spark, path, _df(spark, 0, 2), ["id"])
-    # r12: the generic overwrite-capable sinks refuse too — an
-    # overwrite pointed at the table ROOT would delete the manifests
-    # and every data dir wholesale
     df = _df(spark, 0, 2)
     for op in (
         lambda: W.write_parquet(df, path),
-        lambda: W.overwrite_partitions(df, path, ["id"]),
-        lambda: W.write_range_sorted(df, path, "id"),
-        lambda: W.write_zorder(df, path, ["id", "v"]),
-        lambda: W.write_parquet_sized(df, path),
-        lambda: W.write_csv(df, path),
-        lambda: W.write_orc(df, path),
+        lambda: W.write_json_single_file(df, path),
     ):
         with pytest.raises(ValueError, match="snapshot-versioned"):
             op()
@@ -1084,65 +1071,6 @@ def test_evolution_refuses_case_collisions_and_reorders(spark, tmp_path):
         spark.conf.set("spark.sql.caseSensitive", "false")
 
 
-def test_merge_upsert_snapshot_basic(spark, tmp_path):
-    """r13 DML: MERGE INTO on the MVCC table — matched keys replaced,
-    new keys inserted, one new version, pre-merge state time-travelable,
-    key-true stats, manifest stamped with replaced_from."""
-    tbl = str(tmp_path / "tbl")
-    W.write_parquet_snapshot(_df(spark, 0, 5), tbl)
-    updates = spark.createDataFrame(
-        [(2, 999), (3, 888), (10, 777)], "id long, v long"
-    )
-    res = W.merge_upsert_snapshot(spark, tbl, updates, ["id"])
-    assert res["updated"] == 2 and res["inserted"] == 1
-    assert res["version"] == 2 and res["from_version"] == 1
-    assert res["rows"] == 6 and res["retries"] == 0
-    got = {r.id: r.v for r in W.read_parquet_snapshot(spark, tbl).collect()}
-    assert got == {0: 0, 1: 2, 2: 999, 3: 888, 4: 8, 10: 777}
-    # pre-merge state untouched and readable
-    old = {
-        r.id: r.v
-        for r in W.read_parquet_snapshot(spark, tbl, version=1).collect()
-    }
-    assert old == {i: 2 * i for i in range(5)}
-    snap = W.list_parquet_snapshots(tbl)[-1]
-    assert snap["mode"] == "merge" and snap["replaced_from"] == 1
-    # updates column ORDER is free (the rewrite selects manifest order)
-    res2 = W.merge_upsert_snapshot(
-        spark, tbl,
-        spark.createDataFrame([(555, 0)], "v long, id long"),
-        ["id"],
-    )
-    assert res2["updated"] == 1 and res2["inserted"] == 0
-    got = {r.id: r.v for r in W.read_parquet_snapshot(spark, tbl).collect()}
-    assert got[0] == 555 and len(got) == 6
-
-
-def test_merge_upsert_snapshot_refusals(spark, tmp_path):
-    tbl = str(tmp_path / "tbl")
-    W.write_parquet_snapshot(_df(spark, 0, 5), tbl)
-    with pytest.raises(ValueError, match="duplicate key"):
-        W.merge_upsert_snapshot(
-            spark, tbl,
-            spark.createDataFrame([(1, 9), (1, 8)], "id long, v long"),
-            ["id"],
-        )
-    with pytest.raises(ValueError, match="merge schema mismatch"):
-        W.merge_upsert_snapshot(
-            spark, tbl,
-            spark.createDataFrame([(1, "x")], "id long, v string"),
-            ["id"],
-        )
-    with pytest.raises(ValueError, match="merge schema mismatch"):
-        W.merge_upsert_snapshot(
-            spark, tbl,
-            spark.createDataFrame([(1,)], "id long"),
-            ["id"],
-        )
-    # table untouched by every refusal
-    assert len(W.list_parquet_snapshots(tbl)) == 1
-
-
 def test_delete_from_snapshot_semantics(spark, tmp_path):
     """DELETE removes rows where the predicate is TRUE; NULL-predicate
     rows are KEPT (SQL three-valued semantics)."""
@@ -1169,10 +1097,10 @@ def test_delete_from_snapshot_semantics(spark, tmp_path):
 
 
 def test_snapshot_dml_lost_race_recomputes(spark, tmp_path, monkeypatch):
-    """Optimistic concurrency: a writer publishing between the merge's
+    """Optimistic concurrency: a writer publishing between the delete's
     base read and its manifest link is a CONFLICT — publishing the
-    stale rewrite would drop the winner's rows (lost update). The merge
-    must abandon, re-read the new latest and re-merge."""
+    stale rewrite would drop the winner's rows (lost update). The delete
+    must abandon, re-read the new latest and re-delete."""
     tbl = str(tmp_path / "tbl")
     W.write_parquet_snapshot(_df(spark, 0, 4), tbl)
     real_link = os.link
@@ -1187,15 +1115,11 @@ def test_snapshot_dml_lost_race_recomputes(spark, tmp_path, monkeypatch):
         return real_link(src, dst)
 
     monkeypatch.setattr(os, "link", racing_link)
-    res = W.merge_upsert_snapshot(
-        spark, tbl,
-        spark.createDataFrame([(1, 777)], "id long, v long"),
-        ["id"],
-    )
+    res = W.delete_from_snapshot(spark, tbl, "id = 1")
     assert state["raced"] and res["retries"] == 1
     got = {r.id: r.v for r in W.read_parquet_snapshot(spark, tbl).collect()}
-    # the racing append's rows SURVIVED the merge
-    assert got == {0: 0, 1: 777, 2: 4, 3: 6, 100: 200, 101: 202}
+    # the racing append's rows SURVIVED the delete
+    assert got == {0: 0, 2: 4, 3: 6, 100: 200, 101: 202}
     monkeypatch.undo()
     # the abandoned first attempt is an invisible orphan
     out = W.vacuum_parquet_snapshots(
@@ -1205,18 +1129,13 @@ def test_snapshot_dml_lost_race_recomputes(spark, tmp_path, monkeypatch):
 
 
 def test_snapshot_dml_preserves_stream_high_water(spark, tmp_path):
-    """DML is maintenance ON the stream's lineage, not a reset: a merge
-    or delete mid-stream stamps the new manifest with the effective
-    high-water, so a crashed stream's replay is still a publish no-op —
-    even after vacuum(keep=1) leaves the DML version as the only
-    manifest."""
+    """DML is maintenance ON the stream's lineage, not a reset: a delete
+    mid-stream stamps the new manifest with the effective high-water, so
+    a crashed stream's replay is still a publish no-op — even after
+    vacuum(keep=1) leaves the DML version as the only manifest."""
     tbl = str(tmp_path / "tbl")
     assert W.snapshot_publish_batch(_df(spark, 0, 5), 7, tbl) is True
-    res = W.merge_upsert_snapshot(
-        spark, tbl,
-        spark.createDataFrame([(0, 111)], "id long, v long"),
-        ["id"],
-    )
+    res = W.delete_from_snapshot(spark, tbl, "id = 0")
     assert W.list_parquet_snapshots(tbl)[-1]["src_batch"] == 7
     W.delete_from_snapshot(spark, tbl, "id = 4")
     W.vacuum_parquet_snapshots(tbl, keep=1, orphan_grace_sec=0)
@@ -1227,92 +1146,31 @@ def test_snapshot_dml_preserves_stream_high_water(spark, tmp_path):
 
 
 def test_merge_on_evolved_base_sheds_flag_and_fills(spark, tmp_path):
-    """Merging onto an evolved table: the rewrite materializes uniform
-    files (flag shed, like compaction); an UPDATED old-narrow row gains
-    real values for the evolved column while untouched narrow rows keep
-    their nulls."""
+    """DML on an evolved table: the delete's rewrite materializes uniform
+    files (flag shed, like compaction) with the evolved column filled
+    with nulls for the old-narrow rows, so a later full-width append of
+    a re-inserted key needs no schema evolution and carries real values
+    while untouched narrow rows keep their nulls."""
     tbl = str(tmp_path / "tbl")
     W.write_parquet_snapshot(_df(spark, 0, 3), tbl)
     W.write_parquet_snapshot(
         spark.range(3, 5).selectExpr("id", "id * 2 AS v", "id * 10 AS w"),
         tbl, mode="append", allow_schema_evolution=True,
     )
-    res = W.merge_upsert_snapshot(
-        spark, tbl,
-        spark.createDataFrame([(0, 1, 2), (9, 8, 7)], "id long, v long, w long"),
-        ["id"],
-    )
-    assert res["updated"] == 1 and res["inserted"] == 1
+    res = W.delete_from_snapshot(spark, tbl, "id = 0")
+    assert res["deleted"] == 1
     snap = W.list_parquet_snapshots(tbl)[-1]
-    assert not snap.get("evolved"), "merge rewrite must shed the flag"
+    assert not snap.get("evolved"), "delete rewrite must shed the flag"
+    assert snap["schema"] == [["id", "bigint"], ["v", "bigint"], ["w", "bigint"]]
+    W.write_parquet_snapshot(
+        spark.createDataFrame([(0, 1, 2), (9, 8, 7)], "id long, v long, w long"),
+        tbl, mode="append",
+    )
     got = {r.id: (r.v, r.w) for r in W.read_parquet_snapshot(spark, tbl).collect()}
     assert got[0] == (1, 2)            # updated row: w filled
     assert got[1] == (2, None)         # untouched narrow row: null kept
     assert got[9] == (8, 7)            # inserted
     assert got[3] == (6, 30)
-
-
-def test_restore_snapshot_rollback(spark, tmp_path):
-    """r13: RESTORE publishes a past version's file list as the new
-    latest — zero data copied, the rolled-back state stays
-    time-travelable, shared-forward files survive vacuum, and the
-    stream high-water is NOT rolled back with the content."""
-    tbl = str(tmp_path / "tbl")
-    assert W.snapshot_publish_batch(_df(spark, 0, 5), 0, tbl) is True   # v1
-    assert W.snapshot_publish_batch(_df(spark, 5, 8), 1, tbl) is True   # v2
-    # a bad merge to roll back
-    W.merge_upsert_snapshot(
-        spark, tbl,
-        spark.createDataFrame([(0, -1), (1, -1)], "id long, v long"),
-        ["id"],
-    )                                                                    # v3
-    res = W.restore_snapshot(spark, tbl, 2)
-    assert res["version"] == 4 and res["restored_from"] == 2
-    assert res["rows"] == 8 and res["retries"] == 0
-    got = {r.id: r.v for r in W.read_parquet_snapshot(spark, tbl).collect()}
-    assert got == {i: 2 * i for i in range(8)}  # the merge is undone
-    # zero data copied: v4 names exactly v2's files
-    snaps = {s["version"]: s for s in W.list_parquet_snapshots(tbl)}
-    assert snaps[4]["files"] == snaps[2]["files"]
-    assert snaps[4]["mode"] == "restore"
-    # the bad merge stays time-travelable until vacuumed
-    assert {
-        r.id: r.v
-        for r in W.read_parquet_snapshot(spark, tbl, version=3).collect()
-    }[0] == -1
-    # content rolled back, replay guard NOT: batch 1 is still published
-    assert snaps[4]["src_batch"] == 1
-    assert W.snapshot_publish_batch(_df(spark, 5, 8), 1, tbl) is False
-    # vacuum keeps the restore's shared-forward files
-    W.vacuum_parquet_snapshots(tbl, keep=1, orphan_grace_sec=0)
-    assert sorted(
-        r.id for r in W.read_parquet_snapshot(spark, tbl).collect()
-    ) == list(range(8))
-    with pytest.raises(ValueError, match="v99 not found"):
-        W.restore_snapshot(spark, tbl, 99)
-
-
-def test_restore_evolved_version_keeps_merge_read(spark, tmp_path):
-    """Restoring an evolved version carries its flag: the files still
-    mix schemas, so the restored latest keeps merge-reading with null
-    padding until a compaction sheds it."""
-    tbl = str(tmp_path / "tbl")
-    W.write_parquet_snapshot(_df(spark, 0, 3), tbl)                      # v1
-    W.write_parquet_snapshot(
-        spark.range(3, 5).selectExpr("id", "id * 2 AS v", "id * 10 AS w"),
-        tbl, mode="append", allow_schema_evolution=True,
-    )                                                                    # v2 evolved
-    W.delete_from_snapshot(spark, tbl, "id >= 0")                        # v3 empty
-    res = W.restore_snapshot(spark, tbl, 2)
-    snap = W.list_parquet_snapshots(tbl)[-1]
-    assert snap["evolved"] is True and res["rows"] == 5
-    df = W.read_parquet_snapshot(spark, tbl)
-    assert df.columns == ["id", "v", "w"]
-    got = {r.id: r.w for r in df.collect()}
-    assert got == {0: None, 1: None, 2: None, 3: 30, 4: 40}
-    out = W.compact_parquet_snapshot(spark, tbl, target_files=1)
-    assert out["compacted"] is True
-    assert not W.list_parquet_snapshots(tbl)[-1].get("evolved")
 
 
 def test_dml_on_legacy_preschema_manifest(spark, tmp_path):
@@ -1327,16 +1185,13 @@ def test_dml_on_legacy_preschema_manifest(spark, tmp_path):
     del legacy["schema"]
     with open(mpath, "w") as fh:
         json.dump(legacy, fh)
-    res = W.merge_upsert_snapshot(
-        spark, tbl,
-        spark.createDataFrame([(0, 99), (9, 77)], "id long, v long"),
-        ["id"],
-    )
-    assert res["updated"] == 1 and res["inserted"] == 1
-    res2 = W.delete_from_snapshot(spark, tbl, "id = 1")
-    assert res2["deleted"] == 1
+    res = W.delete_from_snapshot(spark, tbl, "id = 1")
+    assert res["deleted"] == 1
+    assert W.list_parquet_snapshots(tbl)[-1]["schema"] == [
+        ["id", "bigint"], ["v", "bigint"]
+    ]
     got = {r.id: r.v for r in W.read_parquet_snapshot(spark, tbl).collect()}
-    assert got == {0: 99, 2: 4, 3: 6, 9: 77}
+    assert got == {0: 0, 2: 4, 3: 6}
 
 
 def test_manifest_names_sort_numerically_past_8_digits(tmp_path):
@@ -1357,27 +1212,6 @@ def test_manifest_names_sort_numerically_past_8_digits(tmp_path):
     assert W._manifest_versions(tbl) == [1, 99_999_999, 100_000_000]
     assert W._manifest_names(tbl, reverse=True)[0] == "v100000000.json"
     assert W._latest_manifest(tbl)["version"] == 100_000_000
-
-
-def test_restore_refuses_vacuumed_source_files(spark, tmp_path):
-    """r13 review: restore names files it did not just write — if a
-    concurrent vacuum already deleted them, the pre-link read-back must
-    refuse instead of publishing an unreadable latest."""
-    tbl = str(tmp_path / "tbl")
-    W.write_parquet_snapshot(_df(spark, 0, 3), tbl)            # v1
-    W.write_parquet_snapshot(_df(spark, 10, 12), tbl)          # v2 overwrite
-    # simulate the vacuum's file-deletion phase hitting v1 mid-restore:
-    # the manifest survives (we loaded it) but its files are gone
-    v1 = W._load_manifest(tbl, 1)
-    for f in v1["files"]:
-        os.remove(f.removeprefix("file:"))
-    with pytest.raises(Exception):
-        W.restore_snapshot(spark, tbl, 1)
-    # no manifest was published; the table still reads as v2
-    assert [s["version"] for s in W.list_parquet_snapshots(tbl)] == [1, 2]
-    assert sorted(
-        r.id for r in W.read_parquet_snapshot(spark, tbl).collect()
-    ) == [10, 11]
 
 
 def test_vacuum_with_relative_path_keeps_live_data(spark, tmp_path, monkeypatch):

@@ -253,24 +253,6 @@ def test_brute_force_topk_broadcasts_probes(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan
 
 
-def test_ann_bucketed_layout_prunes_partitions(spark, tmp_path):
-    """The persisted sign-bucket layout must turn a probe's bucket into a
-    partition filter (scan reads ~1/2^m of files), not a post-scan
-    predicate."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import similarity
-    from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import table
-
-    e = table(spark, SF_TEST, "embeddings")
-    path = str(tmp_path / "emb_bucketed")
-    similarity.write_bucketed_layout(e, path, "vec_id", "embedding", m=4)
-    back = spark.read.parquet(path)
-    probe = back.where(back.bucket == 3)
-    plan = _plan(probe)
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and "bucket" in pf[0], plan
-    assert probe.count() > 0
-
-
 def test_range_join_is_equi_not_nested_loop(spark):
     """binned_range_join exists to turn a pure theta range join into a
     bin-keyed equi join — the plan must contain a real equi join (sort-

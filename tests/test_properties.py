@@ -86,7 +86,7 @@ def test_fill_and_recode_idempotent(spark):
         [("positive",), ("negative",), (None,), ("nan",)], "result string"
     )
     f = lambda x: relational.recode_values(  # noqa: E731
-        relational.fill_nulls(x, {"result": "nan"}),
+        x.fillna({"result": "nan"}),
         "result",
         {"nan": "0", "positive": "1", "negative": "0"},
     )
@@ -155,18 +155,6 @@ def test_salting_preserves_join_under_any_fanout(spark):
             )
         )
         assert salted == plain, f"n_salts={n}"
-
-
-def test_jaccard_prefix_filter_is_lossless(spark):
-    """The AllPairs prefix-filtered Jaccard must emit exactly the naive
-    inverted-index join's pairs — the bound is a pruning rule, never a
-    semantic change."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
-
-    d = table(spark, SF_TEST, "documents")
-    fast = sorted(map(tuple, dedup.jaccard_pairs_prefix(d, "doc_id", "text").collect()))
-    naive = sorted(map(tuple, dedup.jaccard_pairs(d, "doc_id", "text").collect()))
-    assert fast == naive and len(naive) > 0
 
 
 def test_dup_clusters_known_graph(spark):
@@ -662,47 +650,6 @@ def test_dup_clusters_releases_round_checkpoints(spark):
     )
 
 
-def test_jaccard_auto_crossover_selection(spark):
-    """jaccard_pairs_auto must (a) return exactly the naive variant's
-    pairs (the chooser is physical, never semantic), (b) pick naive on
-    the real corpus (no hot shingles: measured faster at every threshold),
-    and (c) pick prefix on a planted hot-shingle corpus where the naive
-    join's candidate expansion goes quadratic."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
-
-    d = table(spark, SF_TEST, "documents")
-    auto = sorted(
-        map(tuple, dedup.jaccard_pairs_auto(d, "doc_id", "text").collect())
-    )
-    naive = sorted(map(tuple, dedup.jaccard_pairs(d, "doc_id", "text").collect()))
-    assert auto == naive and len(auto) > 0
-
-    variant, stats = dedup.choose_jaccard_variant(d, "doc_id", "text")
-    assert variant == "naive", stats
-
-    # hot-shingle corpus: every doc shares one 3-gram -> L_max = N,
-    # quad ~ N^2/2 >> rows -> prefix
-    hot = spark.createDataFrame(
-        [(i, f"common hot shingle unique{i} word{i} tail{i}") for i in range(200)],
-        "doc_id bigint, text string",
-    )
-    variant_hot, stats_hot = dedup.choose_jaccard_variant(
-        hot, "doc_id", "text", threshold=0.7
-    )
-    assert variant_hot == "prefix", stats_hot
-    # and the dispatched result still equals the naive result there too
-    auto_hot = sorted(
-        map(
-            tuple,
-            dedup.jaccard_pairs_auto(hot, "doc_id", "text", threshold=0.7).collect(),
-        )
-    )
-    naive_hot = sorted(
-        map(tuple, dedup.jaccard_pairs(hot, "doc_id", "text", threshold=0.7).collect())
-    )
-    assert auto_hot == naive_hot
-
-
 def test_contamination_hits_planted(spark):
     """Decontamination must flag exactly the train docs sharing a word
     5-shingle with the eval set — planted: t1 embeds an eval doc's exact
@@ -1139,9 +1086,11 @@ def test_countmin_merge_linearity_and_overcount(spark):
     b = df.where(F.col("cnt") % 2 != 0)
 
     whole = sketches.countmin_table(df, "item", "cnt")
-    merged = sketches.merge_countmin(
-        sketches.countmin_table(a, "item", "cnt"),
-        sketches.countmin_table(b, "item", "cnt"),
+    merged = (
+        sketches.countmin_table(a, "item", "cnt")
+        .unionByName(sketches.countmin_table(b, "item", "cnt"))
+        .groupBy("cms_row", "bucket")
+        .agg(F.sum("cell").alias("cell"))
     )
     key = lambda rows: sorted((r.cms_row, r.bucket, r.cell) for r in rows)
     assert key(whole.collect()) == key(merged.collect())
@@ -2044,19 +1993,6 @@ def test_forecast_zero_variance_group_yields_null(spark):
     assert got[("line", 1)] == 3.0 and got[("line", 2)] == 4.0, got
 
 
-def test_merge_countmin_rejects_empty():
-    """Review r9: merge_countmin() with no sketches raised an opaque
-    reduce() TypeError; now it states the contract."""
-    import pytest
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata.sketches import (
-        merge_countmin,
-    )
-
-    with pytest.raises(ValueError, match="at least one sketch"):
-        merge_countmin()
-
-
 def test_asof_join_null_semantics_match_equi_contract(spark):
     """Review r9: DuckDB's ASOF JOIN (l.k = r.k AND l.ts >= r.ts — the
     j06 oracle) never matches NULL keys or NULL timestamps. The
@@ -2236,7 +2172,7 @@ def test_ivf_empty_codebook_returns_empty_not_ansi_error(spark):
     codebook) must be guarded — every IVF entry point returns empty,
     matching the former inner-join contract, instead of killing the
     stage. Also pins the probe-side NULL contract: a NULL-vector probe
-    emits no cells."""
+    emits no cells, so it gets no neighbors."""
     from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import similarity
 
     df = spark.createDataFrame(
@@ -2245,17 +2181,13 @@ def test_ivf_empty_codebook_returns_empty_not_ansi_error(spark):
     )
     assert similarity.ivf_assign_cells(df, "vec_id", "embedding").count() == 0
     assert (
-        similarity.ivf_probe_cells(df, "vec_id", "embedding", [1000]).count()
-        == 0
-    )
-    assert (
         similarity.ivf_topk(df, "vec_id", "embedding", [1000]).count() == 0
     )
     withnull = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (50, None)],
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [0.1, 1.0]), (50, None)],
         "vec_id bigint, embedding array<double>",
     )
-    got = similarity.ivf_probe_cells(
+    got = similarity.ivf_topk(
         withnull, "vec_id", "embedding", [1, 50], n_centroids=2
     ).collect()
     assert {r.query_id for r in got} == {1}, got

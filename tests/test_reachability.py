@@ -1,0 +1,166 @@
+"""Every top-level def in the package is reached, or kept with a reason.
+
+A name-based ``ast`` call graph over the package, rooted at:
+
+- the ``@query`` functions of the registry;
+- module-level statements (including ``__all__`` names, decorators,
+  base classes and default values, which run at import);
+- ``pipelines/*`` and ``timeseries.forecast.prophet_fitter``, the
+  reference's four ETL jobs;
+- ``__spark_entry__.py``, ``bench.py`` and ``perfbench/`` (their names
+  and string constants, since perfbench wraps engine functions by name).
+
+An edge goes from a def to every top-level def whose name appears in its
+body as a name or an attribute. Names are not resolved through imports,
+so the graph over-approximates what runs: a def it leaves unreached is
+called by nothing but tests. The test fails when that set differs from
+``KEPT_UNREACHED``: delete new unreached code, or add it there with the
+reason it stays. No Spark session is started.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+from collections import defaultdict
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "pyspark_bigdata_sars_cov_2_analysis_spark"
+
+_DEDUP_WRAPPER = (
+    "public wrapper over dedup._CheckpointKind, which still commits "
+    "through io.writers._swap_in / recover_staged_swap; the checkpoint "
+    "tests drive the state through it"
+)
+
+KEPT_UNREACHED = {
+    "functions.text.word_occurrences": (
+        "reference twin: word_set_occurrences is defined as its per-word "
+        "sum, and tests compare the two"
+    ),
+    "io.readers.read_images": (
+        "the reference's S3 image-directory scan "
+        "(radiography_analysis.py:71-89), tested end to end"
+    ),
+    "llmdata.dedup.compact_chunk_checkpoint": _DEDUP_WRAPPER,
+    "llmdata.dedup.migrate_band_checkpoint_stamps": _DEDUP_WRAPPER,
+    "llmdata.dedup.migrate_chunk_checkpoint_stamps": _DEDUP_WRAPPER,
+    "llmdata.dedup.read_band_checkpoint": _DEDUP_WRAPPER,
+    "llmdata.dedup.read_band_params": _DEDUP_WRAPPER,
+    "llmdata.dedup.read_chunk_checkpoint": _DEDUP_WRAPPER,
+    "llmdata.dedup.read_chunk_params": _DEDUP_WRAPPER,
+    "llmdata.dedup.streaming_chunk_dedup_ingest": _DEDUP_WRAPPER,
+    "llmdata.dedup.streaming_neardup_ingest": _DEDUP_WRAPPER,
+    "operators.joins.asof_join_cogroup": (
+        "reference twin: tests compare the as-of join against it"
+    ),
+    "udf.udtfs.ChunkText": (
+        "reference twin: tests compare the native chunking against the "
+        "Python UDTF"
+    ),
+    "udf.udtfs.register_udtfs": "registers ChunkText for those tests",
+}
+
+
+def _refs(node: ast.AST) -> set[str]:
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+    return out
+
+
+def _strings(node: ast.AST) -> set[str]:
+    return {
+        n.value
+        for n in ast.walk(node)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+    }
+
+
+def _unreached() -> set[str]:
+    defs: dict[str, ast.AST] = {}
+    by_name: dict[str, set[str]] = defaultdict(set)
+    roots: set[str] = set()
+    root_names: set[str] = set()
+    pkg_dir = os.path.join(REPO, PKG)
+    for dirpath, _dirs, files in os.walk(pkg_dir):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            rel = os.path.relpath(path, pkg_dir)[: -len(".py")]
+            mod = rel.replace(os.sep, ".")
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for i, stmt in enumerate(tree.body):
+                if isinstance(
+                    stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                ):
+                    qual = f"{mod}.{stmt.name}"
+                    defs[qual] = stmt
+                    by_name[stmt.name].add(qual)
+                    for deco in stmt.decorator_list:
+                        root_names |= _refs(deco)
+                        if isinstance(deco, ast.Call) and "query" in _refs(
+                            deco.func
+                        ):
+                            roots.add(qual)
+                    if isinstance(stmt, ast.ClassDef):
+                        for base in stmt.bases + [k.value for k in stmt.keywords]:
+                            root_names |= _refs(base)
+                    else:
+                        args = stmt.args
+                        for dflt in args.defaults + [
+                            d for d in args.kw_defaults if d is not None
+                        ]:
+                            root_names |= _refs(dflt)
+                    if (
+                        mod.startswith("pipelines.")
+                        or qual == "timeseries.forecast.prophet_fitter"
+                    ):
+                        roots.add(qual)
+                elif not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                    root_names |= _refs(stmt)
+                    if not (i == 0 and isinstance(stmt, ast.Expr)):
+                        root_names |= _strings(stmt)  # __all__ and the like
+    entry_files = [
+        os.path.join(REPO, "__spark_entry__.py"),
+        os.path.join(REPO, "bench.py"),
+    ] + sorted(
+        os.path.join(REPO, "perfbench", f)
+        for f in os.listdir(os.path.join(REPO, "perfbench"))
+        if f.endswith(".py")
+    )
+    for path in entry_files:
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        root_names |= _refs(tree) | _strings(tree)
+    for name in root_names:
+        roots |= by_name.get(name, set())
+
+    seen: set[str] = set()
+    stack = list(roots)
+    while stack:
+        qual = stack.pop()
+        if qual in seen:
+            continue
+        seen.add(qual)
+        for name in _refs(defs[qual]):
+            stack.extend(by_name.get(name, ()))
+    return set(defs) - seen
+
+
+def test_unreached_defs_are_the_kept_list():
+    unreached = _unreached()
+    added = sorted(unreached - set(KEPT_UNREACHED))
+    stale = sorted(set(KEPT_UNREACHED) - unreached)
+    assert not added, (
+        f"top-level defs no query, pipeline or benchmark reaches: {added} — "
+        "delete them, or add each to KEPT_UNREACHED with its reason"
+    )
+    assert not stale, (
+        f"KEPT_UNREACHED names defs that are reached or gone: {stale}"
+    )

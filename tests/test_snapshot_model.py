@@ -4,8 +4,7 @@ The MVCC layer's unit tests pin individual scenarios; this drives RANDOM
 operation sequences — overwrite, same-schema append, schema-evolution
 append (both widening and narrowing directions), refused drift, refused
 type conflict, compaction, vacuum, vacuum-under-writer-contention,
-merge-upsert, predicate delete and zero-copy restore (the r13 DML/
-rollback ops) — against a
+predicate delete (the r13 DML op) — against a
 driver-side in-memory model of what every surviving version must
 contain, column by column, null padding included. Overwrites declare
 data-skipping stats (r13), so every surviving version is also read
@@ -46,10 +45,7 @@ _OPS = st.lists(
         ),
         st.tuples(st.just("publish_new"), st.none()),
         st.tuples(st.just("publish_replay"), st.none()),
-        st.tuples(st.just("merge"), st.none()),
         st.tuples(st.just("delete_even"), st.none()),
-        st.tuples(st.just("update_identity"), st.none()),
-        st.tuples(st.just("restore_oldest"), st.none()),
     ),
     min_size=1,
     max_size=6,
@@ -123,12 +119,12 @@ def _check_version(spark, tbl, model_version, version, pruned=False):
 # r13 decision pin: an overwrite is a lineage BARRIER — the publish
 # after it restarts at batch id 0 and must not be swallowed
 @example([("publish_new", None), ("overwrite", "narrow"), ("publish_new", None)])
-# r14: a mix whose feed carries deletes AND an update's delete/insert
-# pair — the where=-restricted fold must still reconstruct the filtered
-# latest (filter-commutes-with-diff, VERDICT r13 #8)
+# r14: a mix whose feed carries a DML delete version AND a rewrite's
+# delete/insert diff — the where=-restricted fold must still reconstruct
+# the filtered latest (filter-commutes-with-diff, VERDICT r13 #8)
 @example([
     ("overwrite", "narrow"), ("append_same", None),
-    ("delete_even", None), ("merge", None),
+    ("delete_even", None), ("overwrite", "wide"),
 ])
 @settings(max_examples=10, deadline=None)
 def test_snapshot_table_matches_model(spark, tmp_path_factory, ops):
@@ -294,35 +290,6 @@ def test_snapshot_table_matches_model(spark, tmp_path_factory, ops):
                 "src": bid,
                 "mode": "append",
             }
-        elif op == "merge":
-            # r13 DML: upsert over up to 2 existing ids + 2 fresh ones.
-            # Updated/inserted rows are rewritten with the FULL current
-            # schema (an old narrow row gains real values for evolved
-            # columns); untouched rows keep their null pattern; the
-            # manifest is stamped with the effective high-water and the
-            # evolved flag is shed (uniform rewrite).
-            if cur is None:
-                continue
-            cols = cur["schema"]
-            existing = sorted(cur["rows"])[:2]
-            new_ids = fresh_ids()
-            res = W.merge_upsert_snapshot(
-                spark, tbl, _write_df(spark, existing + new_ids, cols), ["id"]
-            )
-            assert res["updated"] == len(existing)
-            assert res["inserted"] == len(new_ids)
-            assert not (
-                W._load_manifest(tbl, res["version"]) or {}
-            ).get("evolved"), "DML rewrite must shed the evolved flag"
-            versions[res["version"]] = {
-                "schema": list(cols),
-                "rows": {
-                    **cur["rows"],
-                    **{i: set(cols) for i in existing + new_ids},
-                },
-                "src": effective_hwm(),
-                "mode": "merge",
-            }
         elif op == "delete_even":
             # r13 DML: DELETE WHERE id % 2 = 0 — survivors keep their
             # null pattern; the count must match the model's even ids
@@ -338,45 +305,6 @@ def test_snapshot_table_matches_model(spark, tmp_path_factory, ops):
                 },
                 "src": effective_hwm(),
                 "mode": "delete",
-            }
-        elif op == "update_identity":
-            # r13 DML: an UPDATE whose SET is the identity on the first
-            # schema column — values unchanged (the model can verify
-            # them), but the whole rewrite protocol runs: one published
-            # version, count-verify, high-water stamp, evolved flag
-            # shed, every row's null pattern preserved through the
-            # uniform rewrite. Value-changing semantics are unit-pinned.
-            if cur is None:
-                continue
-            first_col = cur["schema"][0]
-            res = W.update_snapshot(
-                spark, tbl, {first_col: first_col}, "id % 2 = 1"
-            )
-            odds = [i for i in cur["rows"] if i % 2 == 1]
-            assert res["updated"] == len(odds)
-            assert not (
-                W._load_manifest(tbl, res["version"]) or {}
-            ).get("evolved"), "DML rewrite must shed the evolved flag"
-            versions[res["version"]] = {
-                "schema": list(cur["schema"]),
-                "rows": {i: set(c) for i, c in cur["rows"].items()},
-                "src": effective_hwm(),
-                "mode": "update",
-            }
-        elif op == "restore_oldest":
-            # r13: roll content back to the oldest surviving version —
-            # the new latest must read EXACTLY like it (schema, values,
-            # null padding), while the replay high-water is NOT rolled
-            # back (content rollback, not guard rollback)
-            if cur is None:
-                continue
-            oldest = min(versions)
-            res = W.restore_snapshot(spark, tbl, oldest)
-            versions[res["version"]] = {
-                "schema": list(versions[oldest]["schema"]),
-                "rows": dict(versions[oldest]["rows"]),
-                "src": effective_hwm(),
-                "mode": "restore",
             }
         elif op == "vacuum":
             if cur is None:
@@ -433,7 +361,7 @@ def test_snapshot_table_matches_model(spark, tmp_path_factory, ops):
     # beginning (add inserts, remove deletes, version order irrelevant
     # because the fold is a multiset sum) must reconstruct the latest
     # version's exact row multiset under whatever op mix ran —
-    # append/evolve/compact/merge/delete/restore in any interleaving.
+    # append/evolve/compact/delete in any interleaving.
     if versions and min(versions) == 1:
         from collections import Counter
 

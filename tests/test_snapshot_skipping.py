@@ -5,7 +5,7 @@ time, inheritance through appends (the streaming-sink path), pruned
 ``where=`` reads that drop files BEFORE the scan is planned while the
 real predicate keeps the result exact, range-clustered compaction
 restoring prunability on interleaved tables, stats carry-through on
-DML/restore — and ``snapshot_changes``: O(new-data) append fast path,
+DML — and ``snapshot_changes``: O(new-data) append fast path,
 multiset diff on rewrites, zero rows for compaction, refusals on
 vacuumed history and type-changing ranges.
 """
@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import datetime
 import os
+import time
 
 import pytest
 
@@ -298,97 +299,29 @@ def test_evolved_table_stats_and_pruned_merge_read(spark, tmp_path):
     assert _ids(old) == list(range(6))
 
 
-def test_update_snapshot_semantics(spark, tmp_path):
-    """UPDATE (the third DML verb): SET expressions evaluate against
-    the PRE-update row (swaps work), NULL predicates keep the row,
-    unknown columns and dtype changes refuse, the publish carries the
-    usual stats/time-travel guarantees, and the change feed shows the
-    update as delete+insert pairs."""
-    tbl = str(tmp_path / "tbl")
-    W.write_parquet_snapshot(_df(spark, 0, 6), tbl, stats_columns=["id"])
-
-    res = W.update_snapshot(
-        spark, tbl, {"v": "v + 100"}, "id < 3"
-    )
-    assert res["updated"] == 3 and res["rows"] == 6
-    # a raw Python value is a literal (not an AttributeError)
-    W.update_snapshot(spark, tbl, {"v": 7}, "id = 5")
-    assert {
-        r.v for r in W.read_parquet_snapshot(spark, tbl).collect()
-        if r.id == 5
-    } == {7}
-    W.update_snapshot(spark, tbl, {"v": "id * 2"}, "id = 5")  # restore v
-    got = {r.id: r.v for r in W.read_parquet_snapshot(spark, tbl).collect()}
-    assert got == {0: 100, 1: 102, 2: 104, 3: 6, 4: 8, 5: 10}
-    # pre-update evaluation: a swap is exact, and predicate None = all
-    W.update_snapshot(spark, tbl, {"id": "v", "v": "id"})
-    got = sorted(
-        (r.id, r.v) for r in W.read_parquet_snapshot(spark, tbl).collect()
-    )
-    assert got == sorted(
-        (v, k) for k, v in {0: 100, 1: 102, 2: 104, 3: 6, 4: 8, 5: 10}.items()
-    )
-    # v1 still time-travels; stats recomputed on the rewrite
-    assert _ids(W.read_parquet_snapshot(spark, tbl, version=1)) == list(
-        range(6)
-    )
-    snap = W.list_parquet_snapshots(tbl)[-1]
-    assert snap["mode"] == "update" and snap["stats_columns"] == ["id"]
-    assert set(snap["stats"]) == set(snap["files"])
-
-    # NULL predicate keeps the row (three-valued semantics)
-    tbl2 = str(tmp_path / "tbl2")
-    W.write_parquet_snapshot(
-        spark.createDataFrame(
-            [(1, 10), (2, None)], schema="id long, v long"
-        ).coalesce(1),
-        tbl2,
-    )
-    res = W.update_snapshot(spark, tbl2, {"id": "id + 100"}, "v > 5")
-    assert res["updated"] == 1
-    assert sorted(
-        r.id for r in W.read_parquet_snapshot(spark, tbl2).collect()
-    ) == [2, 101]
-
-    with pytest.raises(ValueError, match="not in the table schema"):
-        W.update_snapshot(spark, tbl2, {"zz": "1"})
-    with pytest.raises(ValueError, match="changes dtype"):
-        W.update_snapshot(spark, tbl2, {"v": "'text'"})
-    with pytest.raises(ValueError, match="at least one column"):
-        W.update_snapshot(spark, tbl2, {})
-
-    # the feed sees an update as delete+insert pairs at its version
-    rows = W.snapshot_changes(spark, tbl2, 1).collect()
-    assert sorted((r._change_type, r.id) for r in rows) == [
-        ("delete", 1), ("insert", 101)
-    ]
-
-
 def test_dml_and_restore_carry_stats(spark, tmp_path):
     tbl = str(tmp_path / "tbl")
     W.write_parquet_snapshot(_df(spark, 0, 10), tbl, stats_columns=["id"])
-    v1_stats = W.list_parquet_snapshots(tbl)[-1]["stats"]
-
-    upd = spark.createDataFrame(
-        [(3, 999), (50, 100)], schema="id long, v long"
-    )
-    W.merge_upsert_snapshot(spark, tbl, upd, ["id"])
-    snap = W.list_parquet_snapshots(tbl)[-1]
-    assert snap["mode"] == "merge" and snap["stats_columns"] == ["id"]
-    assert set(snap["stats"]) == set(snap["files"])
-    pruned = W.read_parquet_snapshot(spark, tbl, where={"id": 50})
-    assert [(r.id, r.v) for r in pruned.collect()] == [(50, 100)]
 
     W.delete_from_snapshot(spark, tbl, "id >= 5 and id <= 49")
     snap = W.list_parquet_snapshots(tbl)[-1]
     assert snap["mode"] == "delete" and snap["stats_columns"] == ["id"]
+    assert set(snap["stats"]) == set(snap["files"])
+    pruned = W.read_parquet_snapshot(spark, tbl, where={"id": 3})
+    assert [(r.id, r.v) for r in pruned.collect()] == [(3, 6)]
 
-    res = W.restore_snapshot(spark, tbl, 1)
+    # an append after the DML inherits the recomputed stats columns
+    W.write_parquet_snapshot(
+        spark.createDataFrame([(50, 100)], schema="id long, v long").coalesce(1),
+        tbl, mode="append",
+    )
     snap = W.list_parquet_snapshots(tbl)[-1]
-    assert snap["mode"] == "restore"
-    assert snap["stats_columns"] == ["id"] and snap["stats"] == v1_stats
-    assert _ids(W.read_parquet_snapshot(spark, tbl, where={"id": (8, 9)})) \
-        == [8, 9]
+    assert snap["stats_columns"] == ["id"]
+    assert set(snap["stats"]) == set(snap["files"])
+    pruned = W.read_parquet_snapshot(spark, tbl, where={"id": 50})
+    assert [(r.id, r.v) for r in pruned.collect()] == [(50, 100)]
+    assert _ids(W.read_parquet_snapshot(spark, tbl, where={"id": (3, 50)})) \
+        == [3, 4, 50]
 
 
 def test_streaming_sink_stats_and_clustered_compaction(spark, tmp_path):
@@ -431,8 +364,27 @@ def test_streaming_sink_stats_and_clustered_compaction(spark, tmp_path):
     assert _ids(W.read_parquet_snapshot(spark, tbl)) == list(range(10))
 
 
+def _shallow_clone(src: str, dst: str) -> None:
+    """Publish at ``dst`` the v1 manifest a shallow clone of ``src``
+    has on disk: the source's latest file list, schema, evolved flag and
+    stats under mode ``clone``. Such tables may still be on disk, so
+    reads, the change feed, compaction and vacuum keep handling them."""
+    m = W._latest_manifest(src)
+    payload = {
+        k: m[k]
+        for k in ("files", "rows", "schema", "evolved", "stats_columns", "stats")
+        if k in m
+    }
+    payload.update(
+        version=1, mode="clone", published_utc=time.time(),
+        cloned_from={"path": W._local_path(src), "version": m["version"]},
+    )
+    os.makedirs(os.path.join(dst, "_snapshots"))
+    assert W._link_manifest(dst, 1, payload)
+
+
 def test_shallow_clone(spark, tmp_path):
-    """Zero-copy table fork: the clone reads the pinned source state
+    """A zero-copy table fork on disk: the clone reads the source state
     (stats included), diverges independently into its OWN data root,
     and neither table's vacuum can delete the other's bytes."""
     src = str(tmp_path / "src")
@@ -440,23 +392,11 @@ def test_shallow_clone(spark, tmp_path):
     W.write_parquet_snapshot(_df(spark, 0, 10), src, stats_columns=["id"])
     W.write_parquet_snapshot(_df(spark, 10, 20), src, mode="append")
 
-    res = W.clone_snapshot(spark, src, dst)
-    assert res == {
-        "version": 1,
-        "cloned_from": {"path": src, "version": 2},
-        "rows": 20,
-        "files": 2,
-    }
+    _shallow_clone(src, dst)
     assert _ids(W.read_parquet_snapshot(spark, dst)) == list(range(20))
     # stats came along: the pruned read plans one file
     pruned = W.read_parquet_snapshot(spark, dst, where={"id": (2, 5)})
     assert len(pruned.inputFiles()) == 1 and _ids(pruned) == [2, 3, 4, 5]
-    # version-pinned clone
-    dstv1 = str(tmp_path / "dstv1")
-    W.clone_snapshot(spark, src, dstv1, version=1)
-    assert _ids(W.read_parquet_snapshot(spark, dstv1)) == list(range(10))
-    with pytest.raises(ValueError, match="already a snapshot table"):
-        W.clone_snapshot(spark, src, dst)
 
     # divergence: the clone's append lands in ITS data root and never
     # perturbs the source
@@ -490,34 +430,18 @@ def test_clone_of_evolved_table_feeds_real_values(spark, tmp_path):
     W.write_parquet_snapshot(
         wide, src, mode="append", allow_schema_evolution=True
     )
-    W.clone_snapshot(spark, src, dst)
+    _shallow_clone(src, dst)
     rows = {r.id: r.w for r in W.snapshot_changes(spark, dst, 0).collect()}
     assert rows == {0: None, 1: None, 2: None, 3: 30, 4: 40, 5: 50}
 
 
-def test_vacuum_ownership_guard_normalizes_spelling(spark, tmp_path):
-    """Review r13: the ownership guard compares ABSOLUTE normalized
-    paths — a vacuum invoked with a differently-SPELLED path to the
-    same table (./ segments, redundant separators) must still reclaim
-    the table's own dropped files, not silently skip them as foreign.
-    (Relative paths are resolved against the calling process's cwd —
-    pass the same spelling writes used, preferably absolute.)"""
-    tbl = str(tmp_path / "tbl")
-    W.write_parquet_snapshot(_df(spark, 0, 5), tbl)
-    W.write_parquet_snapshot(_df(spark, 5, 8), tbl)  # v2 overwrite
-    spelled = str(tmp_path) + "/./tbl"
-    out = W.vacuum_parquet_snapshots(spelled, keep=1, orphan_grace_sec=0)
-    assert out["dropped_versions"] == [1]
-    assert out["removed_files"] == 1
-
-
 def test_clone_materialization_survives_source_vacuum(spark, tmp_path):
-    """compact_parquet_snapshot(dst) rewrites the clone into its own
-    data root — after that the source can vacuum freely."""
+    """compact_parquet_snapshot(dst, force=True) rewrites a clone into
+    its own data root — after that the source can vacuum freely."""
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
     W.write_parquet_snapshot(_df(spark, 0, 8), src)
-    W.clone_snapshot(spark, src, dst)
+    _shallow_clone(src, dst)
     # the feed/stream v1-initial-content rule covers mode 'clone'
     rows = W.snapshot_changes(spark, dst, 0).collect()
     assert sorted(r.id for r in rows if r._commit_version == 1) == list(
@@ -534,6 +458,22 @@ def test_clone_materialization_survives_source_vacuum(spark, tmp_path):
     W.write_parquet_snapshot(_df(spark, 50, 52), src)
     W.vacuum_parquet_snapshots(src, keep=1, orphan_grace_sec=0)
     assert _ids(W.read_parquet_snapshot(spark, dst)) == list(range(8))
+
+
+def test_vacuum_ownership_guard_normalizes_spelling(spark, tmp_path):
+    """Review r13: the ownership guard compares ABSOLUTE normalized
+    paths — a vacuum invoked with a differently-SPELLED path to the
+    same table (./ segments, redundant separators) must still reclaim
+    the table's own dropped files, not silently skip them as foreign.
+    (Relative paths are resolved against the calling process's cwd —
+    pass the same spelling writes used, preferably absolute.)"""
+    tbl = str(tmp_path / "tbl")
+    W.write_parquet_snapshot(_df(spark, 0, 5), tbl)
+    W.write_parquet_snapshot(_df(spark, 5, 8), tbl)  # v2 overwrite
+    spelled = str(tmp_path) + "/./tbl"
+    out = W.vacuum_parquet_snapshots(spelled, keep=1, orphan_grace_sec=0)
+    assert out["dropped_versions"] == [1]
+    assert out["removed_files"] == 1
 
 
 # --------------------------------------------------------------------------
@@ -590,10 +530,11 @@ def test_change_feed_append_fast_path(spark, tmp_path):
 def test_change_feed_rewrites_and_compact(spark, tmp_path):
     tbl = str(tmp_path / "tbl")
     W.write_parquet_snapshot(_df(spark, 0, 5), tbl)  # v1: ids 0-4
-    upd = spark.createDataFrame(
-        [(1, 999), (10, 20)], schema="id long, v long"
+    rewritten = spark.createDataFrame(
+        [(0, 0), (1, 999), (2, 4), (3, 6), (4, 8), (10, 20)],
+        schema="id long, v long",
     )
-    W.merge_upsert_snapshot(spark, tbl, upd, ["id"])  # v2
+    W.write_parquet_snapshot(rewritten, tbl)  # v2: overwrite
     W.compact_parquet_snapshot(spark, tbl, target_files=1)  # v3
     W.delete_from_snapshot(spark, tbl, "id % 2 = 0")  # v4: drops 0,2,4,10
 
@@ -627,7 +568,7 @@ def test_change_feed_restore_and_evolution(spark, tmp_path):
     W.write_parquet_snapshot(
         wide, tbl, mode="append", allow_schema_evolution=True
     )  # v2 (evolved)
-    W.restore_snapshot(spark, tbl, 1)  # v3: roll back the append
+    W.delete_from_snapshot(spark, tbl, "id >= 3")  # v3: drop the append
 
     feed = _changes(spark, tbl, 1)
     assert feed.columns == ["id", "v", "w", "_change_type", "_commit_version"]
@@ -639,7 +580,8 @@ def test_change_feed_restore_and_evolution(spark, tmp_path):
     v3 = sorted(
         (r._change_type, r.id, r.w) for r in rows if r._commit_version == 3
     )
-    # the restore deletes exactly what the append inserted
+    # the delete removes exactly what the append inserted; the narrow
+    # rows it rewrites with a null w are not changes
     assert v3 == [("delete", 3, 30), ("delete", 4, 40), ("delete", 5, 50)]
 
 
@@ -793,24 +735,6 @@ def test_clustered_compact_validates_on_preschema_manifest(spark, tmp_path):
     )
     assert res["compacted"] and res["files_after"] == 2
     assert _ids(W.read_parquet_snapshot(spark, tbl)) == list(range(6))
-
-
-def test_clone_verifies_driver_side_and_catches_vacuum_race(spark, tmp_path):
-    """ADVICE r13: clone verification is per-file FOOTER row counts —
-    O(files) metadata reads, no Spark job (spark=None proves no session
-    is touched) — and still refuses a source vacuumed mid-clone."""
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    W.write_parquet_snapshot(_df(spark, 0, 5), src)
-    res = W.clone_snapshot(None, src, dst)
-    assert res["rows"] == 5 and res["version"] == 1
-    assert _ids(W.read_parquet_snapshot(spark, dst)) == list(range(5))
-    # vacuum race: a referenced file disappears between manifest load
-    # and publish — the footer check refuses before linking
-    v1 = W._load_manifest(src, 1)
-    os.remove(v1["files"][0].removeprefix("file:"))
-    with pytest.raises(RuntimeError, match="vacuumed mid-clone"):
-        W.clone_snapshot(None, src, str(tmp_path / "dst2"))
-    assert W._manifest_versions(str(tmp_path / "dst2")) == []
 
 
 def test_pruning_refuses_date_vs_datetime_shape_mix():

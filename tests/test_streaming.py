@@ -459,53 +459,6 @@ def test_ingest_batch_replay_is_idempotent(spark, tmp_path):
     assert final == [(10, 0), (11, 0), (21, 1)]
 
 
-def test_synthetic_docs_stream_equals_batch(spark, tmp_path):
-    """The streaming side of the custom Python Data Source: an
-    availableNow drain over format('synthetic_docs') must produce the
-    EXACT corpus the batch reader yields for the same options (shared
-    deterministic row generator), across multiple micro-batches
-    (batch_size < n forces several offsets)."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.pysource import (
-        register_synthetic_docs,
-    )
-
-    register_synthetic_docs(spark)
-    opts = {"n": "250", "seed": "11", "dup_every": "10", "batch_size": "64"}
-
-    out = str(tmp_path / "streamed")
-    ckpt = str(tmp_path / "ckpt")
-    reader = spark.readStream.format("synthetic_docs")
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    # a generator source has no "end of available data" marker, so
-    # availableNow drains only the batch in flight; run continuous
-    # micro-batches and stop once the bounded stream (n=250) is out
-    q = (
-        reader.load()
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    import time as _t
-
-    deadline = _t.time() + 120
-    while _t.time() < deadline:
-        try:
-            if spark.read.parquet(out).count() >= 250:
-                break
-        except Exception:
-            pass  # sink dir not created yet
-        _t.sleep(0.5)
-    q.stop()
-
-    batch = spark.read.format("synthetic_docs").options(**opts).load()
-    got = sorted(map(tuple, spark.read.parquet(out).collect()))
-    want = sorted(map(tuple, batch.collect()))
-    assert got == want and len(got) == 250
-
-
 def test_funnel_state_matches_batch_on_ordered_stream(spark, tmp_path):
     """The stateful streaming funnel: over a ts-ordered multi-file drain
     (arrival order == event-time order, so the first-arriving eligible
@@ -570,65 +523,6 @@ def test_funnel_state_matches_batch_on_ordered_stream(spark, tmp_path):
     # users with no view at all hold (None, None, None) state rows
     got_viewers = {u: s for u, s in final.items() if s[0] is not None}
     assert got_viewers == want and len(want) > 0
-
-
-def test_streaming_cdc_merge_upsert(spark, tmp_path):
-    """CDC-apply composition: a change stream drained through
-    foreachBatch + merge_upsert_parquet must leave the target at
-    last-writer-wins per key — updates replace, inserts add, untouched
-    keys survive — across multiple micro-batches (one file per batch,
-    modification-time order)."""
-    import os
-    import time as _time
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        merge_upsert_parquet,
-    )
-
-    target = str(tmp_path / "dim")
-    spark.createDataFrame(
-        [(1, "a", 1), (2, "b", 1), (3, "c", 1)],
-        "id: long, v: string, gen: long",
-    ).write.parquet(target)
-
-    src = str(tmp_path / "changes")
-    os.makedirs(src)
-    batches = [
-        [(2, "b2", 2), (4, "d", 2)],          # update 2, insert 4
-        [(2, "b3", 3), (1, "a3", 3), (5, "e", 3)],  # update 2 again + 1, insert 5
-    ]
-    for rows in batches:
-        spark.createDataFrame(
-            rows, "id: long, v: string, gen: long"
-        ).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(0.2)
-
-    stream = (
-        spark.readStream.schema("id long, v string, gen long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    def apply_batch(batch_df, batch_id):
-        # a real CDC feed can carry several changes per key in one
-        # batch; keep-latest resolves them before the key-unique merge
-        latest = batch_df.groupBy("id").agg(
-            F.max(F.struct("gen", "v")).alias("s")
-        ).select("id", "s.v", "s.gen")
-        merge_upsert_parquet(batch_df.sparkSession, target, latest, ["id"])
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream drain timed out"
-
-    got = {r.id: (r.v, r.gen) for r in spark.read.parquet(target).collect()}
-    assert got == {
-        1: ("a3", 3), 2: ("b3", 3), 3: ("c", 1), 4: ("d", 2), 5: ("e", 3)
-    }
 
 
 def test_watermark_drops_late_data_accounted(spark, tmp_path):
