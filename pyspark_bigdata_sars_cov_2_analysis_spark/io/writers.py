@@ -117,87 +117,21 @@ def _zorder_column(df: DataFrame, cols: list[str], bits: int = 12):
     return zorder_value(scaled, bits=bits)
 
 
-def _swap_in(path: str, tmp: str, backup_suffix: str) -> None:
-    """The driver-side directory swap the dedup checkpoint rewrite
-    (``llmdata/dedup.py``) commits through, with the crash window between
-    the two renames made RECOVERABLE (ADVICE r7): a sidecar marker
-    (``<path>.swap-in-progress``) records the three directories before
-    the first rename and is removed after the table is back in place —
-    so a crash mid-swap leaves a machine-readable recovery plan instead
-    of a silently missing table. Run :func:`recover_staged_swap` at
-    startup (or by hand) to roll forward/back. The swap itself remains
-    non-atomic for CONCURRENT readers — the documented gap a
-    transactional format's metadata pointer closes."""
-    import json as _json
-    import os as _os
-    import shutil
-
-    backup = path.rstrip("/") + backup_suffix
-    marker = path.rstrip("/") + ".swap-in-progress"
-    shutil.rmtree(backup, ignore_errors=True)
-    with open(marker, "w") as f:
-        _json.dump({"path": path, "staged": tmp, "backup": backup}, f)
-    shutil.move(path, backup)
-    shutil.move(tmp, path)
-    _os.remove(marker)
-    shutil.rmtree(backup)
-
-
-def recover_staged_swap(path: str) -> dict:
-    """Recovery for a crash inside :func:`_swap_in`'s rename window.
-    Reads ``<path>.swap-in-progress`` and rolls FORWARD if the staged
-    (verified) output exists — finishing the interrupted swap — else
-    rolls BACK to the backup; idempotent and a no-op when no marker is
-    present or the table is already in place. Returns what it did."""
-    import json as _json
-    import os as _os
-    import shutil
-
-    marker = path.rstrip("/") + ".swap-in-progress"
-    if not _os.path.exists(marker):
-        return {"action": "none", "reason": "no marker"}
-    with open(marker) as f:
-        plan = _json.load(f)
-    staged, backup = plan["staged"], plan["backup"]
-    if _os.path.exists(path):
-        # crash fell after the second rename: just finish the cleanup
-        action = "cleanup"
-    elif _os.path.exists(staged):
-        # staged output was count-verified before the swap began — the
-        # crash fell between the renames; complete it (roll forward)
-        shutil.move(staged, path)
-        action = "rolled_forward"
-    elif _os.path.exists(backup):
-        shutil.move(backup, path)
-        action = "rolled_back"
-    else:
-        raise RuntimeError(
-            f"unrecoverable swap state for {path}: marker present but "
-            f"neither table, staged ({staged}) nor backup ({backup}) exists"
-        )
-    _os.remove(marker)
-    shutil.rmtree(backup, ignore_errors=True)
-    return {"action": action}
-
-
 def _refuse_snapshot_table(path: str, op: str) -> None:
-    """Staged-swap maintenance must never touch a snapshot-versioned
-    table's directory (VERDICT r10 residual #3): the swap rewrites/
-    renames data dirs that published manifests reference by exact file
-    path, silently breaking every version's read isolation and time
-    travel. Snapshot tables have their own manifest-aware ops
-    (:func:`compact_parquet_snapshot`, :func:`vacuum_parquet_snapshots`).
-    r12 extends the guard to every generic overwrite-capable sink in
-    this module: ``df.write.mode('overwrite')`` pointed at a snapshot
-    table's ROOT would delete the ``_snapshots/`` manifests and every
-    data dir wholesale — the one mistake the manifest protocol cannot
-    survive. ADVICE r12 closes the SUBPATH hole: a sink pointed INSIDE
-    a snapshot table (``tbl/data``, ``tbl/data/v00000001-xxxx``) wipes
-    data dirs that published manifests reference while the manifests
-    survive — every version's read breaks. Everything under a snapshot
-    root belongs to the manifest protocol, so the check walks every
-    ancestor directory (a handful of isdir stats, bounded by path
-    depth). Use :func:`write_parquet_snapshot` on these tables."""
+    """The generic sinks in this module must never write into a
+    snapshot-versioned table (the snapshot tables below, and the dedup
+    checkpoints of ``llmdata/dedup.py``, which commit the same way).
+    ``df.write.mode('overwrite')`` pointed at such a table's ROOT would
+    delete the ``_snapshots/`` manifests and every data dir wholesale —
+    the one mistake the manifest protocol cannot survive. Pointed INSIDE
+    the table (``tbl/data``, ``tbl/data/v00000001-xxxx``) it wipes data
+    dirs that published manifests reference while the manifests
+    survive, and every version's read breaks. Everything under a
+    snapshot root belongs to the manifest protocol, so the check walks
+    every ancestor directory (a handful of isdir stats, bounded by path
+    depth). Use :func:`write_parquet_snapshot`,
+    :func:`compact_parquet_snapshot` and :func:`vacuum_parquet_snapshots`
+    on these tables."""
     import os as _os
 
     probe = _os.path.abspath(_local_path(path))
@@ -216,16 +150,16 @@ def _refuse_snapshot_table(path: str, op: str) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Snapshot-versioned parquet tables (r10): MVCC manifests over plain parquet.
-# A staged directory SWAP (:func:`_swap_in`) is not atomic for CONCURRENT
-# readers (a reader listing the directory mid-rename sees a missing table).
-# These functions close that gap the way transactional table formats do,
-# minus the lock service: data files are
-# immutable and write-once under data/v<N>-<uuid>/, a tiny JSON manifest
-# names the exact file set of each version, and publishing is one O_EXCL
-# create — readers resolve a manifest FIRST and then read only the files it
-# names, so they can never observe a half-published version, and old
-# versions stay readable (time travel) until vacuumed.
+# Snapshot-versioned parquet tables (r10): MVCC manifests over plain parquet,
+# the one commit protocol for persisted state (the dedup checkpoints of
+# llmdata/dedup.py publish through the same primitives). Data files are
+# immutable and write-once under a fresh data/ directory per publish, a tiny
+# JSON manifest names the exact file set of each version, and publishing is
+# one first-writer-wins create (io/fs.py put_if_absent) — readers resolve a
+# manifest FIRST and then read only the files it names, so they can never
+# observe a half-published version, a writer that crashes before its
+# publish leaves only files no reader sees, and old versions stay readable
+# (time travel) until vacuumed.
 # ---------------------------------------------------------------------------
 
 _SNAP_DIR = "_snapshots"
@@ -396,6 +330,38 @@ def _footer_row_count(files: list[str]) -> int:
                 f"unreadable parquet footer for freshly-written {f}: {exc}"
             ) from exc
     return total
+
+
+def _nonempty_files(
+    files: list[str], keep_one: bool = True
+) -> tuple[list[str], int]:
+    """The freshly-written ``files`` a manifest should name, and their
+    row count from the footers. Spark writes a zero-row part file for an
+    empty first input partition; named in a manifest, every read would
+    open it and no ``where=`` read could prune it (it has no stats), so
+    zero-row files are removed through the filesystem seam — all but
+    one with ``keep_one``, so an empty version keeps a schema file."""
+    counts = [_footer_row_count([f]) for f in files]
+    keep = [f for f, n in zip(files, counts) if n]
+    if not keep and keep_one:
+        keep = files[:1]
+    for f in set(files) - set(keep):
+        _fs.for_path(f).remove(_local_path(f))
+    return keep, sum(counts)
+
+
+def _parquet_files(root: str) -> list[str]:
+    """Every ``.parquet`` file under ``root`` at any depth, sorted —
+    listed driver-side through the filesystem seam, no Spark job."""
+    fs = _fs.for_path(root)
+    out = []
+    for n in fs.list_names(root):
+        p = fs.join(root, n)
+        if fs.is_dir(p):
+            out += _parquet_files(p)
+        elif n.endswith(".parquet"):
+            out.append(p)
+    return sorted(out)
 
 
 def _collect_file_stats(
@@ -620,8 +586,7 @@ def write_parquet_snapshot(
     the NEW latest manifest so the lost race cannot drop the winner's
     rows). Readers (:func:`read_parquet_snapshot`) never list the data
     directory — they read exactly the manifest's file list, so a
-    half-written version is unobservable by construction. This is the
-    concurrent-reader-safe upgrade of the staged swap (:func:`_swap_in`).
+    half-written version is unobservable by construction.
 
     ``src_batch`` stamps the manifest with the PUBLISHING micro-batch's
     id — :func:`streaming_snapshot_sink` uses it to make a replayed
@@ -679,8 +644,7 @@ def write_parquet_snapshot(
     # written schema; the row count comes from the footers (no second
     # scan of the just-written data — see _footer_row_count)
     written = spark.read.parquet(data_dir)
-    new_files = sorted(written.inputFiles())
-    n_new = _footer_row_count(new_files)
+    new_files, n_new = _nonempty_files(sorted(written.inputFiles()))
     # the schema the files actually carry (post-write, what readers see)
     new_schema = [list(p) for p in written.dtypes]
     # legacy-schema derivation cache (ADVICE r11): pre-manifest-schema
@@ -1113,34 +1077,36 @@ def vacuum_parquet_snapshots(
             if local not in keep_files and fs.exists(local):
                 fs.remove(local)
                 removed_files.append(f)
-    # orphan data dirs: referenced by NO manifest (crashed pre-publish
-    # writers); also prune now-empty version dirs. abspath BOTH sides
-    # of the membership test exactly like the ownership compare above
-    # (review r14): manifests record absolute file: paths, so a vacuum
-    # invoked with a RELATIVE table path would otherwise see every LIVE
-    # data dir — the kept latest's included — as "referenced by no
-    # manifest" and rmtree the whole table once past the grace window
+    # each top-level dir under data/ (a partitioned version's files sit
+    # deeper, data/v=…/band=…/) is LIVE while a kept manifest names a file
+    # under it, DEAD when only dropped manifests do (their files went
+    # above), and an ORPHAN of a crashed pre-publish writer when none
+    # does; abspath both sides, like the ownership compare (review r14)
     data_root = fs.join(base, "data")
-    referenced_dirs = {
-        fs.absolute(_local_path(f).rsplit("/", 1)[0])
-        for s in snaps
-        for f in s["files"]
-    }
+
+    def _top_dirs(manifests) -> set:
+        tops = set()
+        for s in manifests:
+            for f in s["files"]:
+                p = fs.absolute(_local_path(f))
+                if p.startswith(own_root) and "/" in p[len(own_root):]:
+                    tops.add(own_root + p[len(own_root):].split("/", 1)[0])
+        return tops
+
+    live_dirs, referenced_dirs = _top_dirs(kept), _top_dirs(snaps)
     removed_orphans = []
     now = _time.time()
     if fs.is_dir(data_root):
         for d in sorted(fs.list_names(data_root)):
             full = fs.absolute(fs.join(data_root, d))
-            if full not in referenced_dirs:
-                if now - fs.mtime(full) < orphan_grace_sec:
-                    continue  # possibly an in-flight writer's data
-                fs.remove_tree(full)
-                removed_orphans.append(d)
-            elif not any(
-                n.endswith(".parquet") for n in fs.list_names(full)
+            if full in live_dirs:
+                continue
+            if full not in referenced_dirs and (
+                now - fs.mtime(full) < orphan_grace_sec
             ):
-                fs.remove_tree(full)
-                removed_orphans.append(d)
+                continue  # possibly an in-flight writer's data
+            fs.remove_tree(full)
+            removed_orphans.append(d)
     return {
         "dropped_versions": [s["version"] for s in dropped],
         "removed_files": len(removed_files),
@@ -1365,15 +1331,13 @@ def compact_parquet_snapshot(
 ) -> dict:
     """Rewrite the LATEST snapshot version's file set as ``target_files``
     files and publish the result as a NEW version — the small-files
-    maintenance op for MVCC tables (VERDICT r10 #3: a staged-swap
-    rewrite would break snapshot isolation if pointed at a
-    snapshot table's data dir; a streaming sink appending one tiny file
-    set per micro-batch accumulates exactly like the checkpoint buckets
-    d22 closed). Zero semantic change: the new manifest names the
-    compacted files, every OLD version keeps its own manifest and files
-    untouched (still time-travelable until vacuumed), and readers are
-    isolated throughout because the manifest IS the atomicity — no
-    staged swap, no window where the table is missing.
+    maintenance op for MVCC tables (a streaming sink appending one tiny
+    file set per micro-batch accumulates exactly like the checkpoint
+    buckets d22 compacts). Zero semantic change: the new manifest names
+    the compacted files, every OLD version keeps its own manifest and
+    files untouched (still time-travelable until vacuumed), and readers
+    are isolated throughout because the manifest IS the atomicity — no
+    window where the table is missing.
 
     Race protocol (the write_parquet_snapshot pattern): the compacted
     data is written to a fresh immutable dir, count-verified against
@@ -1511,8 +1475,7 @@ def compact_parquet_snapshot(
             rewritten = reader.repartition(target_files)
         rewritten.write.mode("error").parquet(data_dir)
         compacted = spark.read.parquet(data_dir)
-        new_files = sorted(compacted.inputFiles())
-        rows = _footer_row_count(new_files)
+        new_files, rows = _nonempty_files(sorted(compacted.inputFiles()))
         if rows != src["rows"]:
             fs.remove_tree(data_dir)
             raise RuntimeError(
@@ -1616,8 +1579,7 @@ def _rmw_publish_snapshot(
         )
         result_df.write.mode("error").parquet(data_dir)
         written = spark.read.parquet(data_dir)
-        new_files = sorted(written.inputFiles())
-        rows = _footer_row_count(new_files)
+        new_files, rows = _nonempty_files(sorted(written.inputFiles()))
         if rows != expected_rows:
             fs.remove_tree(data_dir)
             raise RuntimeError(

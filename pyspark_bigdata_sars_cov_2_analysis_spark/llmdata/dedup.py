@@ -26,8 +26,8 @@ reproducible in any engine (this is what the DuckDB oracles rely on).
 
 from __future__ import annotations
 
-import os
-import shutil
+import time
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -167,8 +167,8 @@ def minhash_signatures(
 # Persisted band_sig encoding version (optimization r16, VERDICT r15 #8):
 # 'bin32-v2' = each min-hash (u32 by the in-repo hash family) as its
 # 4-byte big-endian image, concatenated (fixed-width ⇒ injective). Pre-r16 checkpoints
-# ('csv-v1', comma-joined decimals — stamped implicitly when the sidecar
-# lacks the field) are refused with a re-seed instruction by
+# ('csv-v1', comma-joined decimals — implicit when the recorded params
+# lack the field) are refused with a re-seed instruction by
 # _CheckpointKind.validate: signatures from the two encodings can never
 # band-match, in either direction.
 _SIG_ENCODING = "bin32-v2"
@@ -207,7 +207,7 @@ def lsh_bands(
     candidate pairs at scale, a silent semantics change no test scale
     would catch. Sig comparisons only ever happen within one band, so
     the remainder band's narrower width is immaterial. Persisted
-    checkpoints record the encoding in their parameter sidecar
+    checkpoints record the encoding in their manifest ``params``
     (``sig_encoding``) and refuse a mismatched reuse — see
     write_band_checkpoint."""
     n_bands = num_hashes // band_rows
@@ -300,29 +300,33 @@ def minhash_lsh_pairs(
     return lsh_candidate_pairs(banded, id_col)
 
 
-def _hwm_dir(path: str) -> str:
-    """Directory holding the checkpoint's committed-batch markers
-    (underscore-prefixed: hidden from parquet partition discovery, like
-    the parameter sidecars). Resolved through the filesystem seam
-    (``io/fs.py``, VERDICT r14 #2) so marker I/O follows the table onto
-    whatever store the checkpoint lives on."""
-    f = _fs.for_path(path)
-    return f.join(f.resolve(path), "_ingest_hwm")
+_LEGACY = ("_band_params", "_chunk_params", "_ingest_hwm")
+
+
+def _latest_checkpoint(path: str) -> dict | None:
+    """The checkpoint's newest manifest (None = nothing published yet).
+    A checkpoint in the pre-manifest format — parameter sidecar and
+    commit-marker files, no ``_snapshots/`` — is refused with the fix."""
+    snap = _writers._latest_manifest(path)
+    if snap is None:
+        f = _fs.for_path(path)
+        old = [n for n in _LEGACY if f.exists(f.join(f.resolve(path), n))]
+        if old:
+            raise ValueError(
+                f"checkpoint at {path} is in the pre-manifest format "
+                f"({', '.join(old)}, no {_writers._SNAP_DIR}/): re-seed it "
+                "from the corpus with mode='overwrite' "
+                "(write_band_checkpoint / write_chunk_checkpoint)"
+            )
+    return snap
 
 
 def ingest_high_water_mark(path: str) -> int:
     """Highest batch id ever COMMITTED into the checkpoint at ``path``
-    (-1 = none yet / pre-hwm checkpoint). Read from append-only O_EXCL
-    marker files — one tiny file per committed batch, created through
-    the filesystem seam's first-writer-wins ``put_if_absent``
-    (:func:`_mark_batch_committed`). Listing cost is one readdir over
-    filenames; there is no torn-delete window because nothing is ever
-    rewritten."""
-    names = _fs.for_path(path).list_names(_hwm_dir(path))
-    if not names:
-        return -1
-    ids = [int(n[1:]) for n in names if n.startswith("b") and n[1:].isdigit()]
-    return max(ids, default=-1)
+    (-1 = none yet): the newest manifest's ``src_batch`` — one readdir
+    and one JSON read."""
+    snap = _latest_checkpoint(path)
+    return -1 if snap is None else int(snap["src_batch"])
 
 
 def _batch_fingerprint(batch_df: DataFrame, id_col: str, text_col: str) -> str:
@@ -337,9 +341,9 @@ def _batch_fingerprint(batch_df: DataFrame, id_col: str, text_col: str) -> str:
     different documents. The per-row hash is bounded below 2^30 so the
     sum stays far from bigint overflow (ANSI would throw) at any
     plausible batch size. Format note: changing this fingerprint's
-    definition invalidates ``== hwm`` replay verification across the
-    code-version boundary — upgrade at a clean boundary (no crashed
-    in-flight batch), the stamp-migration rule."""
+    definition makes every ``== hwm`` replay across the code-version
+    boundary look like a different batch — upgrade at a clean boundary
+    (no crashed in-flight batch)."""
     row = batch_df.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
@@ -352,71 +356,22 @@ def _batch_fingerprint(batch_df: DataFrame, id_col: str, text_col: str) -> str:
     return f"{int(row['n'])}:{int(row['h'] or 0)}"
 
 
-def _mark_batch_committed(
-    path: str, batch_id: int, fingerprint: str = ""
-) -> None:
-    """Record ``batch_id`` as committed into the checkpoint at ``path``.
-    Idempotent (a replay's duplicate marker is a no-op via EEXIST, and a
-    legitimate replay carries the identical fingerprint anyway); written
-    only AFTER the batch's output and state appends both succeeded, so a
-    crash mid-batch leaves the mark absent and the replay passes the
-    high-water-mark guard as ``batch_id == hwm + 1`` (or ``== hwm`` when
-    the marker landed but the stream checkpoint commit did not —
-    at-least-once replay, which the stamp-scoped exclusion makes
-    idempotent). The marker FILE CONTENT is the committed batch's id-set
-    fingerprint, published through the filesystem seam's
-    first-writer-wins ``put_if_absent`` (``io/fs.py``): the FIRST
-    publisher genuinely wins and a later racer's content is discarded
-    WHOLE — never interleaved, never overwritten (the ADVICE r9
-    takeover hazard and the review-r10 os.rename last-wins hazard are
-    both closed by that contract; on LocalFS it is a uniquely-named
-    stage + ``os.link``, on an object store a conditional PUT). A crash
-    can leave a stale unique ``.tmp``, never a truncated marker, so an
-    existing marker's content is trustworthy (empty = legacy
-    pre-fingerprint marker, which the guard treats as unverifiable and
-    allows); stale tmps from killed processes are ignored by the hwm
-    reader and dropped by checkpoint compaction's marker copy.
-    Concurrency contract: markers assume at most one LOGICAL writer per
-    state path (the streaming engine serializes micro-batches); the
-    claim protocol only makes a rogue second process fail-safe."""
-    f = _fs.for_path(path)
-    final = f.join(_hwm_dir(path), f"b{int(batch_id)}")
-    if f.exists(final):
-        return  # a replay's duplicate marker is a no-op
-    f.put_if_absent(final, fingerprint)
-    # False = a racer committed first: its content stands, ours drops
-
-
-def _committed_fingerprint(path: str, batch_id: int) -> str | None:
-    """Content of batch ``batch_id``'s commit marker (None = no marker,
-    "" = legacy empty marker)."""
-    f = _fs.for_path(path)
-    try:
-        return f.read_text(f.join(_hwm_dir(path), f"b{int(batch_id)}")).strip()
-    except FileNotFoundError:
-        return None
-
-
 def _resolve_append_batch_id(
     mode: str, batch_id: int | None, what: str
 ) -> int:
     """Resolve the checkpoint writers' ``batch_id=None`` default: -1
-    (seed) on an overwrite, REFUSED on an append (ADVICE r9) — a
-    silently seed-stamped append sits outside the ingest replay
-    exclusion, re-opening the torn-append silent-loss path the stamps
-    exist to close. An explicit ``batch_id=-1`` append remains the
-    operator's clean-boundary seed-extension assertion. An overwrite
-    is a seed, stamped -1 by definition, and any other ``batch_id`` is
-    refused: a seed writes no commit marker, so the hwm stays below
-    that id and the batch's own ingest would exclude every seed row as
-    its "torn append" — switching dedup off for that batch.
+    (seed) on an overwrite, REFUSED on an append (ADVICE r9) — every
+    append says which batch is committing, so the high-water guard can
+    refuse a colliding id; an explicit -1 asserts a clean-boundary seed
+    extension, which commits no batch. An overwrite is a seed and
+    resets the high-water mark to -1, so any other ``batch_id`` there
+    is refused: it would claim a commit the state does not hold.
 
     Only ``overwrite`` (seed) and ``append`` (ingest) are meaningful
     checkpoint modes — anything else is refused here for BOTH writers
     (review r14: ``mode='ignore'`` made the data write a no-op but
-    still re-stamped the parameter sidecar with the CALLER's values,
-    relabeling state computed under different parameters — exactly the
-    undetected zero-match hazard the sidecar exists to prevent)."""
+    still re-stamped the recorded parameters with the CALLER's values,
+    relabeling state computed under different parameters)."""
     if mode not in ("overwrite", "append"):
         raise ValueError(
             f"{what} mode must be 'overwrite' (seed) or 'append' "
@@ -426,113 +381,78 @@ def _resolve_append_batch_id(
         if mode == "append":
             raise ValueError(
                 f"appending to a {what} requires an explicit batch_id: "
-                "pass the writing batch's id (>= 0) so the ingest replay "
-                "exclusion can scope a torn append to its writer, or "
-                "batch_id=-1 to assert a clean-boundary seed extension "
-                "(no crashed in-flight batch)"
+                "pass the writing batch's id (>= 0) so the high-water "
+                "guard can refuse a colliding id, or batch_id=-1 to "
+                "assert a clean-boundary seed extension (no crashed "
+                "in-flight batch)"
             )
         return -1
     if mode == "overwrite" and int(batch_id) != -1:
         raise ValueError(
-            f"a {what} seed (mode='overwrite') is stamped src_batch=-1, "
-            f"got batch_id={batch_id}: a seed writes no commit marker, so "
-            f"batch {batch_id}'s ingest would exclude every seed row as its "
-            "own torn append. Seed without a batch_id and add a batch's "
-            "rows with mode='append'."
+            f"a {what} seed (mode='overwrite') commits no batch, got "
+            f"batch_id={batch_id}: the seed resets the high-water mark to "
+            "-1, so it cannot record a batch. Seed without a batch_id "
+            "and add a batch's rows with mode='append'."
         )
     return int(batch_id)
 
 
-def _guard_batch_id_monotonic(
-    path: str, batch_id: int, what: str, batch_df: DataFrame, id_col: str,
-    text_col: str,
-) -> str:
-    """Return ``batch_df``'s content fingerprint
-    (:func:`_batch_fingerprint`, what the batch's commit marker will
-    hold); raise when ``batch_id`` has fallen BELOW the checkpoint's
-    committed high-water mark — the batch-id-collision hazard of the
-    stamp-scoped replay exclusion (ADVICE r9). ``foreachBatch`` epoch
-    ids restart at 0 whenever the STREAMING checkpoint is deleted or
-    relocated (or a second pipeline targets the same state path), and a
-    colliding id would (a) exclude a PRIOR incarnation's legitimately
-    committed same-id state rows from the corpus side — silently
-    re-admitting their near-duplicates — and (b) clobber that
-    incarnation's same-id output partition via the dynamic overwrite.
-    ``batch_id == hwm`` is allowed ONLY as the legitimate
-    replay-after-crash of the newest batch, which the exclusion makes
-    idempotent — and since review r9 that claim is VERIFIED, not
-    assumed: commit markers carry the committed batch's id-set
-    fingerprint, and an ``== hwm`` arrival whose content fingerprint
-    differs is a restarted incarnation whose FIRST epoch collides with
-    the newest committed batch (the hwm==0 blind spot of the
-    strictly-below check) and is refused. Legacy empty markers are
-    unverifiable and stay allowed. Equal-or-higher ids never collide
-    within one incarnation because its ids are monotonic. Negative ids
-    are refused outright: -1 is the seed stamp, and excluding it would
-    drop the seed corpus from the probe."""
-    if int(batch_id) < 0:
-        raise ValueError(
-            f"batch_id must be >= 0 (got {batch_id}): -1 is reserved for "
-            "seed-corpus checkpoint rows and would exclude them"
-        )
-    fingerprint = _batch_fingerprint(batch_df, id_col, text_col)
-    hwm = ingest_high_water_mark(path)
-    if int(batch_id) < hwm:
+def _committed(snap: dict | None, batch_id: int, fingerprint: str,
+               what: str, path: str) -> bool:
+    """True when ``batch_id`` with this content fingerprint is the
+    newest committed batch of the manifest ``snap`` — a replay, nothing
+    to do. Raise when the id collides with the committed high-water
+    mark (ADVICE r9): ``foreachBatch`` ids restart at 0 under a new
+    STREAMING checkpoint (or a second pipeline on the same state path),
+    and a colliding id would clobber the prior incarnation's same-id
+    output partition. ``batch_id == hwm`` is a replay ONLY with the
+    committed content fingerprint (review r9: otherwise it is a
+    restarted incarnation whose first epoch hits the newest committed
+    id). Higher ids never collide within one incarnation."""
+    hwm = -1 if snap is None else int(snap["src_batch"])
+    if batch_id < hwm:
         raise ValueError(
             f"batch_id {batch_id} is below the {what}'s committed "
             f"high-water mark {hwm} at {path}: batch ids restarted (new "
             "streaming checkpoint over kept dedup state?) or a second "
             "pipeline shares this state path. A colliding id would "
-            "exclude the prior incarnation's committed same-id state "
-            "from the replay-exclusion filter and overwrite its output "
-            "partition. Continue numbering above the mark (keep the "
-            "original stream checkpoint), or seed a fresh state path "
-            "for a genuinely new corpus run."
+            "overwrite the prior incarnation's same-id output partition. "
+            "Continue numbering above the mark (keep the original stream "
+            "checkpoint), or seed a fresh state path for a genuinely new "
+            "corpus run."
         )
-    if int(batch_id) == hwm:
-        committed = _committed_fingerprint(path, hwm)
-        if committed and committed != fingerprint:
-            raise ValueError(
-                f"batch_id {batch_id} equals the {what}'s committed "
-                f"high-water mark at {path} but carries DIFFERENT "
-                "content than the committed batch (fingerprint "
-                f"{fingerprint} != {committed}): this is not a replay "
-                "— batch ids restarted at the newest committed id (new "
-                "streaming checkpoint over kept state, or a second "
-                "pipeline on this path). Proceeding would exclude the "
-                "committed batch's state from the replay filter and "
-                "overwrite its output partition. Continue numbering "
-                "above the mark or seed a fresh state path."
-            )
+    if batch_id == hwm and snap["fingerprint"] != fingerprint:
+        raise ValueError(
+            f"batch_id {batch_id} equals the {what}'s committed "
+            f"high-water mark at {path} but carries DIFFERENT content "
+            f"than the committed batch (fingerprint {fingerprint} != "
+            f"{snap['fingerprint']}): this is not a replay — batch ids "
+            "restarted at the newest committed id (new streaming "
+            "checkpoint over kept state, or a second pipeline on this "
+            "path). Proceeding would overwrite the committed batch's "
+            "output partition. Continue numbering above the mark or "
+            "seed a fresh state path."
+        )
+    return batch_id == hwm
+
+
+def _guard_batch_id_monotonic(
+    path: str, snap: dict | None, batch_id: int, what: str,
+    batch_df: DataFrame, id_col: str, text_col: str,
+) -> str | None:
+    """``batch_df``'s content fingerprint (:func:`_batch_fingerprint`,
+    what the batch's manifest will record), or None when the batch is
+    already the newest committed one (:func:`_committed`). Negative ids
+    are refused outright: -1 means "no batch" (a seed)."""
+    if int(batch_id) < 0:
+        raise ValueError(
+            f"batch_id must be >= 0 (got {batch_id}): -1 is reserved for "
+            "the seed corpus, which commits no batch"
+        )
+    fingerprint = _batch_fingerprint(batch_df, id_col, text_col)
+    if _committed(snap, int(batch_id), fingerprint, what, path):
+        return None
     return fingerprint
-
-
-# (sidecar-path, mtime) -> params. A checkpoint's parameter sidecar is
-# IMMUTABLE once written (appends skip the rewrite by documented
-# contract; only a full re-seed replaces the sidecar directory, which
-# changes its mtime and invalidates the entry), so the per-micro-batch
-# sidecar read in the ingest loops — one Spark job each, ~0.3 s of pure
-# fixed cost at local[32] — can be answered from the driver after the
-# first read (optimization r15, guide §5 "no driver round-trips in hot
-# loops"). This memoizes CONFIG METADATA of a state path, never query
-# results: every bench/oracle invocation builds its checkpoints in a
-# fresh mkdtemp dir, so nothing carries across runs.
-_PARAMS_MEMO: dict[str, tuple[float, dict]] = {}
-
-
-def _memoized_sidecar(spark, sidecar: str, loader):
-    try:
-        mt = _fs.for_path(sidecar).mtime(sidecar)
-    except Exception:
-        mt = None
-    if mt is not None:
-        hit = _PARAMS_MEMO.get(sidecar)
-        if hit is not None and hit[0] == mt:
-            return dict(hit[1])
-    params = loader()
-    if mt is not None:
-        _PARAMS_MEMO[sidecar] = (mt, dict(params))
-    return params
 
 
 def _lh_bucket(col: Column, n_buckets: int) -> Column:
@@ -543,22 +463,6 @@ def _lh_bucket(col: Column, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(col), F.lit(int(n_buckets)))
 
 
-def _has_data(spark, path: str) -> bool:
-    try:
-        return bool(spark.read.parquet(path).columns)
-    except Exception:
-        return False
-
-
-def _src_batch(df: DataFrame) -> Column:
-    """The rows' ``src_batch`` stamp; rows written before stamps
-    existed (a missing column, or NULL under mergeSchema) read as seed
-    rows (-1)."""
-    if "src_batch" not in df.columns:
-        return F.lit(-1)
-    return F.coalesce(F.col("src_batch").cast("int"), F.lit(-1))
-
-
 @dataclass(frozen=True)
 class _CheckpointKind:
     """One kind of incremental-dedup checkpoint: LSH band state
@@ -566,36 +470,39 @@ class _CheckpointKind:
     (``_CHUNKS``, d14/d19). The fields hold everything the kinds differ
     in; the methods are the one implementation both run.
 
-    On disk a checkpoint at ``path`` is:
+    On disk a checkpoint at ``path`` is a manifest-committed table, the
+    snapshot layer's protocol (``io/writers.py``):
 
-    - parquet state rows, each stamped ``src_batch`` with the id of the
-      micro-batch that wrote it (-1 = seed corpus, outside any batch);
-    - Hive partitions ``lead + (bucket,)`` with ``bucket =
-      pmod(xxhash64(key), grid)``; grid 0 is the flat layout,
-      partitioned by ``lead`` only;
-    - the parameter sidecar ``_<name>_params``: one row of the caller
-      parameters the state was computed under, the grid, and the key
-      encoding where the kind has one. State computed under other
-      parameters can never match, so a mismatched reuse would dedupe
-      every batch against nothing;
-    - the committed-batch markers ``_ingest_hwm/b<N>``
-      (:func:`_mark_batch_committed`).
+    - ``_snapshots/v<N>.json``, version N's manifest, claimed once with
+      the filesystem seam's ``put_if_absent``. Besides the snapshot
+      fields (``files``, ``rows``, ``mode``, ``schema``) it records
+      ``params`` (the caller parameters the state was computed under,
+      the grid and the key encoding where the kind has one: state
+      computed under other parameters can never match), ``src_batch``
+      (the newest committed batch id, -1 = none) and ``fingerprint``
+      (that batch's content fingerprint);
+    - ``data/v=<N>-<uuid8>/``, one fresh directory per publish, Hive
+      partitioned ``lead + (bucket,)`` with ``bucket =
+      pmod(xxhash64(key), grid)`` (grid 0: ``lead`` only). The ``v=``
+      form keeps every directory one partition structure, so one scan
+      with the data root as ``basePath`` reads many publishes.
 
-    Underscore-prefixed directories are hidden from partition discovery.
-    ``want`` is always the dict of the caller's parameters, in sidecar
-    column order."""
+    The manifest publish is the one commit record: a writer that
+    crashes before it leaves only files no manifest names, which no
+    reader sees and vacuum reclaims. ``want`` is always the dict of the
+    caller's parameters, in ``params`` order."""
 
-    name: str  # "band" / "chunk": messages and the sidecar directory
+    name: str  # "band" / "chunk": messages and the public writer names
     key: str  # the column the grid hashes
     bucket: str  # the grid's partition column
-    grid: str  # the grid's name in the sidecar and the writer
+    grid: str  # the grid's name in params and the writer
     lead: tuple[str, ...]  # partition columns ahead of the bucket
     default_grid: int  # a fresh write's grid when the caller passes None
     mismatch: str  # what a parameter mismatch would break
-    encoding: str | None  # key encoding pinned in the sidecar, if any
+    encoding: str | None  # key encoding pinned in params, if any
     key_rows: Callable  # (df, id_col, text_col, want) -> per-row keys
     state_rows: Callable  # (key_rows, id_col) -> rows to persist
-    columns: Callable  # id_col -> reader columns (before src_batch)
+    columns: Callable  # id_col -> reader columns
     # (batch_df, key_rows, prior, id_col, text_col, want) -> (output,
     # state rows to append, a frame it cached for the batch)
     core: Callable
@@ -604,32 +511,22 @@ class _CheckpointKind:
     def what(self) -> str:
         return f"{self.name} checkpoint"
 
-    @property
-    def sidecar(self) -> str:
-        return f"_{self.name}_params"
-
-    def params(self, spark, path: str) -> dict:
-        """The sidecar as a dict. Sidecars older than the grid read as
-        grid 0 (flat), older than the key encoding as ``csv-v1``.
-        Memoized per (sidecar path, mtime) — see ``_PARAMS_MEMO``."""
-        sidecar = f"{path}/{self.sidecar}"
-
-        def _load() -> dict:
-            got = spark.read.parquet(sidecar).collect()[0].asDict()
-            got[self.grid] = int(got.get(self.grid) or 0)
-            if self.encoding:
-                got["sig_encoding"] = got.get("sig_encoding") or "csv-v1"
-            return got
-
-        return _memoized_sidecar(spark, sidecar, _load)
+    def latest(self, path: str) -> dict:
+        snap = _latest_checkpoint(path)
+        if snap is None:
+            raise FileNotFoundError(
+                f"no {self.what} at {path}: seed it with "
+                f"write_{self.name}_checkpoint(mode='overwrite')"
+            )
+        return snap
 
     def validate(self, path: str, params: dict, want: dict) -> None:
         """Raise unless the caller's parameters and this engine's key
-        encoding match the sidecar — one check for the reader and the
-        append path, from one sidecar read. A checkpoint persisted
-        under an older encoding (``csv-v1``, comma-joined decimal
-        band_sig, implicit in sidecars without the field) can never
-        match what this code computes, in either direction."""
+        encoding match the recorded ``params`` — one check for the
+        reader and the append path. A checkpoint persisted under an
+        older encoding (``csv-v1``, comma-joined decimal band_sig,
+        implicit when the field is missing) can never match what this
+        code computes, in either direction."""
         stored = {f: params[f] for f in want}
         if stored != want:
             raise ValueError(
@@ -647,46 +544,118 @@ class _CheckpointKind:
                 "corpus) at a clean batch boundary."
             )
 
+    def _scan(self, spark, path: str, snap: dict, files: list) -> DataFrame:
+        """``files`` of the manifest ``snap`` as one frame of its
+        recorded columns, grid columns included. The schema comes from
+        the manifest and the ``basePath`` from the layout, so planning
+        runs no Spark job; the ``v`` column the version directories add
+        is dropped."""
+        cols = [c for c, _t in snap["schema"]]
+        ddl = _writers._schema_ddl(snap["schema"])
+        if not files:
+            return local_frame(spark, [], ddl)
+        f = _fs.for_path(path)
+        return (
+            spark.read.option("basePath", f.join(f.resolve(path), "data"))
+            .schema(ddl)
+            .parquet(*files)
+            .select(*cols)
+        )
+
     def read(
         self, spark, path: str, id_col: str, want: dict,
-        buckets: list[int] | None = None, params: dict | None = None,
+        buckets: list[int] | None = None, snap: dict | None = None,
     ) -> DataFrame:
-        """The state as ``columns(id_col) + [src_batch]``, after
-        validating ``want`` against the sidecar. ``buckets`` restricts
-        a bucketed checkpoint's scan to those grid cells through a
-        literal partition filter, so the other cells' files are never
-        opened (ignored on a flat layout). ``params``: a sidecar dict
-        the caller already read.
+        """The state as ``columns(id_col)``, from the newest manifest
+        (or ``snap``, one the caller already read) after validating
+        ``want`` against its ``params``. ``buckets`` restricts a
+        bucketed checkpoint's scan to those grid cells: only files under
+        a ``<bucket>=<b>`` directory reach the scan, so the other cells'
+        files are never opened (ignored on a flat layout)."""
+        if snap is None:
+            snap = self.latest(path)
+        self.validate(path, snap["params"], want)
+        files = snap["files"]
+        if snap["params"][self.grid] and buckets is not None:
+            cells = {f"{self.bucket}={int(b)}" for b in buckets}
+            files = [p for p in files if p.split("/")[-2] in cells]
+        return self._scan(spark, path, snap, files).select(
+            *self.columns(id_col)
+        )
 
-        mergeSchema: a checkpoint upgraded mid-life can hold
-        pre-``src_batch`` files next to stamped ones. Without merging,
-        Spark takes one arbitrary footer's schema and either NULLs the
-        legacy rows (the exclusion filter then drops the legacy corpus
-        from the probe) or hides the stamps (a torn append would
-        self-match). Merged and coalesced, legacy rows read as seed
-        rows. That cannot re-attribute a legacy TORN append: its
-        unstamped rows look like seed rows, so run the stamp migration
-        at a clean boundary before the first ingest after an upgrade."""
-        if params is None:
-            params = self.params(spark, path)
-        self.validate(path, params, want)
-        df = spark.read.option("mergeSchema", "true").parquet(path)
-        if params[self.grid] and buckets is not None:
-            df = df.where(F.col(self.bucket).isin([int(b) for b in buckets]))
-        return df.select(*self.columns(id_col), _src_batch(df).alias("src_batch"))
-
-    def _write_rows(self, rows: DataFrame, path: str, n_grid: int, mode: str):
-        """Write stamped state rows onto the partition grid. A bucketed
-        write is clustered on the grid first, so each touched cell gets
-        one file per write instead of one per (task, cell) — otherwise
-        every append compounds into a tiny-file swamp."""
+    def _stage(self, path: str, rows: DataFrame, n_grid: int, version: int):
+        """Write state ``rows`` to a fresh ``data/v=<version>-<uuid8>/``
+        directory on the grid, clustered so each cell gets one file per
+        write (one file in all on a flat layout without ``lead``) rather
+        than one per (task, cell). Returns the non-empty files (none, and
+        no directory, when there are no rows), their row count from the
+        footers and the written schema. No reader sees these files until
+        a manifest names them."""
+        f = _fs.for_path(path)
+        data_dir = f.join(
+            f.resolve(path), "data", f"v={version:08d}-{uuid.uuid4().hex[:8]}"
+        )
         cols = [*self.lead, self.bucket] if n_grid else list(self.lead)
         if n_grid:
             rows = rows.withColumn(
                 self.bucket, _lh_bucket(F.col(self.key), n_grid)
-            ).repartition(*cols)
-        writer = rows.write.mode(mode)
-        (writer.partitionBy(*cols) if cols else writer).parquet(path)
+            )
+        if cols:
+            rows.repartition(*cols).write.partitionBy(*cols).parquet(data_dir)
+        else:
+            rows.coalesce(1).write.parquet(data_dir)
+        files, n = _writers._nonempty_files(
+            _writers._parquet_files(data_dir), keep_one=False
+        )
+        if not files:
+            f.remove_tree(data_dir)  # no rows: nothing for a manifest
+        return files, n, [list(p) for p in rows.dtypes]
+
+    def _commit(
+        self, path: str, rows: DataFrame, mode: str, params: dict,
+        batch_id: int, fingerprint: str | None,
+    ) -> None:
+        """Publish state ``rows`` as the checkpoint's next version: the
+        whole state on an overwrite (a seed), the newest version's files
+        plus these on an append. ``batch_id`` >= 0 records that batch as
+        the newest committed one with its ``fingerprint``; -1 carries
+        the newest version's forward (a seed resets them). A lost
+        publish race re-reads the newest manifest and publishes over it
+        — unless that manifest already commits this batch (a racing
+        replay won, and ours becomes unreferenced files)."""
+        snap = _writers._latest_manifest(path)
+        files, n, schema = self._stage(
+            path, rows, params[self.grid], (snap["version"] + 1) if snap else 1
+        )
+        while True:
+            snap = _writers._latest_manifest(path)
+            base = {
+                "files": [], "rows": 0, "src_batch": -1, "fingerprint": None,
+            }
+            if mode == "append" and snap is not None:
+                if snap["params"] != params:
+                    raise ValueError(
+                        f"{self.what} at {path} was re-seeded with "
+                        f"{snap['params']} while this write ran"
+                    )
+                if batch_id >= 0 and _committed(
+                    snap, batch_id, fingerprint, self.what, path
+                ):
+                    return
+                base = snap
+            version = (snap["version"] + 1) if snap else 1
+            payload = {
+                "version": version, "mode": mode,
+                "files": base["files"] + files, "rows": base["rows"] + n,
+                "schema": schema, "published_utc": time.time(),
+                "params": params,
+                "src_batch": batch_id if batch_id >= 0 else base["src_batch"],
+                "fingerprint": (
+                    fingerprint if batch_id >= 0 else base["fingerprint"]
+                ),
+            }
+            if _writers._link_manifest(path, version, payload):
+                return
 
     def write(
         self, corpus_df: DataFrame, path: str, id_col: str, text_col: str,
@@ -695,80 +664,60 @@ class _CheckpointKind:
         """Seed (``mode='overwrite'``) or extend (``'append'``) the
         checkpoint at ``path`` with ``corpus_df``'s state rows.
 
-        Stamps: a seed is stamped -1 (:func:`_resolve_append_batch_id`
-        refuses any other id, and requires an explicit id on an
-        append). A stamped append (id >= 0) passes the high-water-mark
-        guard first and records its commit marker last.
+        Batch ids: a seed commits no batch (:func:`_resolve_append_batch_id`
+        refuses any id but -1, and requires an explicit id on an
+        append). An append with an id >= 0 passes the high-water guard
+        and commits that batch; replaying the newest committed batch
+        with the same content is a no-op.
 
-        Sidecar (ADVICE r6/r8): an append VALIDATES the existing
-        sidecar and never rewrites it — a rewrite would relabel old
-        rows computed under other parameters, and its
-        delete-then-commit would reopen the torn-sidecar window on every
-        batch. Data files without a sidecar mean an earlier writer
-        crashed between the two writes; the append is refused, re-seed
-        instead. One sidecar read serves the parameter check, the grid
-        check and the grid default.
+        Parameters (ADVICE r6/r8): an append VALIDATES the recorded
+        ``params`` and carries them forward, never relabelling old rows
+        with the caller's. An append onto an empty path is a fresh
+        write; a seed over a directory without manifests (a pre-manifest
+        checkpoint, say) replaces it, as Spark's overwrite did.
 
-        Grid (VERDICT r8 #4): ``n_grid=None`` adopts the sidecar's grid
+        Grid (VERDICT r8 #4): ``n_grid=None`` adopts the recorded grid
         on an append (so flat or differently-sized checkpoints keep
         working with defaults) and ``default_grid`` on a fresh write; an
         explicit int asserts the grid. Size it to the state: every cell
         is a partition directory with a fixed per-write commit cost
         (~35 ms/dir measured on local FS), so aim for file-sized cells."""
         batch_id = _resolve_append_batch_id(mode, batch_id, self.what)
-        batch_fp = None
-        if mode == "append" and batch_id >= 0:
-            batch_fp = _guard_batch_id_monotonic(
-                path, batch_id, self.what, corpus_df, id_col, text_col
-            )
-        spark = corpus_df.sparkSession
-        params = None
+        snap = None
         if mode == "append":
-            try:
-                params = self.params(spark, path)
-            except Exception:
-                if _has_data(spark, path):
-                    raise ValueError(
-                        f"{self.what} at {path} has data files but no "
-                        "parameter sidecar (torn earlier write?): refusing "
-                        "to append — existing rows may have been computed "
-                        "under different parameters. Re-seed with "
-                        "mode='overwrite'."
-                    ) from None
-        if params is not None:
-            self.validate(path, params, want)
-            if n_grid is None:
-                n_grid = params[self.grid]
-            elif params[self.grid] != n_grid:
+            snap = _latest_checkpoint(path)
+        elif _writers._latest_manifest(path) is None:
+            f = _fs.for_path(path)
+            f.remove_tree(f.resolve(path))
+        if snap is not None:
+            self.validate(path, snap["params"], want)
+            recorded = snap["params"][self.grid]
+            if n_grid is not None and n_grid != recorded:
                 raise ValueError(
                     f"{self.what} at {path} is bucketed with "
-                    f"{self.grid}={params[self.grid]}, caller expects "
-                    f"{n_grid}: appended rows would land outside the "
-                    "probe's partition grid"
+                    f"{self.grid}={recorded}, caller expects {n_grid}: "
+                    "appended rows would land outside the probe's "
+                    "partition grid"
                 )
-        if n_grid is None:
-            n_grid = self.default_grid
+            params = snap["params"]
+        else:
+            params = {
+                **want,
+                self.grid: self.default_grid if n_grid is None else n_grid,
+            }
+            if self.encoding:
+                params["sig_encoding"] = self.encoding
+        fingerprint = None
+        if batch_id >= 0:
+            fingerprint = _guard_batch_id_monotonic(
+                path, snap, batch_id, self.what, corpus_df, id_col, text_col
+            )
+            if fingerprint is None:
+                return
         rows = self.state_rows(
             self.key_rows(corpus_df, id_col, text_col, want), id_col
         )
-        self._write_rows(
-            rows.withColumn("src_batch", F.lit(int(batch_id))), path, n_grid,
-            mode,
-        )
-        if params is None:
-            fields = {**want, self.grid: n_grid}
-            ddl = ", ".join(f"{f} int" for f in fields)
-            if self.encoding:
-                fields["sig_encoding"] = self.encoding
-                ddl += ", sig_encoding string"
-            # local_frame, not createDataFrame: its Python-RDD form cost
-            # ~5 s of Python worker spawn per write job (r15,
-            # functions/localrel.py)
-            local_frame(spark, [tuple(fields.values())], ddl).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{path}/{self.sidecar}")
-        if batch_fp is not None:
-            _mark_batch_committed(path, batch_id, batch_fp)
+        self._commit(path, rows, mode, params, batch_id, fingerprint)
 
     def ingest(
         self, batch_df: DataFrame, batch_id: int, path: str, out_path: str,
@@ -776,64 +725,48 @@ class _CheckpointKind:
     ) -> None:
         """One micro-batch of the streaming dedup ingest, REPLAY-SAFE:
         dedup ``batch_df`` against the checkpoint, publish the output,
-        append the batch's own state rows.
+        commit the batch's own state rows.
 
         Output: lands in an ``ingest_batch=<id>`` partition via DYNAMIC
         partition overwrite, so a replay of a crashed batch (same
         batch_id under ``foreachBatch``) rewrites its own partition
         instead of appending a second copy; earlier partitions are
-        untouched. State rows still append, so a replay of a crashed
-        batch can duplicate some — harmless, since both probes are set
-        lookups (distinct pairs, an anti-join on ``lh``). A replay of a
-        COMMITTED batch (its marker holds this content's fingerprint) is
-        a no-op: the marker is written last, so output and state have
-        both landed.
+        untouched.
 
-        Replay determinism (ADVICE r7 #1, re-scoped by ADVICE r8): the
-        probe EXCLUDES the state rows stamped with this ``batch_id`` — a
-        row-local filter, no join — so a replay sees exactly the
-        pre-batch state however much of the crashed attempt's append
-        landed. Without it a torn append lets survivors match their own
-        (or a sibling's) half-landed rows and the overwrite drops them:
-        silent loss. Scoping by the WRITER's batch id, not by the
-        batch's doc ids, keeps at-least-once upstreams honest: an id
-        re-delivered in a LATER batch still meets its earlier state and
+        State: the batch's rows go to a fresh directory and one manifest
+        publish commits them with the batch id and content fingerprint,
+        so the probe only ever sees committed state. A crash before the
+        publish leaves nothing a reader sees, and the replay recomputes
+        the identical output. A replay of the newest COMMITTED batch is
+        a no-op; a colliding id is refused (:func:`_committed`). A batch
+        that adds no state rows still publishes, to record its commit.
+        An id re-delivered in a LATER batch meets its earlier state and
         is dropped as the duplicate it is.
 
-        Batch-id collisions (ADVICE r9): the exclusion is only sound
-        while ids never recur below the committed high-water mark —
-        ``foreachBatch`` ids restart at 0 under a new stream
-        checkpoint. Every committed batch drops a marker, written LAST so
-        a crash leaves it absent; ids below the mark raise, and ``==
-        hwm`` is allowed only as a replay with the same content
-        fingerprint (:func:`_guard_batch_id_monotonic`).
-
-        The steps: fingerprint and guard; cache the batch's key frame
-        (it feeds the bucket probe, the core and the append, and a
-        re-derivation per consumer was the bulk of d20's cost); collect
-        its grid cells (a driver list bounded by the grid) and read
-        only those cells, minus this batch's own stamp; hand over to
-        ``core``; publish; append; mark. Everything after the cache sits
-        in the ``try``, so a raise (a parameter mismatch, say) never
-        pins the batch frame in a long-lived session."""
+        The steps: guard; cache the batch's key frame (it feeds the
+        bucket probe, the core and the state write, and a re-derivation
+        per consumer was the bulk of d20's cost); collect its grid cells
+        (a driver list bounded by the grid) and read only those cells;
+        hand over to ``core``; write the output; write and publish the
+        state. Everything after the cache sits in the ``try``, so a
+        raise never pins the batch frame in a long-lived session."""
         bid = int(batch_id)
-        batch_fp = _guard_batch_id_monotonic(
-            path, bid, self.what, batch_df, id_col, text_col
+        snap = self.latest(path)
+        fingerprint = _guard_batch_id_monotonic(
+            path, snap, bid, self.what, batch_df, id_col, text_col
         )
-        if _committed_fingerprint(path, bid) == batch_fp:
+        if fingerprint is None:
             return
-        s = batch_df.sparkSession
         keys = self.key_rows(batch_df, id_col, text_col, want).cache()
         held = [keys]
         try:
-            params = self.params(s, path)
-            n_grid = params[self.grid]
+            n_grid = snap["params"][self.grid]
             buckets = None
             if n_grid:
                 cells = keys.select(_lh_bucket(F.col(self.key), n_grid))
                 buckets = sorted(r[0] for r in cells.distinct().collect())
-            prior = self.read(s, path, id_col, want, buckets, params)
-            prior = prior.where(F.col("src_batch") != bid).drop("src_batch")
+            prior = self.read(batch_df.sparkSession, path, id_col, want,
+                              buckets, snap)
             out, add, cached = self.core(
                 batch_df, keys, prior, id_col, text_col, want
             )
@@ -845,10 +778,7 @@ class _CheckpointKind:
                 .partitionBy("ingest_batch")
                 .parquet(out_path)
             )
-            self._write_rows(
-                add.withColumn("src_batch", F.lit(bid)), path, n_grid, "append"
-            )
-            _mark_batch_committed(path, bid, batch_fp)
+            self._commit(path, add, "append", snap["params"], bid, fingerprint)
         finally:
             for frame in held:
                 frame.unpersist()
@@ -868,9 +798,8 @@ class _CheckpointKind:
         any batch runs.
 
         ``compact_every`` (r10): :meth:`compact` after every Nth batch
-        (ids N-1, 2N-1, …), AFTER its commit marker lands, so the
-        in-flight refusal never fires here and per-cell file counts stay
-        O(N). The compaction is itself crash-safe; 0 disables it."""
+        (ids N-1, 2N-1, …), after the batch's publish, so per-cell file
+        counts stay O(N); 0 disables it."""
         self.read(spark, path, id_col, want)
 
         def _process(batch_df: DataFrame, batch_id: int) -> None:
@@ -889,126 +818,46 @@ class _CheckpointKind:
             .trigger(availableNow=True)
         )
 
-    def _rewrite(self, spark, path: str, op: str, staged: str, backup: str,
-                 prepare) -> tuple[dict, int]:
-        """Rewrite the checkpoint in place through the count-verified
-        staged swap the parquet maintenance ops use (a crash mid-swap
-        leaves a marker that :func:`io.writers.recover_staged_swap`
-        heals on the next run). ``prepare(df, path)`` turns the current
-        rows into the rows to write plus a report whose ``rows`` is the
-        expected count; it may refuse by raising. The grid, the sidecar
-        and the committed-batch markers are kept — losing the sidecar
-        would re-arm the torn-sidecar refusal, losing the markers would
-        reset the hwm to -1 and disarm the batch-id guard. Each grid
-        cell (or a flat layout) is written as ONE file. The sidecar is
-        read only after recovery: a crash between the swap's renames
-        leaves no table at ``path``. Returns the report and the staged
-        file count."""
-        _writers.recover_staged_swap(path)
-        n_grid = self.params(spark, path)[self.grid]
-        cols = [*self.lead, self.bucket] if n_grid else list(self.lead)
-        df = spark.read.option("mergeSchema", "true").parquet(path)
-        rows, report = prepare(df, path)
-        tmp = path.rstrip("/") + staged
-        shutil.rmtree(tmp, ignore_errors=True)
-        if cols:
-            rows.repartition(*cols).write.partitionBy(*cols).parquet(tmp)
-        else:
-            rows.coalesce(1).write.parquet(tmp)
-        shutil.copytree(
-            os.path.join(path, self.sidecar), os.path.join(tmp, self.sidecar)
-        )
-        if os.path.isdir(_hwm_dir(path)):
-            # stale .tmp stages of killed marker publishers stay behind
-            shutil.copytree(
-                _hwm_dir(path), _hwm_dir(tmp),
-                ignore=shutil.ignore_patterns("*.tmp"),
-            )
-        # the count check reads the staged files' footers, not a re-scan
-        files = spark.read.parquet(tmp).inputFiles()
-        got = _writers._footer_row_count(sorted(files))
-        if got != report["rows"]:
-            raise RuntimeError(
-                f"{op} row-count mismatch ({got} != {report['rows']}); "
-                f"staged output left at {tmp}, original untouched"
-            )
-        _writers._swap_in(path, tmp, backup)
-        return report, len(files)
-
     def compact(self, spark, path: str) -> dict:
-        """Rewrite every grid cell to ONE file (VERDICT r9 #2): each
-        ingest batch appends one file per touched cell, and after N
-        batches the pruned probe — whose point is opening few files —
-        degrades into a small-files scan. The rewrite keeps the grid
-        layout, the sidecar and the markers.
-
-        Clean-boundary refusal: rows stamped ABOVE the committed hwm
-        belong to an in-flight (or crashed, not yet replayed) batch, and
-        swapping the table under its writer would lose whatever it
-        appends after the read; compaction refuses until it commits.
-        Stamps are kept verbatim, so replay exclusion and re-delivery
-        are unchanged; legacy unstamped rows stay NULL (read as -1) —
-        not a stamp migration. Idempotent; returns ``{rows,
-        files_before, files_after, hwm}``."""
-
-        def _unchanged(df: DataFrame, path: str):
-            hwm = ingest_high_water_mark(path)
-            stats = df.agg(
-                F.count(F.lit(1)).alias("n"), F.max(_src_batch(df)).alias("mx")
-            ).collect()[0]
-            max_src = -1 if stats["mx"] is None else int(stats["mx"])
-            if max_src > hwm:
-                raise ValueError(
-                    f"checkpoint at {path} holds rows stamped src_batch="
-                    f"{max_src}, above the committed high-water mark "
-                    f"{hwm}: an ingest batch is in flight (or crashed and "
-                    "not yet replayed). Compaction would swap away "
-                    "anything that batch appends after the snapshot read "
-                    "— let it commit or replay to completion first (the "
-                    "stamp-migration clean-boundary rule)."
+        """Rewrite the newest version to ONE file per grid cell (VERDICT
+        r9 #2): each ingest batch adds one file per touched cell, and
+        after N batches the pruned probe degrades into a small-files
+        scan. The rewrite goes to a fresh directory, is count-verified
+        from the footers and published as a ``compact`` manifest that
+        carries ``params``, ``src_batch`` and ``fingerprint`` forward;
+        then older versions are vacuumed (``keep=1``). A batch in flight
+        is invisible to the rewrite and publishes over it afterwards; a
+        lost publish race retries against the new version, as
+        :func:`io.writers.compact_parquet_snapshot` does. Idempotent;
+        returns ``{rows, files_before, files_after, hwm}``."""
+        for _attempt in range(6):
+            snap = self.latest(path)
+            rows = self._scan(spark, path, snap, snap["files"])
+            files, n, _schema = self._stage(
+                path, rows.drop(self.bucket), snap["params"][self.grid],
+                snap["version"] + 1,
+            )
+            if n != snap["rows"]:
+                raise RuntimeError(
+                    f"{self.what} compaction at {path} read back {n} rows, "
+                    f"v{snap['version']} has {snap['rows']}; nothing "
+                    "published"
                 )
-            return df, {
-                "rows": int(stats["n"]),
-                "files_before": len(df.inputFiles()),
-                "hwm": hwm,
+            payload = {
+                **snap, "version": snap["version"] + 1, "mode": "compact",
+                "files": files, "published_utc": time.time(),
             }
-
-        report, files_after = self._rewrite(
-            spark, path, "checkpoint compaction", ".compacting",
-            ".pre-compaction", _unchanged,
+            if _writers._link_manifest(path, payload["version"], payload):
+                _writers.vacuum_parquet_snapshots(path, keep=1)
+                return {
+                    "rows": n, "files_before": len(snap["files"]),
+                    "files_after": len(files),
+                    "hwm": int(snap["src_batch"]),
+                }
+        raise RuntimeError(
+            f"{self.what} compaction at {path} lost the publish race 6 "
+            "times; the checkpoint is advancing faster than the rewrite"
         )
-        return {**report, "files_after": files_after}
-
-    def migrate(self, spark, path: str) -> dict:
-        """ONE-TIME upgrade of a checkpoint written (fully or partly)
-        before ``src_batch`` stamps existed: every row gets an explicit
-        stamp — existing stamps kept, unstamped rows -1 — in place.
-
-        Why: the reader's mergeSchema+coalesce keeps a legacy CORPUS
-        correct, but an unstamped row of a crashed pre-stamp append is
-        indistinguishable from a seed row, and a replay of that batch
-        would self-match it. No row-level rule tells them apart, so the
-        operator asserts it: run this at a CLEAN boundary (no crashed
-        in-flight batch), where stamping every unstamped row as seed is
-        exactly right. Idempotent; returns ``{rows, seed_rows,
-        had_stamp_col}``."""
-
-        def _stamped(df: DataFrame, path: str):
-            out = df.withColumn("src_batch", _src_batch(df))
-            counts = out.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("src_batch") == -1).cast("long")).alias("seed"),
-            ).collect()[0]
-            return out, {
-                "rows": int(counts["n"]),
-                "seed_rows": int(counts["seed"] or 0),
-                "had_stamp_col": "src_batch" in df.columns,
-            }
-
-        return self._rewrite(
-            spark, path, "stamp migration", ".migrating",
-            ".pre-stamp-migration", _stamped,
-        )[0]
 
 
 def _band_keys(df: DataFrame, id_col: str, text_col: str, want: dict):
@@ -1065,14 +914,14 @@ def write_band_checkpoint(
     batch_id: int | None = None,
     n_sig_buckets: int | None = None,
 ) -> None:
-    """Persist a corpus's LSH band frame ``(id, band, band_sig,
-    src_batch)`` — the between-batches dedup state an ingestion
+    """Persist a corpus's LSH band frame ``(id, band, band_sig)`` —
+    the between-batches dedup state an ingestion
     pipeline keeps, so no batch re-derives bands from the corpus text.
     It is a few tiny rows per document, partitioned by ``band`` and
     ``sigb = pmod(xxhash64(band_sig), n_sig_buckets)`` (default 16; 0 =
     flat per-band layout) so the ingest probe prunes to the signature
-    buckets its batch hashes into. ``(k, num_hashes, band_rows)`` and
-    the ``band_sig`` encoding ride the ``_band_params`` sidecar. Seed
+    buckets its batch hashes into. ``(k, num_hashes, band_rows)``, the
+    grid and the ``band_sig`` encoding ride every manifest. Seed
     with ``mode='overwrite'``; append a batch's own bands with
     ``mode='append'`` and its ``batch_id`` (or -1 to assert a
     clean-boundary seed extension). See :meth:`_CheckpointKind.write`."""
@@ -1084,10 +933,10 @@ def write_band_checkpoint(
 
 
 def read_band_params(spark, path: str) -> dict:
-    """The band checkpoint's parameter sidecar as a dict; pre-bucketing
-    sidecars read as n_sig_buckets=0 (flat per-band layout). Memoized
-    per (path, sidecar mtime) — see ``_PARAMS_MEMO``."""
-    return _BANDS.params(spark, path)
+    """The band checkpoint's recorded parameters as a dict — ``{k,
+    num_hashes, band_rows, n_sig_buckets, sig_encoding}`` from its
+    newest manifest."""
+    return _BANDS.latest(path)["params"]
 
 
 def read_band_checkpoint(
@@ -1100,29 +949,23 @@ def read_band_checkpoint(
     sig_buckets: list[int] | None = None,
     params: dict | None = None,
 ) -> DataFrame:
-    """Load a band checkpoint as ``(id_col, band, band_sig, src_batch)``
-    — the shape ``incremental_neardup_pairs`` / :func:`ingest_batch_idempotent`
+    """Load a band checkpoint as ``(id_col, band, band_sig)`` — the
+    shape ``incremental_neardup_pairs`` / :func:`ingest_batch_idempotent`
     expect — after validating the caller's banding parameters against
-    the sidecar. ``sig_buckets`` restricts the scan to those ``sigb``
-    cells; ``params`` is a sidecar dict already read via
-    :func:`read_band_params`. See :meth:`_CheckpointKind.read`."""
+    the recorded ones. ``sig_buckets`` restricts the scan to those
+    ``sigb`` cells. ``params`` is not read: the manifest that names the
+    files carries the parameters. See :meth:`_CheckpointKind.read`."""
     return _BANDS.read(
         spark, path, id_col,
         dict(k=k, num_hashes=num_hashes, band_rows=band_rows),
-        sig_buckets, params,
+        sig_buckets,
     )
-
-
-def migrate_band_checkpoint_stamps(spark, path: str) -> dict:
-    """One-time ``src_batch`` stamp migration of a band checkpoint, run
-    at a clean batch boundary — see :meth:`_CheckpointKind.migrate`."""
-    return _BANDS.migrate(spark, path)
 
 
 def compact_band_checkpoint(spark, path: str) -> dict:
     """Compact a band checkpoint to one file per ``(band, sigb)`` cell
-    (one per ``band`` on a flat layout), keeping grid, sidecar, markers
-    and stamps — see :meth:`_CheckpointKind.compact`. Run it on a
+    (one per ``band`` on a flat layout), keeping the grid, the
+    parameters and the high-water mark — see :meth:`_CheckpointKind.compact`. Run it on a
     cadence that keeps per-cell file counts O(1)."""
     return _BANDS.compact(spark, path)
 
@@ -2374,11 +2217,9 @@ _CHUNKS = _CheckpointKind(
 
 
 def read_chunk_params(spark, path: str) -> dict:
-    """The chunk checkpoint's parameter sidecar as a dict —
-    ``{"chunk_words", "n_buckets"}``; pre-bucketing sidecars read as
-    n_buckets=0 (flat layout). Memoized per (path, sidecar mtime) — see
-    ``_PARAMS_MEMO``."""
-    return _CHUNKS.params(spark, path)
+    """The chunk checkpoint's recorded parameters as a dict —
+    ``{"chunk_words", "n_buckets"}`` from its newest manifest."""
+    return _CHUNKS.latest(path)["params"]
 
 
 def write_chunk_checkpoint(
@@ -2396,8 +2237,8 @@ def write_chunk_checkpoint(
     16-byte hash and two ids per distinct chunk, so no batch re-chunks
     the admitted corpus. Partitioned by ``lhb = pmod(xxhash64(lh),
     n_buckets)`` (default 64; 0 = flat, unpartitioned) so the ingest
-    probe prunes to its batch's buckets; ``chunk_words`` rides the
-    ``_chunk_params`` sidecar. Seeding, appending and the grid follow
+    probe prunes to its batch's buckets; ``chunk_words`` and the grid
+    ride every manifest. Seeding, appending and the grid follow
     :meth:`_CheckpointKind.write`."""
     _CHUNKS.write(
         corpus_df, path, id_col, text_col, dict(chunk_words=chunk_words),
@@ -2413,20 +2254,14 @@ def read_chunk_checkpoint(
     buckets: list[int] | None = None,
     params: dict | None = None,
 ) -> DataFrame:
-    """Load a chunk checkpoint as ``(lh, id_col, pos, src_batch)`` after
-    validating ``chunk_words`` against the sidecar. ``buckets``
-    restricts the scan to those ``lhb`` cells; ``params`` is a sidecar
-    dict already read via :func:`read_chunk_params`. See
+    """Load a chunk checkpoint as ``(lh, id_col, pos)`` after validating
+    ``chunk_words`` against the recorded one. ``buckets`` restricts the
+    scan to those ``lhb`` cells. ``params`` is not read: the manifest
+    that names the files carries the parameters. See
     :meth:`_CheckpointKind.read`."""
     return _CHUNKS.read(
-        spark, path, id_col, dict(chunk_words=chunk_words), buckets, params
+        spark, path, id_col, dict(chunk_words=chunk_words), buckets
     )
-
-
-def migrate_chunk_checkpoint_stamps(spark, path: str) -> dict:
-    """One-time ``src_batch`` stamp migration of a chunk checkpoint, run
-    at a clean batch boundary — see :meth:`_CheckpointKind.migrate`."""
-    return _CHUNKS.migrate(spark, path)
 
 
 def compact_chunk_checkpoint(spark, path: str) -> dict:

@@ -2887,11 +2887,11 @@ def d20_band_ingest_incremental(spark, sf_dir):
     the corpus, push the other two thirds through
     :func:`llmdata.dedup.ingest_batch_idempotent` as two ordered
     micro-batches, read back the admitted docs per batch. This drives
-    the round-9 state machinery end-to-end under the oracle gate: the
-    src_batch replay-exclusion stamps, the sigb-bucketed checkpoint
-    probe (batch-1's read carries the literal sigb partition filter),
-    the validated append of batch-0's bands, and the per-batch dynamic
-    overwrite publish. The modulo split interleaves ids across batches
+    the state machinery end-to-end under the oracle gate: the
+    high-water guard and the manifest publish that commits each batch,
+    the sigb-bucketed checkpoint probe (batch-1's read opens only the
+    files of its batch's sigb cells), the validated append of batch-0's
+    bands, and the per-batch dynamic overwrite publish. The modulo split interleaves ids across batches
     so arrival order ≠ id order, same rationale as d19. Scratch state in
     a per-call temp dir that must outlive the returned lazy frame.
     ``n_sig_buckets=4`` (4 bands x 4 = 16 grid cells), not the 16
@@ -2987,21 +2987,22 @@ def d22_compacted_ingest(spark, sf_dir):
     batch 0 → ``compact_band_checkpoint`` → batch 1 → compact again,
     then read back the admissions. Two facts enter the hash: (1) the
     admitted (doc_id, ingest_batch) set is byte-identical to d20's
-    uncompacted oracle — compaction preserves the band rows, the
-    ``src_batch`` stamps, the sidecar grid, and the hwm markers, so the
-    loop cannot tell it ran (the invisibility contract, here under the
-    driver gate rather than a local test); (2) ``max_files_per_bucket``
-    — the measured post-compaction layout, exactly 1 file per touched
-    (band, sigb) directory — against the oracle's literal 1, p20's
+    uncompacted oracle — compaction preserves the band rows, and its
+    manifest carries the grid, the parameters and the high-water mark
+    forward, so the loop cannot tell it ran (the invisibility contract,
+    here under the driver gate rather than a local test); (2)
+    ``max_files_per_bucket`` — the measured post-compaction layout,
+    exactly 1 file per touched (band, sigb) cell among the files the
+    newest manifest names — against the oracle's literal 1, p20's
     prediction==actual pattern applied to a storage invariant. A
     compaction that silently dropped/duplicated state rows flips the
     admissions; one that failed to rewrite buckets flips the file
     column. Same scratch-dir and construction-time-work precedent as
     d19/d20."""
-    import glob as _glob
-    import os as _os
     import tempfile
+    from collections import Counter
 
+    from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers
     from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup as dd
 
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -3016,13 +3017,12 @@ def d22_compacted_ingest(spark, sf_dir):
             d.where(F.col("doc_id") % 3 == m), b, band_path, out
         )
         dd.compact_band_checkpoint(spark, band_path)
-    max_files = max(
-        (
-            len(_glob.glob(_os.path.join(bucket, "*.parquet")))
-            for bucket in _glob.glob(f"{band_path}/band=*/sigb=*")
-        ),
-        default=0,
+    # a file's cell is its band=…/sigb=… directory pair
+    cells = Counter(
+        tuple(f.split("/")[-3:-1])
+        for f in writers._latest_manifest(band_path)["files"]
     )
+    max_files = max(cells.values(), default=0)
     return (
         spark.read.schema("doc_id bigint, text string, ingest_batch int")
         .parquet(out)

@@ -1,39 +1,58 @@
 """Checkpoint state compaction (VERDICT r9 #2).
 
-Each ingest micro-batch appends one file per touched bucket, so after N
-batches a bucket directory holds up to N small files and the pruned
-probe degrades into a small-files scan. ``compact_band_checkpoint`` /
-``compact_chunk_checkpoint`` rewrite every bucket to ONE file via the
-marker-protected staged swap, carrying the parameter sidecar and the
-``_ingest_hwm`` committed-batch markers through — these tests pin:
+Each ingest micro-batch adds one file per touched grid cell, so after N
+batches a cell holds up to N small files and the pruned probe degrades
+into a small-files scan. ``compact_band_checkpoint`` /
+``compact_chunk_checkpoint`` rewrite the newest version to ONE file per
+cell in a fresh directory and publish it as a ``compact`` manifest that
+carries the parameters and the committed high-water mark forward —
+these tests pin:
 
-1. the post-compact invariant (exactly 1 data file per bucket dir);
+1. the post-compact invariant (exactly 1 data file per cell among the
+   files the newest manifest names) and the directory holding only
+   ``_snapshots/`` and ``data/``;
 2. ingest equivalence: a pipeline compacted mid-sequence admits the
    SAME survivors as a never-compacted twin;
-3. partition pruning still works over a compacted checkpoint
-   (executed-scan numFiles < total);
-4. the clean-boundary refusal (rows stamped above the committed hwm =
-   in-flight batch → ValueError, state untouched);
-5. crash-recovery via the shared ``recover_staged_swap`` protocol.
+3. cell pruning still works over a compacted checkpoint (executed-scan
+   numFiles < total);
+4. a batch whose publish never happened is invisible to compaction and
+   publishes once on its replay;
+5. a compaction that crashes before its publish leaves the old version
+   readable, and the next compaction succeeds;
+6. two writers racing one batch id publish the first one's commit
+   whole.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers
 from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
 
 
-def _bucket_files(path: str, pattern: str) -> dict[str, int]:
-    """parquet data-file count per bucket directory."""
-    out: dict[str, int] = {}
-    for d in glob.glob(os.path.join(path, pattern)):
-        out[d] = len(glob.glob(os.path.join(d, "*.parquet")))
-    return out
+def _cell_files(path: str) -> dict[str, int]:
+    """Data-file count per grid cell (the partition directories below a
+    version directory) among the files the newest manifest names."""
+    return dict(Counter(
+        "/".join(f.split("/data/", 1)[1].split("/")[1:-1])
+        for f in writers._latest_manifest(path)["files"]
+    ))
+
+
+def _crash_before_publish(monkeypatch):
+    """Make every manifest publish fail, as a crash between a writer's
+    data write and its publish would."""
+
+    def crash(*_args, **_kw):
+        raise RuntimeError("crash before publish")
+
+    monkeypatch.setattr(writers, "_link_manifest", crash)
 
 
 def _rngtext(d: int) -> str:
@@ -62,8 +81,8 @@ def test_compact_band_checkpoint_one_file_per_bucket(spark, tmp_path):
             "doc_id long, text string",
         )
         dedup.ingest_batch_idempotent(batch, b, path, out)
-    per_dir = _bucket_files(path, "band=*/sigb=*")
-    assert any(n > 1 for n in per_dir.values()), per_dir  # fragmented
+    per_cell = _cell_files(path)
+    assert any(n > 1 for n in per_cell.values()), per_cell  # fragmented
 
     before = sorted(
         map(tuple, dedup.read_band_checkpoint(spark, path, "doc_id")
@@ -72,12 +91,17 @@ def test_compact_band_checkpoint_one_file_per_bucket(spark, tmp_path):
     hwm_before = dedup.ingest_high_water_mark(path)
     stats = dedup.compact_band_checkpoint(spark, path)
 
-    per_dir = _bucket_files(path, "band=*/sigb=*")
-    assert per_dir and all(n == 1 for n in per_dir.values()), per_dir
-    assert stats["files_after"] == len(per_dir)
+    per_cell = _cell_files(path)
+    assert per_cell and all(n == 1 for n in per_cell.values()), per_cell
+    assert stats["files_after"] == len(per_cell)
     assert stats["files_before"] > stats["files_after"]
     assert stats["hwm"] == hwm_before == dedup.ingest_high_water_mark(path)
-    # content-identical (stamps included) and the sidecar survived
+    # the older versions were vacuumed: one manifest, one version dir,
+    # and nothing beside the manifests and the data
+    assert sorted(os.listdir(path)) == ["_snapshots", "data"]
+    assert [s["version"] for s in writers.list_parquet_snapshots(path)] == [5]
+    assert len(os.listdir(os.path.join(path, "data"))) == 1
+    # content-identical and the recorded parameters survived
     after = sorted(
         map(tuple, dedup.read_band_checkpoint(spark, path, "doc_id")
             .collect())
@@ -95,8 +119,8 @@ def test_band_ingest_equivalent_after_midsequence_compaction(
 ):
     """A pipeline compacted between batches must admit exactly the same
     survivor set as a never-compacted twin — compaction preserves the
-    src_batch stamps, so replay exclusion and cross-batch dedup see the
-    identical state."""
+    state rows and the high-water mark, so cross-batch dedup and the
+    batch-id guard see the identical state."""
     docs = [(d, _rngtext(d % 25)) for d in range(45)]  # heavy dup load
     seed = spark.createDataFrame(docs[:15], "doc_id long, text string")
     batches = [
@@ -137,15 +161,15 @@ def test_compact_chunk_checkpoint_and_pruning_survive(spark, tmp_path):
             "doc_id long, text string",
         )
         dedup.chunk_ingest_batch_idempotent(batch, b, path, out)
-    assert any(n > 1 for n in _bucket_files(path, "lhb=*").values())
+    assert any(n > 1 for n in _cell_files(path).values())
 
     before = sorted(
         map(tuple, dedup.read_chunk_checkpoint(spark, path, "doc_id")
             .collect())
     )
     stats = dedup.compact_chunk_checkpoint(spark, path)
-    per_dir = _bucket_files(path, "lhb=*")
-    assert per_dir and all(n == 1 for n in per_dir.values()), per_dir
+    per_cell = _cell_files(path)
+    assert per_cell and all(n == 1 for n in per_cell.values()), per_cell
     after = sorted(
         map(tuple, dedup.read_chunk_checkpoint(spark, path, "doc_id")
             .collect())
@@ -154,7 +178,7 @@ def test_compact_chunk_checkpoint_and_pruning_survive(spark, tmp_path):
 
     # the pruned probe still prunes over the compacted layout: a
     # one-chunk batch opens strictly fewer files than the checkpoint
-    # holds, through a literal lhb PartitionFilter
+    # holds, only those under its lhb cell
     batch = spark.createDataFrame(
         [(999, " ".join(W(3, i) for i in range(10)))],
         "doc_id long, text string",
@@ -167,13 +191,13 @@ def test_compact_chunk_checkpoint_and_pruning_survive(spark, tmp_path):
     )
     pruned = dedup.read_chunk_checkpoint(spark, path, "doc_id",
                                          buckets=buckets)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "lhb" in plan.split(
-        "PartitionFilters")[1].split("]")[0], plan
+    assert {f.split("/")[-2] for f in pruned.inputFiles()} == {
+        f"lhb={b}" for b in buckets
+    }
     pruned.collect()
     scan = pruned._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
     read_files = int(scan.metrics().apply("numFiles").value())
-    total_files = len(glob.glob(f"{path}/lhb=*/*.parquet"))
+    total_files = len(writers._latest_manifest(path)["files"])
     assert 0 < read_files < total_files, (read_files, total_files)
     # and a further ingest batch over the compacted state behaves: doc
     # 3's span is already admitted, so the re-delivery drops to empty
@@ -183,50 +207,60 @@ def test_compact_chunk_checkpoint_and_pruning_survive(spark, tmp_path):
     assert rows == {999: 1}, rows
 
 
-def test_compact_refuses_inflight_batch(spark, tmp_path):
-    """Rows stamped above the committed high-water mark = an in-flight
-    (or crashed, not-yet-replayed) batch: compacting concurrently would
-    swap away whatever that batch appends after the snapshot read, so
-    the op must refuse and leave the state byte-identical."""
+def test_compact_refuses_inflight_batch(spark, tmp_path, monkeypatch):
+    """A batch whose state was written but never published (it crashed
+    before its manifest publish, or is still in flight) is invisible to
+    compaction: the compacted version holds exactly the published rows.
+    The batch's replay then publishes once, on top of the compacted
+    version, and a second replay is a no-op."""
     corpus = spark.createDataFrame(
         [(d, _rngtext(d)) for d in range(10)], "doc_id long, text string"
     )
-    for writer, compact, marker_path in (
-        (dedup.write_band_checkpoint, dedup.compact_band_checkpoint,
+    batch = spark.createDataFrame(
+        [(100 + d, _freshtext(d)) for d in range(3)],
+        "doc_id long, text string",
+    )
+    for writer, ingest, compact, read, name in (
+        (dedup.write_band_checkpoint, dedup.ingest_batch_idempotent,
+         dedup.compact_band_checkpoint, dedup.read_band_checkpoint,
          "bands"),
-        (dedup.write_chunk_checkpoint, dedup.compact_chunk_checkpoint,
+        (dedup.write_chunk_checkpoint, dedup.chunk_ingest_batch_idempotent,
+         dedup.compact_chunk_checkpoint, dedup.read_chunk_checkpoint,
          "chunks"),
     ):
-        path = str(tmp_path / marker_path)
+        path, out = str(tmp_path / name), str(tmp_path / f"{name}_out")
         writer(corpus, path, "doc_id", "text")
-        # torn append: batch 0's rows land but the commit marker (written
-        # LAST by the real ingest) never does
-        extra = spark.createDataFrame(
-            [(100, _rngtext(50))], "doc_id long, text string"
-        )
-        writer(extra, path, "doc_id", "text", mode="append", batch_id=0)
-        os.remove(os.path.join(dedup._hwm_dir(path), "b0"))
-        files_before = sorted(
-            glob.glob(f"{path}/**/*.parquet", recursive=True)
-        )
-        with pytest.raises(ValueError, match="high-water mark"):
-            compact(spark, path)
-        assert sorted(
-            glob.glob(f"{path}/**/*.parquet", recursive=True)
-        ) == files_before
-        # once the batch commits (marker lands), compaction proceeds
-        dedup._mark_batch_committed(path, 0, "")
+        seeded = sorted(map(tuple, read(spark, path, "doc_id").collect()))
+        with monkeypatch.context() as m:
+            _crash_before_publish(m)
+            with pytest.raises(RuntimeError, match="crash before publish"):
+                ingest(batch, 0, path, out)
+        assert dedup.ingest_high_water_mark(path) == -1
         stats = compact(spark, path)
-        assert stats["hwm"] == 0 and stats["rows"] > 0
+        assert stats["rows"] == len(seeded) and stats["hwm"] == -1
+        assert sorted(
+            map(tuple, read(spark, path, "doc_id").collect())
+        ) == seeded
+        ingest(batch, 0, path, out)
+        assert dedup.ingest_high_water_mark(path) == 0
+        state = sorted(map(tuple, read(spark, path, "doc_id").collect()))
+        assert len(state) > len(seeded) and set(seeded) <= set(state)
+        # the replay published exactly once: the batch's rows are there
+        # once, and a second replay adds nothing
+        assert len(set(state)) == len(state)
+        ingest(batch, 0, path, out)
+        assert sorted(
+            map(tuple, read(spark, path, "doc_id").collect())
+        ) == state
+        assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [
+            100, 101, 102,
+        ]
 
 
-def test_compact_rerun_heals_mid_swap_crash(spark, tmp_path):
-    """A crash inside the swap's rename window leaves the sidecar marker
-    and no table; the next compaction run must self-heal through the
-    shared recover_staged_swap protocol and then complete normally."""
-    import json
-    import shutil
-
+def test_compact_rerun_heals_mid_swap_crash(spark, tmp_path, monkeypatch):
+    """A compaction that crashes between its rewrite and its publish
+    leaves the old version the newest one: the checkpoint still reads
+    the old rows, and the next compaction completes normally."""
     corpus = spark.createDataFrame(
         [(d, _rngtext(d)) for d in range(20)], "doc_id long, text string"
     )
@@ -242,33 +276,32 @@ def test_compact_rerun_heals_mid_swap_crash(spark, tmp_path):
         map(tuple, dedup.read_band_checkpoint(spark, path, "doc_id")
             .collect())
     )
-    # simulate the worst crash point: table moved to backup, staged copy
-    # not yet renamed in (exactly _swap_in's between-renames window)
-    staged = path + ".compacting"
-    backup = path + ".pre-compaction"
-    shutil.move(path, staged)  # the staged copy IS a valid table here
-    with open(path + ".swap-in-progress", "w") as fh:
-        json.dump({"path": path, "staged": staged, "backup": backup}, fh)
-    assert not os.path.exists(path)
+    with monkeypatch.context() as m:
+        _crash_before_publish(m)
+        with pytest.raises(RuntimeError, match="crash before publish"):
+            dedup.compact_band_checkpoint(spark, path)
+    assert writers._latest_manifest(path)["version"] == 2
+    assert sorted(
+        map(tuple, dedup.read_band_checkpoint(spark, path, "doc_id")
+            .collect())
+    ) == want
 
-    stats = dedup.compact_band_checkpoint(spark, path)  # heals, then runs
-    assert not os.path.exists(path + ".swap-in-progress")
+    stats = dedup.compact_band_checkpoint(spark, path)
     got = sorted(
         map(tuple, dedup.read_band_checkpoint(spark, path, "doc_id")
             .collect())
     )
     assert got == want
-    per_dir = _bucket_files(path, "band=*/sigb=*")
-    assert per_dir and all(n == 1 for n in per_dir.values()), per_dir
-    assert stats["hwm"] == 0  # markers carried through the healed swap
+    per_cell = _cell_files(path)
+    assert per_cell and all(n == 1 for n in per_cell.values()), per_cell
+    assert stats["hwm"] == 0  # the high-water mark carried forward
 
 
 def test_streaming_ingest_with_compact_every_matches_plain(
     spark, tmp_path
 ):
     """r10: the streaming loops fold compaction into their maintenance
-    cadence (``compact_every=N``, run AFTER the Nth batch's marker
-    lands). A drain with compact_every=1 must admit exactly what the
+    cadence (``compact_every=N``, run AFTER the Nth batch's publish). A drain with compact_every=1 must admit exactly what the
     uncompacted drain admits, and leave every touched bucket at one
     file."""
     import time as _time
@@ -310,109 +343,70 @@ def test_streaming_ingest_with_compact_every_matches_plain(
             r.doc_id for r in spark.read.parquet(out).collect()
         )
         if every:
-            per_dir = _bucket_files(band_path, "band=*/sigb=*")
-            assert per_dir and all(n == 1 for n in per_dir.values()), per_dir
+            per_cell = _cell_files(band_path)
+            assert per_cell and all(n == 1 for n in per_cell.values()), (
+                per_cell
+            )
             # the loop committed both batches before compacting each time
             assert dedup.ingest_high_water_mark(band_path) == 1
     assert admitted["compacted"] == admitted["plain"] == [102, 103, 203]
 
 
-def test_marker_race_first_publisher_wins_whole(tmp_path, monkeypatch):
-    """VERDICT r10 advisory (closed r11): two PROCESSES racing the same
-    uncommitted batch id can never interleave marker content — each
-    stages a uniquely-named tmp and os.link publishes whole, so the
-    first publisher's fingerprint stands byte-complete and the loser's
-    is discarded byte-complete. Simulate the worst interleaving: the
-    racer publishes BETWEEN our stage write and our link."""
-    import os
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
-
-    path = str(tmp_path / "state")
-    real_link = os.link
-    state = {"raced": False}
-
-    def racing_link(src, dst):
-        if not state["raced"]:
-            state["raced"] = True
-            # the racing process commits its own fingerprint first
-            dedup._mark_batch_committed(path, 7, "racer:fp")
-        return real_link(src, dst)
-
-    monkeypatch.setattr(os, "link", racing_link)
-    dedup._mark_batch_committed(path, 7, "ours:fp")
-    monkeypatch.undo()
-    assert state["raced"]
-    # first publisher's content stands, whole — never a mix, never ours
-    assert dedup._committed_fingerprint(path, 7) == "racer:fp"
-    # no stale stage files left behind by either writer
-    hwm_dir = dedup._hwm_dir(path)
-    assert [n for n in os.listdir(hwm_dir) if n.endswith(".tmp")] == []
-    # replaying the loser again is a no-op (EEXIST short-circuit)
-    dedup._mark_batch_committed(path, 7, "ours:fp")
-    assert dedup._committed_fingerprint(path, 7) == "racer:fp"
-
-
-def test_sidecar_params_memo_hits_and_invalidates(spark, tmp_path):
-    """r15 optimization: ``read_band_params``/``read_chunk_params``
-    memoize per (sidecar path, mtime) so the per-micro-batch param read
-    in the ingest loops stops costing a Spark job. Pins the contract:
-
-    1. an unchanged sidecar is answered from the memo (loader not
-       re-invoked) and the memo hands out COPIES (caller mutation must
-       not poison later reads);
-    2. a re-seed (``mode='overwrite'``) rewrites the sidecar directory,
-       which changes its mtime and MUST invalidate the entry — stale
-       params here would mis-band every subsequent probe.
-    """
+def test_marker_race_first_publisher_wins_whole(spark, tmp_path,
+                                               monkeypatch):
+    """Two writers racing the same uncommitted batch id can never both
+    commit: a manifest is claimed with ``put_if_absent`` (a uniquely
+    named stage, then ``os.link``), so the first publisher's commit
+    stands whole. Simulate the worst interleaving: the racer publishes
+    BETWEEN our stage write and our link. With the same content ours
+    becomes a no-op; with other content ours is refused."""
     corpus = spark.createDataFrame(
-        [(d, _rngtext(d)) for d in range(10)], "doc_id long, text string"
+        [(d, _rngtext(d)) for d in range(5)], "doc_id long, text string"
     )
-    path = str(tmp_path / "bands")
-    dedup.write_band_checkpoint(corpus, path, "doc_id", "text",
-                                num_hashes=12, band_rows=3, n_sig_buckets=4)
-    first = dedup.read_band_params(spark, path)
-    assert (first["num_hashes"], first["band_rows"],
-            first["n_sig_buckets"]) == (12, 3, 4)
+    batch = spark.createDataFrame(
+        [(100, _freshtext(1))], "doc_id long, text string"
+    )
+    other = spark.createDataFrame(
+        [(100, _freshtext(2))], "doc_id long, text string"
+    )
+    for ours, fails in ((batch, False), (other, True)):
+        path = str(tmp_path / f"state_{int(fails)}")
+        dedup.write_band_checkpoint(corpus, path, "doc_id", "text")
+        real_link = os.link
+        state = {"raced": False}
 
-    # 1a. memo hit: loader must not run while the sidecar is unchanged
-    sidecar = f"{path}/_band_params"
-    loads = {"n": 0}
+        def racing_link(src, dst):
+            if not state["raced"]:
+                state["raced"] = True
+                # the racing process commits batch 7 first
+                dedup.write_band_checkpoint(
+                    batch, path, "doc_id", "text", mode="append",
+                    batch_id=7,
+                )
+            return real_link(src, dst)
 
-    def loader():
-        loads["n"] += 1
-        return {"marker": 1}
-
-    assert dedup._memoized_sidecar(spark, sidecar, loader) == first
-    assert loads["n"] == 0
-    # 1b. copies out: mutating the answer must not change the memo
-    got = dedup.read_band_params(spark, path)
-    got["num_hashes"] = -99
-    assert dedup.read_band_params(spark, path)["num_hashes"] == 12
-
-    # 2. re-seed with different params -> mtime change -> fresh read
-    dedup.write_band_checkpoint(corpus, path, "doc_id", "text",
-                                num_hashes=8, band_rows=2, n_sig_buckets=2,
-                                mode="overwrite")
-    second = dedup.read_band_params(spark, path)
-    assert (second["num_hashes"], second["band_rows"],
-            second["n_sig_buckets"]) == (8, 2, 2)
-
-    # chunk twin: same memo, same invalidation rule
-    cpath = str(tmp_path / "chunks")
-    dedup.write_chunk_checkpoint(corpus, cpath, "doc_id", "text",
-                                 chunk_words=5, n_buckets=4)
-    assert dedup.read_chunk_params(spark, cpath) == {
-        "chunk_words": 5, "n_buckets": 4,
-    }
-    csidecar = f"{cpath}/_chunk_params"
-    assert dedup._memoized_sidecar(spark, csidecar, loader) == {
-        "chunk_words": 5, "n_buckets": 4,
-    }
-    assert loads["n"] == 0
-    dedup.write_chunk_checkpoint(corpus, cpath, "doc_id", "text",
-                                 chunk_words=7, n_buckets=2,
-                                 mode="overwrite")
-    assert dedup.read_chunk_params(spark, cpath) == {
-        "chunk_words": 7, "n_buckets": 2,
-    }
+        with monkeypatch.context() as m:
+            m.setattr(os, "link", racing_link)
+            if fails:
+                with pytest.raises(ValueError, match="DIFFERENT content"):
+                    dedup.write_band_checkpoint(
+                        ours, path, "doc_id", "text", mode="append",
+                        batch_id=7,
+                    )
+            else:
+                dedup.write_band_checkpoint(
+                    ours, path, "doc_id", "text", mode="append", batch_id=7
+                )
+        assert state["raced"]
+        # one commit of batch 7, the racer's, whole
+        snaps = writers.list_parquet_snapshots(path)
+        assert [s["src_batch"] for s in snaps] == [-1, 7]
+        ids = {r.doc_id for r in dedup.read_band_checkpoint(
+            spark, path, "doc_id").collect()}
+        assert ids == set(range(5)) | {100}
+        assert writers._latest_manifest(path)["rows"] == len(
+            dedup.read_band_checkpoint(spark, path, "doc_id").collect()
+        )
+        # no stale stage files left behind by either writer
+        snap_dir = os.path.join(path, "_snapshots")
+        assert [n for n in os.listdir(snap_dir) if n.endswith(".tmp")] == []

@@ -4,13 +4,18 @@ Band state (d11/d20/d22) and chunk first-occurrence state (d14/d19) share
 one implementation in ``llmdata/dedup.py``. Several contracts were only
 ever tested on one kind; this file runs them on the other:
 
-1. a seed written with a batch id is refused (it would switch dedup off
-   for that batch), for both kinds;
+1. a seed written with a batch id is refused (a seed commits no batch),
+   for both kinds;
 2. the hwm-zero incarnation collision is refused for chunk state;
-3. compaction and stamp migration heal a mid-swap crash for chunk state;
+3. a chunk compaction that crashes before its publish leaves the old
+   version readable, and the next compaction succeeds;
 4. band ingest releases its cached batch frame when validation fails;
 5. replaying the newest committed batch is a no-op, for both kinds;
-6. the ingest family (d11, d14, d19, d20, d22) returns the same result
+6. a checkpoint in the pre-manifest format is refused with the fix
+   named, for both kinds;
+7. reading a checkpoint plans without running a Spark job, for both
+   kinds;
+8. the ingest family (d11, d14, d19, d20, d22) returns the same result
    under a different physical plan — AQE off, no broadcast joins, an odd
    shuffle partition count and no whole-stage codegen — and matches its
    DuckDB oracle under both.
@@ -20,14 +25,13 @@ from __future__ import annotations
 
 import glob
 import hashlib
-import json
 import os
-import shutil
+from collections import Counter
 
 import pytest
-from pyspark.sql import functions as F
 
 from pyspark_bigdata_sars_cov_2_analysis_spark import plans
+from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers as W
 from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
 from tests.conftest import SF_TEST
 from tests.oracle_harness import _canon_rows, duck_connection
@@ -50,11 +54,9 @@ def _rows(spark, out: str) -> list:
     ids=["band", "chunk"],
 )
 def test_seed_with_batch_id_refused(spark, tmp_path, writer, ingest):
-    """A seed is stamped -1 by definition. A seed stamped with batch 0
-    wrote no commit marker, so the hwm stayed -1 and batch 0's ingest
-    excluded every seed row as its own "torn append": an exact duplicate
-    of the seed was admitted. The writer now refuses that seed, and the
-    default seed dedups batch 0 as it should."""
+    """A seed commits no batch, so a seed given batch 0 is refused: it
+    would claim a commit the state does not hold. The default seed
+    dedups batch 0 as it should."""
     seed = spark.createDataFrame([(1, DOC)], "doc_id long, text string")
     dup = spark.createDataFrame([(2, DOC)], "doc_id long, text string")
     path, out = str(tmp_path / "state"), str(tmp_path / "out")
@@ -79,9 +81,9 @@ def test_seed_with_batch_id_refused(spark, tmp_path, writer, ingest):
 )
 def test_committed_batch_replay_is_noop(spark, tmp_path, writer, ingest):
     """Replaying the newest committed batch with the same content changes
-    nothing: its commit marker, written last, proves the output and the
-    state rows already landed, so the replay appends no state rows
-    again and leaves the output as it was."""
+    nothing: its manifest, published last, proves the output and the
+    state rows already landed, so the replay adds no state rows again
+    and leaves the output as it was."""
     seed = spark.createDataFrame([(1, DOC)], "doc_id long, text string")
     batch = spark.createDataFrame(
         [(2, "an unrelated document about shuffle spill and executor memory"),
@@ -91,11 +93,11 @@ def test_committed_batch_replay_is_noop(spark, tmp_path, writer, ingest):
     path, out = str(tmp_path / "state"), str(tmp_path / "out")
     writer(seed, path, "doc_id", "text")
     ingest(batch, 0, path, out)
-    state_rows = spark.read.parquet(path).count()
+    state = W._latest_manifest(path)
     first = _rows(spark, out)
-    assert first and state_rows
+    assert first and state["rows"]
     ingest(batch, 0, path, out)
-    assert spark.read.parquet(path).count() == state_rows
+    assert W._latest_manifest(path) == state
     assert _rows(spark, out) == first
     assert dedup.ingest_high_water_mark(path) == 0
 
@@ -124,8 +126,6 @@ def test_chunk_hwm_zero_incarnation_collision_refused(spark, tmp_path):
     first = _rows(spark, out)
     dedup.chunk_ingest_batch_idempotent(x, 0, path, out)
     assert _rows(spark, out) == first
-    # a replay may append duplicate state rows (harmless: the probe is an
-    # anti-join on lh), so the state is pinned after it
     state = sorted(
         map(tuple, dedup.read_chunk_checkpoint(spark, path, "doc_id").collect())
     )
@@ -137,17 +137,11 @@ def test_chunk_hwm_zero_incarnation_collision_refused(spark, tmp_path):
     ) == state
 
 
-def _fake_mid_swap_crash(path: str, staged: str, backup: str) -> None:
-    """The worst crash point of the staged swap: the table has moved to
-    the backup, the verified staged copy is in place, the marker is on
-    disk and nothing is at ``path``."""
-    shutil.copytree(path, staged)
-    shutil.move(path, backup)
-    with open(path + ".swap-in-progress", "w") as fh:
-        json.dump({"path": path, "staged": staged, "backup": backup}, fh)
-
-
-def test_chunk_compact_rerun_heals_mid_swap_crash(spark, tmp_path):
+def test_chunk_compact_rerun_heals_mid_swap_crash(spark, tmp_path,
+                                                  monkeypatch):
+    """Chunk form of the band test in test_checkpoint_compaction.py: a
+    compaction that crashes between its rewrite and its publish leaves
+    the old version readable, and the next one completes."""
     corpus = spark.createDataFrame(
         [(d, " ".join(f"d{d}w{i}" for i in range(20))) for d in range(20)],
         "doc_id long, text string",
@@ -164,59 +158,106 @@ def test_chunk_compact_rerun_heals_mid_swap_crash(spark, tmp_path):
     want = sorted(
         map(tuple, dedup.read_chunk_checkpoint(spark, path, "doc_id").collect())
     )
-    _fake_mid_swap_crash(path, path + ".compacting", path + ".pre-compaction")
-    assert not os.path.exists(path)
 
-    stats = dedup.compact_chunk_checkpoint(spark, path)  # heals, then runs
-    assert not os.path.exists(path + ".swap-in-progress")
+    def crash(*_args, **_kw):
+        raise RuntimeError("crash before publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(W, "_link_manifest", crash)
+        with pytest.raises(RuntimeError, match="crash before publish"):
+            dedup.compact_chunk_checkpoint(spark, path)
+    assert sorted(
+        map(tuple, dedup.read_chunk_checkpoint(spark, path, "doc_id").collect())
+    ) == want
+
+    stats = dedup.compact_chunk_checkpoint(spark, path)
     got = sorted(
         map(tuple, dedup.read_chunk_checkpoint(spark, path, "doc_id").collect())
     )
     assert got == want and stats["rows"] == len(want)
-    per_dir = {
-        d: len(glob.glob(os.path.join(d, "*.parquet")))
-        for d in glob.glob(os.path.join(path, "lhb=*"))
-    }
-    assert per_dir and all(n == 1 for n in per_dir.values()), per_dir
-    assert stats["hwm"] == 0  # markers carried through the healed swap
+    per_cell = Counter(
+        f.split("/")[-2] for f in W._latest_manifest(path)["files"]
+    )
+    assert per_cell and all(n == 1 for n in per_cell.values()), per_cell
+    assert stats["hwm"] == 0  # the high-water mark carried forward
     assert dedup.read_chunk_params(spark, path) == {
         "chunk_words": 10, "n_buckets": 8,
     }
 
 
-def test_chunk_stamp_migration_rerun_heals_mid_swap_crash(spark, tmp_path):
-    """Chunk form of the band test in test_streaming.py: a legacy
-    (unstamped) chunk checkpoint whose migration crashed between the
-    swap's renames is healed by re-running the migration, which reads
-    the sidecar only after recovery."""
+@pytest.mark.parametrize(
+    "writer, ingest, read, legacy",
+    [
+        (dedup.write_band_checkpoint, dedup.ingest_batch_idempotent,
+         dedup.read_band_checkpoint, "_band_params"),
+        (dedup.write_chunk_checkpoint, dedup.chunk_ingest_batch_idempotent,
+         dedup.read_chunk_checkpoint, "_ingest_hwm"),
+    ],
+    ids=["band", "chunk"],
+)
+def test_pre_manifest_checkpoint_refused(spark, tmp_path, writer, ingest,
+                                         read, legacy):
+    """A checkpoint written in the pre-manifest format (a parameter
+    sidecar, commit-marker files and no ``_snapshots/``) is refused on
+    read, ingest and append with the fix named; re-seeding it with
+    mode='overwrite' replaces it, and the checkpoint then holds only
+    manifests and data."""
+    seed = spark.createDataFrame([(1, DOC)], "doc_id long, text string")
+    path, out = tmp_path / "state", str(tmp_path / "out")
+    spark.createDataFrame([(1, "x")], "doc_id long, lh string").write.parquet(
+        str(path / "part")
+    )
+    os.makedirs(path / legacy)
+    with pytest.raises(ValueError, match="pre-manifest.*mode='overwrite'"):
+        read(spark, str(path), "doc_id")
+    with pytest.raises(ValueError, match="pre-manifest.*mode='overwrite'"):
+        ingest(seed, 0, str(path), out)
+    with pytest.raises(ValueError, match="pre-manifest.*mode='overwrite'"):
+        writer(seed, str(path), "doc_id", "text", mode="append", batch_id=0)
+    with pytest.raises(ValueError, match="pre-manifest"):
+        dedup.ingest_high_water_mark(str(path))
+    writer(seed, str(path), "doc_id", "text", mode="overwrite")
+    assert sorted(os.listdir(path)) == ["_snapshots", "data"]
+    assert read(spark, str(path), "doc_id").count() > 0
+    assert dedup.ingest_high_water_mark(str(path)) == -1
+
+
+@pytest.mark.parametrize(
+    "writer, read",
+    [
+        (dedup.write_band_checkpoint, dedup.read_band_checkpoint),
+        (dedup.write_chunk_checkpoint, dedup.read_chunk_checkpoint),
+    ],
+    ids=["band", "chunk"],
+)
+def test_checkpoint_read_plans_without_spark_jobs(spark, tmp_path, writer,
+                                                 read):
+    """Reading a checkpoint takes its file list, parameters and schema
+    from the newest manifest, so building and planning the read runs no
+    Spark job (no parameter read, no schema inference), with or without
+    cell pruning."""
     corpus = spark.createDataFrame(
-        [(d, f"some chunked text body number {d} for the span dedup state")
-         for d in range(4)],
+        [(d, f"{DOC} number {d} of the corpus") for d in range(6)],
         "doc_id long, text string",
     )
-    path = str(tmp_path / "chunks")
-    (
-        dedup._doc_chunks(corpus, "doc_id", "text", 10)
-        .groupBy("lh")
-        .agg(F.min(F.struct(F.col("doc_id").alias("id"), "pos")).alias("fo"))
-        .select("lh", F.col("fo.id").alias("doc_id"), F.col("fo.pos").alias("pos"))
-        .write.parquet(path)
+    path = str(tmp_path / "state")
+    grid = "n_sig_buckets" if writer is dedup.write_band_checkpoint else (
+        "n_buckets"
     )
-    spark.createDataFrame([(10,)], "chunk_words int").coalesce(1).write.parquet(
-        f"{path}/_chunk_params"
-    )
-    before = spark.read.parquet(path).count()
-    _fake_mid_swap_crash(path, path + ".migrating", path + ".pre-stamp-migration")
-
-    res = dedup.migrate_chunk_checkpoint_stamps(spark, path)
-    assert res["rows"] == before and res["seed_rows"] == before
-    assert res["had_stamp_col"] is False
-    raw = spark.read.parquet(path)  # no mergeSchema: stamps are physical
-    assert raw.count() == before
-    assert raw.where(F.col("src_batch") != -1).count() == 0
-    assert dedup.read_chunk_params(spark, path) == {
-        "chunk_words": 10, "n_buckets": 0,
-    }
+    writer(corpus, path, "doc_id", "text", **{grid: 2})
+    sc = spark.sparkContext
+    group = f"checkpoint-read-plan-{grid}"
+    sc.setJobGroup(group, "plan a checkpoint read")
+    try:
+        for cells in (None, [1]):
+            kw = {"sig_buckets" if grid == "n_sig_buckets" else "buckets": cells}
+            df = read(spark, path, "doc_id", **kw)
+            df._jdf.queryExecution().executedPlan()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert df.count() > 0
 
 
 def test_band_ingest_unpersists_on_validation_error(spark, tmp_path):

@@ -207,24 +207,36 @@ def test_snapshot_table_end_to_end_with_file_uri(spark, tmp_path):
     assert set(data_dirs) == live
 
 
-def test_ingest_markers_end_to_end_with_file_uri(tmp_path):
+def test_ingest_markers_end_to_end_with_file_uri(spark, tmp_path):
+    """A dedup checkpoint seeded and fed two batches through a
+    ``file://`` URI reads the same high-water mark, parameters and
+    batch fingerprint through the URI as through the plain path: both
+    spellings address one manifest set."""
     from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup as D
 
     uri = f"file://{tmp_path}/ckpt"
     local = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
+    docs = spark.createDataFrame(
+        [(d, f"document number {d} about file uri checkpoints and seams")
+         for d in range(6)],
+        "doc_id long, text string",
+    )
     assert D.ingest_high_water_mark(uri) == -1
-    D._mark_batch_committed(uri, 0, "3:12345")
-    D._mark_batch_committed(uri, 1, "2:777")
-    # a replay's duplicate marker is a no-op and never rewrites content
-    D._mark_batch_committed(uri, 1, "999:999")
-    assert D.ingest_high_water_mark(uri) == 1
-    assert D._committed_fingerprint(uri, 1) == "2:777"
-    # URI and plain spellings address ONE marker set
-    assert D.ingest_high_water_mark(local) == 1
-    assert D._committed_fingerprint(local, 0) == "3:12345"
-    assert sorted(os.listdir(os.path.join(local, "_ingest_hwm"))) == [
-        "b0", "b1",
-    ]
+    D.write_chunk_checkpoint(docs.where("doc_id < 2"), uri, "doc_id", "text")
+    D.chunk_ingest_batch_idempotent(docs.where("doc_id IN (2, 3)"), 0, uri, out)
+    D.chunk_ingest_batch_idempotent(docs.where("doc_id > 3"), 1, uri, out)
+    assert D.ingest_high_water_mark(uri) == D.ingest_high_water_mark(local) == 1
+    assert D.read_chunk_params(spark, uri) == D.read_chunk_params(
+        spark, local
+    ) == {"chunk_words": 10, "n_buckets": 64}
+    via_uri, via_path = W._latest_manifest(uri), W._latest_manifest(local)
+    assert via_uri == via_path
+    assert via_uri["fingerprint"] == D._batch_fingerprint(
+        docs.where("doc_id > 3"), "doc_id", "text"
+    )
+    assert sorted(os.listdir(local)) == ["_snapshots", "data"]
+    assert D.read_chunk_checkpoint(spark, uri, "doc_id").count() == 6
 
 
 def test_manifest_is_json_complete_after_claim(spark, tmp_path):

@@ -581,82 +581,3 @@ def test_zorder_null_dimensions_handled(spark, tmp_path):
     back = spark.read.parquet(*files3)
     assert back.count() == 256
     assert back.where("y IS NULL").count() == 37
-
-
-def test_recover_staged_swap_rolls_forward_and_back(spark, tmp_path):
-    """ADVICE r7: a crash between the two swap renames must leave a
-    recoverable state, not a missing table. Simulate each crash point
-    against the marker protocol and assert recover_staged_swap restores
-    the table (forward when the verified staged dir survived, back to
-    the backup otherwise) and is a no-op when nothing is wrong."""
-    import json as _json
-    import os as _os
-    import shutil
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        recover_staged_swap,
-    )
-
-    def mktable(p, tag):
-        spark.createDataFrame([(1, tag)], "id long, v string").write.mode(
-            "overwrite"
-        ).parquet(p)
-
-    # crash AFTER first rename (table moved to backup, staged intact)
-    path = str(tmp_path / "t1")
-    staged, backup = path + "_merging", path + "_premerge"
-    mktable(staged, "new")
-    mktable(backup, "old")
-    with open(path + ".swap-in-progress", "w") as f:
-        _json.dump({"path": path, "staged": staged, "backup": backup}, f)
-    assert recover_staged_swap(path) == {"action": "rolled_forward"}
-    assert spark.read.parquet(path).collect()[0].v == "new"
-    assert not _os.path.exists(path + ".swap-in-progress")
-    assert not _os.path.exists(backup)
-
-    # staged dir lost too (e.g. crash during its move): roll back
-    path2 = str(tmp_path / "t2")
-    backup2 = path2 + "_premerge"
-    mktable(backup2, "old")
-    with open(path2 + ".swap-in-progress", "w") as f:
-        _json.dump(
-            {"path": path2, "staged": path2 + "_merging", "backup": backup2},
-            f,
-        )
-    assert recover_staged_swap(path2) == {"action": "rolled_back"}
-    assert spark.read.parquet(path2).collect()[0].v == "old"
-
-    # healthy table: no marker -> no-op
-    assert recover_staged_swap(path2)["action"] == "none"
-    shutil.rmtree(path2)
-
-
-def test_recover_staged_swap_cleanup_branch(spark, tmp_path):
-    """Crash AFTER the second rename but before marker removal: the
-    table is already in place — recovery must only clean the marker and
-    leftover backup, never touch the table."""
-    import json as _json
-    import os as _os
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        recover_staged_swap,
-    )
-
-    path = str(tmp_path / "t")
-    backup = path + "_premerge"
-    spark.createDataFrame([(1, "new")], "id long, v string").write.parquet(
-        path
-    )
-    spark.createDataFrame([(1, "old")], "id long, v string").write.parquet(
-        backup
-    )
-    with open(path + ".swap-in-progress", "w") as f:
-        _json.dump(
-            {"path": path, "staged": path + "_merging", "backup": backup}, f
-        )
-    assert recover_staged_swap(path) == {"action": "cleanup"}
-    assert spark.read.parquet(path).collect()[0].v == "new"
-    assert not _os.path.exists(backup)
-    assert not _os.path.exists(path + ".swap-in-progress")
-
-

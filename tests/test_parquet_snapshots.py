@@ -1,15 +1,18 @@
-"""Snapshot-versioned parquet tables (r10) — MVCC manifests closing the
-documented concurrent-reader gap of the staged-swap maintenance ops.
+"""Snapshot-versioned parquet tables (r10) — MVCC manifests over plain
+parquet, the one commit protocol for persisted state: a manifest
+publish is the commit, so readers never see a directory mid-rewrite.
 
 Pins: version monotonicity, overwrite vs manifest-level append (appends
 never rewrite existing bytes), time travel, reader isolation from a
 concurrent publish, crashed-writer invisibility, version-claim races
-failing safe, and vacuum (referenced files survive, orphans and dropped
-versions go).
+failing safe, no zero-row part files in a manifest, and vacuum
+(referenced files survive — in nested partition directories too —
+orphans and dropped versions go).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -1251,3 +1254,79 @@ def test_publish_rows_from_footers_and_torn_footer_refuses(spark, tmp_path):
         f.truncate(10)
     with pytest.raises(RuntimeError, match="unreadable parquet footer"):
         W._footer_row_count([data_file])
+
+
+def test_publish_drops_empty_part_files(spark, tmp_path):
+    """Spark writes a zero-row part file for an empty first input
+    partition. A publish must not name it: every read of the version
+    would open it, and with no stats no ``where=`` read could prune it.
+    A one-row frame over four partitions publishes exactly one file,
+    with stats for every file; a version whose rows are all gone keeps
+    one (empty) file to carry its schema."""
+    path = str(tmp_path / "tbl")
+    one_row = spark.range(0, 4, 1, 4).where("id = 3").selectExpr(
+        "id", "id * 2 AS v"
+    )
+    W.write_parquet_snapshot(one_row, path, stats_columns=["id"])
+    man = W._latest_manifest(path)
+    assert len(man["files"]) == 1 and man["rows"] == 1
+    assert set(man["stats"]) == set(man["files"])
+    W.write_parquet_snapshot(one_row, path, mode="append")
+    man = W._latest_manifest(path)
+    assert len(man["files"]) == 2 and set(man["stats"]) == set(man["files"])
+    # every data file on disk is one the manifest names
+    on_disk = set(glob.glob(f"{path}/data/**/*.parquet", recursive=True))
+    assert on_disk == {W._local_path(f) for f in man["files"]}
+    W.delete_from_snapshot(spark, path, "id = 3")
+    man = W._latest_manifest(path)
+    assert len(man["files"]) == 1 and man["rows"] == 0
+    assert W.read_parquet_snapshot(spark, path).count() == 0
+
+
+def test_vacuum_keeps_live_nested_data_dirs(spark, tmp_path):
+    """A table whose versions are written partitioned
+    (``data/v=<N>-<uuid>/k=<k>/part-….parquet``, the dedup checkpoint
+    layout) keeps every live file through a ``keep=1`` vacuum with no
+    orphan grace: a data dir is live while a kept manifest names a file
+    under it, at any depth. The dropped version's own dir goes."""
+    import time
+
+    path = str(tmp_path / "tbl")
+    data = os.path.join(path, "data")
+    files = {}
+    for v, lo in ((1, 0), (2, 10)):
+        d = os.path.join(data, f"v={v:08d}-abcd000{v}")
+        _df(spark, lo, lo + 10).selectExpr("id", "v", "id % 2 AS k").write \
+            .partitionBy("k").parquet(d)
+        files[v] = sorted(glob.glob(f"{d}/**/*.parquet", recursive=True))
+    schema = [["id", "bigint"], ["v", "bigint"]]
+    for v, names in ((1, files[1]), (2, files[1] + files[2])):
+        assert W._link_manifest(path, v, {
+            "version": v, "files": names, "rows": 10 * v, "mode": "append",
+            "schema": schema, "published_utc": time.time(),
+        })
+    # version 3 rewrites the table into one new nested dir
+    d3 = os.path.join(data, "v=00000003-abcd0003")
+    _df(spark, 0, 20).selectExpr("id", "v", "id % 2 AS k").write \
+        .partitionBy("k").parquet(d3)
+    assert W._link_manifest(path, 3, {
+        "version": 3,
+        "files": sorted(glob.glob(f"{d3}/**/*.parquet", recursive=True)),
+        "rows": 20,
+        "mode": "compact", "schema": schema, "published_utc": time.time(),
+    })
+    W.vacuum_parquet_snapshots(path, keep=2, orphan_grace_sec=0)
+    # versions 2 and 3 stay: v1's dir is live through version 2
+    assert all(os.path.exists(f) for f in files[1] + files[2])
+    assert sorted(
+        r.id for r in W.read_parquet_snapshot(spark, path, version=2)
+        .collect()
+    ) == list(range(20))
+    rep = W.vacuum_parquet_snapshots(path, keep=1, orphan_grace_sec=0)
+    assert rep["dropped_versions"] == [2]
+    assert sorted(os.listdir(data)) == ["v=00000003-abcd0003"]
+    live = W._latest_manifest(path)["files"]
+    assert live and all(os.path.exists(f) for f in live)
+    assert sorted(
+        r.id for r in W.read_parquet_snapshot(spark, path).collect()
+    ) == list(range(20))

@@ -893,11 +893,11 @@ def test_rate_threshold_hex_overflow_clamp(spark):
 
 
 def test_band_checkpoint_append_validates_sidecar(spark, tmp_path):
-    """ADVICE r6: mode='append' must VALIDATE the existing parameter
-    sidecar, not silently re-stamp it — re-stamping would relabel old
-    band rows (computed under different k/num_hashes/band_rows) with the
-    new parameters, the exact undetected zero-match state the sidecar
-    exists to prevent."""
+    """ADVICE r6: mode='append' must VALIDATE the recorded parameters,
+    not silently re-stamp them — re-stamping would relabel old band rows
+    (computed under different k/num_hashes/band_rows) with the new
+    parameters, the exact undetected zero-match state the recorded
+    parameters exist to prevent."""
     import pytest
 
     from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
@@ -908,8 +908,8 @@ def test_band_checkpoint_append_validates_sidecar(spark, tmp_path):
     )
     path = str(tmp_path / "bands")
     dedup.write_band_checkpoint(docs, path, "doc_id", "text", num_hashes=12)
-    # mismatched parameters on append must raise, and the sidecar must
-    # keep the ORIGINAL stamp
+    # mismatched parameters on append must raise, and the checkpoint
+    # must keep the ORIGINAL parameters
     with pytest.raises(ValueError, match="band checkpoint"):
         dedup.write_band_checkpoint(
             docs, path, "doc_id", "text", num_hashes=24, mode="append",
@@ -918,14 +918,17 @@ def test_band_checkpoint_append_validates_sidecar(spark, tmp_path):
     assert dedup.read_band_checkpoint(
         spark, path, "doc_id", num_hashes=12
     ).count() > 0
+    assert dedup.read_band_params(spark, path)["num_hashes"] == 12
     # matching parameters append fine and double the band rows
-    before = spark.read.parquet(path).count()
+    before = dedup.read_band_checkpoint(spark, path, "doc_id").count()
     dedup.write_band_checkpoint(
         docs.withColumn("doc_id", F.col("doc_id") + 100),
         path, "doc_id", "text", num_hashes=12, mode="append",
         batch_id=-1,
     )
-    assert spark.read.parquet(path).count() == 2 * before
+    assert dedup.read_band_checkpoint(
+        spark, path, "doc_id"
+    ).count() == 2 * before
 
 
 def test_chunk_dedup_planted_spans(spark):
@@ -1664,58 +1667,6 @@ def test_quality_gate_frame_equals_struct_form(spark):
     assert any("repetitious" in r[2] for r in want if r[0] == 990002)
 
 
-def test_stamp_migration_invariants_on_random_mixed_states(spark, tmp_path):
-    """Seeded sweep of the r9 stamp migration over random MIXED chunk
-    checkpoints (stamped files from several batches interleaved with
-    unstamped pre-stamp files, the real upgrade state): row multiset
-    preserved, every existing stamp kept exactly, every legacy row
-    seed-stamped -1, sidecar intact, and a second run is a fixpoint."""
-    import random
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
-
-    for seed in (7, 41):
-        rng = random.Random(seed)
-        rows = [
-            (f"h{rng.randrange(500):03d}", rng.randrange(50),
-             rng.randrange(8))
-            for _ in range(200)
-        ]
-        # random stamp assignment: ~half legacy (no column), the rest
-        # spread over seed (-1) and batches 0..3
-        stamped = [(lh, i, p, rng.choice([-1, 0, 1, 2, 3]))
-                   for (lh, i, p) in rows[:100]]
-        legacy = rows[100:]
-        path = str(tmp_path / f"mixed_{seed}")
-        spark.createDataFrame(
-            stamped, "lh string, doc_id long, pos long, src_batch int"
-        ).write.parquet(path)
-        spark.createDataFrame(
-            legacy, "lh string, doc_id long, pos long"
-        ).write.mode("append").parquet(path)
-        spark.createDataFrame(
-            [(10, 0)], "chunk_words int, n_buckets int"
-        ).coalesce(1).write.parquet(f"{path}/_chunk_params")
-
-        res = dedup.migrate_chunk_checkpoint_stamps(spark, path)
-        assert res["rows"] == len(rows) and res["had_stamp_col"] is True
-
-        def state():
-            return sorted(
-                map(tuple, spark.read.parquet(path).select(
-                    "lh", "doc_id", "pos", "src_batch").collect())
-            )
-
-        got = state()
-        want = sorted(stamped + [(lh, i, p, -1) for (lh, i, p) in legacy])
-        assert got == want, f"seed={seed}"
-        assert res["seed_rows"] == sum(1 for r in want if r[3] == -1)
-        assert dedup.read_chunk_params(spark, path) == {"chunk_words": 10, "n_buckets": 0}
-        # fixpoint: migrating an already-migrated state changes nothing
-        res2 = dedup.migrate_chunk_checkpoint_stamps(spark, path)
-        assert res2["rows"] == len(rows) and state() == want
-
-
 def test_t15_empty_document_edge_matches_oracle(spark, tmp_path):
     """Review r9: a whitespace-only/empty document has ZERO planted
     sentences, where a bare divide diverges between the engines (Spark
@@ -2379,16 +2330,16 @@ def test_lsh_bands_refuses_out_of_range_minhash(spark):
 def test_band_checkpoint_sig_encoding_migration(spark, tmp_path):
     """Optimization r16 (VERDICT r15 #8): band_sig moved from the
     comma-joined decimal string to fixed-width binary, recorded in the
-    parameter sidecar as sig_encoding='bin32-v2'. A pre-r16 checkpoint
-    (sidecar without the field == implicit 'csv-v1') must be REFUSED —
-    on read AND on append — with the re-seed migration named, and a
-    sidecar claiming any OTHER encoding refuses the same way (validated
-    both directions); a same-version checkpoint round-trips."""
+    manifest ``params`` as sig_encoding='bin32-v2'. A checkpoint whose
+    params lack the field (== implicit 'csv-v1') must be REFUSED — on
+    read AND on append — with the re-seed migration named, and params
+    claiming any OTHER encoding refuse the same way (validated both
+    directions); a same-version checkpoint round-trips."""
+    import time
+
     import pytest
 
-    from pyspark_bigdata_sars_cov_2_analysis_spark.functions.localrel import (
-        local_frame,
-    )
+    from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers as W
     from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
 
     corpus = spark.createDataFrame(
@@ -2399,12 +2350,17 @@ def test_band_checkpoint_sig_encoding_migration(spark, tmp_path):
     dedup.write_band_checkpoint(corpus, path, "doc_id", "text")
     # same-version round-trip works
     assert dedup.read_band_checkpoint(spark, path, "doc_id").count() > 0
-    # simulate a pre-r16 sidecar: same params, no sig_encoding column
-    local_frame(
-        spark, [(3, 12, 3, 16)],
-        "k int, num_hashes int, band_rows int, n_sig_buckets int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_band_params")
-    dedup._PARAMS_MEMO.clear()
+
+    def republish(params: dict) -> None:
+        snap = W._latest_manifest(path)
+        assert W._link_manifest(path, snap["version"] + 1, {
+            **snap, "version": snap["version"] + 1, "params": params,
+            "published_utc": time.time(),
+        })
+
+    # simulate a pre-r16 checkpoint: same params, no sig_encoding
+    republish({"k": 3, "num_hashes": 12, "band_rows": 3,
+               "n_sig_buckets": 16})
     with pytest.raises(ValueError, match="csv-v1.*Migrate|Migrate.*csv-v1"):
         dedup.read_band_checkpoint(spark, path, "doc_id")
     with pytest.raises(ValueError, match="Migrate"):
@@ -2412,12 +2368,8 @@ def test_band_checkpoint_sig_encoding_migration(spark, tmp_path):
             corpus, path, "doc_id", "text", mode="append", batch_id=0
         )
     # ...and the other direction: a FUTURE encoding is refused too
-    local_frame(
-        spark, [(3, 12, 3, 16, "hash8-v3")],
-        "k int, num_hashes int, band_rows int, n_sig_buckets int, "
-        "sig_encoding string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_band_params")
-    dedup._PARAMS_MEMO.clear()
+    republish({"k": 3, "num_hashes": 12, "band_rows": 3,
+               "n_sig_buckets": 16, "sig_encoding": "hash8-v3"})
     with pytest.raises(ValueError, match="hash8-v3"):
         dedup.read_band_checkpoint(spark, path, "doc_id")
 

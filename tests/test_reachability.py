@@ -28,9 +28,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "pyspark_bigdata_sars_cov_2_analysis_spark"
 
 _DEDUP_WRAPPER = (
-    "public wrapper over dedup._CheckpointKind, which still commits "
-    "through io.writers._swap_in / recover_staged_swap; the checkpoint "
-    "tests drive the state through it"
+    "public wrapper over dedup._CheckpointKind, the band and chunk "
+    "checkpoint surface d19/d20/d22 reach through its other wrappers; "
+    "the checkpoint tests drive the state through it"
 )
 
 KEPT_UNREACHED = {
@@ -43,8 +43,11 @@ KEPT_UNREACHED = {
         "(radiography_analysis.py:71-89), tested end to end"
     ),
     "llmdata.dedup.compact_chunk_checkpoint": _DEDUP_WRAPPER,
-    "llmdata.dedup.migrate_band_checkpoint_stamps": _DEDUP_WRAPPER,
-    "llmdata.dedup.migrate_chunk_checkpoint_stamps": _DEDUP_WRAPPER,
+    "llmdata.dedup.ingest_high_water_mark": (
+        "public read of a checkpoint's committed high-water mark; the "
+        "ingest guard reads the same manifest field from the manifest it "
+        "already holds, and the checkpoint tests assert through it"
+    ),
     "llmdata.dedup.read_band_checkpoint": _DEDUP_WRAPPER,
     "llmdata.dedup.read_band_params": _DEDUP_WRAPPER,
     "llmdata.dedup.read_chunk_checkpoint": _DEDUP_WRAPPER,

@@ -577,14 +577,17 @@ def test_watermark_drops_late_data_accounted(spark, tmp_path):
     assert emitted == {("2024-03-01 00:00:00", 1)}, emitted
 
 
-def test_ingest_batch_replay_survives_torn_band_append(spark, tmp_path):
-    """ADVICE r7 #1: a crash can tear the band-checkpoint append so only
-    SOME of a batch's band rows land before the replay. The replay must
-    still recompute the IDENTICAL survivor set — the corpus side excludes
-    the batch's own ids, so partially-landed bands are invisible. Without
-    that exclusion, survivor 11 would self-match its landed bands and
-    sibling near-dup 12 would cross-match them, and the scoped dynamic
-    overwrite would rewrite the partition without either: silent loss."""
+def test_ingest_batch_replay_survives_torn_band_append(
+    spark, tmp_path, monkeypatch
+):
+    """ADVICE r7 #1: a crash can fall after a batch's band rows are
+    written but before they are committed. Those rows are named by no
+    manifest, so the replay must recompute the IDENTICAL survivor set.
+    Had they been visible, survivor 11 would self-match its own bands
+    and sibling near-dup 12 would cross-match them, and the scoped
+    dynamic overwrite would rewrite the partition without either:
+    silent loss."""
+    from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers as W
     from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
 
     seed = ("the seed corpus document about distributed minhash band "
@@ -615,31 +618,23 @@ def test_ingest_batch_replay_survives_torn_band_append(spark, tmp_path):
     )
     assert [(r.new_id, r.corpus_id) for r in pairs.collect()] == [(11, 12)]
 
-    # simulate the torn first attempt: ONLY doc 11's bands landed —
-    # stamped with the crashing attempt's batch_id (0), which is what a
-    # real torn ingest_batch_idempotent append would have written
-    dedup.write_band_checkpoint(
-        batch.where("doc_id = 11"), band_path, "doc_id", "text",
-        mode="append", batch_id=0,
-    )
-    # ...but a REAL torn ingest append crashes BEFORE its commit marker
-    # lands (markers are written last), whereas the manual writer above
-    # legitimately marks its completed append committed — remove the
-    # marker so the simulated state matches the crash, not a commit
-    # (review r9: with the marker present, the replay's full-batch
-    # fingerprint differs from the doc-11-only commit and is refused as
-    # an incarnation collision — the correct answer for a COMMITTED
-    # same-id batch with different content)
-    import os as _os
+    # the first attempt writes its output and its band rows, then
+    # crashes before the manifest publish that would commit them
+    def crash(*_args, **_kw):
+        raise RuntimeError("crash before publish")
 
-    _os.remove(_os.path.join(dedup._hwm_dir(band_path), "b0"))
+    with monkeypatch.context() as m:
+        m.setattr(W, "_link_manifest", crash)
+        with pytest.raises(RuntimeError, match="crash before publish"):
+            dedup.ingest_batch_idempotent(batch, 0, band_path, out)
+    assert dedup.ingest_high_water_mark(band_path) == -1
 
     # the replay (same batch_df, batch_id 0) must admit 11, 12 and 13
     dedup.ingest_batch_idempotent(batch, 0, band_path, out)
     got = sorted(r.doc_id for r in spark.read.parquet(out).collect())
     assert got == [11, 12, 13], got
 
-    # and a second full replay over the now-complete append is a no-op
+    # and a second full replay over the committed batch is a no-op
     dedup.ingest_batch_idempotent(batch, 0, band_path, out)
     again = sorted(r.doc_id for r in spark.read.parquet(out).collect())
     assert again == got
@@ -677,7 +672,7 @@ def test_ingest_redelivered_id_in_later_batch_is_deduped(spark, tmp_path):
     got = [r.doc_id for r in spark.read.parquet(out).collect()]
     assert got == [10], got
 
-    # batch_id=-1 would collide with the seed stamp: refused
+    # batch_id=-1 means no batch (a seed): refused
     import pytest as _pytest
     with _pytest.raises(ValueError, match="batch_id"):
         dedup.ingest_batch_idempotent(batch1, -1, band_path, out)
@@ -725,13 +720,11 @@ def test_chunk_ingest_redelivered_id_in_later_batch_is_deduped(
 def test_ingest_refuses_batch_ids_below_high_water_mark(spark, tmp_path):
     """ADVICE r9: foreachBatch epoch ids restart at 0 whenever the
     STREAMING checkpoint is deleted or relocated (or a second pipeline
-    targets the same state path), and the stamp-scoped replay exclusion
-    then treats a PRIOR incarnation's committed same-id state as 'this
-    batch's torn append' — excluding it from the corpus side (silently
-    re-admitting its near-duplicates) and clobbering its same-id output
-    partition. Committed batches therefore drop an O_EXCL high-water
-    marker; ids BELOW it raise loudly, while == hwm stays allowed as
-    the legitimate newest-batch replay. Both state twins."""
+    targets the same state path), and a colliding id would clobber a
+    PRIOR incarnation's same-id output partition. Each committed batch
+    therefore records its id in the checkpoint manifest; ids BELOW that
+    high-water mark raise loudly, while == hwm stays allowed as the
+    legitimate newest-batch replay. Both state twins."""
     import pytest as _pytest
 
     from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
@@ -769,7 +762,7 @@ def test_ingest_refuses_batch_ids_below_high_water_mark(spark, tmp_path):
     # review r9: == hwm with DIFFERENT content is NOT a replay — it is a
     # restarted incarnation whose id happens to collide with the newest
     # committed batch (the hwm==0 blind spot of the strictly-below
-    # check); the marker's content fingerprint refuses it
+    # check); the manifest's content fingerprint refuses it
     with _pytest.raises(ValueError, match="DIFFERENT content"):
         dedup.ingest_batch_idempotent(mk(2), 1, band_path, bout)
     # the manual append path shares the guard
@@ -796,9 +789,8 @@ def test_hwm_zero_incarnation_collision_refused(spark, tmp_path):
     """Review r9: the strictly-below guard's blind spot — after exactly
     ONE committed batch (hwm==0) a restarted incarnation's first epoch
     is 0 == hwm and previously passed as a 'newest-batch replay',
-    silently excluding the committed batch's state from the corpus side
-    and clobbering its output partition. The marker's content
-    fingerprint closes it: same id + different docs raises; the true
+    clobbering the committed batch's output partition. The manifest's
+    content fingerprint closes it: same id + different docs raises; the true
     same-content replay stays allowed and idempotent."""
     import pytest as _pytest
 
@@ -842,13 +834,10 @@ def test_hwm_zero_incarnation_collision_refused(spark, tmp_path):
 
 
 def test_checkpoint_append_requires_explicit_batch_id(spark, tmp_path):
-    """ADVICE r9: a default-stamped append would mark the rows as seed
-    (-1), placing them OUTSIDE the replay exclusion — a torn manual
-    append replayed through the ingest loop would then self-match its
-    own half-landed rows, the exact silent-loss bug the stamps close.
-    Appends must say which batch is writing (or assert a clean-boundary
-    seed extension with an explicit -1); overwrites keep the seed
-    default."""
+    """ADVICE r9: an append must say which batch is writing, so the
+    high-water guard can refuse a colliding id (or assert a
+    clean-boundary seed extension with an explicit -1); overwrites keep
+    the seed default."""
     import pytest as _pytest
 
     from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
@@ -955,12 +944,15 @@ def test_streaming_chunk_dedup_ingest(spark, tmp_path):
     assert again == got
 
 
-def test_chunk_ingest_replay_survives_torn_append(spark, tmp_path):
-    """Replaying the same (batch_df, batch_id) — after a FULL append and
-    after a TORN one (only part of the batch's spans landed) — must
-    rewrite the batch partition byte-identically: the checkpoint rows
-    carrying the batch's own ids are excluded, so the replay always
+def test_chunk_ingest_replay_survives_torn_append(
+    spark, tmp_path, monkeypatch
+):
+    """Replaying the same (batch_df, batch_id) — after a committed run
+    and after one that crashed between writing its chunk state and
+    publishing it — must rewrite the batch partition byte-identically:
+    unpublished state is named by no manifest, so the replay always
     sees the pre-batch state."""
+    from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers as W
     from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
 
     B = [f"boiler{i}" for i in range(10)]
@@ -969,14 +961,14 @@ def test_chunk_ingest_replay_survives_torn_append(spark, tmp_path):
     corpus = spark.createDataFrame(
         [(1, _blocks(B, U("seed")))], "doc_id long, text string"
     )
-    chunk_path = str(tmp_path / "chunks")
-    dedup.write_chunk_checkpoint(corpus, chunk_path, "doc_id", "text")
-    out = str(tmp_path / "out")
-
     batch = spark.createDataFrame(
         [(10, _blocks(B, U("ten"))), (11, _blocks(U("eleven"), U("ten")))],
         "doc_id long, text string",
     )
+    chunk_path = str(tmp_path / "chunks")
+    dedup.write_chunk_checkpoint(corpus, chunk_path, "doc_id", "text")
+    out = str(tmp_path / "out")
+
     dedup.chunk_ingest_batch_idempotent(batch, 0, chunk_path, out)
     first = sorted(
         map(tuple, spark.read.parquet(out).collect())
@@ -984,33 +976,36 @@ def test_chunk_ingest_replay_survives_torn_append(spark, tmp_path):
     # doc 11's U("ten") block dups doc 10's WITHIN the batch
     assert {t[0]: t[3] for t in first} == {10: 1, 11: 1}
 
-    # full-append replay
+    # committed replay
     dedup.chunk_ingest_batch_idempotent(batch, 0, chunk_path, out)
     assert sorted(map(tuple, spark.read.parquet(out).collect())) == first
 
-    # torn append: simulate by appending doc 10's spans AGAIN (a torn
-    # retry that half-landed, stamped with the crashing attempt's
-    # batch_id) — replay must still produce `first`, not drop doc 10's
-    # spans as "already admitted"
-    extra = spark.createDataFrame(
-        [("deadbeef" * 4, 10, 0, 0)],
-        "lh string, doc_id long, pos int, src_batch int",
-    ).withColumn("lhb", dedup._lh_bucket(F.col("lh"), 64))
-    extra.write.mode("append").partitionBy("lhb").parquet(chunk_path)
-    dedup.chunk_ingest_batch_idempotent(batch, 0, chunk_path, out)
-    assert sorted(map(tuple, spark.read.parquet(out).collect())) == first
+    # torn first attempt on a fresh checkpoint: state written, never
+    # published — the replay must still produce `first`, not drop doc
+    # 10's spans as "already admitted"
+    torn_path, torn_out = str(tmp_path / "torn"), str(tmp_path / "torn_out")
+    dedup.write_chunk_checkpoint(corpus, torn_path, "doc_id", "text")
+
+    def crash(*_args, **_kw):
+        raise RuntimeError("crash before publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(W, "_link_manifest", crash)
+        with pytest.raises(RuntimeError, match="crash before publish"):
+            dedup.chunk_ingest_batch_idempotent(batch, 0, torn_path, torn_out)
+    dedup.chunk_ingest_batch_idempotent(batch, 0, torn_path, torn_out)
+    assert sorted(map(tuple, spark.read.parquet(torn_out).collect())) == first
 
 
 def test_chunk_checkpoint_bucketed_probe_prunes_state(spark, tmp_path):
     """VERDICT r8 #4: the per-batch state probe must PRUNE checkpoint
-    partitions, not scan the full linear state. Seed a many-bucket
-    checkpoint, probe with a one-chunk batch: the pruned read must carry
-    a literal lhb PartitionFilter and open strictly fewer files than the
-    checkpoint holds — and the pruned anti-join must agree with the
-    unpruned one (pruning only removes buckets the batch cannot match
-    by construction of the shared hash)."""
-    import glob as _glob
-
+    cells, not scan the full linear state. Seed a many-bucket
+    checkpoint, probe with a one-chunk batch: the pruned read must scan
+    only files under that lhb cell, strictly fewer than the checkpoint
+    holds — and the pruned anti-join must agree with the unpruned one
+    (pruning only removes buckets the batch cannot match by
+    construction of the shared hash)."""
+    from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers
     from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
 
     W = lambda d, i: f"d{d}w{i}"  # noqa: E731
@@ -1021,7 +1016,8 @@ def test_chunk_checkpoint_bucketed_probe_prunes_state(spark, tmp_path):
     path = str(tmp_path / "chunks")
     dedup.write_chunk_checkpoint(corpus, path, "doc_id", "text",
                                  n_buckets=16)
-    n_dirs = len(_glob.glob(f"{path}/lhb=*"))
+    files = writers._latest_manifest(path)["files"]
+    n_dirs = len({f.split("/")[-2] for f in files})
     assert n_dirs >= 8, n_dirs  # 80 distinct spans spread the grid
 
     batch = spark.createDataFrame(
@@ -1036,15 +1032,14 @@ def test_chunk_checkpoint_bucketed_probe_prunes_state(spark, tmp_path):
     assert len(buckets) == 1  # one chunk -> one bucket
     pruned = dedup.read_chunk_checkpoint(spark, path, "doc_id",
                                          buckets=buckets)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "lhb" in plan.split(
-        "PartitionFilters")[1].split("]")[0], plan
-    # inputFiles() is pre-pruning (the relation's full file list); the
-    # executed scan's numFiles metric is what the filter actually opened
+    assert {f.split("/")[-2] for f in pruned.inputFiles()} == {
+        f"lhb={buckets[0]}"
+    }
+    # the executed scan's numFiles metric is what the read opened
     pruned.collect()
     scan = pruned._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
     read_files = int(scan.metrics().apply("numFiles").value())
-    total_files = len(_glob.glob(f"{path}/lhb=*/*.parquet"))
+    total_files = len(files)
     assert 0 < read_files < total_files, (read_files, total_files)
 
     # correctness: pruned probe == unpruned probe on the anti-join result
@@ -1073,12 +1068,13 @@ def test_chunk_checkpoint_bucketed_probe_prunes_state(spark, tmp_path):
 def test_band_checkpoint_bucketed_probe_prunes_state(spark, tmp_path):
     """Band-state twin of the chunk pruning test: the sigb sub-partition
     must let a small batch's probe open strictly fewer state files than
-    the checkpoint holds, via a literal sigb PartitionFilter — and the
+    the checkpoint holds, only those under its sigb cells — and the
     pruned pair set must equal the unpruned one (rows in other sigb
     buckets have a different band_sig under the SAME hash, so they can
     never share a bucket with the batch)."""
     import glob as _glob
 
+    from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers as W
     from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
 
     rngtext = lambda d: " ".join(  # noqa: E731
@@ -1090,7 +1086,7 @@ def test_band_checkpoint_bucketed_probe_prunes_state(spark, tmp_path):
     path = str(tmp_path / "bands")
     dedup.write_band_checkpoint(corpus, path, "doc_id", "text",
                                 n_sig_buckets=16)
-    total_files = len(_glob.glob(f"{path}/band=*/sigb=*/*.parquet"))
+    total_files = len(W._latest_manifest(path)["files"])
     assert total_files >= 16, total_files
 
     batch = spark.createDataFrame(
@@ -1108,9 +1104,9 @@ def test_band_checkpoint_bucketed_probe_prunes_state(spark, tmp_path):
     assert 0 < len(sig_buckets) <= 4  # one doc -> at most 4 band sigs
     pruned = dedup.read_band_checkpoint(spark, path, "doc_id",
                                         sig_buckets=sig_buckets)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "sigb" in plan.split(
-        "PartitionFilters")[1].split("]")[0], plan
+    assert {f.split("/")[-2] for f in pruned.inputFiles()} <= {
+        f"sigb={b}" for b in sig_buckets
+    }
     pruned.collect()
     scan = pruned._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
     read_files = int(scan.metrics().apply("numFiles").value())
@@ -1184,7 +1180,7 @@ def test_chunk_ingest_equals_batch_on_random_corpora(spark, tmp_path):
 
 
 def test_chunk_checkpoint_param_sidecar_guards(spark, tmp_path):
-    """The chunk_words sidecar must refuse a mismatched reuse on BOTH
+    """The recorded chunk_words must refuse a mismatched reuse on BOTH
     the read and the append path — a silent mismatch would chunk on
     different boundaries and dedup against nothing (the band-checkpoint
     ADVICE r6 rule applied to the d14 state)."""
@@ -1217,51 +1213,58 @@ def test_chunk_checkpoint_param_sidecar_guards(spark, tmp_path):
 
 
 def test_checkpoint_append_refused_without_sidecar(spark, tmp_path):
-    """ADVICE r8: data files + missing sidecar = a writer crashed between
-    the data write and the sidecar write. An append must REFUSE (not
-    silently re-stamp the caller's params over rows possibly produced
-    under different ones); an overwrite re-seed and an append onto a
-    genuinely empty path both still work."""
-    import shutil
-
-    import pytest as _pytest
-
+    """ADVICE r8: state rows must never be re-labelled with parameters
+    other than the ones they were computed under. The recorded params
+    ride the manifest that names the rows, so rows without a manifest —
+    a writer that crashed before its first publish — are invisible: an
+    append there publishes only its own rows under the caller's params.
+    An overwrite re-seed and an append onto a genuinely empty path both
+    still work."""
+    from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers as W
     from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
 
     corpus = spark.createDataFrame(
         [(1, "ten words exactly here to make one whole chunk boundary")],
         "doc_id long, text string",
     )
-    for writer, sidecar, match in (
-        (dedup.write_chunk_checkpoint, "_chunk_params", "chunk checkpoint"),
-        (dedup.write_band_checkpoint, "_band_params", "band checkpoint"),
+    more = corpus.withColumn("doc_id", F.col("doc_id") + 1)
+    for writer, read, name in (
+        (dedup.write_chunk_checkpoint, dedup.read_chunk_checkpoint,
+         "chunk"),
+        (dedup.write_band_checkpoint, dedup.read_band_checkpoint, "band"),
     ):
-        path = tmp_path / sidecar.strip("_")
+        path = tmp_path / name
         writer(corpus, str(path), "doc_id", "text")
-        shutil.rmtree(path / sidecar)  # the torn state
-        with _pytest.raises(ValueError, match=match):
-            writer(corpus, str(path), "doc_id", "text", mode="append",
-                   batch_id=-1)
+        shutil.rmtree(path / "_snapshots")  # the seed never published
+        writer(more, str(path), "doc_id", "text", mode="append",
+               batch_id=-1)
+        snaps = W.list_parquet_snapshots(str(path))
+        assert [s["version"] for s in snaps] == [1]
+        assert {r.doc_id for r in read(spark, str(path), "doc_id")
+                .collect()} == {2}
         # recovery: a full re-seed works, and appends resume after it
         writer(corpus, str(path), "doc_id", "text", mode="overwrite")
-        writer(corpus, str(path), "doc_id", "text", mode="append",
+        writer(more, str(path), "doc_id", "text", mode="append",
                batch_id=-1)
+        assert {r.doc_id for r in read(spark, str(path), "doc_id")
+                .collect()} == {1, 2}
         # an append onto a brand-new empty path is still allowed
-        writer(corpus, str(tmp_path / f"fresh_{sidecar}"), "doc_id",
+        writer(corpus, str(tmp_path / f"fresh_{name}"), "doc_id",
                "text", mode="append", batch_id=-1)
 
 
 def test_checkpoint_grid_defaults_adopt_sidecar_on_append(spark, tmp_path):
     """Review r9: the grid default must not BREAK the documented append
     path on a checkpoint whose grid differs from today's default (a flat
-    pre-bucketing layout, or a deliberately smaller grid). Default
-    (None) adopts the sidecar's grid on append; an explicit int still
-    asserts it."""
-    import glob as _glob
-
+    layout, or a deliberately smaller grid). Default (None) adopts the
+    recorded grid on append; an explicit int still asserts it."""
     import pytest as _pytest
 
+    from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers as W
     from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
+
+    def cells(path):
+        return {f.split("/")[-2] for f in W._latest_manifest(path)["files"]}
 
     corpus = spark.createDataFrame(
         [(d, f"some shingled text body number {d} for banding") for d in
@@ -1270,15 +1273,15 @@ def test_checkpoint_grid_defaults_adopt_sidecar_on_append(spark, tmp_path):
     )
     more = corpus.withColumn("doc_id", F.col("doc_id") + 100)
 
-    # flat band checkpoint (the pre-bucketing layout): a default append
-    # must keep it flat, not raise 0 != 16
+    # flat band checkpoint: a default append must keep it flat, not
+    # raise 0 != 16
     path = str(tmp_path / "bands_flat")
     dedup.write_band_checkpoint(corpus, path, "doc_id", "text",
                                 n_sig_buckets=0)
     dedup.write_band_checkpoint(more, path, "doc_id", "text", mode="append",
                                 batch_id=-1)
     assert dedup.read_band_params(spark, path)["n_sig_buckets"] == 0
-    assert not _glob.glob(f"{path}/band=*/sigb=*")
+    assert all(c.startswith("band=") for c in cells(path)), cells(path)
     assert dedup.read_band_checkpoint(spark, path, "doc_id").count() > 0
     # explicit grid on append still asserts
     with _pytest.raises(ValueError, match="n_sig_buckets"):
@@ -1294,7 +1297,7 @@ def test_checkpoint_grid_defaults_adopt_sidecar_on_append(spark, tmp_path):
                                  mode="append", batch_id=-1)
     assert dedup.read_chunk_params(spark, cpath) == {"chunk_words": 10, "n_buckets": 8}
     # appended rows landed INSIDE the 8-bucket grid (probe-visible)
-    assert len(_glob.glob(f"{cpath}/lhb=*")) <= 8
+    assert 0 < len(cells(cpath)) <= 8
     with _pytest.raises(ValueError, match="n_buckets"):
         dedup.write_chunk_checkpoint(more, cpath, "doc_id", "text",
                                      mode="append", batch_id=-1,
@@ -1327,99 +1330,6 @@ def test_chunk_ingest_unpersists_on_validation_error(spark, tmp_path):
     assert cm.isEmpty(), "validation error leaked the cached chunk frame"
 
 
-def test_stamp_migration_on_legacy_and_mixed_checkpoints(spark, tmp_path):
-    """Review r9: rows written by a pre-stamp build are indistinguishable
-    from seed rows, so the one-time migration (run at a clean boundary)
-    must stamp them -1 EXPLICITLY in the files, preserve existing stamps
-    and the parameter sidecar, and leave a state the ingest loop runs on
-    without mergeSchema coalescing."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
-
-    corpus = spark.createDataFrame(
-        [(d, f"some shingled text body number {d} for banding") for d in
-         range(6)],
-        "doc_id long, text string",
-    )
-
-    # --- band side: a fully legacy checkpoint (no src_batch anywhere,
-    # flat layout, hand-written sidecar mimicking the pre-stamp writer)
-    path = str(tmp_path / "bands_legacy")
-    dedup.lsh_bands(
-        dedup.minhash_signatures(corpus, "doc_id", "text", 3, 12),
-        "doc_id", 12, 3,
-    ).write.partitionBy("band").parquet(path)
-    # hand-rolled sidecar mimics a pre-STAMP writer; the sig_encoding is
-    # the CURRENT one because the band rows above came from the current
-    # lsh_bands — this test exercises stamp-lessness only. A real
-    # pre-r16 checkpoint (csv-v1 data + sidecar) is refused at
-    # read/append with a re-seed instruction, which re-stamps anyway
-    # (pinned by test_band_checkpoint_sig_encoding_migration).
-    spark.createDataFrame(
-        [(3, 12, 3, dedup._SIG_ENCODING)],
-        "k int, num_hashes int, band_rows int, sig_encoding string",
-    ).coalesce(1).write.parquet(f"{path}/_band_params")
-    before = spark.read.parquet(path).count()
-
-    res = dedup.migrate_band_checkpoint_stamps(spark, path)
-    assert res["rows"] == before and res["had_stamp_col"] is False
-
-    raw = spark.read.parquet(path)  # NO mergeSchema: stamps are physical
-    assert "src_batch" in raw.columns
-    assert raw.count() == before
-    assert raw.where(F.col("src_batch") != -1).count() == 0
-    assert dedup.read_band_params(spark, path)["n_sig_buckets"] == 0
-    # the ingest loop runs on the migrated state and dedups against it
-    batch = corpus.where(F.col("doc_id") == 2).withColumn(
-        "doc_id", F.col("doc_id") + 100
-    )
-    out = str(tmp_path / "band_out")
-    dedup.ingest_batch_idempotent(batch, 0, path, out)
-    import glob as _glob
-
-    assert not _glob.glob(f"{out}/**/*.parquet", recursive=True)
-
-    # --- chunk side: MIXED state — stamped batch rows next to a
-    # hand-appended legacy (unstamped) file; migration must preserve the
-    # real stamps and seed-stamp only the legacy rows
-    cpath = str(tmp_path / "chunks_mixed")
-    dedup.write_chunk_checkpoint(
-        corpus.where(F.col("doc_id") < 3), cpath, "doc_id", "text",
-        n_buckets=0,
-    )
-    dedup.write_chunk_checkpoint(
-        corpus.where(F.col("doc_id") == 3), cpath, "doc_id", "text",
-        n_buckets=0, mode="append", batch_id=5,
-    )
-    legacy = (
-        dedup._doc_chunks(
-            corpus.where(F.col("doc_id") > 3), "doc_id", "text", 10
-        )
-        .groupBy("lh")
-        .agg(F.min(F.struct(F.col("doc_id").alias("id"),
-                            F.col("pos"))).alias("fo"))
-        .select("lh", F.col("fo.id").alias("doc_id"),
-                F.col("fo.pos").alias("pos"))
-    )
-    legacy.write.mode("append").parquet(cpath)  # unstamped, pre-stamp form
-    n_legacy = legacy.count()
-    total = spark.read.option("mergeSchema", "true").parquet(cpath).count()
-
-    res = dedup.migrate_chunk_checkpoint_stamps(spark, cpath)
-    assert res["rows"] == total and res["had_stamp_col"] is True
-
-    raw = spark.read.parquet(cpath)
-    assert raw.count() == total
-    # the explicit batch-5 stamps survived; exactly the legacy rows (and
-    # the original seed rows) read as -1
-    assert raw.where(F.col("src_batch") == 5).count() > 0
-    assert raw.where(F.col("src_batch").isNull()).count() == 0
-    assert raw.where(F.col("src_batch") == -1).count() >= n_legacy
-    assert dedup.read_chunk_params(spark, cpath) == {"chunk_words": 10, "n_buckets": 0}
-    # review r9: the swap must carry the committed-batch markers — losing
-    # them resets the high-water mark and disarms the collision guard
-    assert dedup.ingest_high_water_mark(cpath) == 5
-
-
 def test_ingest_queries_empty_output_read_back(spark, tmp_path):
     """Review r9: a run where every batch publishes zero data files (no
     docs land outside the seed third, or every batch doc is a dup) must
@@ -1443,81 +1353,44 @@ def test_ingest_queries_empty_output_read_back(spark, tmp_path):
     assert plans.QUERIES["d20_band_ingest_incremental"](spark, sf).count() == 0
 
 
-def test_stamp_migration_rerun_heals_mid_swap_crash(spark, tmp_path):
-    """Review r9 follow-up: a crash between the swap's two renames leaves
-    no table at ``path`` (marker + staged + backup only). The documented
-    recovery is simply RE-RUNNING the migration — which means the
-    parameter-sidecar read (it decides the partition columns) must not
-    run until after recover_staged_swap, or the rerun dies on
-    PATH_NOT_FOUND before recovery can roll forward."""
-    import json as _json
-    import shutil as _shutil
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
-
-    corpus = spark.createDataFrame(
-        [(d, f"some shingled text body number {d} for banding") for d in
-         range(4)],
-        "doc_id long, text string",
-    )
-    path = str(tmp_path / "bands")
-    dedup.lsh_bands(
-        dedup.minhash_signatures(corpus, "doc_id", "text", 3, 12),
-        "doc_id", 12, 3,
-    ).write.partitionBy("band").parquet(path)
-    spark.createDataFrame(
-        [(3, 12, 3)], "k int, num_hashes int, band_rows int"
-    ).coalesce(1).write.parquet(f"{path}/_band_params")
-    before = spark.read.parquet(path).count()
-
-    # fabricate the exact mid-swap crash state: table moved to backup,
-    # verified staged output in place, marker on disk, NOTHING at path
-    staged = path + ".migrating"
-    backup = path + ".pre-stamp-migration"
-    _shutil.copytree(path, staged)
-    _shutil.move(path, backup)
-    with open(path + ".swap-in-progress", "w") as f:
-        _json.dump({"path": path, "staged": staged, "backup": backup}, f)
-
-    res = dedup.migrate_band_checkpoint_stamps(spark, path)
-    assert res["rows"] == before
-    raw = spark.read.parquet(path)
-    assert raw.count() == before
-    assert raw.where(F.col("src_batch") != -1).count() == 0
-    assert dedup.read_band_params(spark, path)["k"] == 3
-
-
 def test_append_skips_sidecar_rewrite(spark, tmp_path):
-    """Review r9 follow-up: an append with a validated sidecar must not
-    rewrite it — the values are identical by construction, and the
-    delete-then-commit overwrite would re-open the torn-sidecar window
-    on every micro-batch. The sidecar FILES must be byte-identical
-    before and after an append."""
-    import glob as _glob
+    """Review r9 follow-up: an append must not rewrite the recorded
+    parameters — the values are identical by construction, and a
+    rewrite would risk relabelling state. The append's manifest carries
+    the seed's params forward unchanged, and the seed's manifest file is
+    byte-identical before and after (published manifests are never
+    rewritten)."""
     import os as _os
 
+    from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers as W
     from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
 
     corpus = spark.createDataFrame(
         [(1, "ten words exactly here to make one whole chunk boundary")],
         "doc_id long, text string",
     )
-    for writer, sidecar in (
-        (dedup.write_band_checkpoint, "_band_params"),
-        (dedup.write_chunk_checkpoint, "_chunk_params"),
+    for writer, name in (
+        (dedup.write_band_checkpoint, "band"),
+        (dedup.write_chunk_checkpoint, "chunk"),
     ):
-        path = str(tmp_path / sidecar.strip("_"))
+        path = str(tmp_path / name)
         writer(corpus, path, "doc_id", "text")
-        files = sorted(_glob.glob(f"{path}/{sidecar}/*"))
-        stamps = {f: _os.stat(f).st_mtime_ns for f in files}
+        seed = _os.path.join(path, "_snapshots", "v00000001.json")
+        with open(seed, "rb") as fh:
+            seed_bytes = fh.read()
+        mtime = _os.stat(seed).st_mtime_ns
         writer(
             corpus.withColumn("doc_id", F.col("doc_id") + 1),
             path, "doc_id", "text", mode="append", batch_id=-1,
         )
-        after = sorted(_glob.glob(f"{path}/{sidecar}/*"))
-        assert after == files and all(
-            _os.stat(f).st_mtime_ns == stamps[f] for f in files
-        ), f"{sidecar} was rewritten on append"
+        snaps = W.list_parquet_snapshots(path)
+        assert [s["version"] for s in snaps] == [1, 2]
+        assert snaps[1]["params"] == snaps[0]["params"]
+        with open(seed, "rb") as fh:
+            assert fh.read() == seed_bytes
+        assert _os.stat(seed).st_mtime_ns == mtime, (
+            f"the {name} seed manifest was rewritten on append"
+        )
 
 
 def test_statestore_reader_exposes_dedup_state(spark, events_dir, tmp_path):
