@@ -62,7 +62,11 @@ Everything a backend does NOT need is deliberate: no atomic rename, no
 append, no directory locks, no consistent multi-key transactions.
 
 Paths: callers may pass plain local paths or ``file:`` URIs in any
-slash spelling (Spark's ``inputFiles()`` emits ``file:///``). ``for_path``
+slash spelling. Manifests name their files by the canonical path
+``resolve`` returns (absolute plain paths on LocalFS); manifests written
+before that name them by Spark's percent-encoded ``file:///`` URIs,
+which ``resolve`` decodes, so both spellings address the same file and
+compare equal once resolved. ``for_path``
 dispatches on the scheme; unsupported schemes fail loudly at ENTRY to
 the snapshot layer instead of half-working (``os.*`` on
 ``s3://bucket/...`` would today "work" by creating a literal ``s3:``
@@ -76,6 +80,7 @@ import os
 import re
 import shutil
 import uuid
+from urllib.parse import unquote
 
 
 class SnapshotFS(abc.ABC):
@@ -146,8 +151,11 @@ class LocalFS(SnapshotFS):
         accepted only for the local host (empty or ``localhost``);
         any other host names a REMOTE file system this class cannot
         address — refused loudly rather than misread as a local
-        ``/host/path``. An object-store FS would return the normalized
-        URI unchanged — Spark consumes either form."""
+        ``/host/path``. A URI's percent-escapes are decoded (Spark's
+        ``inputFiles()`` spells ``a b%`` as ``a%20b%25``) so the result
+        names the real file; a plain path is taken literally. An
+        object-store FS would return the normalized URI unchanged —
+        Spark consumes either form."""
         if path[:5].lower() == "file:":
             rest = path[5:]
             if rest.startswith("//"):
@@ -159,7 +167,7 @@ class LocalFS(SnapshotFS):
                         f"address a remote host"
                     )
                 rest = "/" + tail
-            path = rest
+            path = unquote(rest)
         return os.path.normpath(path)
 
     @staticmethod

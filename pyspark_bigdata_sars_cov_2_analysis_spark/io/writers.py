@@ -11,6 +11,9 @@ output and ``single_file=True`` is the opt-in small-result path.
 from __future__ import annotations
 
 import re
+import time as _time
+import uuid as _uuid
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -153,23 +156,28 @@ def _refuse_snapshot_table(path: str, op: str) -> None:
 # Snapshot-versioned parquet tables (r10): MVCC manifests over plain parquet,
 # the one commit protocol for persisted state (the dedup checkpoints of
 # llmdata/dedup.py publish through the same primitives). Data files are
-# immutable and write-once under a fresh data/ directory per publish, a tiny
-# JSON manifest names the exact file set of each version, and publishing is
-# one first-writer-wins create (io/fs.py put_if_absent) — readers resolve a
+# immutable and write-once under a fresh data/ directory per publish
+# (_stage: the write job is the publish's only Spark job), a tiny JSON
+# manifest names the exact file set of each version, and publishing is one
+# first-writer-wins create (io/fs.py put_if_absent) — readers resolve a
 # manifest FIRST and then read only the files it names, so they can never
 # observe a half-published version, a writer that crashes before its
 # publish leaves only files no reader sees, and old versions stay readable
-# (time travel) until vacuumed.
+# (time travel) until vacuumed. Appends publish a longer file list
+# (write_parquet_snapshot, the checkpoints' _commit); every rewrite —
+# compaction, delete, checkpoint compaction — publishes through the one
+# read-modify-write loop, _rmw_publish_snapshot.
 # ---------------------------------------------------------------------------
 
 _SNAP_DIR = "_snapshots"
 
 
 def _local_path(p: str) -> str:
-    """Canonical address of ``p`` (``file:``-URI in any slash count →
-    plain local path, normalized so string comparison works — Spark's
-    ``inputFiles()`` emits ``file:///`` while callers pass plain
-    paths). Delegates to the filesystem seam (``io/fs.py``, VERDICT r14
+    """Canonical address of ``p`` (``file:``-URI in any slash count,
+    percent-escapes decoded → plain local path, normalized so string
+    comparison works — Spark's ``inputFiles()`` and older manifests spell
+    files as ``file:///`` URIs while callers and newer manifests use
+    plain paths). Delegates to the filesystem seam (``io/fs.py``, VERDICT r14
     #2): an object-store path resolves to its normalized URI instead,
     and an UNREGISTERED scheme fails loudly here — the entry point of
     every snapshot op — rather than os.* silently treating
@@ -332,24 +340,6 @@ def _footer_row_count(files: list[str]) -> int:
     return total
 
 
-def _nonempty_files(
-    files: list[str], keep_one: bool = True
-) -> tuple[list[str], int]:
-    """The freshly-written ``files`` a manifest should name, and their
-    row count from the footers. Spark writes a zero-row part file for an
-    empty first input partition; named in a manifest, every read would
-    open it and no ``where=`` read could prune it (it has no stats), so
-    zero-row files are removed through the filesystem seam — all but
-    one with ``keep_one``, so an empty version keeps a schema file."""
-    counts = [_footer_row_count([f]) for f in files]
-    keep = [f for f, n in zip(files, counts) if n]
-    if not keep and keep_one:
-        keep = files[:1]
-    for f in set(files) - set(keep):
-        _fs.for_path(f).remove(_local_path(f))
-    return keep, sum(counts)
-
-
 def _parquet_files(root: str) -> list[str]:
     """Every ``.parquet`` file under ``root`` at any depth, sorted —
     listed driver-side through the filesystem seam, no Spark job."""
@@ -362,6 +352,55 @@ def _parquet_files(root: str) -> list[str]:
         elif n.endswith(".parquet"):
             out.append(p)
     return sorted(out)
+
+
+class _Staged(NamedTuple):
+    dir: str
+    files: list  # non-empty part files, canonical absolute paths
+    rows: int  # their row count, from the footers
+    schema: list  # [column, dtype] pairs of the written frame
+
+
+def _stage(
+    df: DataFrame, path: str, version: int, partition_by=(),
+    prefix: str = "v", keep_one: bool = True,
+) -> _Staged:
+    """Write ``df`` to a fresh ``data/<prefix><version>-<uuid8>/``
+    directory of the table at ``path`` (Hive-partitioned by
+    ``partition_by``) and return what a manifest records of it — the
+    one staging step of every publish. The files are listed through the
+    filesystem seam and named by their canonical absolute path, the row
+    count comes from their footers and the schema from ``df.dtypes``, so
+    the write is the only Spark job: Spark stores the writing frame's
+    schema in every footer, and inference over the files returns it.
+
+    Spark writes a zero-row part file for an empty input partition;
+    named in a manifest, every read would open it and no ``where=`` read
+    could prune it (it has no stats), so zero-row files are removed —
+    all but one with ``keep_one``, so an empty version keeps a schema
+    file — and a directory left with none is removed. No reader sees
+    the staged files until a manifest names them."""
+    fs = _fs.for_path(path)
+    data_dir = fs.absolute(
+        fs.join(
+            _local_path(path), "data",
+            f"{prefix}{version:08d}-{_uuid.uuid4().hex[:8]}",
+        )
+    )
+    writer = df.write.mode("error")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(data_dir)
+    files = _parquet_files(data_dir)
+    counts = [_footer_row_count([f]) for f in files]
+    keep = [f for f, n in zip(files, counts) if n]
+    if not keep and keep_one:
+        keep = files[:1]
+    for f in set(files) - set(keep):
+        fs.remove(f)
+    if not keep:
+        fs.remove_tree(data_dir)
+    return _Staged(data_dir, keep, sum(counts), [list(p) for p in df.dtypes])
 
 
 def _collect_file_stats(
@@ -575,11 +614,12 @@ def write_parquet_snapshot(
     Protocol (crash-safe at every step): (1) write the data files to an
     immutable uniquely-named dir ``data/v<N>-<uuid>/`` — a crash here
     leaves an orphan dir no manifest references, invisible to every
-    reader, reclaimed by :func:`vacuum_parquet_snapshots`; (2)
-    count-verify the written files from their parquet footers (the
-    footer is written at file close, so a torn write fails the read
-    loudly; r15 — previously a full Spark re-scan of the written data,
-    a duplicate pass of the whole commit at scale); (3) publish
+    reader, reclaimed by :func:`vacuum_parquet_snapshots`; (2) list the
+    written files through the filesystem seam and count their rows from
+    the parquet footers (the footer is written at file close, so a torn
+    write fails loudly); the schema is the frame's own ``dtypes``, which
+    is what Spark stored in every footer — :func:`_stage`, so the write
+    is the publish's only Spark job; (3) publish
     ``_snapshots/v<N>.json`` with O_EXCL — if a concurrent writer
     claimed N first, re-publish as N+1 (the uuid in the data dir name
     keeps the loser's files distinct; for ``append`` the retry re-reads
@@ -616,9 +656,6 @@ def write_parquet_snapshot(
     read with their OWN recorded schema. Same-name columns must keep
     their dtype; a type conflict always refuses. Drift-refusal stays the
     default so accidental producer drift cannot silently widen a table."""
-    import time as _time
-    import uuid as _uuid
-
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
     if stats_columns is not None and mode != "append":
@@ -631,22 +668,10 @@ def write_parquet_snapshot(
                 f"schema {df.columns}"
             )
     spark = df.sparkSession
-    fs = _fs.for_path(path)
-    base = _local_path(path)
-    fs.make_dirs(_snap_path(path))
+    _fs.for_path(path).make_dirs(_snap_path(path))
     last = _latest_manifest(path)
-    version = (last["version"] + 1) if last else 1
-    data_dir = fs.join(
-        base, "data", f"v{version:08d}-{_uuid.uuid4().hex[:8]}"
-    )
-    df.write.mode("error").parquet(data_dir)
-    # one schema-inferring read serves both the file list and the
-    # written schema; the row count comes from the footers (no second
-    # scan of the just-written data — see _footer_row_count)
-    written = spark.read.parquet(data_dir)
-    new_files, n_new = _nonempty_files(sorted(written.inputFiles()))
-    # the schema the files actually carry (post-write, what readers see)
-    new_schema = [list(p) for p in written.dtypes]
+    staged = _stage(df, path, (last["version"] + 1) if last else 1)
+    new_files, n_new, new_schema = staged.files, staged.rows, staged.schema
     # legacy-schema derivation cache (ADVICE r11): pre-manifest-schema
     # tables derive prev_schema from the previous version's footers —
     # once per PREVIOUS VERSION, not once per publish-race retry
@@ -1004,8 +1029,9 @@ def _read_snapshot_files(
         )
     elif snap.get("schema") is not None:
         # the manifest's recorded schema IS what inference over these
-        # files gives (it was taken from their post-write read), so
-        # supplying it skips the schema-inference Spark job per read
+        # files gives (the writing frame's dtypes, which Spark stores in
+        # every footer), so supplying it skips the schema-inference
+        # Spark job per read
         df = spark.read.schema(_schema_ddl(snap["schema"])).parquet(*files)
     else:
         df = spark.read.parquet(*files)  # legacy manifest: no schema
@@ -1042,8 +1068,6 @@ def vacuum_parquet_snapshots(
     resolved the writes) — when in doubt the guard fails SAFE, skipping
     deletion rather than reaching into foreign bytes. Prefer absolute
     paths."""
-    import time as _time
-
     if keep < 1:
         raise ValueError("keep must be >= 1")
     fs = _fs.for_path(path)
@@ -1051,10 +1075,10 @@ def vacuum_parquet_snapshots(
     kept, dropped = snaps[-keep:], snaps[:-keep]
     keep_files = {_local_path(f) for s in kept for f in s["files"]}
     base = _local_path(path)
-    # absolute-form BOTH sides of the ownership compare (review r13):
-    # the manifests record absolute file: paths from inputFiles(), so a
-    # vacuum invoked with a RELATIVE table path would otherwise match
-    # nothing and silently reclaim zero data files
+    # canonical absolute form on BOTH sides of the ownership compare
+    # (review r13): manifests name files by absolute paths (older ones
+    # by file: URIs), so a vacuum invoked with a RELATIVE table path
+    # would otherwise match nothing and silently reclaim zero data files
     own_root = fs.absolute(fs.join(base, "data")) + "/"
     # manifests FIRST, then data (ADVICE r10): deleting a dropped
     # version's files before its manifest leaves, across a crash, a
@@ -1325,7 +1349,7 @@ def streaming_snapshot_sink(
 
 
 def compact_parquet_snapshot(
-    spark, path: str, target_files: int = 1, max_retries: int = 5,
+    spark, path: str, target_files: int = 1,
     cluster_by: list[str] | None = None, cluster_strategy: str = "range",
     force: bool = False,
 ) -> dict:
@@ -1339,14 +1363,12 @@ def compact_parquet_snapshot(
     are isolated throughout because the manifest IS the atomicity — no
     window where the table is missing.
 
-    Race protocol (the write_parquet_snapshot pattern): the compacted
-    data is written to a fresh immutable dir, count-verified against
-    the base manifest's row count, then published with one O_EXCL
-    manifest link. Losing the link race means the table ADVANCED during
-    the rewrite — publishing the stale compaction anyway would silently
-    drop the winner's rows — so the attempt is abandoned (its data dir
-    becomes an invisible orphan for vacuum) and the compaction re-reads
-    the new latest and retries, up to ``max_retries``. Already-compact
+    Race protocol: :func:`_rmw_publish_snapshot` — the compacted data is
+    staged in a fresh immutable dir, count-verified against the base
+    manifest's row count, then published with one O_EXCL manifest link;
+    a lost race (the table ADVANCED during the rewrite, so publishing
+    the stale compaction would silently drop the winner's rows)
+    abandons the attempt and recompacts the new latest. Already-compact
     tables (``<= target_files`` files) are a no-op — unless
     ``cluster_by`` asks for a layout change, or ``force=True`` demands
     the rewrite anyway (r13: how a SHALLOW CLONE materializes — a
@@ -1377,20 +1399,11 @@ def compact_parquet_snapshot(
 
     Returns ``{"compacted", "version", "from_version", "files_before",
     "files_after", "rows", "retries"}``."""
-    import time as _time
-    import uuid as _uuid
-
     if target_files < 1:
         raise ValueError("target_files must be >= 1")
     _validate_cluster_args(cluster_by, cluster_strategy)
-    fs = _fs.for_path(path)
-    base = _local_path(path)
-    retries = 0
-    hwm_cache: dict = {}  # per base version, shared across retries
-    while True:
-        src = _latest_manifest(path)  # one JSON read per attempt
-        if src is None:
-            raise FileNotFoundError(f"no snapshots published at {path}")
+
+    def rewrite(src):
         if cluster_by:
             # legacy pre-schema manifests record no schema — resolve it
             # from the file footers (plan-only dtypes probe, the same
@@ -1438,17 +1451,7 @@ def compact_parquet_snapshot(
                         "code) or use cluster_strategy='range'"
                     )
         if len(src["files"]) <= target_files and not cluster_by and not force:
-            return {
-                "compacted": False, "version": src["version"],
-                "from_version": src["version"],
-                "files_before": len(src["files"]),
-                "files_after": len(src["files"]),
-                "rows": src["rows"], "retries": retries,
-            }
-        version = src["version"] + 1
-        data_dir = fs.join(
-            base, "data", f"v{version:08d}-{_uuid.uuid4().hex[:8]}"
-        )
+            return None
         # evolved-aware read: compacting a schema-evolved version
         # materializes the widened schema into uniform files (nulls
         # filled), so the compact version no longer needs merge-reads
@@ -1473,175 +1476,141 @@ def compact_parquet_snapshot(
             ).sortWithinPartitions(*cluster_by)
         else:
             rewritten = reader.repartition(target_files)
-        rewritten.write.mode("error").parquet(data_dir)
-        compacted = spark.read.parquet(data_dir)
-        new_files, rows = _nonempty_files(sorted(compacted.inputFiles()))
-        if rows != src["rows"]:
-            fs.remove_tree(data_dir)
-            raise RuntimeError(
-                f"compaction count-verify failed at {path}: base "
-                f"v{src['version']} has {src['rows']} rows, rewrite "
-                f"read back {rows}"
-            )
-        payload = {
-            "version": version, "files": new_files, "rows": rows,
-            "mode": "compact", "schema": [list(p) for p in compacted.dtypes],
-            "compacted_from": src["version"],
-            "published_utc": _time.time(),
-        }
-        # recompute data-skipping stats from the compacted footers — the
-        # rewrite invalidates every old per-file range; a clustered
-        # compaction on a stats-less table starts tracking cluster_by
-        eff_stats_cols = src.get("stats_columns") or (
-            list(cluster_by) if cluster_by else None
-        )
-        if eff_stats_cols:
-            payload["stats_columns"] = list(eff_stats_cols)
-            payload["stats"] = _collect_file_stats(
-                new_files, eff_stats_cols
-            )
-        # carry the stream high-water into the compact manifest (ADVICE
-        # r11 medium): a vacuum (e.g. keep=1 in a maintenance window)
-        # can leave a compact version as the ONLY manifest — without the
-        # stamp, _latest_src_batch would return None and a crashed
-        # stream's restart would re-publish its last batch as duplicate
-        # rows, breaking the exactly-once-publish contract; the repair
-        # in turn keeps _latest_src_batch O(1) on the compacted table.
-        hwm = _effective_hwm(path, src, hwm_cache)
-        if hwm is not None:
-            payload["src_batch"] = int(hwm)
-        if not _link_manifest(path, version, payload):
-            # the table advanced mid-rewrite; this compaction no longer
-            # reflects the latest version — abandon and recompact
-            retries += 1
-            if retries > max_retries:
-                raise RuntimeError(
-                    f"snapshot compaction at {path} lost the publish "
-                    f"race {retries} times; table is advancing faster "
-                    "than the rewrite"
-                )
-            continue
-        return {
-            "compacted": True, "version": version,
-            "from_version": src["version"],
-            "files_before": len(src["files"]),
-            "files_after": len(new_files),
-            "rows": rows, "retries": retries,
-        }
+        # a clustered compaction on a stats-less table starts tracking
+        # cluster_by
+        stats_cols = src.get("stats_columns") or cluster_by
+        fields = {"mode": "compact", "compacted_from": src["version"]}
+        if stats_cols:
+            fields["stats_columns"] = list(stats_cols)
+        return rewritten, src["rows"], (), fields
+
+    src, payload, retries = _rmw_publish_snapshot(path, rewrite)
+    return {
+        "compacted": payload is not None,
+        "version": payload["version"] if payload else src["version"],
+        "from_version": src["version"],
+        "files_before": len(src["files"]),
+        "files_after": len((payload or src)["files"]),
+        "rows": src["rows"], "retries": retries,
+    }
+
+
+# attempts a rewrite publish makes before giving up on a table that keeps
+# advancing under it
+_PUBLISH_ATTEMPTS = 6
 
 
 def _rmw_publish_snapshot(
-    spark, path: str, compute, mode: str, max_retries: int = 5
-) -> dict:
-    """Optimistic read-modify-write publish behind the snapshot DML op
-    :func:`delete_from_snapshot` — the conflict-detection loop
-    transactional formats run under their commit service, on a plain
-    filesystem (r13; the compaction race protocol generalized to
-    arbitrary content rewrites):
+    path: str, rewrite, prefix: str = "v", keep_one: bool = True
+) -> tuple[dict, dict | None, int]:
+    """The one optimistic read-modify-write publish of a
+    manifest-committed table — snapshot compaction and delete, and the
+    dedup checkpoints' compaction (``llmdata/dedup.py``) — the
+    conflict-detection loop transactional formats run under their commit
+    service, on a plain filesystem (r13):
 
-    1. read the LATEST manifest (the optimistic "read version");
-    2. ``compute(src_manifest, base_df)`` builds the replacement frame
-       and returns ``(result_df, expected_rows, info)`` — expected_rows
-       is the semantic count-verify, info the op's stats;
-    3. write the result to a fresh immutable data dir, read it back and
-       count-verify;
-    4. publish ``v(base+1)`` with one O_EXCL link. Losing the link race
-       means the table ADVANCED between the read and the publish —
-       committing the stale rewrite would silently drop the winner's
-       rows (the lost-update anomaly), so the attempt is abandoned
-       whole (its dir becomes an invisible orphan for vacuum) and the
-       op re-reads and re-computes against the new latest, up to
-       ``max_retries``.
+    1. read the LATEST manifest ``src`` (the optimistic "read version");
+    2. ``rewrite(src)`` returns None (nothing to do: the loop returns
+       at once) or ``(frame, expected_rows, partition_by, fields)`` —
+       the replacement content, the semantic count-verify, the staging
+       layout, and the manifest fields the op sets or carries forward
+       (``mode`` at least);
+    3. stage ``frame`` (:func:`_stage` with ``prefix``/``keep_one``,
+       the table's directory naming) and count-verify it from the
+       footers — a mismatch removes the staged dir and raises;
+    4. publish ``v(src+1)``: ``fields`` plus the staged files, rows and
+       schema, data-skipping stats recomputed from the new footers for
+       the manifest's ``stats_columns`` (the rewrite replaces every
+       file), and the table's effective stream high-water (a rewrite is
+       maintenance ON the stream's lineage, not a reset — a crashed
+       stream's replay after a mid-stream compaction or delete must
+       still be a publish no-op, and a vacuum that leaves the rewrite as
+       the only manifest must not lose the stamp). One O_EXCL link;
+       losing it means the table ADVANCED between the read and the
+       publish — committing the stale rewrite would silently drop the
+       winner's rows (the lost-update anomaly), so the attempt is
+       abandoned whole (its dir becomes an invisible orphan for vacuum)
+       and the loop re-reads and recomputes against the new latest, at
+       most ``_PUBLISH_ATTEMPTS`` times in all.
 
-    The published manifest is stamped with the table's effective stream
-    high-water (same rule as compaction: DML is maintenance ON the
-    stream's lineage, not a reset — a crashed stream's replay after a
-    mid-stream delete must still be a publish no-op), and the rewrite
-    materializes uniform files, so an evolved base sheds the flag
-    exactly like compaction does."""
-    import time as _time
-    import uuid as _uuid
-
+    Returns ``(src, payload, retries)``: the base manifest, the
+    published manifest (None when ``rewrite`` had nothing to do) and the
+    number of lost races."""
     fs = _fs.for_path(path)
-    base = _local_path(path)
-    retries = 0
     hwm_cache: dict = {}  # per base version, shared across retries
-    while True:
+    for retries in range(_PUBLISH_ATTEMPTS):
         src = _latest_manifest(path)
         if src is None:
             raise FileNotFoundError(f"no snapshots published at {path}")
-        result_df, expected_rows, info = compute(
-            src, _read_snapshot_files(spark, src)
-        )
+        plan = rewrite(src)
+        if plan is None:
+            return src, None, retries
+        frame, expected_rows, partition_by, fields = plan
         version = src["version"] + 1
-        data_dir = fs.join(
-            base, "data", f"v{version:08d}-{_uuid.uuid4().hex[:8]}"
+        staged = _stage(
+            frame, path, version, partition_by, prefix=prefix,
+            keep_one=keep_one,
         )
-        result_df.write.mode("error").parquet(data_dir)
-        written = spark.read.parquet(data_dir)
-        new_files, rows = _nonempty_files(sorted(written.inputFiles()))
-        if rows != expected_rows:
-            fs.remove_tree(data_dir)
+        if staged.rows != expected_rows:
+            fs.remove_tree(staged.dir)
             raise RuntimeError(
-                f"{mode} count-verify failed at {path}: expected "
-                f"{expected_rows} rows from base v{src['version']}, "
-                f"rewrite read back {rows}"
+                f"{fields['mode']} count-verify failed at {path}: expected "
+                f"{expected_rows} rows from base v{src['version']}, the "
+                f"rewrite wrote {staged.rows}; nothing published"
             )
         payload = {
-            "version": version, "files": new_files, "rows": rows,
-            "mode": mode, "schema": [list(p) for p in written.dtypes],
-            "replaced_from": src["version"],
+            **fields, "version": version, "files": staged.files,
+            "rows": staged.rows, "schema": staged.schema,
             "published_utc": _time.time(),
         }
-        # the rewrite replaces every file — recompute skipping stats for
-        # the table's recorded columns (same rule as compaction)
-        if src.get("stats_columns"):
-            payload["stats_columns"] = list(src["stats_columns"])
+        if payload.get("stats_columns"):
             payload["stats"] = _collect_file_stats(
-                new_files, src["stats_columns"]
+                staged.files, payload["stats_columns"]
             )
         hwm = _effective_hwm(path, src, hwm_cache)
         if hwm is not None:
             payload["src_batch"] = int(hwm)
-        if not _link_manifest(path, version, payload):
-            # conflict: the table advanced mid-rewrite — abandon whole
-            # (committing would drop the winner's rows) and recompute
-            retries += 1
-            if retries > max_retries:
-                raise RuntimeError(
-                    f"snapshot {mode} at {path} lost the publish race "
-                    f"{retries} times; table is advancing faster than "
-                    "the rewrite"
-                )
-            continue
-        return {
-            "version": version, "from_version": src["version"],
-            "rows": rows, "retries": retries, **info,
-        }
+        if _link_manifest(path, version, payload):
+            return src, payload, retries
+    raise RuntimeError(
+        f"{fields['mode']} at {path} lost the publish race "
+        f"{_PUBLISH_ATTEMPTS} times; the table is advancing faster than "
+        "the rewrite"
+    )
 
 
-def delete_from_snapshot(
-    spark, path: str, predicate, max_retries: int = 5
-) -> dict:
+def delete_from_snapshot(spark, path: str, predicate) -> dict:
     """DELETE FROM a snapshot-versioned table: rows where ``predicate``
     (a Column or SQL string) evaluates TRUE are removed in ONE new
     published version — SQL three-valued semantics, so NULL-predicate
     rows are KEPT, matching ``DELETE FROM t WHERE p``. Same isolation,
     time-travel, high-water and conflict-detection guarantees as
-    :func:`_rmw_publish_snapshot`. Returns ``deleted`` alongside the
-    publish stats."""
+    :func:`_rmw_publish_snapshot`; the rewrite materializes uniform
+    files, so an evolved base sheds the flag exactly like compaction
+    does. Returns ``deleted`` alongside the publish stats."""
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
+    n_del = 0
 
-    def compute(src, target):
+    def rewrite(src):
+        nonlocal n_del
+        target = _read_snapshot_files(spark, src)
         n_del = target.where(cond).count()
         kept = target.where(~F.coalesce(cond, F.lit(False)))
         tbl_schema = src.get("schema") or [list(p) for p in target.dtypes]
-        cols = [c for c, _t in tbl_schema]
-        return kept.select(*cols), src["rows"] - n_del, {"deleted": n_del}
+        fields = {"mode": "delete", "replaced_from": src["version"]}
+        if src.get("stats_columns"):
+            fields["stats_columns"] = list(src["stats_columns"])
+        return (
+            kept.select(*[c for c, _t in tbl_schema]),
+            src["rows"] - n_del, (), fields,
+        )
 
-    return _rmw_publish_snapshot(
-        spark, path, compute, "delete", max_retries=max_retries
-    )
+    src, payload, retries = _rmw_publish_snapshot(path, rewrite)
+    return {
+        "version": payload["version"], "from_version": src["version"],
+        "rows": payload["rows"], "retries": retries,
+        "deleted": n_del,
+    }
 
 
 def snapshot_changes(

@@ -27,7 +27,6 @@ reproducible in any engine (this is what the DuckDB oracles rely on).
 from __future__ import annotations
 
 import time
-import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -463,6 +462,11 @@ def _lh_bucket(col: Column, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(col), F.lit(int(n_buckets)))
 
 
+# how checkpoints stage a publish: ``v=`` directories (one partition
+# structure across publishes, see _CheckpointKind) and no file for no rows
+_STAGE = {"prefix": "v=", "keep_one": False}
+
+
 @dataclass(frozen=True)
 class _CheckpointKind:
     """One kind of incremental-dedup checkpoint: LSH band state
@@ -556,7 +560,9 @@ class _CheckpointKind:
             return local_frame(spark, [], ddl)
         f = _fs.for_path(path)
         return (
-            spark.read.option("basePath", f.join(f.resolve(path), "data"))
+            spark.read.option(
+                "basePath", f.absolute(f.join(f.resolve(path), "data"))
+            )
             .schema(ddl)
             .parquet(*files)
             .select(*cols)
@@ -583,33 +589,17 @@ class _CheckpointKind:
             *self.columns(id_col)
         )
 
-    def _stage(self, path: str, rows: DataFrame, n_grid: int, version: int):
-        """Write state ``rows`` to a fresh ``data/v=<version>-<uuid8>/``
-        directory on the grid, clustered so each cell gets one file per
+    def _layout(self, rows: DataFrame, n_grid: int):
+        """State ``rows`` laid out on the grid, and the partition columns
+        to stage them under: clustered so each cell gets one file per
         write (one file in all on a flat layout without ``lead``) rather
-        than one per (task, cell). Returns the non-empty files (none, and
-        no directory, when there are no rows), their row count from the
-        footers and the written schema. No reader sees these files until
-        a manifest names them."""
-        f = _fs.for_path(path)
-        data_dir = f.join(
-            f.resolve(path), "data", f"v={version:08d}-{uuid.uuid4().hex[:8]}"
-        )
+        than one per (task, cell)."""
         cols = [*self.lead, self.bucket] if n_grid else list(self.lead)
         if n_grid:
             rows = rows.withColumn(
                 self.bucket, _lh_bucket(F.col(self.key), n_grid)
             )
-        if cols:
-            rows.repartition(*cols).write.partitionBy(*cols).parquet(data_dir)
-        else:
-            rows.coalesce(1).write.parquet(data_dir)
-        files, n = _writers._nonempty_files(
-            _writers._parquet_files(data_dir), keep_one=False
-        )
-        if not files:
-            f.remove_tree(data_dir)  # no rows: nothing for a manifest
-        return files, n, [list(p) for p in rows.dtypes]
+        return (rows.repartition(*cols) if cols else rows.coalesce(1)), cols
 
     def _commit(
         self, path: str, rows: DataFrame, mode: str, params: dict,
@@ -624,8 +614,9 @@ class _CheckpointKind:
         — unless that manifest already commits this batch (a racing
         replay won, and ours becomes unreferenced files)."""
         snap = _writers._latest_manifest(path)
-        files, n, schema = self._stage(
-            path, rows, params[self.grid], (snap["version"] + 1) if snap else 1
+        frame, cols = self._layout(rows, params[self.grid])
+        staged = _writers._stage(
+            frame, path, (snap["version"] + 1) if snap else 1, cols, **_STAGE
         )
         while True:
             snap = _writers._latest_manifest(path)
@@ -646,8 +637,9 @@ class _CheckpointKind:
             version = (snap["version"] + 1) if snap else 1
             payload = {
                 "version": version, "mode": mode,
-                "files": base["files"] + files, "rows": base["rows"] + n,
-                "schema": schema, "published_utc": time.time(),
+                "files": base["files"] + staged.files,
+                "rows": base["rows"] + staged.rows,
+                "schema": staged.schema, "published_utc": time.time(),
                 "params": params,
                 "src_batch": batch_id if batch_id >= 0 else base["src_batch"],
                 "fingerprint": (
@@ -822,42 +814,33 @@ class _CheckpointKind:
         """Rewrite the newest version to ONE file per grid cell (VERDICT
         r9 #2): each ingest batch adds one file per touched cell, and
         after N batches the pruned probe degrades into a small-files
-        scan. The rewrite goes to a fresh directory, is count-verified
-        from the footers and published as a ``compact`` manifest that
-        carries ``params``, ``src_batch`` and ``fingerprint`` forward;
-        then older versions are vacuumed (``keep=1``). A batch in flight
-        is invisible to the rewrite and publishes over it afterwards; a
-        lost publish race retries against the new version, as
-        :func:`io.writers.compact_parquet_snapshot` does. Idempotent;
-        returns ``{rows, files_before, files_after, hwm}``."""
-        for _attempt in range(6):
-            snap = self.latest(path)
+        scan. The rewrite publishes through the snapshot layer's one
+        read-modify-write loop (:func:`io.writers._rmw_publish_snapshot`:
+        staged in a fresh directory, count-verified from the footers,
+        retried against the new version on a lost publish race) as a
+        ``compact`` manifest that carries ``params``, ``src_batch`` and
+        ``fingerprint`` forward; then older versions are vacuumed
+        (``keep=1``). A batch in flight is invisible to the rewrite and
+        publishes over it afterwards. Idempotent; returns ``{rows,
+        files_before, files_after, hwm}``."""
+        self.latest(path)  # refuses an unseeded or pre-manifest path
+
+        def rewrite(snap):
             rows = self._scan(spark, path, snap, snap["files"])
-            files, n, _schema = self._stage(
-                path, rows.drop(self.bucket), snap["params"][self.grid],
-                snap["version"] + 1,
+            frame, cols = self._layout(
+                rows.drop(self.bucket), snap["params"][self.grid]
             )
-            if n != snap["rows"]:
-                raise RuntimeError(
-                    f"{self.what} compaction at {path} read back {n} rows, "
-                    f"v{snap['version']} has {snap['rows']}; nothing "
-                    "published"
-                )
-            payload = {
-                **snap, "version": snap["version"] + 1, "mode": "compact",
-                "files": files, "published_utc": time.time(),
-            }
-            if _writers._link_manifest(path, payload["version"], payload):
-                _writers.vacuum_parquet_snapshots(path, keep=1)
-                return {
-                    "rows": n, "files_before": len(snap["files"]),
-                    "files_after": len(files),
-                    "hwm": int(snap["src_batch"]),
-                }
-        raise RuntimeError(
-            f"{self.what} compaction at {path} lost the publish race 6 "
-            "times; the checkpoint is advancing faster than the rewrite"
+            return frame, snap["rows"], cols, {**snap, "mode": "compact"}
+
+        snap, payload, _retries = _writers._rmw_publish_snapshot(
+            path, rewrite, **_STAGE
         )
+        _writers.vacuum_parquet_snapshots(path, keep=1)
+        return {
+            "rows": payload["rows"], "files_before": len(snap["files"]),
+            "files_after": len(payload["files"]),
+            "hwm": int(snap["src_batch"]),
+        }
 
 
 def _band_keys(df: DataFrame, id_col: str, text_col: str, want: dict):

@@ -1754,6 +1754,7 @@ def o16_data_skipping(spark, sf_dir):
     import tempfile
 
     from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
+        _local_path,
         compact_parquet_snapshot,
         delete_from_snapshot,
         list_parquet_snapshots,
@@ -1810,9 +1811,15 @@ def o16_data_skipping(spark, sf_dir):
     )
     delete_from_snapshot(spark, tbl, "doc_id % 7 = 3")
     # the append-only sub-feed (v1→v4) must plan over ONLY the files
-    # v2-v4 added — inputFiles is driver-side plan metadata, no job
+    # v2-v4 added — inputFiles is driver-side plan metadata, no job;
+    # its file: URIs and the manifest's names compare canonically
     append_feed = snapshot_changes(spark, tbl, 1, 4)
-    isolated = int(not (set(append_feed.inputFiles()) & v1_files))
+    isolated = int(
+        not (
+            set(map(_local_path, append_feed.inputFiles()))
+            & set(map(_local_path, v1_files))
+        )
+    )
     feed = snapshot_changes(spark, tbl, 1)
     ins = F.col("_change_type") == "insert"
     feed_agg = feed.agg(

@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import os
 import random
+import uuid
 
 EUROPE = ["Serbia", "Croatia", "Slovenia", "Montenegro", "Italy", "Norway"]
 COUNTRIES = EUROPE + ["Mainland China", "US", "Brazil", "India", "Japan"]
@@ -238,3 +239,18 @@ def write_radiography_parquet(tmpdir: str, spark) -> str:
     )
     df.write.mode("overwrite").parquet(path)
     return path
+
+
+def jobs_during(spark, fn):
+    """``(fn(), number of Spark jobs fn ran)``, counted in a job group of
+    its own: a fresh name per call, so a re-run never counts an earlier
+    call's jobs. The group and description are cleared afterwards."""
+    sc = spark.sparkContext
+    group = f"jobs-during-{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -34,6 +34,7 @@ from pyspark_bigdata_sars_cov_2_analysis_spark import plans
 from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers as W
 from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
 from tests.conftest import SF_TEST
+from tests.fixtures import jobs_during
 from tests.oracle_harness import _canon_rows, duck_connection
 
 DOC = "the quick brown fox jumps over the lazy dog near the river bank today"
@@ -245,18 +246,16 @@ def test_checkpoint_read_plans_without_spark_jobs(spark, tmp_path, writer,
         "n_buckets"
     )
     writer(corpus, path, "doc_id", "text", **{grid: 2})
-    sc = spark.sparkContext
-    group = f"checkpoint-read-plan-{grid}"
-    sc.setJobGroup(group, "plan a checkpoint read")
-    try:
+
+    def plan_reads():
         for cells in (None, [1]):
             kw = {"sig_buckets" if grid == "n_sig_buckets" else "buckets": cells}
             df = read(spark, path, "doc_id", **kw)
             df._jdf.queryExecution().executedPlan()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        return df
+
+    df, jobs = jobs_during(spark, plan_reads)
+    assert jobs == 0
     assert df.count() > 0
 
 

@@ -239,6 +239,55 @@ def test_ingest_markers_end_to_end_with_file_uri(spark, tmp_path):
     assert D.read_chunk_checkpoint(spark, uri, "doc_id").count() == 6
 
 
+def test_tables_under_a_path_with_space_and_percent(spark, tmp_path):
+    """A snapshot table and a band checkpoint under a directory named
+    ``a b%41`` publish, rewrite, read, ingest and vacuum: new manifests
+    name files by their real path, and ``resolve`` decodes the
+    percent-escapes of Spark's ``file:`` URIs (``a%20b%2541``), so the
+    URI of a real file resolves back to that file."""
+    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup as D
+
+    root = tmp_path / "a b%41"
+    tbl = str(root / "tbl")
+    W.write_parquet_snapshot(_df(spark, 0, 4), tbl, stats_columns=["id"])
+    W.write_parquet_snapshot(
+        _df(spark, 4, 8).repartition(2), tbl, mode="append"
+    )
+    assert W.compact_parquet_snapshot(spark, tbl)["compacted"]
+    assert W.delete_from_snapshot(spark, tbl, "id = 5")["deleted"] == 1
+    gone = W.vacuum_parquet_snapshots(tbl, keep=1, orphan_grace_sec=0)
+    assert gone["dropped_versions"] == [1, 2, 3]
+    assert sorted(os.listdir(os.path.join(tbl, "data"))) == [
+        os.path.basename(os.path.dirname(f))
+        for f in W._latest_manifest(tbl)["files"]
+    ]
+    latest = W.read_parquet_snapshot(spark, tbl)
+    assert sorted(r.id for r in latest.collect()) == [0, 1, 2, 3, 4, 6, 7]
+    pruned = W.read_parquet_snapshot(spark, tbl, where={"id": (2, 4)})
+    assert sorted(r.id for r in pruned.collect()) == [2, 3, 4]
+    for f in W._latest_manifest(tbl)["files"]:
+        assert os.path.isfile(f) and f.startswith(str(root))
+    uri = latest.inputFiles()[0]
+    assert "a%20b%2541" in uri and os.path.isfile(W._local_path(uri))
+    assert FS.LOCAL.resolve("file:///x/a%20b%2541/f") == "/x/a b%41/f"
+    assert FS.LOCAL.resolve("/x/a b%41/f") == "/x/a b%41/f"  # plain: literal
+
+    ckpt, out = str(root / "ckpt"), str(root / "out")
+    docs = spark.createDataFrame(
+        [(d, f"{w} {w}s {d} unrelated words for document {d} only")
+         for d, w in enumerate(["apple", "river", "stone", "cloud", "tiger"])],
+        "doc_id long, text string",
+    )
+    D.write_band_checkpoint(docs.where("doc_id < 3"), ckpt, "doc_id", "text")
+    D.ingest_batch_idempotent(docs.where("doc_id >= 3"), 0, ckpt, out)
+    assert D.ingest_high_water_mark(ckpt) == 0
+    state = D.read_band_checkpoint(spark, ckpt, "doc_id")
+    assert sorted(r.doc_id for r in state.select("doc_id").distinct().collect()) == [
+        0, 1, 2, 3, 4
+    ]
+    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [3, 4]
+
+
 def test_manifest_is_json_complete_after_claim(spark, tmp_path):
     """put_if_absent publishes complete content: every listed manifest
     parses as JSON with the protocol's required keys (the no-torn-read

@@ -19,6 +19,7 @@ import os
 import pytest
 
 from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers as W
+from tests.fixtures import jobs_during
 
 
 def _df(spark, lo, hi):
@@ -1281,6 +1282,59 @@ def test_publish_drops_empty_part_files(spark, tmp_path):
     man = W._latest_manifest(path)
     assert len(man["files"]) == 1 and man["rows"] == 0
     assert W.read_parquet_snapshot(spark, path).count() == 0
+
+
+def test_publish_runs_only_its_write_job(spark, tmp_path):
+    """A publish stages its files with one write job and learns their
+    names, row count and schema without a Spark read (the seam lists
+    them, the footers count them, the frame's dtypes are their schema):
+    a snapshot overwrite, append, compaction and streaming-sink batch
+    publish, and a band checkpoint seed and append, each run exactly
+    one job. Delete adds the ``count()`` that tells it how many rows it
+    removed. AQE is off so a shuffle is a stage of the write job rather
+    than a job of its own."""
+    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
+
+    tbl, ckpt = str(tmp_path / "tbl"), str(tmp_path / "ckpt")
+    docs = spark.createDataFrame(
+        [(d, f"document {d} about publishes and the jobs they run {d}")
+         for d in range(8)],
+        "doc_id long, text string",
+    )
+    publishes = {
+        "overwrite": lambda: W.write_parquet_snapshot(
+            _df(spark, 0, 10).repartition(2), tbl
+        ),
+        "append": lambda: W.write_parquet_snapshot(
+            _df(spark, 10, 20), tbl, mode="append"
+        ),
+        "compaction": lambda: W.compact_parquet_snapshot(spark, tbl),
+        "sink batch": lambda: W.snapshot_publish_batch(
+            _df(spark, 20, 25), 0, tbl
+        ),
+        "delete": lambda: W.delete_from_snapshot(spark, tbl, "id = 3"),
+        "checkpoint seed": lambda: dedup.write_band_checkpoint(
+            docs.where("doc_id < 5"), ckpt, "doc_id", "text"
+        ),
+        "checkpoint append": lambda: dedup.write_band_checkpoint(
+            docs.where("doc_id >= 5"), ckpt, "doc_id", "text",
+            mode="append", batch_id=-1,
+        ),
+    }
+    prior = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        jobs = {name: jobs_during(spark, fn)[1] for name, fn in publishes.items()}
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prior)
+    assert jobs == {**dict.fromkeys(publishes, 1), "delete": 2}
+    assert [s["mode"] for s in W.list_parquet_snapshots(tbl)] == [
+        "overwrite", "append", "compact", "append", "delete"
+    ]
+    assert W.read_parquet_snapshot(spark, tbl).count() == 24
+    assert dedup.read_band_checkpoint(spark, ckpt, "doc_id").select(
+        "doc_id"
+    ).distinct().count() == 8
 
 
 def test_vacuum_keeps_live_nested_data_dirs(spark, tmp_path):

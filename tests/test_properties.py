@@ -30,6 +30,7 @@ from pyspark_bigdata_sars_cov_2_analysis_spark.operators import (
 )
 from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import table
 from tests.conftest import SF_ORACLE, SF_TEST
+from tests.fixtures import jobs_during
 
 
 # ---------- cross-engine rounding agreement (the t2 keystone) ----------
@@ -1314,18 +1315,14 @@ def test_d18_scorer_seam_paths_identical(spark):
     # runs exactly one bounded limit-count probe on top. Parquet file
     # listing launches its own bookkeeping jobs either way, so the
     # observable is the per-group job-count DELTA, not zero.
-    sc = spark.sparkContext
-    st = sc.statusTracker()
+    def jobs(**kw):
+        return jobs_during(
+            spark, lambda: d18_curation_pipeline(spark, SF_TEST, **kw)
+        )[1]
 
-    def jobs(group, **kw):
-        sc.setJobGroup(group, group)
-        d18_curation_pipeline(spark, SF_TEST, **kw)
-        sc.setJobGroup(f"{group}_done", "reset")
-        return len(st.getJobIdsForGroup(group))
-
-    explicit = jobs("d18_explicit", scorer="agg")
-    hinted = jobs("d18_hinted", n_docs=10**6)
-    bare = jobs("d18_bare")
+    explicit = jobs(scorer="agg")
+    hinted = jobs(n_docs=10**6)
+    bare = jobs()
     # the crisp contract: explicit scorer and n_docs hint run ZERO probe
     # jobs (identical job count); bare auto adds the bounded probe (a
     # limit-count executes as 1-3 jobs depending on AQE staging — the
@@ -1359,24 +1356,15 @@ def test_d06_n_docs_hint_skips_sizing_count(spark):
 
     assert pairs(n_docs=40) == pairs()  # true-size hint == counted path
 
-    import uuid
+    def jobs(**kw):
+        return jobs_during(
+            spark,
+            lambda: dedup.simhash_neardup_pairs(docs, "doc_id", "text", **kw),
+        )[1]
 
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-    run_tag = uuid.uuid4().hex[:8]  # group names survive in the status
-    # tracker for the session: a re-collected run of this test must not
-    # double-count its first invocation's jobs
-
-    def jobs(group, **kw):
-        group = f"{group}_{run_tag}"
-        sc.setJobGroup(group, group)
-        dedup.simhash_neardup_pairs(docs, "doc_id", "text", **kw)
-        sc.setJobGroup(f"{group}_done", "reset")
-        return len(st.getJobIdsForGroup(group))
-
-    pinned = jobs("d06_pinned", band_bits=8)
-    hinted = jobs("d06_hinted", n_docs=40)
-    bare = jobs("d06_bare")
+    pinned = jobs(band_bits=8)
+    hinted = jobs(n_docs=40)
+    bare = jobs()
     assert hinted == pinned, (hinted, pinned)
     assert pinned < bare <= pinned + 3, (bare, pinned)
 

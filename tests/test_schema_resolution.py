@@ -23,27 +23,17 @@ from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers as W
 from pyspark_bigdata_sars_cov_2_analysis_spark.io.readers import TESTDATA_TABLES
 from pyspark_bigdata_sars_cov_2_analysis_spark.plans import registry
 from tests.conftest import SF_TEST
+from tests.fixtures import jobs_during
 
 NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 BINARY_AS_STRING = "spark.sql.parquet.binaryAsString"
 
 
-def _jobs_during(spark, group: str, fn):
-    """(fn's result, number of Spark jobs fn ran) — the job-group delta."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_warm_table_reads_run_no_job(spark):
     for name in TESTDATA_TABLES:
         registry.table(spark, SF_TEST, name)
-    frames, jobs = _jobs_during(
-        spark, "schema-cache-warm",
+    frames, jobs = jobs_during(
+        spark,
         lambda: {n: registry.table(spark, SF_TEST, n) for n in TESTDATA_TABLES},
     )
     assert jobs == 0
@@ -124,22 +114,64 @@ def _typed(spark, lo, hi):
     )
 
 
+def _wide(spark, lo, hi):
+    """``_typed`` plus the types whose inference a conf could steer or a
+    frame could spell differently: timestamp_ntz, binary, a map, a
+    varchar and an array of structs."""
+    from pyspark.sql import functions as F
+
+    return _typed(spark, lo, hi).select(
+        "*",
+        F.col("ts").cast("timestamp_ntz").alias("tn"),
+        F.col("id").cast("string").cast("binary").alias("bin"),
+        F.create_map(F.lit("k"), F.col("id").cast("int")).alias("m"),
+        F.expr("cast(concat('v', id) as varchar(8))").alias("vc"),
+        F.array(
+            F.struct(F.col("id").cast("int").alias("k"), F.lit("x").alias("w"))
+        ).alias("recs"),
+    )
+
+
 def test_snapshot_versions_read_with_manifest_schema(spark, tmp_path):
+    """Every publish records the writing frame's schema; for each kind
+    of version (overwrite, append, range and zorder compaction, delete,
+    evolved append) that schema is what inference over the version's
+    files returns, and the version reads with it, rows unchanged —
+    without a job unless the version is evolved (merge-read)."""
     path = str(tmp_path / "tbl")
-    W.write_parquet_snapshot(_typed(spark, 0, 3), path)
-    W.write_parquet_snapshot(_typed(spark, 3, 5), path, mode="append")
-    for version in (None, 1):
-        frame, jobs = _jobs_during(
-            spark, f"snapshot-read-{version}",
+    W.write_parquet_snapshot(_wide(spark, 0, 3), path)
+    W.write_parquet_snapshot(_wide(spark, 3, 5), path, mode="append")
+    W.compact_parquet_snapshot(spark, path, cluster_by=["id"])
+    W.compact_parquet_snapshot(
+        spark, path, target_files=2, cluster_by=["id", "amt"],
+        cluster_strategy="zorder",
+    )
+    W.delete_from_snapshot(spark, path, "id = 1")
+    W.write_parquet_snapshot(
+        _wide(spark, 5, 7).selectExpr("*", "cast(id as string) AS extra"),
+        path, mode="append", allow_schema_evolution=True,
+    )
+    modes = [s["mode"] for s in W.list_parquet_snapshots(path)]
+    assert modes == [
+        "overwrite", "append", "compact", "compact", "delete", "append"
+    ]
+    for version in (None, 1, 2, 3, 4, 5, 6):
+        frame, jobs = jobs_during(
+            spark,
             lambda: W.read_parquet_snapshot(spark, path, version=version),
         )
-        assert jobs == 0, version
-        snap = W._load_manifest(path, version or 2)
+        snap = W._load_manifest(path, version or 6)
+        if not snap.get("evolved"):
+            assert jobs == 0, version
         assert [list(p) for p in frame.dtypes] == snap["schema"]
-        inferred = spark.read.parquet(*snap["files"])
-        assert frame.schema == inferred.schema
+        inferred = spark.read.option(
+            "mergeSchema", bool(snap.get("evolved"))
+        ).parquet(*snap["files"])
+        assert [list(p) for p in inferred.dtypes] == snap["schema"], version
+        assert frame.schema == inferred.schema, version
         assert sorted(frame.collect()) == sorted(inferred.collect())
-    assert W.read_parquet_snapshot(spark, path).count() == 5
+    assert W.read_parquet_snapshot(spark, path).count() == 6
+    assert W.read_parquet_snapshot(spark, path, version=5).count() == 4
 
 
 def test_schemaless_legacy_manifest_still_reads(spark, tmp_path):

@@ -517,9 +517,11 @@ def test_change_feed_append_fast_path(spark, tmp_path):
         **{i: 2 for i in range(10, 15)},
         **{i: 3 for i in range(15, 20)},
     }
-    # O(new data): the feed's plan never touches v1's files
-    v1_files = set(W.list_parquet_snapshots(tbl)[0]["files"])
-    assert not (set(feed.inputFiles()) & v1_files)
+    # O(new data): the feed's plan never touches v1's files (Spark's
+    # file: URIs and the manifest's names compared canonically)
+    v1 = W.list_parquet_snapshots(tbl)[0]
+    v1_files = set(map(W._local_path, v1["files"]))
+    assert not (set(map(W._local_path, feed.inputFiles())) & v1_files)
 
     # from == to ⇒ empty, schema intact
     empty = _changes(spark, tbl, 3)
@@ -617,9 +619,9 @@ def test_change_feed_where_prunes_and_filters(spark, tmp_path):
     # stats-pruned: only the [10,20) append's file is ever read
     v3 = W.list_parquet_snapshots(tbl)[-1]
     matching = {
-        f for f, s in v3["stats"].items() if s["id"] == [10, 19]
+        W._local_path(f) for f, s in v3["stats"].items() if s["id"] == [10, 19]
     }
-    assert set(feed.inputFiles()) == matching
+    assert set(map(W._local_path, feed.inputFiles())) == matching
 
     # across a rewrite: only matching delete rows survive the filter
     W.delete_from_snapshot(spark, tbl, "id % 2 = 0")  # v4
