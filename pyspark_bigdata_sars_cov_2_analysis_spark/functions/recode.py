@@ -74,9 +74,8 @@ def fuzzy_recode(
         raise ValueError("fuzzy_recode needs a non-empty canonical list")
     dists = [F.levenshtein(col, F.lit(c)) for c in canonical]
     mind = F.least(*dists) if len(dists) > 1 else dists[0]
-    expr: Column | None = None
-    for c, d in zip(canonical, dists):
-        cond = (d == mind) & (mind <= max_dist)
-        expr = F.when(cond, c) if expr is None else expr.when(cond, c)
-    assert expr is not None
+    conds = [(d == mind) & (mind <= max_dist) for d in dists]
+    expr = F.when(conds[0], canonical[0])
+    for c, cond in zip(canonical[1:], conds[1:]):
+        expr = expr.when(cond, c)
     return expr.otherwise(col)

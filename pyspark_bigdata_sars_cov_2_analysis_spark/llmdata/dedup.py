@@ -1843,7 +1843,11 @@ def simhash_band_layout(bits: int, band_bits: int) -> list[tuple[int, int]]:
     ``bits % band_bits`` bits get a narrower remainder band — without it
     they would sit outside every band and two signatures differing only
     there would never become candidates (silent recall loss)."""
-    assert 0 < band_bits <= bits
+    if not 0 < band_bits <= bits:
+        raise ValueError(
+            f"band_bits must be in 1..{bits} for {bits}-bit signatures, "
+            f"got {band_bits}"
+        )
     layout = [(b * band_bits, band_bits) for b in range(bits // band_bits)]
     rem = bits % band_bits
     if rem:

@@ -15,11 +15,14 @@ from pyspark_bigdata_sars_cov_2_analysis_spark.plans.fragments import (
     SCD2_TEMPORAL_JOIN_SQL,
 )
 from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import (
-    tracked_cache,
+    drain,
     pround,
     query,
+    scratch_dir,
     sql_round,
     table,
+    tracked_cache,
+    write_ordered_files,
 )
 
 
@@ -778,10 +781,7 @@ def e16_scd2_stream_enrichment(spark, sf_dir):
     protocol and the snapshot tables' MVCC manifests). The drained,
     enriched rows re-aggregate to j09's exact batch answer — the
     streaming==batch equivalence hashed under the driver gate.
-    Construction-time drain in a scratch dir, d19/d20's precedent."""
-    import os as _os
-    import tempfile
-
+    Construction-time drain in a :func:`registry.scratch_dir`."""
     from pyspark_bigdata_sars_cov_2_analysis_spark.plans.extended import (
         w08_scd2_intervals,
     )
@@ -793,25 +793,12 @@ def e16_scd2_stream_enrichment(spark, sf_dir):
         F.to_date("valid_from").alias("vf"),
         F.to_date("valid_to").alias("vt"),
     )
-    tmp = tempfile.mkdtemp(prefix="spark_graft_e16_")
+    tmp = scratch_dir("e16_scd2_stream_enrichment")
     src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
-    _os.makedirs(src)
     cols = e.select("event_id", "user_id", "event_type", "ts")
-    cols.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    # explicit mtimes, not a sleep (ADVICE r10): FileStreamSource orders
-    # files by modTime, and on a 1s-granularity filesystem a sleep-based
-    # gap can tie, making the hashed version↔batch binding
-    # nondeterministic
-    first = set(_os.listdir(src))
-    for n in first:
-        _os.utime(_os.path.join(src, n), (1_700_000_000, 1_700_000_000))
-    cols.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    for n in set(_os.listdir(src)) - first:
-        _os.utime(_os.path.join(src, n), (1_700_000_100, 1_700_000_100))
+    write_ordered_files(
+        src, [cols.where(F.col("event_id") % 2 == m) for m in (0, 1)]
+    )
     stream = (
         spark.readStream.schema(
             "event_id bigint, user_id bigint, event_type string, "
@@ -827,14 +814,12 @@ def e16_scd2_stream_enrichment(spark, sf_dir):
         & (d >= F.col("vf"))
         & (F.col("vt").isNull() | (d <= F.col("vt"))),
     ).select("event_id", "event_type", "regime_attr")
-    q = (
+    drain(
         enriched.writeStream.format("parquet")
         .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "e16_scd2_stream_enrichment",
     )
-    assert q.awaitTermination(300), "availableNow drain timed out"
     # the batch read of `out` honors _spark_metadata: only files the
     # sink's commit log published are listed
     return (
@@ -871,27 +856,21 @@ def e17_statestore_keys(spark, sf_dir):
     ids (one state row each), and the state-metadata reader must list
     exactly one dedupe operator for the checkpoint. Both readers'
     output rides the hash against an oracle recomputed from the source
-    table. Construction-time drain in a per-call temp dir, the
-    d19/e15 precedent; the state frame is keys-only (never event
+    table. Construction-time drain in a :func:`registry.scratch_dir`,
+    as e15; the state frame is keys-only (never event
     payloads), so the read side is tiny regardless of corpus scale."""
-    import os as _os
-    import tempfile
-
     e = table(spark, sf_dir, "events").select("user_id")
-    tmp = tempfile.mkdtemp(prefix="spark_graft_e17_")
+    tmp = scratch_dir("e17_statestore_keys")
     src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
-    _os.makedirs(src)
-    e.coalesce(1).write.mode("append").parquet(src)
-    q = (
+    write_ordered_files(src, [e])
+    drain(
         spark.readStream.schema("user_id bigint")
         .parquet(src)
         .dropDuplicates(["user_id"])
         .writeStream.format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "e17_statestore_keys",
     )
-    assert q.awaitTermination(300), "availableNow drain timed out"
     keys = (
         spark.read.format("statestore")
         .load(ckpt)

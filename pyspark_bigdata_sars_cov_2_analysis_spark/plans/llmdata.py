@@ -7,8 +7,21 @@ verifies the *algorithm*, not just row counts.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
+    _latest_manifest,
+    _local_path,
+    compact_parquet_snapshot,
+    delete_from_snapshot,
+    list_parquet_snapshots,
+    read_parquet_snapshot,
+    snapshot_changes,
+    streaming_snapshot_sink,
+    vacuum_parquet_snapshots,
+    write_parquet_snapshot,
+)
 from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import (
     dedup,
     multimodal,
@@ -18,11 +31,14 @@ from pyspark_bigdata_sars_cov_2_analysis_spark.plans.fragments import (
     DUCK_NORM,
 )
 from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import (
+    drain,
     pround,
     query,
+    scratch_dir,
     sql_round,
     table,
     tracked_cache,
+    write_ordered_files,
 )
 from pyspark_bigdata_sars_cov_2_analysis_spark.plans.text import _QUALITY_EXPR
 
@@ -1373,6 +1389,23 @@ def o12_weighted_reservoir(spark, sf_dir):
     )
 
 
+def _metric_rows(agg: DataFrame, consts: list[tuple[str, int]]) -> DataFrame:
+    """The (metric, value bigint) audit rows of the snapshot-table
+    queries: one row per column of the one-row ``agg``, named after the
+    column, then one per driver-side ``(metric, value)`` constant."""
+
+    def kv(name, value):
+        return F.struct(
+            F.lit(name).alias("metric"), value.cast("bigint").alias("value")
+        )
+
+    rows = [kv(c, F.col(c)) for c in agg.columns]
+    rows += [kv(k, F.lit(int(v))) for k, v in consts]
+    return agg.select(F.explode(F.array(*rows)).alias("kv")).select(
+        "kv.metric", "kv.value"
+    )
+
+
 @query(
     "o13_snapshot_time_travel",
     # v1 = the %3==0 slice, v2 = v1 plus an APPENDED %3==1 slice. The
@@ -1405,19 +1438,12 @@ def o13_snapshot_time_travel(spark, sf_dir):
     immutable manifest first and scan exactly its file list; this query
     makes the whole protocol (O_EXCL publish, append-by-reference, time
     travel) hash-attestable against aggregates the oracle recomputes
-    from the source. Construction-time work in a per-call temp dir,
-    d19/d20's precedent."""
-    import tempfile
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        read_parquet_snapshot,
-        write_parquet_snapshot,
-    )
-
+    from the source. Construction-time work in a
+    :func:`registry.scratch_dir`."""
     d = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    tmp = tempfile.mkdtemp(prefix="spark_graft_o13_")
+    tmp = scratch_dir("o13_snapshot_time_travel")
     tbl = f"{tmp}/docs_tbl"
     write_parquet_snapshot(d.where(F.col("doc_id") % 3 == 0), tbl)
     write_parquet_snapshot(
@@ -1480,20 +1506,10 @@ def o14_snapshot_lifecycle(spark, sf_dir):
     reclaims exactly the unshared files of dropped versions. The final
     table state, both vacuums' removal counts, the file counts before/
     after compaction, and the dropped versions' read refusals all ride
-    the hash. Construction-time work in a per-call temp dir, the
-    o13/d19 precedent."""
-    import tempfile
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        compact_parquet_snapshot,
-        list_parquet_snapshots,
-        read_parquet_snapshot,
-        vacuum_parquet_snapshots,
-        write_parquet_snapshot,
-    )
-
+    the hash. Construction-time work in a :func:`registry.scratch_dir`,
+    as o13."""
     d = table(spark, sf_dir, "documents").select("doc_id", "lang")
-    tmp = tempfile.mkdtemp(prefix="spark_graft_o14_")
+    tmp = scratch_dir("o14_snapshot_lifecycle")
     tbl = f"{tmp}/docs_tbl"
     for m in (0, 1, 2):  # three 1-file versions: v3 carries 3 files
         write_parquet_snapshot(
@@ -1525,24 +1541,10 @@ def o14_snapshot_lifecycle(spark, sf_dir):
         ("refused_reads", refused),
     ]
     latest = read_parquet_snapshot(spark, tbl).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("doc_id").cast("bigint").alias("s"),
+        F.count(F.lit(1)).cast("bigint").alias("latest_docs"),
+        F.sum("doc_id").cast("bigint").alias("latest_sum_id"),
     )
-    def _kv(k, v):
-        return F.struct(
-            F.lit(k).alias("metric"), v.cast("bigint").alias("value")
-        )
-
-    audit = latest.select(
-        F.explode(
-            F.array(
-                _kv("latest_docs", F.col("n")),
-                _kv("latest_sum_id", F.col("s")),
-                *[_kv(k, F.lit(int(n))) for k, n in consts],
-            )
-        ).alias("kv")
-    )
-    return audit.select("kv.metric", "kv.value")
+    return _metric_rows(latest, consts)
 
 
 @query(
@@ -1600,20 +1602,11 @@ def o15_schema_evolution(spark, sf_dir):
     padding (old files pad the new column, per-version schemas stay
     intact), the drift-refusal default surviving the feature, and a
     compaction that re-materializes uniform files and sheds the
-    merge-read. Construction-time work in a per-call temp dir, the
-    o13/o14 precedent."""
-    import tempfile
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        compact_parquet_snapshot,
-        list_parquet_snapshots,
-        read_parquet_snapshot,
-        write_parquet_snapshot,
-    )
-
+    merge-read. Construction-time work in a
+    :func:`registry.scratch_dir`, as o13/o14."""
     d = table(spark, sf_dir, "documents")
     narrow = d.select("doc_id", "n_chars")
-    tmp = tempfile.mkdtemp(prefix="spark_graft_o15_")
+    tmp = scratch_dir("o15_schema_evolution")
     tbl = f"{tmp}/docs_tbl"
     write_parquet_snapshot(narrow.where(F.col("doc_id") % 5 == 0), tbl)
     write_parquet_snapshot(
@@ -1636,20 +1629,20 @@ def o15_schema_evolution(spark, sf_dir):
     except ValueError:
         drift_refused = 1
     latest = read_parquet_snapshot(spark, tbl, version=2).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("doc_id").cast("bigint").alias("s"),
+        F.count(F.lit(1)).cast("bigint").alias("latest_docs"),
+        F.sum("doc_id").cast("bigint").alias("latest_sum_id"),
         F.count(F.when(F.col("lang").isNull(), 1))
         .cast("bigint")
-        .alias("ln"),
-        F.sum("n_chars").cast("bigint").alias("c"),
+        .alias("lang_null_docs"),
+        F.sum("n_chars").cast("bigint").alias("sum_chars"),
     )
     comp = compact_parquet_snapshot(spark, tbl, target_files=1)
     snap_c = list_parquet_snapshots(tbl)[-1]
     post = read_parquet_snapshot(spark, tbl, version=comp["version"]).agg(
-        F.count(F.lit(1)).cast("bigint").alias("pn"),
+        F.count(F.lit(1)).cast("bigint").alias("postcompact_docs"),
         F.count(F.when(F.col("lang").isNull(), 1))
         .cast("bigint")
-        .alias("pln"),
+        .alias("postcompact_lang_null"),
     )
     consts = [
         ("v1_cols", v1_cols),
@@ -1658,26 +1651,7 @@ def o15_schema_evolution(spark, sf_dir):
         ("compact_files", len(snap_c["files"])),
         ("compact_evolved_flag", int(bool(snap_c.get("evolved")))),
     ]
-
-    def _kv(k, v):
-        return F.struct(
-            F.lit(k).alias("metric"), v.cast("bigint").alias("value")
-        )
-
-    audit = latest.crossJoin(post).select(
-        F.explode(
-            F.array(
-                _kv("latest_docs", F.col("n")),
-                _kv("latest_sum_id", F.col("s")),
-                _kv("lang_null_docs", F.col("ln")),
-                _kv("sum_chars", F.col("c")),
-                _kv("postcompact_docs", F.col("pn")),
-                _kv("postcompact_lang_null", F.col("pln")),
-                *[_kv(k, F.lit(int(n))) for k, n in consts],
-            )
-        ).alias("kv")
-    )
-    return audit.select("kv.metric", "kv.value")
+    return _metric_rows(latest.crossJoin(post), consts)
 
 
 @query(
@@ -1748,26 +1722,14 @@ def o16_data_skipping(spark, sf_dir):
     making files range-disjoint so skipping survives maintenance, and
     ``snapshot_changes`` serving row-level inserts/deletes whose
     append-only fast path provably never touches pre-existing files.
-    Construction-time work in a per-call temp dir, the o13/o14/o15
-    precedent; file-count metrics are driver-side manifest/plan
+    Construction-time work in a :func:`registry.scratch_dir`, as
+    o13/o14/o15; file-count metrics are driver-side manifest/plan
     metadata (never data collects)."""
-    import tempfile
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        _local_path,
-        compact_parquet_snapshot,
-        delete_from_snapshot,
-        list_parquet_snapshots,
-        read_parquet_snapshot,
-        snapshot_changes,
-        write_parquet_snapshot,
-    )
-
     d = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     n = d.count()  # 1-row bounds sidecar (the o11/p20 precedent)
     q = n // 4
     lo, hi = q // 2, q // 2 + q
-    tmp = tempfile.mkdtemp(prefix="spark_graft_o16_")
+    tmp = scratch_dir("o16_data_skipping")
     tbl = f"{tmp}/docs_tbl"
     write_parquet_snapshot(
         d.where(F.col("doc_id") < q).coalesce(1), tbl,
@@ -1790,8 +1752,8 @@ def o16_data_skipping(spark, sf_dir):
     pruned = read_parquet_snapshot(spark, tbl, where={"doc_id": (lo, hi)})
     pruned_files = len(pruned.inputFiles())
     pruned_agg = pruned.agg(
-        F.count(F.lit(1)).cast("bigint").alias("pd"),
-        F.sum("doc_id").cast("bigint").alias("ps"),
+        F.count(F.lit(1)).cast("bigint").alias("pruned_docs"),
+        F.sum("doc_id").cast("bigint").alias("pruned_sum_id"),
     )
     comp = compact_parquet_snapshot(
         spark, tbl, target_files=2, cluster_by=["doc_id"]
@@ -1806,8 +1768,8 @@ def o16_data_skipping(spark, sf_dir):
     )
     post_files = len(post.inputFiles())
     post_agg = post.agg(
-        F.count(F.lit(1)).cast("bigint").alias("cd"),
-        F.sum("doc_id").cast("bigint").alias("cs"),
+        F.count(F.lit(1)).cast("bigint").alias("postcompact_docs"),
+        F.sum("doc_id").cast("bigint").alias("postcompact_sum_id"),
     )
     delete_from_snapshot(spark, tbl, "doc_id % 7 = 3")
     # the append-only sub-feed (v1→v4) must plan over ONLY the files
@@ -1823,14 +1785,20 @@ def o16_data_skipping(spark, sf_dir):
     feed = snapshot_changes(spark, tbl, 1)
     ins = F.col("_change_type") == "insert"
     feed_agg = feed.agg(
-        F.count(F.when(ins, 1)).cast("bigint").alias("fi"),
-        F.sum(F.when(ins, F.col("doc_id"))).cast("bigint").alias("fis"),
-        F.count(F.when(~ins, 1)).cast("bigint").alias("fd"),
-        F.sum(F.when(~ins, F.col("doc_id"))).cast("bigint").alias("fds"),
-        F.countDistinct("_commit_version").cast("bigint").alias("fv"),
+        F.count(F.when(ins, 1)).cast("bigint").alias("feed_inserts"),
+        F.sum(F.when(ins, F.col("doc_id")))
+        .cast("bigint")
+        .alias("feed_insert_sum"),
+        F.count(F.when(~ins, 1)).cast("bigint").alias("feed_deletes"),
+        F.sum(F.when(~ins, F.col("doc_id")))
+        .cast("bigint")
+        .alias("feed_delete_sum"),
+        F.countDistinct("_commit_version")
+        .cast("bigint")
+        .alias("feed_versions"),
     )
     latest_agg = read_parquet_snapshot(spark, tbl).agg(
-        F.count(F.lit(1)).cast("bigint").alias("ld")
+        F.count(F.lit(1)).cast("bigint").alias("latest_docs")
     )
     consts = [
         ("total_files", len(snap4["files"])),
@@ -1841,35 +1809,12 @@ def o16_data_skipping(spark, sf_dir):
         ("postcompact_pruned_files", post_files),
         ("feed_append_scan_isolated", isolated),
     ]
-
-    def _kv(k, v):
-        return F.struct(
-            F.lit(k).alias("metric"), v.cast("bigint").alias("value")
-        )
-
-    audit = (
+    return _metric_rows(
         pruned_agg.crossJoin(post_agg)
         .crossJoin(feed_agg)
-        .crossJoin(latest_agg)
-        .select(
-            F.explode(
-                F.array(
-                    _kv("pruned_docs", F.col("pd")),
-                    _kv("pruned_sum_id", F.col("ps")),
-                    _kv("postcompact_docs", F.col("cd")),
-                    _kv("postcompact_sum_id", F.col("cs")),
-                    _kv("feed_inserts", F.col("fi")),
-                    _kv("feed_insert_sum", F.col("fis")),
-                    _kv("feed_deletes", F.col("fd")),
-                    _kv("feed_delete_sum", F.col("fds")),
-                    _kv("feed_versions", F.col("fv")),
-                    _kv("latest_docs", F.col("ld")),
-                    *[_kv(k, F.lit(int(v))) for k, v in consts],
-                )
-            ).alias("kv")
-        )
+        .crossJoin(latest_agg),
+        consts,
     )
-    return audit.select("kv.metric", "kv.value")
 
 
 @query(
@@ -1910,78 +1855,58 @@ def e18_snapshot_stream_source(spark, sf_dir):
     one checkpoint prove initial-content + incremental consumption,
     replay-free restarts, and that a content-identical compaction
     contributes nothing while the append AFTER it diffs against the
-    compacted file set. Construction-time drains in a per-call temp
-    dir, the e15/d19/d20 precedent."""
-    import tempfile
-
+    compacted file set. Construction-time drains in a
+    :func:`registry.scratch_dir`, as e15."""
     from pyspark_bigdata_sars_cov_2_analysis_spark.io.snapshot_source import (
         register_snapshot_stream,
-    )
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        compact_parquet_snapshot,
-        write_parquet_snapshot,
     )
 
     register_snapshot_stream(spark)
     d = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    tmp = tempfile.mkdtemp(prefix="spark_graft_e18_")
+    tmp = scratch_dir("e18_snapshot_stream_source")
     tbl, out, ckpt = f"{tmp}/tbl", f"{tmp}/out", f"{tmp}/ckpt"
 
-    def drain(count=True):
-        q = (
+    def tail():
+        drain(
             spark.readStream.format("snapshot_stream")
             .load(tbl)
             .writeStream.format("parquet")
             .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
+            "e18_snapshot_stream_source",
         )
-        assert q.awaitTermination(300), "snapshot_stream drain timed out"
-        # the cumulative count feeds the after_drain metrics; the LAST
-        # drain's count fed nothing and was a full re-scan of the sink
-        # for nothing (optimization r16, guide §1.2 "don't compute
-        # things you throw away") — the final agg below reads `out` once
-        return spark.read.parquet(out).count() if count else None
 
     write_parquet_snapshot(d.where(F.col("doc_id") % 4 == 0), tbl)
     write_parquet_snapshot(
         d.where(F.col("doc_id") % 4 == 1), tbl, mode="append"
     )
-    after_d1 = drain()  # v1 initial content + v2 append
+    tail()  # v1 initial content + v2 append
+    # the cumulative counts feed the after_drain metrics; the last
+    # drain is counted only by the final agg, which reads `out` once
+    after_d1 = spark.read.parquet(out).count()
     write_parquet_snapshot(
         d.where(F.col("doc_id") % 4 == 2), tbl, mode="append"
     )
     compact_parquet_snapshot(spark, tbl, target_files=1)
-    after_d2 = drain()  # v3 only: the compaction must add nothing
+    tail()  # v3 only: the compaction must add nothing
+    after_d2 = spark.read.parquet(out).count()
     write_parquet_snapshot(
         d.where(F.col("doc_id") % 4 == 3), tbl, mode="append"
     )
-    drain(count=False)  # v5, diffed against the COMPACTED file set
+    tail()  # v5, diffed against the COMPACTED file set
     final = spark.read.parquet(out)
-    n_cols = len(final.columns)
     agg = final.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("doc_id").cast("bigint").alias("s"),
+        F.count(F.lit(1)).cast("bigint").alias("total_rows"),
+        F.sum("doc_id").cast("bigint").alias("total_sum_id"),
     )
-
-    def _kv(k, v):
-        return F.struct(
-            F.lit(k).alias("metric"), v.cast("bigint").alias("value")
-        )
-
-    audit = agg.select(
-        F.explode(
-            F.array(
-                _kv("total_rows", F.col("n")),
-                _kv("total_sum_id", F.col("s")),
-                _kv("after_drain1", F.lit(int(after_d1))),
-                _kv("after_drain2", F.lit(int(after_d2))),
-                _kv("stream_schema_cols", F.lit(int(n_cols))),
-            )
-        ).alias("kv")
+    return _metric_rows(
+        agg,
+        [
+            ("after_drain1", after_d1),
+            ("after_drain2", after_d2),
+            ("stream_schema_cols", len(final.columns)),
+        ],
     )
-    return audit.select("kv.metric", "kv.value")
 
 
 @query(
@@ -2011,42 +1936,24 @@ def e15_snapshot_sink_stream(spark, sf_dir):
     read back BY VERSION with their manifest ``src_batch`` stamps and
     aggregated. The version→batch binding and both historical table
     states enter the hash, so a sink that double-published a replayed
-    batch, skipped one, or tore a manifest flips the result. Scratch
-    dirs + construction-time drain per d19/d20's precedent."""
-    import os as _os
-    import tempfile
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io.writers import (
-        list_parquet_snapshots,
-        read_parquet_snapshot,
-        streaming_snapshot_sink,
-    )
-
+    batch, skipped one, or tore a manifest flips the result.
+    Construction-time drain in a :func:`registry.scratch_dir`."""
     d = table(spark, sf_dir, "documents").select("doc_id", "lang")
-    tmp = tempfile.mkdtemp(prefix="spark_graft_e15_")
+    tmp = scratch_dir("e15_snapshot_sink_stream")
     src, tbl, ckpt = f"{tmp}/src", f"{tmp}/tbl", f"{tmp}/ckpt"
-    _os.makedirs(src)
-    d.where(F.col("doc_id") % 3 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    # explicit mtimes, not a sleep (ADVICE r10): FileStreamSource orders
-    # files by modTime; a sleep can tie on a 1s-granularity filesystem
-    first = set(_os.listdir(src))
-    for n in first:
-        _os.utime(_os.path.join(src, n), (1_700_000_000, 1_700_000_000))
-    d.where(F.col("doc_id") % 3 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    for n in set(_os.listdir(src)) - first:
-        _os.utime(_os.path.join(src, n), (1_700_000_100, 1_700_000_100))
-    q = streaming_snapshot_sink(
-        spark.readStream.schema("doc_id bigint, lang string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src),
-        tbl,
-        ckpt,
-    ).start()
-    assert q.awaitTermination(300), "availableNow drain timed out"
+    write_ordered_files(
+        src, [d.where(F.col("doc_id") % 3 == m) for m in (0, 1)]
+    )
+    drain(
+        streaming_snapshot_sink(
+            spark.readStream.schema("doc_id bigint, lang string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src),
+            tbl,
+            ckpt,
+        ),
+        "e15_snapshot_sink_stream",
+    )
     snaps = {s["version"]: s for s in list_parquet_snapshots(tbl)}
     outs = []
     for v in (1, 2):
@@ -2789,9 +2696,10 @@ def d19_chunk_ingest_incremental(spark, sf_dir):
     across batches on purpose: arrival order ≠ id order, so the oracle's
     (batch, doc_id, pos) first-occurrence rank is only reproduced if the
     state probe really beats within-batch id order — an id-ordered split
-    couldn't tell the two apart. Scratch state lives in a per-call temp
-    dir that must outlive the returned (lazy) DataFrame; a few hundred
-    KB at attestation SFs, reclaimed by the OS tmp reaper.
+    couldn't tell the two apart. Scratch state lives in a
+    :func:`registry.scratch_dir`, which outlives the returned (lazy)
+    DataFrame until the process exits; a few hundred KB at attestation
+    SFs.
 
     ``n_buckets=16``, not the 64 default: the grid must be sized to the
     STATE (per-bucket state around file-sized, not row-sized) — each
@@ -2800,19 +2708,15 @@ def d19_chunk_ingest_incremental(spark, sf_dir):
     64-dir seed write was 2.75s vs 0.45s flat for 9.5k rows — pure
     commit overhead). 16 still exercises the pruning path end-to-end;
     a 100 TB deployment sizes upward instead."""
-    import tempfile
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup as dd
-
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="spark_graft_d19_")
+    tmp = scratch_dir("d19_chunk_ingest_incremental")
     chunk_path, out = f"{tmp}/chunks", f"{tmp}/out"
-    dd.write_chunk_checkpoint(
+    dedup.write_chunk_checkpoint(
         d.where(F.col("doc_id") % 3 == 0), chunk_path, "doc_id", "text",
         n_buckets=16,
     )
     for b, m in ((0, 1), (1, 2)):
-        dd.chunk_ingest_batch_idempotent(
+        dedup.chunk_ingest_batch_idempotent(
             d.where(F.col("doc_id") % 3 == m), b, chunk_path, out
         )
     # explicit schema: an all-duplicate (or empty) batch publishes NO
@@ -2900,24 +2804,21 @@ def d20_band_ingest_incremental(spark, sf_dir):
     files of its batch's sigb cells), the validated append of batch-0's
     bands, and the per-batch dynamic overwrite publish. The modulo split interleaves ids across batches
     so arrival order ≠ id order, same rationale as d19. Scratch state in
-    a per-call temp dir that must outlive the returned lazy frame.
+    a :func:`registry.scratch_dir`, which outlives the returned lazy
+    frame.
     ``n_sig_buckets=4`` (4 bands x 4 = 16 grid cells), not the 16
     default: d19's grid-sizing rule — per-cell state around file-sized;
     this corpus's ~6.7k band rows over 64 cells paid more in
     per-directory commits than in data."""
-    import tempfile
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup as dd
-
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="spark_graft_d20_")
+    tmp = scratch_dir("d20_band_ingest_incremental")
     band_path, out = f"{tmp}/bands", f"{tmp}/out"
-    dd.write_band_checkpoint(
+    dedup.write_band_checkpoint(
         d.where(F.col("doc_id") % 3 == 0), band_path, "doc_id", "text",
         n_sig_buckets=4,
     )
     for b, m in ((0, 1), (1, 2)):
-        dd.ingest_batch_idempotent(
+        dedup.ingest_batch_idempotent(
             d.where(F.col("doc_id") % 3 == m), b, band_path, out
         )
     # explicit schema, d19's rule: an all-duplicate batch publishes no
@@ -3006,28 +2907,24 @@ def d22_compacted_ingest(spark, sf_dir):
     admissions; one that failed to rewrite buckets flips the file
     column. Same scratch-dir and construction-time-work precedent as
     d19/d20."""
-    import tempfile
     from collections import Counter
 
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup as dd
-
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="spark_graft_d22_")
+    tmp = scratch_dir("d22_compacted_ingest")
     band_path, out = f"{tmp}/bands", f"{tmp}/out"
-    dd.write_band_checkpoint(
+    dedup.write_band_checkpoint(
         d.where(F.col("doc_id") % 3 == 0), band_path, "doc_id", "text",
         n_sig_buckets=4,
     )
     for b, m in ((0, 1), (1, 2)):
-        dd.ingest_batch_idempotent(
+        dedup.ingest_batch_idempotent(
             d.where(F.col("doc_id") % 3 == m), b, band_path, out
         )
-        dd.compact_band_checkpoint(spark, band_path)
+        dedup.compact_band_checkpoint(spark, band_path)
     # a file's cell is its band=…/sigb=… directory pair
     cells = Counter(
         tuple(f.split("/")[-3:-1])
-        for f in writers._latest_manifest(band_path)["files"]
+        for f in _latest_manifest(band_path)["files"]
     )
     max_files = max(cells.values(), default=0)
     return (

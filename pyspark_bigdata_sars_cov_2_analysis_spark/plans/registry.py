@@ -15,8 +15,11 @@ Conventions that make the hashes match (SURVEY.md §7.3 "hard parts"):
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import stat
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,7 +43,8 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     (reserved for genuinely non-SQL-expressible ops)."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        assert name not in QUERIES, f"duplicate query name {name}"
+        if name in QUERIES:
+            raise ValueError(f"duplicate query name {name}")
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
@@ -97,6 +101,69 @@ def release_plan_caches() -> int:
         except Exception:
             pass  # session already stopped — nothing left to pin
     return n
+
+
+# Construction-time work (the queries that publish tables, run ingest
+# loops or drain streams while they are built) writes under ONE
+# process-wide scratch root. A returned frame may read its query's dir
+# lazily, and perfbench collects each query's last frame after the
+# per-query release_plan_caches(), so a dir lives until the process
+# exits: neither a release nor a rebuild of the query removes it. The
+# root is made on first use, so TMPDIR at that moment decides where it
+# goes.
+_SCRATCH_ROOT: str | None = None
+_SCRATCH_LOCK = _threading.Lock()
+_DRAIN_TIMEOUT_S = 300
+
+
+def _remove_scratch_root(root: str, pid: int) -> None:
+    # a forked child inherits the atexit hook but not the ownership
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def scratch_dir(query: str) -> str:
+    """A fresh directory for one build of ``query``, under the process's
+    scratch root; the root and everything in it are removed when the
+    process that made it exits."""
+    global _SCRATCH_ROOT
+    with _SCRATCH_LOCK:
+        if _SCRATCH_ROOT is None:
+            _SCRATCH_ROOT = tempfile.mkdtemp(prefix="spark_graft_")
+            atexit.register(_remove_scratch_root, _SCRATCH_ROOT, os.getpid())
+        root = _SCRATCH_ROOT
+    return tempfile.mkdtemp(prefix=f"{query}_", dir=root)
+
+
+def drain(writer, query: str) -> None:
+    """Run the ``DataStreamWriter`` as an availableNow query and wait for
+    it to finish. A failed stream raises from ``awaitTermination``; one
+    still running after ``_DRAIN_TIMEOUT_S`` is stopped and raises a
+    ``TimeoutError`` naming ``query``, so no build reads a partly
+    drained sink."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"{query}: availableNow drain still running after "
+            f"{_DRAIN_TIMEOUT_S} s"
+        )
+
+
+def write_ordered_files(src: str, frames: list[DataFrame]) -> None:
+    """Append each frame to the parquet directory ``src`` as one file, the
+    i-th stamped with mtime ``1_700_000_000 + 100 * i``: a file stream
+    source orders files by modification time, so it reads them in list
+    order. Explicit mtimes, not a sleep, which can tie on a filesystem
+    with 1 s mtime granularity."""
+    seen: set[str] = set()
+    for i, frame in enumerate(frames):
+        frame.coalesce(1).write.mode("append").parquet(src)
+        t = 1_700_000_000 + 100 * i
+        new = set(os.listdir(src)) - seen
+        for n in new:
+            os.utime(os.path.join(src, n), (t, t))
+        seen |= new
 
 
 # Schema cache for table() (PAPERS.md: Running Presto at Scale — serve

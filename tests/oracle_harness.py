@@ -55,12 +55,15 @@ def compare(spark, name: str, query_fn, oracle: str, sf_dir: str) -> None:
     duck_cols = list(res.columns)
     duck_rows = [tuple(r) for r in res.fetchall()]
 
-    assert sorted(spark_cols) == sorted(duck_cols), (
-        f"{name}: column mismatch spark={sorted(spark_cols)} duck={sorted(duck_cols)}"
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count spark={len(spark_rows)} duck={len(duck_rows)}"
-    )
+    # raised, not asserted: the checks must hold under python -O too
+    if sorted(spark_cols) != sorted(duck_cols):
+        raise AssertionError(
+            f"{name}: column mismatch spark={sorted(spark_cols)} duck={sorted(duck_cols)}"
+        )
+    if len(spark_rows) != len(duck_rows):
+        raise AssertionError(
+            f"{name}: row count spark={len(spark_rows)} duck={len(duck_rows)}"
+        )
     s = _canon_rows(spark_cols, spark_rows)
     d = _canon_rows(duck_cols, duck_rows)
     if s != d:

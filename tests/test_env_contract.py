@@ -108,6 +108,94 @@ def test_python_workers_import_package_from_any_cwd(tmp_path):
     assert "WORKERS_IMPORTED" in proc.stdout, proc.stderr[-3000:]
 
 
+OPTIMIZED_PROBE = r"""
+import sys
+sys.path[:0] = [{repo!r}, {tests!r}]
+import oracle_harness
+from pyspark_bigdata_sars_cov_2_analysis_spark import plans, start_session
+
+spark = start_session("optimized-probe", master="local[1]")
+for name in ("e15_snapshot_sink_stream", "e16_scd2_stream_enrichment"):
+    oracle_harness.compare(
+        spark, name, plans.QUERIES[name], plans.ORACLES[name], {sf!r}
+    )
+    print("MATCHED", name, flush=True)
+spark.stop()
+"""
+
+
+def test_drains_and_scratch_survive_python_O(tmp_path):
+    """Under ``python -O`` (asserts stripped) the streaming queries still
+    wait for their drains and match their oracles, and the process leaves
+    no ``spark_graft_*`` scratch entry in its ``TMPDIR`` once it exits."""
+    from tests.conftest import SF_TEST
+
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    env = dict(os.environ, TMPDIR=str(tmpdir), SPARK_GRAFT_DRIVER_MEM="1g")
+    probe = OPTIMIZED_PROBE.format(
+        repo=REPO, tests=os.path.join(REPO, "tests"), sf=SF_TEST
+    )
+    proc = subprocess.run(
+        [sys.executable, "-O", "-c", probe],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=str(tmp_path),
+        env=env,
+    )
+    matched = [l for l in proc.stdout.splitlines() if l.startswith("MATCHED")]
+    assert len(matched) == 2, (proc.stdout, proc.stderr[-3000:])
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    left = [n for n in os.listdir(tmpdir) if n.startswith("spark_graft_")]
+    assert left == [], left
+
+
+class _StubQuery:
+    def __init__(self, finished: bool):
+        self.finished = finished
+        self.stopped = False
+
+    def awaitTermination(self, timeout):
+        return self.finished
+
+    def stop(self):
+        self.stopped = True
+
+
+class _StubWriter:
+    def __init__(self, query: _StubQuery):
+        self.query = query
+        self.trigger_kwargs = None
+
+    def trigger(self, **kwargs):
+        self.trigger_kwargs = kwargs
+        return self
+
+    def start(self):
+        return self.query
+
+
+def test_drain_stops_and_names_a_query_that_times_out():
+    """``registry.drain`` stops a stream still running at its timeout and
+    raises an error naming the query; a finished one returns untouched.
+    Stub writer and query, so no JVM starts."""
+    import pytest
+
+    from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import drain
+
+    late = _StubQuery(finished=False)
+    with pytest.raises(TimeoutError, match="e99_probe"):
+        drain(_StubWriter(late), "e99_probe")
+    assert late.stopped
+
+    done = _StubQuery(finished=True)
+    writer = _StubWriter(done)
+    drain(writer, "e99_probe")
+    assert not done.stopped
+    assert writer.trigger_kwargs == {"availableNow": True}
+
+
 SESSION_PROBE = r"""
 import json, os, sys
 sys.path.insert(0, {repo!r})

@@ -196,6 +196,8 @@ def test_simhash_band_layout_covers_every_bit():
     """Every signature bit must land in exactly one band for ANY
     (bits, band_bits) — non-divisor widths get a remainder band instead of
     silently orphaning the top bits (undocumented recall loss)."""
+    import pytest as _pytest
+
     from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata.dedup import (
         simhash_band_layout,
     )
@@ -207,6 +209,10 @@ def test_simhash_band_layout_covers_every_bit():
                 b for shift, width in layout for b in range(shift, shift + width)
             )
             assert covered == list(range(bits)), (bits, band_bits, layout)
+        # out-of-range widths are refused, also under python -O
+        for band_bits in (0, -4, bits + 1):
+            with _pytest.raises(ValueError):
+                simhash_band_layout(bits, band_bits)
 
 
 def test_simhash_neardup_warns_when_bands_below_hamming(spark):

@@ -16,6 +16,12 @@ so the graph over-approximates what runs: a def it leaves unreached is
 called by nothing but tests. The test fails when that set differs from
 ``KEPT_UNREACHED``: delete new unreached code, or add it there with the
 reason it stays. No Spark session is started.
+
+The same parse checks two rules the package keeps: no ``assert``
+statement (``python -O`` strips it, and the guard with it), and
+construction-time scratch dirs and stream drains have one owner,
+``plans/registry.py`` (``scratch_dir`` and ``drain``): ``tempfile`` and
+``.awaitTermination(`` appear nowhere else.
 """
 
 from __future__ import annotations
@@ -83,11 +89,8 @@ def _strings(node: ast.AST) -> set[str]:
     }
 
 
-def _unreached() -> set[str]:
-    defs: dict[str, ast.AST] = {}
-    by_name: dict[str, set[str]] = defaultdict(set)
-    roots: set[str] = set()
-    root_names: set[str] = set()
+def _package_modules():
+    """``(dotted module name, parsed tree)`` of every package file."""
     pkg_dir = os.path.join(REPO, PKG)
     for dirpath, _dirs, files in os.walk(pkg_dir):
         for fname in sorted(files):
@@ -95,40 +98,47 @@ def _unreached() -> set[str]:
                 continue
             path = os.path.join(dirpath, fname)
             rel = os.path.relpath(path, pkg_dir)[: -len(".py")]
-            mod = rel.replace(os.sep, ".")
             with open(path) as fh:
-                tree = ast.parse(fh.read())
-            for i, stmt in enumerate(tree.body):
-                if isinstance(
-                    stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-                ):
-                    qual = f"{mod}.{stmt.name}"
-                    defs[qual] = stmt
-                    by_name[stmt.name].add(qual)
-                    for deco in stmt.decorator_list:
-                        root_names |= _refs(deco)
-                        if isinstance(deco, ast.Call) and "query" in _refs(
-                            deco.func
-                        ):
-                            roots.add(qual)
-                    if isinstance(stmt, ast.ClassDef):
-                        for base in stmt.bases + [k.value for k in stmt.keywords]:
-                            root_names |= _refs(base)
-                    else:
-                        args = stmt.args
-                        for dflt in args.defaults + [
-                            d for d in args.kw_defaults if d is not None
-                        ]:
-                            root_names |= _refs(dflt)
-                    if (
-                        mod.startswith("pipelines.")
-                        or qual == "timeseries.forecast.prophet_fitter"
+                yield rel.replace(os.sep, "."), ast.parse(fh.read())
+
+
+def _unreached() -> set[str]:
+    defs: dict[str, ast.AST] = {}
+    by_name: dict[str, set[str]] = defaultdict(set)
+    roots: set[str] = set()
+    root_names: set[str] = set()
+    for mod, tree in _package_modules():
+        for i, stmt in enumerate(tree.body):
+            if isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                qual = f"{mod}.{stmt.name}"
+                defs[qual] = stmt
+                by_name[stmt.name].add(qual)
+                for deco in stmt.decorator_list:
+                    root_names |= _refs(deco)
+                    if isinstance(deco, ast.Call) and "query" in _refs(
+                        deco.func
                     ):
                         roots.add(qual)
-                elif not isinstance(stmt, (ast.Import, ast.ImportFrom)):
-                    root_names |= _refs(stmt)
-                    if not (i == 0 and isinstance(stmt, ast.Expr)):
-                        root_names |= _strings(stmt)  # __all__ and the like
+                if isinstance(stmt, ast.ClassDef):
+                    for base in stmt.bases + [k.value for k in stmt.keywords]:
+                        root_names |= _refs(base)
+                else:
+                    args = stmt.args
+                    for dflt in args.defaults + [
+                        d for d in args.kw_defaults if d is not None
+                    ]:
+                        root_names |= _refs(dflt)
+                if (
+                    mod.startswith("pipelines.")
+                    or qual == "timeseries.forecast.prophet_fitter"
+                ):
+                    roots.add(qual)
+            elif not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                root_names |= _refs(stmt)
+                if not (i == 0 and isinstance(stmt, ast.Expr)):
+                    root_names |= _strings(stmt)  # __all__ and the like
     entry_files = [
         os.path.join(REPO, "__spark_entry__.py"),
         os.path.join(REPO, "bench.py"),
@@ -166,4 +176,41 @@ def test_unreached_defs_are_the_kept_list():
     )
     assert not stale, (
         f"KEPT_UNREACHED names defs that are reached or gone: {stale}"
+    )
+
+
+def test_package_has_no_asserts():
+    found = [
+        f"{mod}:{n.lineno}"
+        for mod, tree in _package_modules()
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Assert)
+    ]
+    assert not found, (
+        f"assert statements in package code: {found} — python -O strips "
+        "them; raise instead"
+    )
+
+
+def _scratch_or_drain(n: ast.AST) -> bool:
+    if isinstance(n, ast.Import):
+        return any(a.name == "tempfile" for a in n.names)
+    if isinstance(n, ast.ImportFrom):
+        return n.module == "tempfile"
+    if isinstance(n, ast.Name):
+        return n.id == "tempfile"
+    return isinstance(n, ast.Attribute) and n.attr == "awaitTermination"
+
+
+def test_scratch_dirs_and_drains_only_in_registry():
+    found = [
+        f"{mod}:{n.lineno}"
+        for mod, tree in _package_modules()
+        if mod != "plans.registry"
+        for n in ast.walk(tree)
+        if _scratch_or_drain(n)
+    ]
+    assert not found, (
+        f"tempfile / awaitTermination outside plans/registry.py: {found} — "
+        "use registry.scratch_dir and registry.drain"
     )

@@ -1,5 +1,5 @@
-"""Focused per-query timing with the bench's protocol (count() action),
-more runs, and optional job-description labeling for UI-less profiling.
+"""Focused per-query timing with the bench's protocol (count() action)
+and more runs.
 
 Usage: python tools/time_queries.py name [name ...] [--runs N]
 Prints per-query all-run timings plus min/median so steady state and
