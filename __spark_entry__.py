@@ -13,6 +13,9 @@ LLM-data surface).
 
 from __future__ import annotations
 
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,113 +28,49 @@ def entry(spark: SparkSession) -> DataFrame:
     return plans.QUERIES["q1_pricing_summary"](spark, "/root/testdata/sf0.001")
 
 
-# The driver checks a static window of the FIRST 50 registered queries, so
-# raw registration order left the whole TPC-H/join/text/udf surface without
-# driver attestation for three rounds (ADVICE r3). Emit the dict in an
-# explicit priority order instead, re-derived each round from the union of
-# CORRECTNESS_r*.json: queries never green in ANY round first, then the
-# stalest attestations, newest-attested last.
-#
-# Round-15 window (VERDICT r14 Next-round #1, committed in the r14
-# round as the forward plan): round 14 closed 50/50 green with ZERO new
-# registrations and no failed attestations, so the r15 head is pure
-# staleness rotation — the 11 r10-attested names spilled past the r14
-# cut (in their CORRECTNESS_r10 order), then the FIRST 39 of the 50
-# r11-attested names in their CORRECTNESS_r11 order (11 + 39 = 50; the
-# last 11 r11 names lead the committed round-16 head, followed by the
-# 50 r12-attested names in their CORRECTNESS_r12 order).
-# `ml01_classifier_bench` (last attested r5) sits outside the COMMITTED
-# r15/r16 windows: it was rows-only (a slot bought no hash attestation)
-# until r15 gave it a DuckDB oracle, and a committed window plan is
-# never displaced mid-flight — it is now the stalest hash-eligible
-# name, so the r17 planner should lead with it.
-# The cut point is COMPUTED in _ordered_names (pinned by
-# tests/test_env_contract.py::test_attestation_window_arithmetic),
-# never hand-counted in a comment.
-_PRIORITY_FIRST: list[str] = [
-    # empty this round: no failed attestations (r14 was 50/50 green)
-    # and no never-attested registrations (r14 held additions at 0)
-]
-
-# Queries registered DURING round 15, after the window above was
-# committed — per the standing overflow rule they queue BEHIND the
-# window (local parity covers them until then) instead of displacing a
-# committed stale name. Round 15 holds new registrations to 0
-# (VERDICT r14 #4), so this is empty by plan.
-_NEXT_WINDOW_FIRST: list[str] = []
-_STALE_QUEUE = [
-    # the 11 r10-stale names spilled past the r14 cut (stalest in the
-    # rotation), in their CORRECTNESS_r10 order — VERDICT r13 #1 / r14 #1
-    "d14_chunk_dedup_keep_first", "a21_unpivot_melt",
-    "ml03_regression_metrics", "u09_arrow_scalar_udf",
-    "sql05_lateral_view_tokens", "e10_view_purchase_outer",
-    "w07_time_range_frame", "f16_array_lambda", "u10_except_all",
-    "u11_intersect_all", "o07_zorder_cells",
-    # last attested round 11, in their CORRECTNESS_r11 order; the first
-    # WINDOW - 11 = 39 fill the round-15 window (cut after
-    # q8_market_share), the remaining 11 lead the committed round-16 head
-    "o11_budgeted_mixture", "j12_runtime_filter", "sql11_sql_body_udf",
-    "d22_compacted_ingest", "o12_weighted_reservoir",
-    "d23_contamination_report", "j13_asof_nearest", "d24_minhash_error",
-    "f21_interval_arithmetic", "o13_snapshot_time_travel",
-    "g01_pagerank_fixedpoint", "t17_langid_confusion",
-    "a29_weighted_quantiles", "e15_snapshot_sink_stream",
-    "d25_cluster_size_audit", "ml05_calibration_bins",
-    "e16_scd2_stream_enrichment", "sql12_unpivot_clause",
-    "sql13_named_parameters", "j08_full_outer",
-    "u12_union_schema_evolution", "a22_countmin_heavy_hitters",
-    "o08_quality_weighted_sample", "ml04_kfold_assignment",
-    "p17_summary_stats", "a23_corr_covar", "f17_fuzzy_recode",
-    "q1_pricing_summary", "q3_shipping_priority",
-    "q5_local_supplier_volume", "q6_forecast_revenue",
-    "q10_returned_items", "j01_left_join", "j02_semi_join",
-    "j03_anti_join", "j05_salted_join_equiv", "q4_order_priority",
-    "q7_volume_shipping", "q8_market_share",
-    # ---- round-16 head continues here: the 11 r11-stale names past
-    # the r15 cut, then the 50 r12-attested names in their
-    # CORRECTNESS_r12 order (11 + 39 = 50 fill a clean r16 window; the
-    # last 11 r12 names spill to r17) ----
-    "q9_product_profit", "q12_priority_shipping",
-    "q13_customer_distribution", "q14_promo_revenue",
-    "q15_top_supplier", "q17_small_quantity", "q18_large_volume",
-    "q19_discounted_revenue", "q22_global_sales_opportunity",
-    "q16_parts_supplier_relationship", "q20_potential_promotion",
-    # last attested round 12, in their CORRECTNESS_r12 order
-    "o14_snapshot_lifecycle", "e17_statestore_keys",
-    "q21_waiting_supplier", "q11_important_stock",
-    "q2_min_cost_supplier", "u05_grouped_forecast",
-    "u06_batch_inference", "u13_grouped_arrow", "a24_zscore_anomaly",
-    "e11_funnel_conversion", "e12_retention_cohorts",
-    "p18_skew_profile", "o09_cluster_balanced_sample",
-    "w08_scd2_intervals", "s05_ann_recall", "sql06_relational_division",
-    "u14_pandas_udaf", "m06_resize_nn", "t14_langid_margin",
-    "d16_containment_neardup", "m07_audio_decimate",
-    "sql07_pivot_clause", "p19_snapshot_drift",
-    "w09_running_distinct_users", "e13_session_conversion",
-    "j09_temporal_scd2_join", "p20_join_cardinality_preflight",
-    "sql08_registered_udf", "e14_view_purchase_full_outer",
-    "a25_transpose", "f18_ansi_safe_functions", "f19_collated_grouping",
-    "w10_forward_fill", "a26_deterministic_mode", "f20_parse_url",
-    "t15_sentence_stats", "d18_curation_pipeline",
-    "j10_range_lookup_broadcast", "e01_tumbling_window",
-    "e03_dedup_latest_state", "e04_sliding_window", "e05_user_totals",
-    "e07_segment_window", "e08_gapfill_daily", "a10_rollup", "a11_cube",
-    "a12_grouping_sets", "a13_pivot", "a14_count_distinct",
-    "w04_lag_lead_rank",
-]
-
-# the driver's attestation window
+# Attestation checks the FIRST ``WINDOW`` names of ``queries()``, so the
+# dict is emitted stalest-first (raw registration order left the whole
+# TPC-H/join/text/udf surface unattested for three rounds, ADVICE r3).
+# The order is computed from the CORRECTNESS_r*.json records next to
+# this file, never kept by hand.
 WINDOW = 50
+
+_RECORDS = re.compile(r"CORRECTNESS_r(\d+)\.json")
+
+
+def _green(rec: dict) -> bool:
+    return bool(
+        rec.get("rows_match") and rec.get("schema_match")
+        and rec.get("hash_match")
+    )
+
+
+def _attestation_order(names: list[str], record_dir: str) -> list[str]:
+    """``names`` reordered for attestation: first the names never green
+    (rows, schema and hash all matching) in any ``CORRECTNESS_r<N>.json``
+    under ``record_dir``, in their given order; then the rest by the
+    round they were last green in, oldest first, ties broken by
+    position in that round's record."""
+    last_green: dict[str, tuple[int, int]] = {}
+    for fname in os.listdir(record_dir):
+        m = _RECORDS.fullmatch(fname)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        with open(os.path.join(record_dir, fname)) as fh:
+            record = json.load(fh)
+        for pos, (name, rec) in enumerate(record.items()):
+            if _green(rec) and rnd > last_green.get(name, (-1, 0))[0]:
+                last_green[name] = (rnd, pos)
+    never = [n for n in names if n not in last_green]
+    seen = sorted((n for n in names if n in last_green), key=last_green.get)
+    return never + seen
 
 
 def _ordered_names() -> list[str]:
-    head = [
-        n
-        for n in _PRIORITY_FIRST + _STALE_QUEUE + _NEXT_WINDOW_FIRST
-        if n in plans.QUERIES
-    ]
-    seen = set(head)
-    return head + [n for n in plans.QUERIES if n not in seen]
+    return _attestation_order(
+        list(plans.QUERIES), os.path.dirname(os.path.abspath(__file__))
+    )
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

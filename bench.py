@@ -49,22 +49,6 @@ HEADLINE = [
     "d18_curation_pipeline",
 ]
 
-# Bench-only measurements that are not registry queries: d18's scorer
-# seam keeps BOTH physical plans measurable (VERDICT r7 #3) without
-# adding a second registry/attestation entry for what is the same
-# logical query — the auto path above dispatches to 'agg'; this row
-# tracks the row-local interpreted alternative so the dispatch's win
-# stays a recorded number, not a stale docstring claim.
-def _d18_local(spark, sf_dir):
-    from pyspark_bigdata_sars_cov_2_analysis_spark.plans.llmdata import (
-        d18_curation_pipeline,
-    )
-
-    return d18_curation_pipeline(spark, sf_dir, scorer="local")
-
-
-EXTRA = {"d18_curation_pipeline[scorer=local]": _d18_local}
-
 # Second-shelf extras (VERDICT r8 #6): the headline set tracks 30 of 178
 # registered queries, leaving CPU regressions in the rest invisible (the
 # exchange-budget gate only sees plan SHAPE). This shelf tracks the most
@@ -445,8 +429,8 @@ def main() -> None:
     # without changing the protocol: `value`/`queries` stay the best-of-2
     # min the frozen baseline was recorded under.
     run_times: dict[str, list[float]] = {}
-    for name in list(HEADLINE) + sorted(EXTRA) + list(EXTRAS_SHELF):
-        fn = EXTRA.get(name) or plans.QUERIES[name]
+    for name in list(HEADLINE) + list(EXTRAS_SHELF):
+        fn = plans.QUERIES[name]
         best = float("inf")
         completed = 0
         this_runs: list[float] = []
@@ -480,11 +464,11 @@ def main() -> None:
             # headline timings)
             spark.catalog.clearCache()
         if completed == runs:
-            # EXTRA/EXTRAS_SHELF rows are diagnostics, never part of the
+            # EXTRAS_SHELF rows are diagnostics, never part of the
             # headline metric: keeping them out of `queries` preserves
             # the meaning of `value` (sum of HEADLINE only) across
             # rounds no matter what diagnostics come and go
-            is_extra = name in EXTRA or name in EXTRAS_SHELF
+            is_extra = name in EXTRAS_SHELF
             (extras if is_extra else timings)[name] = round(best, 3)
             run_times[name] = this_runs
 

@@ -400,79 +400,53 @@ def quality_gate_frame(
     min_tokens: int = 30,
     min_quality: float = 0.35,
     max_rep: float = 0.05,
-    scorer: str = "auto",
-    agg_min_docs: int = 250,
 ):
     """Frame-level twin of :func:`quality_gate` — same (id, keep,
-    reasons) output with a dispatchable repetition scorer. Built in
+    reasons) output, with the repetition score computed by the codegen
+    aggregate :func:`repetition_ratio_agg`. Built in
     round 8; registered in round 9 as its OWN oracle-checked query
     (``t16_quality_audit_frame``, per VERDICT r8 #2) rather than rewired
     into t12 — t12 stays the attestation of the row-local struct gate,
-    t16 attests this frame + the agg scorer seam, and neither plan's
+    t16 attests this frame, and neither plan's
     shuffle budget moves under the other's feet.
 
     Measured at sf0.1 (5000 docs, local[8], best-of-2, columns actually
     evaluated — count() alone prunes the projection): struct form ~14s,
-    this frame with scorer='local' ~14s (physical-layer subexpression
-    elimination already shares the duplicated score trees, so the
-    named-column restructure alone wins nothing), scorer='agg' 1.6s —
-    an 8.7× win, entirely from replacing the interpreted
-    ``array_distinct`` chain with the exploded hash-aggregate twin.
-    ``scorer`` follows d18's dispatch: 'auto' picks 'agg' at or above
-    ``agg_min_docs``, probed with a BOUNDED ``limit(n).count()`` — never
-    a full count of an arbitrary upstream frame. Both paths round to the
-    same compat grid, and both derive keep/reasons from the shared
+    this frame 1.6s — an 8.7× win, entirely from replacing the
+    interpreted ``array_distinct`` chain with the exploded
+    hash-aggregate twin. Scores round to the same compat grid as the
+    struct form and keep/reasons come from the shared
     :func:`_gate_decision`, so gate decisions are identical to the
     struct form by construction (and equivalence-tested on real docs +
-    planted boundary cases). Cache lifecycle (ADVICE r8): NEITHER path
-    caches, so per-shard callers in long sessions leak nothing — the
-    agg path's join exchange already isolates the expensive score, and
-    the local path only serves frames below ``agg_min_docs`` under
-    ``auto``, where a downstream filter on ``keep`` re-inlining the
-    row-local scoring chain (the d18 lesson) re-evaluates at most a few
-    hundred interpreted rows — cheaper than an unbounded executor-storage
-    leak. Callers FORCING ``scorer='local'`` on a large frame own the
-    barrier decision: cache the result themselves before filtering."""
+    planted boundary cases). Builds without a Spark job. Cache
+    lifecycle (ADVICE r8): nothing is cached, so per-shard callers in
+    long sessions leak nothing — the join exchange already isolates the
+    expensive score from a downstream filter on ``keep``."""
     from pyspark_bigdata_sars_cov_2_analysis_spark.functions.compat import (
         pround,
     )
 
-    if scorer not in ("auto", "local", "agg"):
-        raise ValueError(f"scorer must be auto|local|agg, got {scorer!r}")
-    if scorer == "auto":
-        scorer = (
-            "agg"
-            if df.limit(agg_min_docs).count() >= agg_min_docs
-            else "local"
-        )
     col = F.col(text_col)
     base_cols = [
         F.col(id_col),
         token_count(col).alias("n_toks"),
         pround(quality_score(col), 4).alias("q"),
     ]
-    if scorer == "agg":
-        # eqNullSafe join (review r14): the bare `on=id_col` inner join
-        # silently DROPPED a NULL-id document from the gate output while
-        # the local path scored it — scorer='auto' then made the output
-        # row set depend on corpus size. (id_col is a document KEY: on
-        # duplicate ids the agg scorer pools the duplicates' shingles
-        # into one score while the local path scores each row — keep ids
-        # unique upstream, the d18 scorer-seam contract.)
-        rep = repetition_ratio_agg(df, id_col, text_col, 3)
-        scores = (
-            df.select(*base_cols)
-            .join(
-                rep.withColumnRenamed(id_col, "__rep_id"),
-                F.col(id_col).eqNullSafe(F.col("__rep_id")),
-            )
-            .drop("__rep_id")
-            .withColumnRenamed("rep_ratio", "rep")
+    # eqNullSafe join (review r14): the bare `on=id_col` inner join
+    # silently DROPPED a NULL-id document that the struct form gates.
+    # (id_col is a document KEY: on duplicate ids the aggregate pools
+    # the duplicates' shingles into one score while the struct form
+    # scores each row — keep ids unique upstream.)
+    rep = repetition_ratio_agg(df, id_col, text_col, 3)
+    scores = (
+        df.select(*base_cols)
+        .join(
+            rep.withColumnRenamed(id_col, "__rep_id"),
+            F.col(id_col).eqNullSafe(F.col("__rep_id")),
         )
-    else:
-        scores = df.select(
-            *base_cols, pround(repetition_ratio(col, 3), 4).alias("rep")
-        )
+        .drop("__rep_id")
+        .withColumnRenamed("rep_ratio", "rep")
+    )
     keep, reasons = _gate_decision(
         F.col("n_toks"), F.col("q"), F.col("rep"),
         min_tokens, min_quality, max_rep,

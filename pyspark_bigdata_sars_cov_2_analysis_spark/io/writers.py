@@ -77,49 +77,6 @@ def write_parquet(
     writer.parquet(path)
 
 
-_ZORDER_NUMERIC = {
-    "tinyint", "smallint", "int", "bigint", "float", "double"
-}
-
-
-def _zorder_column(df: DataFrame, cols: list[str], bits: int = 12):
-    """Min/max-scaled Morton code Column for ``df`` over ``cols`` (one
-    1-row stats aggregate), or None when the frame is empty — the
-    snapshot compaction's zorder strategy. Per-column NULL guards (ADVICE r7): an all-NULL dimension is a
-    constant span (coordinate 0 for every row) instead of a TypeError at
-    ``hi - lo``; row-level NULLs in a live dimension coalesce to the grid
-    minimum so they cluster together at the cell origin rather than
-    landing on arbitrary files."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.operators.sorts import (
-        zorder_value,
-    )
-
-    stats = df.agg(
-        F.count(F.lit(1)).alias("__n"),
-        *[F.min(c).cast("double").alias(f"min_{c}") for c in cols],
-        *[F.max(c).cast("double").alias(f"max_{c}") for c in cols],
-    ).first()
-    if stats["__n"] == 0:
-        return None
-    grid = float((1 << bits) - 1)
-    scaled = []
-    for c in cols:
-        lo, hi = stats[f"min_{c}"], stats[f"max_{c}"]
-        if lo is None:
-            scaled.append(F.lit(0).cast("bigint"))
-            continue
-        span = (hi - lo) or 1.0
-        coord = F.coalesce(F.col(c).cast("double"), F.lit(lo))
-        scaled.append(
-            F.least(
-                F.floor((coord - F.lit(lo)) / F.lit(span) * grid)
-                .cast("bigint"),
-                F.lit((1 << bits) - 1),
-            )
-        )
-    return zorder_value(scaled, bits=bits)
-
-
 def _refuse_snapshot_table(path: str, op: str) -> None:
     """The generic sinks in this module must never write into a
     snapshot-versioned table (the snapshot tables below, and the dedup
@@ -577,25 +534,6 @@ def _where_condition(bounds: dict[str, tuple]):
         if hi is not None:
             cond = cond & (F.col(col) <= F.lit(hi))
     return cond
-
-
-def _validate_cluster_args(
-    cluster_by: list[str] | None, cluster_strategy: str
-) -> None:
-    """Pure value validation shared by ``compact_parquet_snapshot`` and
-    ``streaming_snapshot_sink`` (review r14: the identical block lived
-    in both and the rule/messages could drift)."""
-    if cluster_strategy not in ("range", "zorder"):
-        raise ValueError(
-            f"cluster_strategy must be range|zorder, got {cluster_strategy!r}"
-        )
-    if cluster_strategy == "zorder" and (
-        not cluster_by or len(cluster_by) < 2
-    ):
-        raise ValueError(
-            "cluster_strategy='zorder' needs at least two cluster_by "
-            "columns (one dimension is just a range sort)"
-        )
 
 
 def write_parquet_snapshot(
@@ -1277,7 +1215,6 @@ def streaming_snapshot_sink(
     allow_schema_evolution: bool = False,
     stats_columns: list[str] | None = None,
     cluster_by: list[str] | None = None,
-    cluster_strategy: str = "range",
 ):
     """Structured-Streaming sink onto a snapshot-versioned parquet table:
     every micro-batch publishes ONE new table version (manifest-level
@@ -1323,11 +1260,6 @@ def streaming_snapshot_sink(
     keeps a ``where=`` read of a months-old streaming table from
     scanning every micro-batch's files."""
 
-    # pure value validation runs at SINK CONSTRUCTION (review r13):
-    # deferring it to the Nth micro-batch's folded compaction would kill
-    # a live stream mid-run over a typo the constructor could refuse
-    _validate_cluster_args(cluster_by, cluster_strategy)
-
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if not snapshot_publish_batch(
             batch_df, batch_id, path,
@@ -1338,7 +1270,7 @@ def streaming_snapshot_sink(
         if compact_every and _published_since_last_compact(path) >= compact_every:
             compact_parquet_snapshot(
                 batch_df.sparkSession, path, target_files=target_files,
-                cluster_by=cluster_by, cluster_strategy=cluster_strategy,
+                cluster_by=cluster_by,
             )
 
     return (
@@ -1350,8 +1282,7 @@ def streaming_snapshot_sink(
 
 def compact_parquet_snapshot(
     spark, path: str, target_files: int = 1,
-    cluster_by: list[str] | None = None, cluster_strategy: str = "range",
-    force: bool = False,
+    cluster_by: list[str] | None = None, force: bool = False,
 ) -> dict:
     """Rewrite the LATEST snapshot version's file set as ``target_files``
     files and publish the result as a NEW version — the small-files
@@ -1387,30 +1318,17 @@ def compact_parquet_snapshot(
     compacted footers for the table's recorded stats columns (or for
     ``cluster_by`` itself on a table that never declared any).
 
-    ``cluster_strategy="zorder"`` (needs ≥2 ``cluster_by`` columns)
-    interleaves the columns' bits into a Morton code and range-clusters
-    on THAT (the OPTIMIZE ZORDER BY analog, reusing
-    :func:`~..operators.sorts.zorder_value`): a lexicographic range sort
-    bounds only its LEADING column per file — the second column spans
-    its full range in every file and never prunes — while z-cells bound
-    every interleaved dimension at once, so ``where=`` reads prune on
-    ANY of them from one layout. Costs one extra 1-row min/max
-    aggregate over the base version (the quantization grid).
-
     Returns ``{"compacted", "version", "from_version", "files_before",
     "files_after", "rows", "retries"}``."""
     if target_files < 1:
         raise ValueError("target_files must be >= 1")
-    _validate_cluster_args(cluster_by, cluster_strategy)
 
     def rewrite(src):
         if cluster_by:
             # legacy pre-schema manifests record no schema — resolve it
             # from the file footers (plan-only dtypes probe, the same
             # fallback snapshot_changes uses) so the eager unknown-column
-            # / non-numeric-dimension / __z-collision refusals below
-            # still fire instead of degrading to a constant span or a
-            # mid-job cast error (ADVICE r13)
+            # refusal below still fires (ADVICE r13)
             tbl_schema = src.get("schema") or [
                 list(p) for p in _read_snapshot_files(spark, src).dtypes
             ]
@@ -1420,55 +1338,13 @@ def compact_parquet_snapshot(
                     f"cluster_by columns {sorted(unknown)} not in the "
                     f"snapshot schema {[c for c, _t in tbl_schema]}"
                 )
-            if cluster_strategy == "zorder":
-                # Morton quantization casts coordinates to double — a
-                # string/date dimension would silently degrade to a
-                # constant span (no pruning on the promised column) or
-                # throw a mid-job ANSI cast error (review r13); refuse
-                # eagerly instead
-                types = dict(tbl_schema)
-                if "__z" in types:
-                    # withColumn would REPLACE the data column with the
-                    # Morton code and drop() would delete it — silent
-                    # column loss behind a passing count-verify
-                    raise ValueError(
-                        "table has a column named __z, which the "
-                        "zorder rewrite uses as scratch — rename it or "
-                        "use cluster_strategy='range'"
-                    )
-                bad = sorted(
-                    c
-                    for c in cluster_by
-                    if types[c] not in _ZORDER_NUMERIC
-                    and not types[c].startswith("decimal")
-                )
-                if bad:
-                    raise ValueError(
-                        f"cluster_strategy='zorder' needs numeric "
-                        f"dimensions; {bad} are "
-                        f"{[(c, types[c]) for c in bad]} — derive a "
-                        "numeric surrogate (day number, dictionary "
-                        "code) or use cluster_strategy='range'"
-                    )
         if len(src["files"]) <= target_files and not cluster_by and not force:
             return None
         # evolved-aware read: compacting a schema-evolved version
         # materializes the widened schema into uniform files (nulls
         # filled), so the compact version no longer needs merge-reads
         reader = _read_snapshot_files(spark, src)
-        if cluster_by and cluster_strategy == "zorder":
-            zcol = _zorder_column(reader, cluster_by)
-            if zcol is None:  # empty table: nothing to cluster
-                rewritten = reader.repartition(target_files)
-            else:
-                # z-cells bound EVERY interleaved dimension per file
-                rewritten = (
-                    reader.withColumn("__z", zcol)
-                    .repartitionByRange(target_files, F.col("__z"))
-                    .sortWithinPartitions("__z")
-                    .drop("__z")
-                )
-        elif cluster_by:
+        if cluster_by:
             # disjoint per-file ranges: range-partition THEN sort within,
             # so footer min/max per file are tight and non-overlapping
             rewritten = reader.repartitionByRange(

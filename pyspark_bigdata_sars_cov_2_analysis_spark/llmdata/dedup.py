@@ -12,9 +12,9 @@ DataFrame compositions (no Python UDFs, no driver collects) sized for
 - SimHash: per-token 32-bit hashes, bit-majority vote → one signature per
   doc; near-dup pairs via byte-band candidates + exact
   ``bit_count(xor)`` Hamming verify;
-- n-gram Jaccard: exact set similarity over pairs sharing ≥1 shingle
-  (inverted-index join), with a lossless AllPairs prefix-filtered variant
-  for corpora whose hottest shingles make the naive join quadratic.
+- n-gram Jaccard and containment: exact set similarity over pairs
+  sharing ≥1 shingle (inverted-index join, one co-occurrence count
+  aggregate).
 
 Plus the two dedup-adjacent corpus-hygiene ops: benchmark decontamination
 (``contamination_hits`` — train×eval shingle collision, fan-out-free) and
@@ -32,7 +32,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from pyspark_bigdata_sars_cov_2_analysis_spark.functions.compat import pround
 from pyspark_bigdata_sars_cov_2_analysis_spark.functions.localrel import (
@@ -930,14 +929,12 @@ def read_band_checkpoint(
     num_hashes: int = 12,
     band_rows: int = 3,
     sig_buckets: list[int] | None = None,
-    params: dict | None = None,
 ) -> DataFrame:
     """Load a band checkpoint as ``(id_col, band, band_sig)`` — the
     shape ``incremental_neardup_pairs`` / :func:`ingest_batch_idempotent`
     expect — after validating the caller's banding parameters against
     the recorded ones. ``sig_buckets`` restricts the scan to those
-    ``sigb`` cells. ``params`` is not read: the manifest that names the
-    files carries the parameters. See :meth:`_CheckpointKind.read`."""
+    ``sigb`` cells. See :meth:`_CheckpointKind.read`."""
     return _BANDS.read(
         spark, path, id_col,
         dict(k=k, num_hashes=num_hashes, band_rows=band_rows),
@@ -1224,19 +1221,14 @@ def _shingle_arrays(
     plan-cache registry (released by ``registry.release_plan_caches()``
     like t09's tf frame / d18's score frame).
 
-    Why (optimization r15, guide §2.4/§5): every exact-similarity
-    consumer branch previously re-ran ``word_shingles`` — d16's prefix
-    plan held SIX Generate nodes re-shingling the corpus (frequency,
-    rank, probe, full index, and two collect_list array rebuilds),
-    because each branch projects differently and ReuseExchange never
-    canonicalizes them together. One cached array pass replaces all of
-    them; downstream views are a cheap ``explode`` (inverted index), a
-    ``size`` projection (doc sizes — no aggregate at all), and the
-    arrays themselves (row-local verification — the two
-    collect_list+Exchange array rebuilds disappear outright). The cache
-    is ~k× the text bytes and spillable (MEMORY_AND_DISK default);
-    recomputing the interpreted ``array_distinct`` shingling 3-6× per
-    query costs more at every scale measured."""
+    Why (optimization r15, guide §2.4/§5): the co-occurrence plan reads
+    the shingles four times (both sides of the inverted-index join and
+    both doc-size projections), each branch projects differently, and
+    ReuseExchange never canonicalizes them together — without the cache
+    every branch re-runs the interpreted ``array_distinct`` shingling.
+    Downstream views are a cheap ``explode`` (inverted index) and a
+    ``size`` projection (doc sizes — no aggregate at all). The cache is
+    ~k× the text bytes and spillable (MEMORY_AND_DISK default)."""
     from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import (
         tracked_cache,
     )
@@ -1312,7 +1304,6 @@ def containment_pairs(
     text_col: str,
     k: int = 3,
     threshold: float = 0.8,
-    _arrs: DataFrame | None = None,
 ) -> DataFrame:
     """ASYMMETRIC near-dup: shingle CONTAINMENT |A∩B| / min(|A|, |B|) —
     catches a document embedded inside a larger one (boilerplate-wrapped
@@ -1324,10 +1315,7 @@ def containment_pairs(
     all-pairs — with the pair oriented (small, big) by shingle count
     (id tiebreak) so the score reads as 'fraction of the smaller doc
     found inside the bigger'."""
-    arrs = (
-        _shingle_arrays(df, id_col, text_col, k) if _arrs is None else _arrs
-    )
-    j = _cooccurrence_counts(arrs, id_col)
+    j = _cooccurrence_counts(_shingle_arrays(df, id_col, text_col, k), id_col)
     a_small = (F.col("n_a") < F.col("n_b")) | (
         (F.col("n_a") == F.col("n_b")) & (F.col("id_a") < F.col("id_b"))
     )
@@ -1337,111 +1325,6 @@ def containment_pairs(
         pround(
             F.col("n_inter") / F.least(F.col("n_a"), F.col("n_b")), 4
         ).alias("containment"),
-    )
-    return out.where(F.col("containment") >= threshold)
-
-
-def _containment_prefix_candidates(
-    sh: DataFrame,
-    id_col: str,
-    threshold: float,
-    sizes: DataFrame | None = None,
-) -> DataFrame:
-    """Candidate (id_a, id_b) pairs from the asymmetric prefix bound —
-    the frame :func:`containment_pairs_prefix` verifies. Split out so the
-    structural claim ('the prefix probe expands strictly fewer candidates
-    than the naive inverted-index join in the hot-shingle regime') is
-    testable as a row count, not a wall-clock assertion
-    (tests/test_properties.py::test_containment_prefix_prunes_candidates).
-    ``sizes``: an optional pre-computed ``(id, n_sh)`` frame (the
-    :func:`_shingle_arrays` projection) — skips the per-doc count
-    aggregate over ``sh``."""
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
-    if sizes is None:
-        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    w = Window.partitionBy(id_col).orderBy(F.asc("df_"), F.asc("shingle"))
-    ranked = (
-        sh.join(freq, on="shingle")
-        .withColumn("rn", F.row_number().over(w))
-        .join(sizes, on=id_col)
-    )
-    # ceil(t*n) via an epsilon guard: fp overshoot (0.1*40 = 4.0000…01)
-    # must never shorten the prefix (losslessness); undershoot only adds
-    # candidates
-    need = F.ceil(F.lit(threshold) * F.col("n_sh") - F.lit(1e-9))
-    prefix = ranked.where(F.col("rn") <= F.col("n_sh") - need + 1)
-    probe = prefix.select(F.col(id_col).alias("id_p"), "shingle")
-    full = sh.select(F.col(id_col).alias("id_f"), "shingle")
-    return (
-        probe.join(full, on="shingle")
-        .where(F.col("id_p") != F.col("id_f"))
-        .select(
-            F.least("id_p", "id_f").alias("id_a"),
-            F.greatest("id_p", "id_f").alias("id_b"),
-        )
-        .distinct()
-    )
-
-
-def containment_pairs_prefix(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    threshold: float = 0.8,
-    _arrs: DataFrame | None = None,
-) -> DataFrame:
-    """LOSSLESS prefix-filtered containment — the hot-regime scale path
-    for :func:`containment_pairs` (a Jaccard-LSH prefilter CANNOT serve
-    here: it recalls by symmetric similarity and misses the embedded
-    high-containment/low-Jaccard pairs this family exists for). The
-    asymmetric prefix bound: if |A∩B| ≥ ⌈t·|A|⌉ for the SMALLER set A,
-    at least one shared shingle lies in A's rarest-first prefix of
-    length |A| − ⌈t·|A|⌉ + 1 (else all shared shingles fit in the
-    ⌈t·|A|⌉−1 suffix — contradiction). So candidates = every doc's tiny
-    prefix (~(1−t)·|A| shingles) probed against the FULL inverted index
-    — the containing side cannot be pruned, but hot shingles leave the
-    PROBE side entirely unless they are a document's rarest, which
-    bounds candidate generation by prefix-shingle document frequencies.
-    Verification is row-local array_intersect per candidate pair,
-    oriented small→big; output identical to the naive form
-    (property-tested, embedded-pair case included).
-
-    Physical shape (optimization r15): one shingling pass into the
-    cached :func:`_shingle_arrays` frame, sizes as a projection,
-    verification from the cached arrays (no collect_list rebuild
-    aggregates)."""
-    arrs = (
-        _shingle_arrays(df, id_col, text_col, k) if _arrs is None else _arrs
-    )
-    sh = _exploded_shingles(arrs, id_col)
-    sizes = arrs.select(F.col(id_col), F.col("__n_sh").alias("n_sh"))
-    cands = _containment_prefix_candidates(sh, id_col, threshold, sizes=sizes)
-    j = cands.join(
-        arrs.select(
-            F.col(id_col).alias("id_a"),
-            F.col("__sh_arr").alias("sa"),
-            F.col("__n_sh").alias("n_a"),
-        ),
-        on="id_a",
-    ).join(
-        arrs.select(
-            F.col(id_col).alias("id_b"),
-            F.col("__sh_arr").alias("sb"),
-            F.col("__n_sh").alias("n_b"),
-        ),
-        on="id_b",
-    )
-    inter = F.size(F.array_intersect("sa", "sb")).cast("bigint")
-    a_small = (F.col("n_a") < F.col("n_b")) | (
-        (F.col("n_a") == F.col("n_b")) & (F.col("id_a") < F.col("id_b"))
-    )
-    out = j.select(
-        F.when(a_small, F.col("id_a")).otherwise(F.col("id_b")).alias("id_small"),
-        F.when(a_small, F.col("id_b")).otherwise(F.col("id_a")).alias("id_big"),
-        pround(inter / F.least(F.col("n_a"), F.col("n_b")), 4).alias(
-            "containment"
-        ),
     )
     return out.where(F.col("containment") >= threshold)
 
@@ -1635,151 +1518,6 @@ def decontaminate_resolve_split(
     return leakage_free_split(
         keep, "keeper", F.col("fp"), train_rate=train_rate, salt=salt
     )
-
-
-def _sampled_shingle_stats(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    sample_fraction: float | None,
-    salt: str,
-    _arrs: DataFrame | None = None,
-) -> dict:
-    """The corpus measurement behind :func:`choose_containment_variant`:
-    shingle-frequency aggregate over a deterministic md5-gated doc
-    sample, with unbiased scale-up. Doc-level p-sampling thins each shingle's doc
-    list binomially, so E[L̂·(L̂−1)] = p²·L·(L−1) and E[Σ L̂] = p·Σ L —
-    hence quad /= p² and rows /= p are unbiased. ``l_max`` scales by
-    1/p as an INDICATOR only (the max of thinned lists is not the
-    thinned max — it under-reaches for rare tails; exact when
-    sample_fraction is None). The gate is md5-keyed, never rand(), so
-    the dispatch is reproducible run to run."""
-    if sample_fraction is not None and not (0.0 < sample_fraction <= 1.0):
-        raise ValueError(
-            f"sample_fraction must be in (0, 1], got {sample_fraction}"
-        )
-    p = 1.0 if sample_fraction is None else sample_fraction
-    if _arrs is not None:
-        # derive the sample from the caller's cached shingle-array frame
-        # (optimization r15): the md5 gate keys on the id either way, so
-        # the sampled doc set — and therefore the stats — is identical
-        # to shingling the gated raw corpus, without a second shingling
-        # pass just to pick a physical plan.
-        src = _arrs
-        if p < 1.0:
-            from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata.sampling import (
-                hash_gate,
-            )
-
-            src = src.where(hash_gate(F.col(id_col), p, salt=salt))
-        sh = _exploded_shingles(src, id_col)
-    else:
-        if p < 1.0:
-            from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata.sampling import (
-                hash_gate,
-            )
-
-            df = df.where(hash_gate(F.col(id_col), p, salt=salt))
-        sh = word_shingles(df, id_col, text_col, k)
-    st = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("L"))
-        .agg(
-            F.sum(F.col("L") * (F.col("L") - 1) / 2).alias("quad"),
-            F.sum("L").alias("rows"),
-            F.max("L").alias("l_max"),
-        )
-        .first()
-    )
-    return {
-        "quad": (st.quad or 0.0) / (p * p),
-        "rows": (st.rows or 0) / p,
-        "l_max": round((st.l_max or 0) / p),
-        "sample_fraction": p,
-    }
-
-
-def choose_containment_variant(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    threshold: float = 0.8,
-    sample_fraction: float | None = 0.25,
-    _arrs: DataFrame | None = None,
-) -> tuple[str, dict]:
-    """d16's measured dispatch (VERDICT r7 Next-round #4). One
-    shingle-frequency aggregate yields ``rows`` (total (doc, shingle)
-    rows — every linear pass costs this), ``quad`` (Σ_s L_s·(L_s−1)/2,
-    the EXACT candidate-pair count the naive inverted-index join
-    expands) and ``l_max``. The containment prefix prunes only the
-    PROBE side (the containing side can never be pruned),
-    keeping ≈ (1−t)·|A|+1 of each doc's shingles, so under the uniform
-    shingle-rank model it expands ≈ 2·(1−t)·quad candidates against
-    naive's quad — saving quad·(2t−1), which is non-positive for
-    t ≤ 0.5 (the probe prefix then covers over half of every doc and
-    prefix can only lose). Fixed-cost bar β=8 (RECALIBRATED,
-    optimization r15 — was 2): prefix pays rank-window + candidate
-    distinct passes that scale with ``rows``, and — the term the old
-    β=2 bar under-counted — its verification is a per-candidate
-    ``array_intersect`` (O(avg shingles/doc) each), where naive's
-    verification is an O(1)-per-row count aggregate over the same
-    co-occurrence join it already ran. Measured at sf0.1 (saved/rows
-    ≈ 3): naive 1.7s vs prefix 4.1s on a warm shingle cache — the old
-    bar picked prefix, 2.4× the cost. Measured on planted hot corpora:
-    prefix first wins around saved/rows ≈ 40 (1.3×), with a flat tie
-    zone between ~20 and ~40; β=8 puts the shipped regime (≤3) firmly
-    on naive and the hot regimes (≥18) on prefix, the decision the
-    planted-regime tests pin from both sides. Choose prefix iff
-    quad·(2t−1) > 8·rows.
-
-    ``sample_fraction`` (default 0.25) measures a DETERMINISTIC
-    hash-gated subset of documents instead of the full corpus — the
-    right chooser shape at 100 TB, where a full stat scan just to pick a
-    physical plan is real money (shared :func:`_sampled_shingle_stats`;
-    the unbiased estimator math and the l_max caveat live there). The
-    decision needs only an order-of-magnitude margin (the two regimes
-    sit decades apart on quad/rows), so estimator noise cannot flip it
-    anywhere near the measured corpora — asserted by a test that the
-    sampled decision matches the full-scan decision on both planted
-    regimes. Pass ``None`` to measure the full corpus."""
-    stats = _sampled_shingle_stats(
-        df, id_col, text_col, k, sample_fraction, salt="contchoose|",
-        _arrs=_arrs,
-    )
-    saved = stats["quad"] * max(2.0 * threshold - 1.0, 0.0)
-    stats["saved_candidates_est"] = saved
-    return ("prefix" if saved > 8.0 * stats["rows"] else "naive"), stats
-
-
-def containment_pairs_auto(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Single containment entry point: measures the corpus
-    (:func:`choose_containment_variant`) and dispatches to
-    :func:`containment_pairs` or :func:`containment_pairs_prefix` — both
-    emit identical (id_small, id_big, containment) rows (lossless
-    property test), so the choice is purely physical. The stats job and
-    the chosen variant share ONE cached :func:`_shingle_arrays` frame
-    (optimization r15) — one shingling pass total instead of one for the measurement plus
-    3-6 inside the variant."""
-    import logging
-
-    arrs = _shingle_arrays(df, id_col, text_col, k)
-    variant, stats = choose_containment_variant(
-        df, id_col, text_col, k, threshold, _arrs=arrs
-    )
-    logging.getLogger(__name__).info(
-        "containment_pairs_auto: variant=%s stats=%s threshold=%s",
-        variant, stats, threshold,
-    )
-    fn = containment_pairs_prefix if variant == "prefix" else containment_pairs
-    return fn(df, id_col, text_col, k, threshold, _arrs=arrs)
 
 
 def simhash_signatures(
@@ -2239,13 +1977,10 @@ def read_chunk_checkpoint(
     id_col: str,
     chunk_words: int = 10,
     buckets: list[int] | None = None,
-    params: dict | None = None,
 ) -> DataFrame:
     """Load a chunk checkpoint as ``(lh, id_col, pos)`` after validating
     ``chunk_words`` against the recorded one. ``buckets`` restricts the
-    scan to those ``lhb`` cells. ``params`` is not read: the manifest
-    that names the files carries the parameters. See
-    :meth:`_CheckpointKind.read`."""
+    scan to those ``lhb`` cells. See :meth:`_CheckpointKind.read`."""
     return _CHUNKS.read(
         spark, path, id_col, dict(chunk_words=chunk_words), buckets
     )

@@ -64,8 +64,7 @@ def anti_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
 
 
 def latest_per_group_via_join(
-    df: DataFrame, keys: list[str], order_col: str,
-    broadcast_maxes: bool = True,
+    df: DataFrame, keys: list[str], order_col: str
 ) -> DataFrame:
     """Greatest-row-per-group, join formulation — the semantic twin of
     ``windows.latest_per_group`` (reference idiom W1/P14,
@@ -76,16 +75,14 @@ def latest_per_group_via_join(
     ``GROUP BY`` both treat NULL as one group, so the window twin keeps
     a NULL-key group's latest rows — a plain ``==`` join condition would
     silently drop them and the documented equivalence would hold only on
-    corpora without NULL keys. ``broadcast_maxes``: the per-group max
-    frame is ONE ROW PER DISTINCT KEY — broadcast is right for bounded
-    key domains (countries, labels) but unbounded at, say, a customer
-    key at 100 TB; pass False there (or use the window form, which
-    never materializes the maxes at all)."""
+    corpora without NULL keys. The per-group max frame is broadcast: it
+    is ONE ROW PER DISTINCT KEY, right for bounded key domains
+    (countries, labels); for an unbounded key at scale use the window
+    form, which never materializes the maxes at all."""
     maxes = df.groupBy(*keys).agg(F.max(order_col).alias("__max"))
     cond = [df[k].eqNullSafe(maxes[k]) for k in keys]
     cond.append(df[order_col] == maxes["__max"])
-    rhs = F.broadcast(maxes) if broadcast_maxes else maxes
-    return df.join(rhs, on=cond, how="inner").select(df["*"])
+    return df.join(F.broadcast(maxes), on=cond, how="inner").select(df["*"])
 
 
 def _asof_tagged_union(

@@ -45,8 +45,7 @@ def zorder_value(cols: list[Column], bits: int = 12) -> Column:
     linear sort can only ever serve its leading column. Pure bit arithmetic (shift/and/or), whole-stage
     codegen eligible, no shuffle of its own.
 
-    Callers pass already-quantized coordinates (``0 ≤ v < 2**bits``);
-    :func:`~..io.writers._zorder_column` handles min/max scaling.
+    Callers pass already-quantized coordinates (``0 ≤ v < 2**bits``).
     ``bits * len(cols)`` must stay ≤ 63 to fit a signed BIGINT.
     """
     n = len(cols)

@@ -411,16 +411,13 @@ def _z_sql(x_sql: str, y_sql: str, bits: int) -> str:
 )
 def o07_zorder_cells(spark, sf_dir):
     """Layout family — cross-engine bit-exactness of the Morton (Z-order)
-    interleave behind the snapshot compaction's zorder clustering
-    (:func:`..io.writers._zorder_column`): every event is
+    interleave (:func:`..operators.sorts.zorder_value`): every event is
     mapped to an 8-bit (user, day) grid cell, z-encoded with
     ``zorder_value``, and aggregated per 1024-wide z-cell (a 32×32 tile).
     The oracle rebuilds the SAME shift/and/or formula from the same
     Python loop, so a single flipped bit anywhere in the 32-term
-    interleave breaks the hash. The per-tile counts are exactly what the
-    clustering writer's range exchange partitions on — attesting them
-    attests the layout's partitioning math, not just a demo. Pure
-    row-local bit arithmetic + one aggregate; scales like a groupBy."""
+    interleave breaks the hash. Pure row-local bit arithmetic + one
+    aggregate; scales like a groupBy."""
     e = table(spark, sf_dir, "events")
     gx = F.pmod(F.col("user_id"), F.lit(256)).cast("bigint")
     gy = F.pmod(F.unix_date(F.to_date("ts")), F.lit(256)).cast("bigint")

@@ -2386,15 +2386,9 @@ def d16_containment_neardup(spark, sf_dir):
     the d-family. Same inverted-index single-aggregate shape as d03
     (pairs sharing a shingle, never all-pairs); the pair is oriented
     (small, big) so the score reads as the smaller doc's covered
-    fraction. Routed through the measured auto-dispatch (VERDICT r7 #4):
-    the chooser's one-scan stat aggregate picks naive here (shipped
-    corpora sit in the cold regime, quad ≈ 0.5·rows) and flips to the
-    lossless prefix variant in the hot-shingle regime — identical output
-    either way (property-tested), so the oracle is dispatch-blind."""
+    fraction. One physical plan, built without running a Spark job."""
     d = table(spark, sf_dir, "documents")
-    return dedup.containment_pairs_auto(
-        d, "doc_id", "text", k=3, threshold=0.8
-    )
+    return dedup.containment_pairs(d, "doc_id", "text", k=3, threshold=0.8)
 
 
 @query(
@@ -2563,7 +2557,7 @@ def _curation_gate():
                  CAST(floor(weight * 65536.0) AS INT), 65535)) END
     """,
 )
-def d18_curation_pipeline(spark, sf_dir, scorer="auto", n_docs=None):
+def d18_curation_pipeline(spark, sf_dir):
     """The canonical curation chain as ONE composed plan — the d12
     pattern applied to the quality axis: t12's Gopher gate drops junk,
     d01's keep-first collapses exact duplicates among the keepers
@@ -2577,39 +2571,26 @@ def d18_curation_pipeline(spark, sf_dir, scorer="auto", n_docs=None):
     gates are row-local; the ONLY shuffle is the d01 fingerprint
     aggregate + its keeper join-back, both keyed on the 16-byte md5.
 
-    ``scorer`` (VERDICT r7 #3) picks the repetition-score physical plan:
-    ``'local'`` = row-local :func:`repetition_ratio` (zero shuffle, but
-    its ``array_distinct`` is interpreted, ~2.6 ms/doc of pure CPU);
-    ``'agg'`` = :func:`repetition_ratio_agg`, the codegen twin (explode
-    k-grams → hash aggregate → join back: two extra exchanges keyed on
-    doc_id, but whole-stage-codegen CPU — measured 8.9x faster end-to-end
-    at sf0.1's 5000 docs, 1.9x even at 500); ``'auto'`` (default)
-    dispatches on corpus row count — above ``_D18_AGG_MIN_DOCS`` the
-    per-doc interpreter bill dwarfs the fixed shuffle cost, which only
-    grows MORE lopsided at 100 TB. The probe (VERDICT r8 #5) is a
-    BOUNDED ``limit(_D18_AGG_MIN_DOCS).count()`` — a few-row task even
-    on a non-parquet source, where the old full ``count()`` became a
-    whole-corpus scan — and runs ONLY under ``'auto'``; callers that
-    already know their corpus size pass ``n_docs`` and no probe job
-    runs at all. Still deterministic for a given input — never clock-
-    or sample-based. Both paths round to 4dp and are
-    equivalence-tested, so the oracle — and every downstream value — is
-    identical either way."""
+    The repetition score's physical plan follows the corpus size: below
+    ``_D18_AGG_MIN_DOCS`` documents the row-local
+    :func:`repetition_ratio` (zero shuffle, but its ``array_distinct``
+    is interpreted); at or above it :func:`repetition_ratio_agg`, the
+    codegen twin (explode k-grams → hash aggregate → join back: two
+    extra exchanges keyed on doc_id, but whole-stage-codegen CPU) —
+    above the cut the per-doc interpreter bill dwarfs the fixed shuffle
+    cost. The size probe (VERDICT r8 #5) is a BOUNDED
+    ``limit(_D18_AGG_MIN_DOCS).count()`` — a few-row task even on a
+    non-parquet source — so the choice is deterministic for a given
+    input, never clock- or sample-based. Both paths round to 4dp and
+    are equivalence-tested, so the oracle — and every downstream value —
+    is identical either way."""
     from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata.sampling import (
         weighted_hash_sample,
     )
 
-    if scorer not in ("auto", "local", "agg"):
-        raise ValueError(f"scorer must be auto|local|agg, got {scorer!r}")
     d = table(spark, sf_dir, "documents")
-    if scorer == "auto":
-        at_least = (
-            n_docs >= _D18_AGG_MIN_DOCS
-            if n_docs is not None
-            else d.limit(_D18_AGG_MIN_DOCS).count() >= _D18_AGG_MIN_DOCS
-        )
-        scorer = "agg" if at_least else "local"
-    scored = _curation_scored(d, scorer)
+    at_least = d.limit(_D18_AGG_MIN_DOCS).count() >= _D18_AGG_MIN_DOCS
+    scored = _curation_scored(d, "agg" if at_least else "local")
     kept = scored.where(_curation_gate()).select(
         "doc_id", "fp", F.greatest(F.col("q"), F.lit(0.0)).alias("weight")
     )

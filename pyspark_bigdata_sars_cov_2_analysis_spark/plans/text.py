@@ -717,12 +717,11 @@ def t16_quality_audit_frame(spark, sf_dir):
     keep/drop decision rolled up per distinct ``(keep, reasons)`` combo
     with document counts and corpus share — the report a curation run
     publishes alongside its output so threshold drift is visible per
-    shard. The frame gate runs its recommended ``agg`` scorer (codegen
-    exploded-k-gram aggregate — forced, not auto, so the attested plan
-    is the same at every SF), making this the driver attestation of the
-    dispatchable-scorer seam itself: keep/reasons values flow from the
-    same _gate_decision as t12, so a hash match here proves the agg
-    scorer's rounded scores gate identically to the row-local path.
+    shard. The frame gate scores repetition with the codegen
+    exploded-k-gram aggregate (one plan at every SF): keep/reasons
+    values flow from the same _gate_decision as t12, so a hash match
+    here proves the aggregate's rounded scores gate identically to the
+    row-local path.
     Shape: row-local scoring + one doc_id-keyed join (the scorer), one
     tiny grouped aggregate, then the share denominator as an
     UNPARTITIONED window over that aggregate's output — safe here and
@@ -736,9 +735,7 @@ def t16_quality_audit_frame(spark, sf_dir):
     from pyspark.sql import Window
 
     d = table(spark, sf_dir, "documents")
-    g = T.quality_gate_frame(
-        d.select("doc_id", "text"), "doc_id", "text", scorer="agg"
-    )
+    g = T.quality_gate_frame(d.select("doc_id", "text"), "doc_id", "text")
     counts = g.groupBy("keep", "reasons").agg(
         F.count(F.lit(1)).alias("n_docs")
     )

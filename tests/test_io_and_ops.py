@@ -345,79 +345,6 @@ def test_zorder_value_bit_exact(spark):
     assert got == {(x, y): z_ref(x, y) for x, y in pts}
 
 
-def _clustered_files(spark, df, path, cols, n_files, strategy="zorder"):
-    """Publish ``df`` as a snapshot table, compact it clustered on
-    ``cols`` into ``n_files`` files, and return the compacted files."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers as W
-
-    W.write_parquet_snapshot(df, path)
-    W.compact_parquet_snapshot(
-        spark, path, target_files=n_files, cluster_by=cols,
-        cluster_strategy=strategy,
-    )
-    return [W._local_path(f) for f in W._latest_manifest(path)["files"]]
-
-
-def test_zorder_write_bounds_both_dims(spark, tmp_path):
-    """Z-order clustering's defining property vs a 1-D range sort: on a
-    full 256×256 grid compacted into 16 files, EVERY z-ordered file's
-    footer min/max must bound BOTH dimensions to a small tile, while the
-    x-sorted control bounds x but leaves y spanning the full 0..255 range
-    in every file. This is the layout fact that lets one copy of a 100 TB
-    table serve pushed predicates on either column."""
-    import pyarrow.parquet as pq
-
-    grid = spark.range(0, 256 * 256).select(
-        (F.col("id") % 256).alias("x"), (F.col("id") / 256).cast("long").alias("y")
-    )
-
-    def ranges(files, col):
-        out = []
-        for f in sorted(files):
-            md = pq.read_metadata(f)
-            idx = md.schema.names.index(col)
-            lo = min(md.row_group(i).column(idx).statistics.min
-                     for i in range(md.num_row_groups))
-            hi = max(md.row_group(i).column(idx).statistics.max
-                     for i in range(md.num_row_groups))
-            out.append((lo, hi))
-        return out
-
-    def admitting(files, col, v):
-        """Files a zone-map reader must open for the predicate col = v."""
-        return sum(1 for lo, hi in ranges(files, col) if lo <= v <= hi)
-
-    zfiles = _clustered_files(spark, grid, str(tmp_path / "zorder"), ["x", "y"], 16)
-    xfiles = _clustered_files(
-        spark, grid, str(tmp_path / "xsorted"), ["x"], 16, strategy="range"
-    )
-    n_z = len(zfiles)
-    n_x = len(xfiles)
-    assert n_z >= 8 and n_x >= 8, (n_z, n_x)
-
-    # The z-curve jumps across the full coordinate range at major quadrant
-    # boundaries, so one or two files legitimately span everything — the
-    # layout property is about PRUNING COUNTS, not per-file worst case:
-    # a point predicate on EITHER dimension must let the footer stats
-    # skip most z-ordered files, while the 1-D control prunes only its
-    # sort column and must open EVERY file for the other one.
-    assert admitting(zfiles, "x", 100) <= n_z // 2
-    assert admitting(zfiles, "y", 100) <= n_z // 2
-    assert admitting(xfiles, "x", 100) <= 2          # 1-D sort: x is perfect
-    assert admitting(xfiles, "y", 100) == n_x        # ...but y is unprunable
-    # and MOST z-files are genuinely tight tiles in both dims
-    for col in ("x", "y"):
-        tight = sorted(hi - lo for lo, hi in ranges(zfiles, col))
-        assert tight[n_z // 2] <= 128, tight
-
-    # round-trip multiset check
-    back = spark.read.parquet(*zfiles)
-    assert back.count() == 256 * 256
-    got = back.agg(F.sum(F.col("x") * 65536 + F.col("y")).alias("s")).first().s
-    want = grid.agg(F.sum(F.col("x") * 65536 + F.col("y")).alias("s")).first().s
-    assert got == want
-
-
 def test_time_range_frame_gap_semantics(spark):
     """w07's reason to exist: on gapped days a ROWS frame silently pulls
     stale rows across the gap while a RANGE frame shrinks. Planted series
@@ -470,17 +397,6 @@ def test_parquet_merge_schema_read(spark, tmp_path):
     assert rows == {1: None, 2: None, 3: 30.0}
     # and the whole multiset survives
     assert sorted(r.id for r in merged.collect()) == [1, 2, 3]
-
-
-def test_zorder_constant_column_degrades_gracefully(spark, tmp_path):
-    """A constant clustered column (span 0) must not divide by zero —
-    the Morton scaling pins the span to 1 and the layout degrades to
-    ordering on the varying column only."""
-    df = spark.range(0, 1000).select(
-        F.lit(7).cast("long").alias("x"), (F.col("id") % 64).alias("y")
-    )
-    files = _clustered_files(spark, df, str(tmp_path / "const_dim"), ["x", "y"], 4)
-    assert spark.read.parquet(*files).count() == 1000
 
 
 def test_countmin_unseen_probe_estimates_zero(spark):
@@ -537,47 +453,3 @@ def test_zorder_value_random_sweep_matches_reference(spark):
         ]
         want = [z_ref(p, bits) for p in pts]
         assert sorted(got) == sorted(want), (dims, bits)
-
-
-def test_zorder_empty_frame_writes_empty(spark, tmp_path):
-    files = _clustered_files(
-        spark, spark.createDataFrame([], "x: long, y: long"),
-        str(tmp_path / "empty_z"), ["x", "y"], 2,
-    )
-    assert spark.read.parquet(*files).count() == 0
-
-
-def test_zorder_null_dimensions_handled(spark, tmp_path):
-    """ADVICE r7: (a) an all-NULL clustering column is a constant span —
-    never a TypeError, never an unclustered fallback for the other dims;
-    (b) row-level NULL coordinates coalesce to the grid minimum instead
-    of clustering arbitrarily; (c) an all-NULL FIRST column must not
-    silently skip clustering of a live second column."""
-    import pyarrow.parquet as pq
-
-    rows = [(i, None if i % 7 == 0 else i * 3, None) for i in range(256)]
-    df = spark.createDataFrame(rows, "x long, y long, z long")
-
-    # all-NULL SECOND column (z): previously TypeError at hi - lo
-    files1 = _clustered_files(spark, df, str(tmp_path / "z_null_second"), ["x", "z"], 4)
-    assert spark.read.parquet(*files1).count() == 256
-
-    # all-NULL FIRST column: previously written entirely unclustered;
-    # now x must still bound per-file ranges
-    files2 = _clustered_files(spark, df, str(tmp_path / "z_null_first"), ["z", "x"], 4)
-    spans = []
-    for f in files2:
-        md = pq.read_metadata(f)
-        if md.num_rows == 0:
-            continue
-        st = md.row_group(0).column(0).statistics  # x column
-        spans.append(st.max - st.min)
-    full_span = 255
-    assert spans and all(s < full_span for s in spans), spans
-
-    # NULL row-level coordinates (y) land with the minimum cell, and the
-    # rewrite round-trips every row including the NULLs
-    files3 = _clustered_files(spark, df, str(tmp_path / "z_null_rows"), ["x", "y"], 4)
-    back = spark.read.parquet(*files3)
-    assert back.count() == 256
-    assert back.where("y IS NULL").count() == 37

@@ -1186,6 +1186,22 @@ def test_weighted_sample_monotone_in_weight(spark):
     assert first == set()
 
 
+def test_d16_builds_without_spark_jobs(spark):
+    """d16 has one physical plan: building it runs no Spark job (no
+    corpus measurement picks a plan variant), so its whole cost is paid
+    by the action that consumes it."""
+    from pyspark_bigdata_sars_cov_2_analysis_spark.plans.llmdata import (
+        d16_containment_neardup,
+    )
+
+    # reading the table once caches its schema (no inference job later)
+    table(spark, SF_TEST, "documents").count()
+    df, jobs = jobs_during(spark, lambda: d16_containment_neardup(spark, SF_TEST))
+    assert jobs == 0, jobs
+    assert df.columns == ["id_small", "id_big", "containment"]
+    spark.catalog.clearCache()
+
+
 def test_containment_catches_embedded_doc_jaccard_misses(spark):
     """d16's reason to exist, planted: a 10-word doc fully embedded in a
     ~100-word doc has containment 1.0 but Jaccard ≈ 0.09 — below d03's
@@ -1209,38 +1225,6 @@ def test_containment_catches_embedded_doc_jaccard_misses(spark):
     assert not [
         r for r in jac.collect() if {r.id_a, r.id_b} == {1, 2}
     ], "Jaccard should sit below threshold on the embedded pair"
-
-
-def test_containment_prefix_equals_naive(spark):
-    """The asymmetric prefix filter must be LOSSLESS: identical pair set
-    and scores as the naive inverted-index form, on a corpus that
-    includes the embedded-doc case AND near-threshold pairs."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
-    from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import table
-    from tests.conftest import SF_TEST
-
-    small = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    filler = " ".join(f"filler{i}" for i in range(90))
-    planted = [
-        (900001, small),
-        (900002, small + " " + filler),
-        (900003, " ".join(f"w{i}" for i in range(40))),
-        (900004, " ".join(f"w{i}" for i in range(36)) + " x1 x2 x3 x4"),
-    ]
-    d = table(spark, SF_TEST, "documents").select("doc_id", "text").unionByName(
-        spark.createDataFrame(planted, "doc_id long, text string")
-    )
-    for t in (0.8, 0.5):
-        naive = sorted(
-            map(tuple, dedup.containment_pairs(d, "doc_id", "text", 3, t).collect())
-        )
-        pref = sorted(
-            map(
-                tuple,
-                dedup.containment_pairs_prefix(d, "doc_id", "text", 3, t).collect(),
-            )
-        )
-        assert naive == pref and len(naive) > 0, (t, len(naive), len(pref))
 
 
 def test_repetition_agg_form_equals_row_local(spark):
@@ -1279,62 +1263,47 @@ def test_repetition_agg_form_equals_row_local(spark):
     assert agg_form[990002] == 0.75  # 4 grams, 1 distinct
 
 
-def test_d18_scorer_seam_paths_identical(spark):
-    """VERDICT r7 #3: d18's scorer seam — 'local' (row-local interpreted)
-    and 'agg' (codegen aggregate) must produce the IDENTICAL survivor
-    set + weights whatever 'auto' dispatches to (the r16 re-measured cut
-    sits between the shipped 500-doc and 5000-doc corpora, so BOTH
-    dispatch outcomes are exercised across the SFs), and a bogus scorer
-    fails fast."""
-    import pytest as _pytest
+def test_d18_scorer_seam_paths_identical(spark, monkeypatch):
+    """VERDICT r7 #3: d18's size-probed scorer cut — the row-local plan
+    (corpus below ``_D18_AGG_MIN_DOCS``) and the codegen aggregate (at
+    or above it) must produce the IDENTICAL survivor set + weights.
+    Both sides are forced here by moving the cut to the corpus size;
+    building runs only the bounded limit-count probe."""
+    from pyspark_bigdata_sars_cov_2_analysis_spark.plans import llmdata
 
-    from pyspark_bigdata_sars_cov_2_analysis_spark.plans.llmdata import (
-        _D18_AGG_MIN_DOCS,
-        d18_curation_pipeline,
-    )
-    from tests.conftest import SF_TEST
-
-    def run(**kw):
-        out = sorted(
-            (r.doc_id, r.weight)
-            for r in d18_curation_pipeline(spark, SF_TEST, **kw).collect()
-        )
-        spark.catalog.clearCache()
-        return out
-
-    local, agg, auto = (
-        run(scorer="local"), run(scorer="agg"), run()
-    )
-    assert local == agg and len(local) > 0
-    assert auto == agg  # dispatch choice can never change values
     # r16 measured crossover (~1.4k docs cold): the cut must sit between
     # the shipped 500-doc (sf0.01 → local) and 5000-doc (sf0.1 → agg)
-    # corpora so both dispatch outcomes stay exercised
-    assert 500 < _D18_AGG_MIN_DOCS <= 5000
-    # the n_docs hint steers the dispatch without changing values
-    assert run(n_docs=10**6) == agg and run(n_docs=1) == agg
-    with _pytest.raises(ValueError, match="scorer"):
-        d18_curation_pipeline(spark, SF_TEST, scorer="vectorized")
+    # corpora so both plans stay exercised by the shipped data
+    assert 500 < llmdata._D18_AGG_MIN_DOCS <= 5000
 
-    # VERDICT r8 #5: plan CONSTRUCTION must launch no PROBE job when the
-    # caller passes an explicit scorer or an n_docs hint; bare 'auto'
-    # runs exactly one bounded limit-count probe on top. Parquet file
-    # listing launches its own bookkeeping jobs either way, so the
-    # observable is the per-group job-count DELTA, not zero.
-    def jobs(**kw):
-        return jobs_during(
-            spark, lambda: d18_curation_pipeline(spark, SF_TEST, **kw)
-        )[1]
+    chosen = []
+    scored = llmdata._curation_scored
 
-    explicit = jobs(scorer="agg")
-    hinted = jobs(n_docs=10**6)
-    bare = jobs()
-    # the crisp contract: explicit scorer and n_docs hint run ZERO probe
-    # jobs (identical job count); bare auto adds the bounded probe (a
-    # limit-count executes as 1-3 jobs depending on AQE staging — the
-    # boundedness itself is structural: the code probes via limit(n))
-    assert hinted == explicit, (hinted, explicit)
-    assert explicit < bare <= explicit + 3, (bare, explicit)
+    def spy(d, scorer):
+        chosen.append(scorer)
+        return scored(d, scorer)
+
+    monkeypatch.setattr(llmdata, "_curation_scored", spy)
+    # reading the table once caches its schema, so the builds below run
+    # no inference job — only the probe
+    n_docs = table(spark, SF_TEST, "documents").count()
+
+    def run(cut):
+        monkeypatch.setattr(llmdata, "_D18_AGG_MIN_DOCS", cut)
+        df, jobs = jobs_during(
+            spark, lambda: llmdata.d18_curation_pipeline(spark, SF_TEST)
+        )
+        out = sorted((r.doc_id, r.weight) for r in df.collect())
+        spark.catalog.clearCache()
+        # a limit-count executes as 1-3 jobs depending on AQE staging —
+        # the boundedness itself is structural: the code probes via
+        # limit(n)
+        assert 1 <= jobs <= 3, (cut, jobs)
+        return out
+
+    local, agg = run(n_docs + 1), run(n_docs)
+    assert chosen == ["local", "agg"]
+    assert local == agg and len(local) > 0
 
 
 def test_d06_n_docs_hint_skips_sizing_count(spark):
@@ -1373,125 +1342,6 @@ def test_d06_n_docs_hint_skips_sizing_count(spark):
     bare = jobs()
     assert hinted == pinned, (hinted, pinned)
     assert pinned < bare <= pinned + 3, (bare, pinned)
-
-
-def _hot_shingle_corpus(spark, n_docs=120):
-    """A boilerplate-wrapped corpus: every doc shares the same hot
-    header shingles (the containment-dedup hot regime) plus a unique
-    tail, so the inverted index has a few shingles with document
-    frequency ~= n_docs."""
-    header = "standard legal boilerplate header shared by every document"
-    rows = [
-        (i, f"{header} unique tail {i} alpha{i} beta{i} gamma{i}")
-        for i in range(n_docs)
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_containment_auto_dispatch_and_losslessness(spark):
-    """VERDICT r7 #4: the d16 measured dispatch. The chooser must pick
-    'naive' on the shipped cold-regime corpus and 'prefix' on the
-    planted hot-shingle corpus, and containment_pairs_auto must emit
-    the exact naive pair set on both (the choice is purely physical)."""
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
-    from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import table
-    from tests.conftest import SF_TEST
-
-    cold = table(spark, SF_TEST, "documents").select("doc_id", "text")
-    v, stats = dedup.choose_containment_variant(cold, "doc_id", "text")
-    assert v == "naive", (v, stats)
-
-    hot = _hot_shingle_corpus(spark)
-    v, stats = dedup.choose_containment_variant(hot, "doc_id", "text")
-    assert v == "prefix", (v, stats)
-    # the default chooser measures a deterministic 25% hash-gated sample
-    # (the 100 TB shape) — its decision must match the full-scan chooser
-    # in BOTH regimes, and the scaled estimators must carry the sample
-    # fraction they were corrected by
-    for corpus_, want_ in ((cold, "naive"), (hot, "prefix")):
-        v_s, st_s = dedup.choose_containment_variant(corpus_, "doc_id", "text")
-        v_f, st_f = dedup.choose_containment_variant(
-            corpus_, "doc_id", "text", sample_fraction=None
-        )
-        assert v_s == v_f == want_, (v_s, v_f, st_s, st_f)
-        assert st_s["sample_fraction"] == 0.25
-        assert st_f["sample_fraction"] == 1.0
-    # the chooser's threshold semantics: below t=0.5 the probe prefix
-    # covers most of every doc — prefix can only lose, never chosen
-    v_low, _ = dedup.choose_containment_variant(
-        hot, "doc_id", "text", threshold=0.4
-    )
-    assert v_low == "naive"
-
-    # losslessness on NON-EMPTY output: plant an embedded pair in the
-    # cold corpus, and a header-only doc in the hot corpus (contained
-    # 1.0 in every boilerplate-wrapped doc) — auto must equal naive on
-    # both, exercising each dispatch branch with real survivors
-    small = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    filler = " ".join(f"filler{i}" for i in range(90))
-    cold_planted = cold.unionByName(
-        spark.createDataFrame(
-            [(900001, small), (900002, small + " " + filler)],
-            "doc_id long, text string",
-        )
-    )
-    hot_planted = hot.unionByName(
-        spark.createDataFrame(
-            [(900001, "standard legal boilerplate header shared by every "
-                      "document")],
-            "doc_id long, text string",
-        )
-    )
-    for corpus, want_variant in ((cold_planted, "naive"), (hot_planted, "prefix")):
-        v, _ = dedup.choose_containment_variant(corpus, "doc_id", "text")
-        assert v == want_variant
-        naive = sorted(
-            map(
-                tuple,
-                dedup.containment_pairs(corpus, "doc_id", "text").collect(),
-            )
-        )
-        auto = sorted(
-            map(
-                tuple,
-                dedup.containment_pairs_auto(
-                    corpus, "doc_id", "text"
-                ).collect(),
-            )
-        )
-        assert naive == auto and len(naive) > 0
-
-
-def test_containment_prefix_prunes_candidates(spark):
-    """VERDICT r7 #6: the prefix variant's structural win, pinned as a
-    host-independent row count — on the hot-shingle corpus the prefix
-    probe must generate STRICTLY fewer candidate pairs than the naive
-    inverted-index join expands, because the hot boilerplate shingles
-    leave the probe side entirely (they are never a doc's rarest)."""
-    from pyspark.sql import functions as F
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
-
-    hot = _hot_shingle_corpus(spark)
-    sh = dedup.word_shingles(hot, "doc_id", "text", 3)
-    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
-    naive_cands = (
-        a.join(b, on="shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .count()
-    )
-    prefix_cands = dedup._containment_prefix_candidates(
-        sh, "doc_id", 0.8
-    ).count()
-    # every doc pair shares the boilerplate -> naive expands ~all pairs
-    n = hot.count()
-    assert naive_cands == n * (n - 1) // 2
-    assert prefix_cands < naive_cands, (prefix_cands, naive_cands)
-    # and the pruning is material, not off-by-one
-    assert prefix_cands <= naive_cands // 10, (prefix_cands, naive_cands)
 
 
 def test_ml01_band_contract(spark):
@@ -1591,41 +1441,13 @@ def test_chunk_dedup_invariants_random_corpora(spark):
                 idx = j
 
 
-def test_containment_prefix_lossless_random_corpora(spark):
-    """Seeded random-corpus sweep for the asymmetric prefix bound: tiny
-    vocabulary + wildly varying doc lengths generate df_ ties, docs
-    shorter than k, and near-threshold containment scores — the naive
-    and prefix variants must emit identical pair sets on every draw and
-    at every threshold tested."""
-    import random
-
-    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
-
-    for seed in (5, 17):
-        rng = random.Random(seed)
-        vocab = [f"t{i}" for i in range(8)]
-        docs = [
-            (i, " ".join(rng.choice(vocab)
-                         for _ in range(rng.randrange(2, 30))))
-            for i in range(30)
-        ]
-        df = spark.createDataFrame(docs, "doc_id long, text string")
-        for t in (0.6, 0.9):
-            naive = sorted(map(tuple, dedup.containment_pairs(
-                df, "doc_id", "text", 3, t).collect()))
-            pref = sorted(map(tuple, dedup.containment_pairs_prefix(
-                df, "doc_id", "text", 3, t).collect()))
-            assert naive == pref, (seed, t, len(naive), len(pref))
-            assert len(naive) > 0, (seed, t)
-
-
 def test_quality_gate_frame_equals_struct_form(spark):
     """The r9-ready frame-level gate (built r8, wired when t12 rotates
     back into the window) must reproduce the struct helper's (keep,
-    reasons) EXACTLY on real documents plus planted boundary cases, for
-    both scorer paths. (The perf claim — agg scorer 8.7x at sf0.1 — is
-    a measured number documented in quality_gate_frame's docstring, not
-    asserted here: wall-clock assertions are host-noise bait.)"""
+    reasons) EXACTLY on real documents plus planted boundary cases.
+    (The perf claim — 8.7x at sf0.1 — is a measured number documented
+    in quality_gate_frame's docstring, not asserted here: wall-clock
+    assertions are host-noise bait.)"""
     from pyspark.sql import functions as F
 
     from pyspark_bigdata_sars_cov_2_analysis_spark.functions import text as T
@@ -1646,17 +1468,13 @@ def test_quality_gate_frame_equals_struct_form(spark):
         ).select("doc_id", "g.keep", "g.reasons").collect()
     }
     spark.catalog.clearCache()
-    for sc in ("local", "agg"):
-        got = {
-            tuple(r)
-            for r in T.quality_gate_frame(
-                d, "doc_id", "text", scorer=sc
-            ).collect()
-        }
-        assert got == want, sc
-        # ADVICE r8: neither scorer path may leave cached storage behind
-        # (per-shard callers in long sessions would accumulate it)
-        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), sc
+    got = {
+        tuple(r) for r in T.quality_gate_frame(d, "doc_id", "text").collect()
+    }
+    assert got == want
+    # ADVICE r8: the frame gate may leave no cached storage behind
+    # (per-shard callers in long sessions would accumulate it)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert any("too_short" in r[2] for r in want if r[0] == 990001)
     assert any("repetitious" in r[2] for r in want if r[0] == 990002)
 
@@ -2501,8 +2319,8 @@ def test_quality_gate_null_doc_drops_with_named_reason(spark):
     """Review r14: a NULL doc used to gate keep=NULL (silently dropped
     by any keep filter) with reasons='' (an audit trail claiming nothing
     was wrong). It now gates keep=false, reasons='null_text' — in BOTH
-    the struct form and the frame form's local and agg paths, and the
-    agg path no longer loses the NULL-id row to its scorer join."""
+    the struct form and the frame form, and the frame form no longer
+    loses the NULL-id row to its scorer join."""
     from pyspark_bigdata_sars_cov_2_analysis_spark.functions.text import (
         quality_gate,
         quality_gate_frame,
@@ -2520,15 +2338,11 @@ def test_quality_gate_null_doc_drops_with_named_reason(spark):
     }
     assert g[2] == (False, "null_text")
     assert g[1][0] in (True, False) and g[1][0] is not None
-    for scorer in ("local", "agg"):
-        got = {
-            r.doc_id: (r.keep, r.reasons)
-            for r in quality_gate_frame(
-                df, "doc_id", "text", scorer=scorer
-            ).collect()
-        }
-        assert got[2] == (False, "null_text"), (scorer, got)
-        assert got[1] == g[1], (scorer, got)
+    got = {
+        r.doc_id: (r.keep, r.reasons)
+        for r in quality_gate_frame(df, "doc_id", "text").collect()
+    }
+    assert got == g, got
 
 
 def test_chunk_text_udtf_matches_chunk_array_on_unicode_space(spark):
@@ -3014,10 +2828,8 @@ def test_repetition_agg_null_and_duplicate_ids(spark):
     assert set(got) == {None, 7} and len(rep) == 2
     assert got[None] > 0.5 and got[7] > 0.5
     # the gate emits one row per INPUT row — no N^2 multiplication —
-    # and drops the repetitious docs on BOTH paths
-    gate = quality_gate_frame(
-        df, "doc_id", "text", scorer="agg", min_tokens=1
-    ).collect()
+    # and drops the repetitious docs
+    gate = quality_gate_frame(df, "doc_id", "text", min_tokens=1).collect()
     assert len(gate) == 4
     assert all(not r.keep and "repetitious" in r.reasons for r in gate)
 

@@ -134,7 +134,7 @@ def _wide(spark, lo, hi):
 
 def test_snapshot_versions_read_with_manifest_schema(spark, tmp_path):
     """Every publish records the writing frame's schema; for each kind
-    of version (overwrite, append, range and zorder compaction, delete,
+    of version (overwrite, append, two range compactions, delete,
     evolved append) that schema is what inference over the version's
     files returns, and the version reads with it, rows unchanged —
     without a job unless the version is evolved (merge-read)."""
@@ -143,8 +143,7 @@ def test_snapshot_versions_read_with_manifest_schema(spark, tmp_path):
     W.write_parquet_snapshot(_wide(spark, 3, 5), path, mode="append")
     W.compact_parquet_snapshot(spark, path, cluster_by=["id"])
     W.compact_parquet_snapshot(
-        spark, path, target_files=2, cluster_by=["id", "amt"],
-        cluster_strategy="zorder",
+        spark, path, target_files=2, cluster_by=["id", "amt"]
     )
     W.delete_from_snapshot(spark, path, "id = 1")
     W.write_parquet_snapshot(

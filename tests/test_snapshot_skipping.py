@@ -195,80 +195,23 @@ def test_clustered_compaction_restores_pruning(spark, tmp_path):
     with pytest.raises(ValueError, match="not in the snapshot schema"):
         W.compact_parquet_snapshot(spark, tbl, cluster_by=["zz"])
 
-
-def test_zorder_compaction_prunes_both_dimensions(spark, tmp_path):
-    """cluster_strategy='zorder': a lexicographic range clustering
-    bounds only its LEADING column per file (the second spans its full
-    range everywhere and never prunes); Morton cells bound both, so
-    where= reads prune on either dimension from one layout."""
-    tbl = str(tmp_path / "tbl")
-    rows = [(i, (i * 7) % 40) for i in range(40)]  # decorrelated dims
-    df = spark.createDataFrame(rows, schema="id long, g long").coalesce(1)
-    W.write_parquet_snapshot(df, tbl, stats_columns=["id", "g"])
-
-    with pytest.raises(ValueError, match="at least two cluster_by"):
-        W.compact_parquet_snapshot(
-            spark, tbl, target_files=4, cluster_by=["id"],
-            cluster_strategy="zorder",
-        )
-    with pytest.raises(ValueError, match="range|zorder"):
-        W.compact_parquet_snapshot(
-            spark, tbl, target_files=4, cluster_by=["id", "g"],
-            cluster_strategy="hilbert",
-        )
-    # non-numeric dimensions refuse eagerly (a string would silently
-    # quantize to a constant span — no pruning, no error)
-    tbl_s = str(tmp_path / "tbl_s")
+    # a range clustering bounds only its LEADING column: on decorrelated
+    # dimensions the second one spans its full range in every file, so a
+    # where= read on it must open every file
+    tbl2 = str(tmp_path / "tbl2")
+    rows = [(i, (i * 7) % 40) for i in range(40)]
     W.write_parquet_snapshot(
-        spark.createDataFrame(
-            [(1, "a"), (2, "b")], schema="id long, c string"
-        ).coalesce(1),
-        tbl_s,
+        spark.createDataFrame(rows, schema="id long, g long").coalesce(1),
+        tbl2, stats_columns=["id", "g"],
     )
-    with pytest.raises(ValueError, match="numeric dimensions"):
-        W.compact_parquet_snapshot(
-            spark, tbl_s, cluster_by=["id", "c"], cluster_strategy="zorder"
-        )
-    # a real column named __z would be replaced by the scratch code
-    tbl_z = str(tmp_path / "tbl_z")
-    W.write_parquet_snapshot(
-        spark.createDataFrame(
-            [(1, 2)], schema="id long, __z long"
-        ).coalesce(1),
-        tbl_z,
-    )
-    with pytest.raises(ValueError, match="__z"):
-        W.compact_parquet_snapshot(
-            spark, tbl_z, cluster_by=["id", "__z"],
-            cluster_strategy="zorder",
-        )
-    # the sink validates strategy values at CONSTRUCTION, not on the
-    # Nth micro-batch's folded compaction
-    with pytest.raises(ValueError, match="range|zorder"):
-        W.streaming_snapshot_sink(
-            spark.readStream.format("rate").load(), tbl, "ckpt",
-            compact_every=2, cluster_by=["a", "b"],
-            cluster_strategy="zordr",
-        )
-    with pytest.raises(ValueError, match="at least two"):
-        W.streaming_snapshot_sink(
-            spark.readStream.format("rate").load(), tbl, "ckpt",
-            compact_every=2, cluster_by=["a"], cluster_strategy="zorder",
-        )
-
-    res = W.compact_parquet_snapshot(
-        spark, tbl, target_files=4, cluster_by=["id", "g"],
-        cluster_strategy="zorder",
-    )
-    assert res["compacted"] is True and res["rows"] == 40
-    snap = W.list_parquet_snapshots(tbl)[-1]
-    n_files = len(snap["files"])
+    W.compact_parquet_snapshot(spark, tbl2, target_files=4, cluster_by=["id"])
+    n_files = len(W.list_parquet_snapshots(tbl2)[-1]["files"])
     assert n_files > 1
-    for dim, spec in (("id", (0, 8)), ("g", (0, 8))):
-        pruned = W.read_parquet_snapshot(spark, tbl, where={dim: spec})
-        assert len(pruned.inputFiles()) < n_files, f"no pruning on {dim}"
-        want = sorted(i for i, g in rows if (i if dim == "id" else g) <= 8)
-        assert _ids(pruned) == want
+    by_id = W.read_parquet_snapshot(spark, tbl2, where={"id": (8, 8)})
+    assert len(by_id.inputFiles()) == 1 and _ids(by_id) == [8]
+    by_g = W.read_parquet_snapshot(spark, tbl2, where={"g": (8, 8)})
+    assert len(by_g.inputFiles()) == n_files
+    assert _ids(by_g) == [i for i, g in rows if g == 8]
 
 
 def test_evolved_table_stats_and_pruned_merge_read(spark, tmp_path):
@@ -706,31 +649,15 @@ def _strip_manifest_key(tbl, version, key):
 
 
 def test_clustered_compact_validates_on_preschema_manifest(spark, tmp_path):
-    """ADVICE r13: cluster_by/zorder validation (unknown columns,
-    non-numeric dimensions, __z collision) must still fire on a legacy
-    manifest that records no schema — resolved from the file footers
-    (plan-only dtypes probe) instead of silently skipping straight to a
-    degraded or mid-job-failing rewrite."""
+    """ADVICE r13: cluster_by validation (unknown columns) must still
+    fire on a legacy manifest that records no schema — resolved from the
+    file footers (plan-only dtypes probe) instead of silently skipping
+    straight to a mid-job-failing rewrite."""
     tbl = str(tmp_path / "tbl")
     W.write_parquet_snapshot(_df(spark, 0, 6), tbl)
     _strip_manifest_key(tbl, 1, "schema")
     with pytest.raises(ValueError, match="not in the snapshot schema"):
         W.compact_parquet_snapshot(spark, tbl, cluster_by=["nope"])
-    # non-numeric zorder dimension refused eagerly on the same
-    # schema-less manifest
-    tbl2 = str(tmp_path / "tbl2")
-    W.write_parquet_snapshot(
-        spark.range(0, 6)
-        .selectExpr("id", "CAST(id AS STRING) AS s")
-        .coalesce(1),
-        tbl2,
-    )
-    _strip_manifest_key(tbl2, 1, "schema")
-    with pytest.raises(ValueError, match="numeric"):
-        W.compact_parquet_snapshot(
-            spark, tbl2, target_files=2,
-            cluster_by=["id", "s"], cluster_strategy="zorder",
-        )
     # a VALID clustered compaction still works without a recorded schema
     res = W.compact_parquet_snapshot(
         spark, tbl, target_files=2, cluster_by=["id"]
