@@ -10,12 +10,14 @@ output and ``single_file=True`` is the opt-in small-result path.
 
 from __future__ import annotations
 
+import functools as _functools
 import re
 import time as _time
 import uuid as _uuid
+from collections.abc import Callable
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_bigdata_sars_cov_2_analysis_spark.functions.localrel import (
@@ -147,14 +149,9 @@ def _snap_path(path: str) -> str:
     return fs.join(fs.resolve(path), _SNAP_DIR)
 
 
-# exactly the names write_parquet_snapshot publishes (``v%08d.json``;
-# ``%08d`` grows past 8 digits rather than truncating, so accept 8+ —
-# a table at version 100,000,000 must not have its newest manifests
-# silently become invisible, which would serve stale reads and livelock
-# the publish loop on permanent link collisions).
-# ADVICE r12: the old startswith/endswith filter fed ANY stray v*.json in
-# _snapshots/ (a hand-dropped "version.json" note, an editor backup) into
-# int()/json.load, bricking every publish/read/compact on the table.
+# exactly the names write_parquet_snapshot publishes (``v%08d.json``,
+# which grows past 8 digits rather than truncating); any other file in
+# _snapshots/ (a note, an editor backup) is not a manifest
 _MANIFEST_RE = re.compile(r"v(\d{8,})\.json")
 
 
@@ -360,6 +357,24 @@ def _stage(
     return _Staged(data_dir, keep, sum(counts), [list(p) for p in df.dtypes])
 
 
+def _content_fingerprint(df: DataFrame) -> str:
+    """``df``'s content fingerprint, ``count:hash-sum``, from one
+    aggregate: its row count and the sum of a per-row ``xxhash64`` over
+    every column, bounded below 2^30 so the sum cannot overflow. It is
+    order- and partitioning-independent, and a batch that reuses
+    committed ids with other rows gets another fingerprint. Map columns
+    hash as JSON (``xxhash64`` refuses maps)."""
+    cols = []
+    for c, t in df.dtypes:
+        col = F.col("`" + c.replace("`", "``") + "`")
+        cols.append(F.to_json(col) if "map<" in t else col)
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.pmod(F.xxhash64(*cols), F.lit(1_000_000_007))).alias("h"),
+    ).collect()[0]
+    return f"{int(row['n'])}:{int(row['h'] or 0)}"
+
+
 def _collect_file_stats(
     files: list[str], columns: list[str]
 ) -> dict[str, dict]:
@@ -540,9 +555,10 @@ def write_parquet_snapshot(
     df: DataFrame, path: str, mode: str = "overwrite",
     src_batch: int | None = None, allow_schema_evolution: bool = False,
     stats_columns: list[str] | None = None,
-) -> int:
+) -> int | None:
     """Publish ``df`` as a new VERSION of the snapshot table at ``path``;
-    returns the version number. ``mode='overwrite'`` makes the new
+    returns the version number (None: a replayed ``src_batch``, see
+    below). ``mode='overwrite'`` makes the new
     version exactly ``df``; ``mode='append'`` makes it the previous
     version's file set PLUS ``df``'s new files — an append never
     rewrites a byte of existing data, it only publishes a longer file
@@ -566,10 +582,15 @@ def write_parquet_snapshot(
     directory — they read exactly the manifest's file list, so a
     half-written version is unobservable by construction.
 
-    ``src_batch`` stamps the manifest with the PUBLISHING micro-batch's
-    id — :func:`streaming_snapshot_sink` uses it to make a replayed
-    foreachBatch invocation a no-op (the manifest IS the commit record,
-    so at-least-once delivery publishes exactly once).
+    ``src_batch`` makes this the publish of that micro-batch: the
+    batch-commit rule (:func:`_admit_batch`) admits it before the write
+    and again against the manifest each attempt publishes over, so a
+    racing replay or collision is caught too; a replay returns None and
+    publishes nothing. A published batch's manifest records its id and
+    the files it staged (``batch_files``), the mark the rule checks
+    later batches against; the write stays the publish's only job. The
+    manifest is the commit record, so at-least-once delivery publishes
+    exactly once.
 
     ``stats_columns`` (r13 — manifest-level DATA SKIPPING, the mechanism
     transactional formats use to avoid scanning 100 TB for a one-day
@@ -608,13 +629,15 @@ def write_parquet_snapshot(
     spark = df.sparkSession
     _fs.for_path(path).make_dirs(_snap_path(path))
     last = _latest_manifest(path)
+    fingerprint = _functools.cache(lambda: _content_fingerprint(df))
+    if src_batch is not None and not _admit_batch(
+        path, last, src_batch, fingerprint
+    ):
+        return None
     staged = _stage(df, path, (last["version"] + 1) if last else 1)
     new_files, n_new, new_schema = staged.files, staged.rows, staged.schema
-    # legacy-schema derivation cache (ADVICE r11): pre-manifest-schema
-    # tables derive prev_schema from the previous version's footers —
-    # once per PREVIOUS VERSION, not once per publish-race retry
-    # iteration (the retry loop may spin while the table advances, and
-    # each spin was re-reading every footer).
+    # a pre-manifest-schema table's schema, derived from the previous
+    # version's footers once per base version, not once per retry
     legacy_schema: tuple[int, list] | None = None
     # footer stats for the NEW files, memoized per effective column set —
     # the files are fixed before the retry loop, but the effective set
@@ -626,18 +649,15 @@ def write_parquet_snapshot(
         # cost must not grow with the table's history)
         prev = _latest_manifest(path)
         version = (prev["version"] + 1) if prev else 1
+        if src_batch is not None and not _admit_batch(
+            path, prev, src_batch, fingerprint
+        ):
+            return None  # a racing replay won; ours are unreferenced files
         if mode == "append" and prev:
-            # schema-drift guard (ADVICE r10): an append whose columns
-            # don't match the table would otherwise publish a manifest
-            # whose multi-footer read silently takes one footer's schema
-            # and drops/misses columns. The compare is deliberately
-            # ORDER-SENSITIVE: the manifest records one column order and
-            # a multi-footer scan's output order follows the sampled
-            # footer, so a reordered append would make the table's read
-            # schema nondeterministic even though per-name values are
-            # fine. The table's schema is recorded in every manifest;
-            # pre-manifest-schema tables derive it from the previous
-            # version's files once per base version.
+            # schema-drift guard: a multi-footer read silently takes one
+            # footer's schema, so an append must match the table's
+            # recorded schema, ORDER included (a scan's column order
+            # follows the sampled footer)
             prev_schema = prev.get("schema")
             if prev_schema is None:
                 if legacy_schema is None or legacy_schema[0] != prev["version"]:
@@ -656,12 +676,8 @@ def write_parquet_snapshot(
             evolved = bool(prev.get("evolved"))
             manifest_schema = prev_schema
             if new_schema != prev_schema:
-                # compare names per spark.sql.caseSensitive (ADVICE r12:
-                # Spark resolves columns case-insensitively by default,
-                # so a case-sensitive compare let 'V' evolve alongside
-                # 'v' — the widened manifest carried both and the
-                # evolved merge-read's select() died ambiguous on every
-                # subsequent read; publish succeeded, reads broken)
+                # compare names per spark.sql.caseSensitive: evolving 'V'
+                # beside 'v' would make every merge-read ambiguous
                 case_sensitive = (
                     str(
                         spark.conf.get("spark.sql.caseSensitive", "false")
@@ -705,9 +721,7 @@ def write_parquet_snapshot(
                 )
                 if same_set:
                     # a pure reorder widens nothing — refuse it even
-                    # under allow_schema_evolution (ADVICE r12: letting
-                    # it through published an evolved manifest that
-                    # forced merge-reads forever for zero new columns)
+                    # under allow_schema_evolution
                     raise ValueError(
                         f"append schema drift at {path}: table has "
                         f"{prev_schema}, append brings {new_schema}; "
@@ -777,30 +791,15 @@ def write_parquet_snapshot(
             payload["stats"] = {**carried, **stats_cache[key]}
         if evolved:
             payload["evolved"] = True
-        if src_batch is not None:
-            payload["src_batch"] = int(src_batch)
-        elif mode == "append" and prev and prev.get("src_batch") is not None:
-            # carry the stream high-water forward through UNSTAMPED
-            # appends (ADVICE r11): without this, a manual append on a
-            # stream-fed table makes the latest manifest untagged, and a
-            # vacuum that keeps only tagless versions would erase the
-            # replay guard's high-water — a restarted stream would then
-            # re-publish its last batch as duplicate rows. Inductively,
-            # every post-fix append chain keeps the effective high-water
-            # in its LATEST manifest, so the guard stays O(1).
-            #
-            # An unstamped OVERWRITE deliberately does NOT inherit it
-            # (VERDICT r12 advisory — decided, pinned in
-            # tests/test_snapshot_model.py and
-            # test_unstamped_append_carries_high_water_forward): an
-            # overwrite is a table RESET, after which a fresh stream
-            # (new checkpoint, ids restarting at 0) may be attached —
-            # a surviving stale high-water would silently swallow every
-            # one of its first batches (data loss). The alternative
-            # only protects a replay racing a concurrent manual
-            # overwrite, which the one-logical-stream-per-table
-            # contract already excludes.
-            payload["src_batch"] = int(prev["src_batch"])
+        # an unstamped append carries the batch mark forward, so a vacuum
+        # that keeps only it cannot erase the replay guard; an unstamped
+        # overwrite resets the table and the mark
+        payload.update(
+            {"src_batch": int(src_batch), "fingerprint": None,
+             "batch_files": new_files}
+            if src_batch is not None
+            else _carried_mark(path, prev if mode == "append" else None)
+        )
         if not _link_manifest(path, version, payload):
             continue  # lost the race: recompute against the new latest
         return version
@@ -1011,27 +1010,28 @@ def vacuum_parquet_snapshots(
     fs = _fs.for_path(path)
     snaps = list_parquet_snapshots(path)
     kept, dropped = snaps[-keep:], snaps[:-keep]
-    keep_files = {_local_path(f) for s in kept for f in s["files"]}
+
+    def _named(s) -> list:
+        # a sink's batch mark names its batch's files (_admit_batch
+        # fingerprints them on a replay), live while a kept manifest
+        # carries that mark
+        return s["files"] + (s.get("batch_files") or [])
+
+    keep_files = {_local_path(f) for s in kept for f in _named(s)}
     base = _local_path(path)
-    # canonical absolute form on BOTH sides of the ownership compare
-    # (review r13): manifests name files by absolute paths (older ones
-    # by file: URIs), so a vacuum invoked with a RELATIVE table path
-    # would otherwise match nothing and silently reclaim zero data files
+    # canonical absolute form on BOTH sides of the ownership compare, or
+    # a RELATIVE table path would match no manifest's file at all
     own_root = fs.absolute(fs.join(base, "data")) + "/"
-    # manifests FIRST, then data (ADVICE r10): deleting a dropped
-    # version's files before its manifest leaves, across a crash, a
-    # LISTED manifest referencing vanished files — list/read of that
-    # version errors until vacuum re-runs. Dropping every doomed
-    # manifest first keeps the invariant that every listed manifest is
-    # readable at all times; a crash between the two phases merely
-    # leaves unreferenced files for the next vacuum's orphan sweep.
+    # manifests FIRST, then data: every listed manifest stays readable,
+    # and a crash between the two phases only leaves unreferenced files
+    # for the next vacuum's orphan sweep
     for s in dropped:
         fs.remove(
             fs.join(_snap_path(path), f"v{s['version']:08d}.json")
         )
     removed_files = []
     for s in dropped:
-        for f in s["files"]:
+        for f in _named(s):
             local = _local_path(f)
             if not fs.absolute(local).startswith(own_root):
                 continue  # another table's bytes (shallow clone): the
@@ -1049,7 +1049,7 @@ def vacuum_parquet_snapshots(
     def _top_dirs(manifests) -> set:
         tops = set()
         for s in manifests:
-            for f in s["files"]:
+            for f in _named(s):
                 p = fs.absolute(_local_path(f))
                 if p.startswith(own_root) and "/" in p[len(own_root):]:
                     tops.add(own_root + p[len(own_root):].split("/", 1)[0])
@@ -1076,50 +1076,98 @@ def vacuum_parquet_snapshots(
     }
 
 
-def _latest_src_batch(path: str) -> int | None:
-    """The replay guard's effective stream high-water: reading manifests
-    NEWEST-first, the first stamped manifest's batch id — or None at the
-    first UNSTAMPED OVERWRITE, which is a lineage BARRIER (VERDICT r12
-    advisory, decided + pinned in tests/test_snapshot_model.py): an
-    overwrite is a table reset after which a fresh stream (new
-    checkpoint, ids restarting at 0) may be attached, and scanning past
-    it to an older stamp would silently swallow every one of that
-    stream's first batches. The scan is O(1 + untagged suffix) tiny
-    JSON reads instead of O(versions) (ADVICE r10: the old full-set
-    rebuild made a long-lived sink quadratic over the stream's
-    lifetime) — and on post-carry-forward chains the LATEST manifest
-    answers directly, since unstamped appends inherit the stamp. Valid
-    because batch ids are published in monotonically increasing order
-    within a sink's append chain."""
-    import json as _json
-
-    fs = _fs.for_path(path)
-    d = _snap_path(path)
-    for n in _manifest_names(path, reverse=True):
-        m = _json.loads(fs.read_text(fs.join(d, n)))
-        if m.get("src_batch") is not None:
-            return int(m["src_batch"])
-        if m.get("mode") == "overwrite":
-            return None  # lineage barrier: the table was reset here
-    return None
+def _batch_mark(path: str, snap: dict | None) -> dict | None:
+    """The manifest that holds the table's batch mark as of ``snap``, the
+    newest manifest the caller read (None: no batch is committed since
+    the table was created or reset). Every manifest this module and the
+    dedup checkpoints publish records ``src_batch`` — the newest
+    committed batch id, or null after an unstamped overwrite: a reset,
+    after which a fresh stream may number its batches from 0 again. An
+    append published before marks were carried forward lacks the field;
+    for it the newest older manifest that has it holds the mark, unless
+    an unstamped overwrite comes first."""
+    if snap is not None and "src_batch" not in snap and (
+        snap.get("mode") != "overwrite"
+    ):
+        older = [v for v in _manifest_versions(path) if v < snap["version"]]
+        snap = None
+        for v in reversed(older):
+            m = _load_manifest(path, v) or {}
+            if "src_batch" in m or m.get("mode") == "overwrite":
+                snap = m
+                break
+    return snap if snap and snap.get("src_batch") is not None else None
 
 
-def _effective_hwm(path: str, base: dict, cache: dict) -> int | None:
-    """Effective stream high-water for a publish derived from ``base``
-    (the observed latest/source manifest): the base's own stamp when
-    present — one dict lookup, the common case on every
-    post-carry-forward chain — else one barrier-aware newest-first scan
-    per DISTINCT base version, memoized in ``cache`` across a publish
-    retry loop (the ADVICE r12 discipline: never O(versions) per
-    attempt; shared by compact and DML since r13's review pass
-    found the idiom triplicated)."""
-    hwm = base.get("src_batch")
-    if hwm is not None:
-        return int(hwm)
-    v = base["version"]
-    if v not in cache:
-        cache[v] = _latest_src_batch(path)
-    return cache[v]
+def _carried_mark(path: str, snap: dict | None) -> dict:
+    """The batch mark a manifest derived from ``snap`` records —
+    ``src_batch``, ``fingerprint`` and ``batch_files`` — as
+    :func:`_batch_mark` finds it, null without a mark."""
+    mark = _batch_mark(path, snap) or {}
+    keys = ("src_batch", "fingerprint", "batch_files")
+    return {k: mark.get(k) for k in keys}
+
+
+def _admit_batch(
+    path: str, snap: dict | None, batch_id: int,
+    fingerprint: Callable[[], str], what: str = "snapshot table",
+) -> bool:
+    """The one batch-commit rule of every streamed table — the snapshot
+    sink and the dedup checkpoints — against the mark :func:`_batch_mark`
+    finds from ``snap``, the table's newest manifest (-1: no batch):
+
+    - an id above the mark is new: True, publish it;
+    - an id below it raises: ids restarted (a new stream checkpoint
+      over kept state) or a second stream shares the table;
+    - the mark's own id is a replay, False, only when ``fingerprint()``
+      (the batch's :func:`_content_fingerprint`) equals the committed
+      batch's, and raises otherwise: a restarted stream's first batch
+      can reuse the newest id with other rows. A dedup checkpoint's mark
+      records its input batch's ``fingerprint`` (its state rows are
+      derived, not the batch); a sink's records the ``batch_files`` its
+      publish staged, which are the batch, fingerprinted only here, so
+      a publishing sink batch runs no fingerprint job. A mark written
+      before this rule has neither, and the equal id is taken as the
+      replay.
+
+    Negative ids raise: -1 means "no batch", the mark of a seed."""
+    bid = int(batch_id)
+    if bid < 0:
+        raise ValueError(
+            f"batch_id must be >= 0 (got {batch_id}): -1 is reserved for "
+            "the seed, which commits no batch"
+        )
+    mark = _batch_mark(path, snap)
+    hwm = -1 if mark is None else int(mark["src_batch"])
+    if bid > hwm:
+        return True
+    if bid < hwm:
+        raise ValueError(
+            f"batch_id {bid} is below the {what}'s committed high-water "
+            f"mark {hwm} at {path}: batch ids restarted (a new stream "
+            "checkpoint over kept state?) or a second stream shares this "
+            "path, and publishing would mix the two. Continue numbering "
+            "above the mark (keep the original stream checkpoint), or "
+            "reset the table (seed or overwrite it) for a new stream."
+        )
+    committed = mark.get("fingerprint")
+    if committed is None and mark.get("batch_files"):
+        committed = _content_fingerprint(
+            SparkSession.active().read.parquet(*mark["batch_files"])
+        )
+    if committed is None:
+        return False
+    got = fingerprint()
+    if got == committed:
+        return False
+    raise ValueError(
+        f"batch_id {bid} equals the {what}'s committed high-water mark "
+        f"{hwm} at {path} but carries DIFFERENT content than the committed "
+        f"batch (fingerprint {got} != {committed}): this is not a replay "
+        "but a restarted stream reusing the newest committed id, and "
+        "publishing would overwrite or duplicate that batch. Continue "
+        "numbering above the mark, or reset the table for a new stream."
+    )
 
 
 def _link_manifest(path: str, version: int, payload: dict) -> bool:
@@ -1143,60 +1191,41 @@ def snapshot_publish_batch(
     allow_schema_evolution: bool = False,
     stats_columns: list[str] | None = None,
 ) -> bool:
-    """One micro-batch of :func:`streaming_snapshot_sink`, REPLAY-SAFE:
-    publish the batch as a manifest-level append stamped with its batch
-    id — unless a newer-or-equal id is already published, in which case
-    the invocation is a replay of a published batch and a NO-OP
-    (returns False). The manifest is the commit record: a crash after
-    the data write but before the publish leaves an orphan dir
-    (invisible, vacuumed later) and the replay publishes fresh files
-    once; a crash after the publish but before the stream checkpoint
-    commit makes the replay hit the id guard. At-least-once delivery,
-    exactly-once publish.
+    """One micro-batch of :func:`streaming_snapshot_sink`: publish the
+    batch as a manifest-level append stamped with its id and its files
+    (returns True), under the one batch-commit rule of
+    :func:`_admit_batch`: an id above the table's mark publishes, an id
+    below it raises, and the mark's own id is a no-op replay (returns
+    False) only with the committed content, and raises otherwise. A
+    publish runs only its write job; only the mark's own id runs the
+    fingerprint aggregates, of the batch and of the committed files.
 
-    The guard is a monotone HIGH-WATER compare, not set membership:
-    Structured Streaming only ever replays the last uncommitted batch,
-    and ids within one logical stream are strictly increasing, so
-    ``batch_id <= latest published id`` ⇔ replay. (One logical stream
-    per table — the same contract the old set-based guard assumed, now
-    at O(1) manifest reads per batch instead of O(versions).)
-
-    An unstamped manual OVERWRITE resets the stream contract (r13,
-    VERDICT r12 advisory — decided): it is a lineage barrier in the
-    high-water scan, so after an overwrite a FRESH stream (new
-    checkpoint, ids restarting at 0) may feed the table and none of its
-    batches are swallowed by the pre-reset stamp. The OLD stream's
-    checkpoint must be cleared together with the overwrite — restarting
-    it against the reset table would replay with the old id sequence,
-    which the reset guard by design no longer excludes.
+    The manifest is the commit record: a crash after the data write but
+    before the publish leaves an orphan dir (invisible, vacuumed later)
+    and the replay publishes fresh files once; a crash after the publish
+    but before the stream checkpoint commit makes the replay a no-op.
+    At-least-once delivery, exactly-once publish. An unstamped overwrite
+    resets the mark, so a fresh stream (new checkpoint, ids from 0) may
+    then feed the table; the old stream's checkpoint goes with it.
 
     ``allow_schema_evolution`` passes through to the append: within one
     streaming query the schema is fixed, so this matters across
     RESTARTS — a stream restarted after an upstream schema upgrade can
     widen its old table instead of refusing (r12)."""
-    hwm = _latest_src_batch(path)
-    if hwm is not None and int(batch_id) <= hwm:
-        return False
-    write_parquet_snapshot(
+    return write_parquet_snapshot(
         batch_df, path, mode="append", src_batch=int(batch_id),
         allow_schema_evolution=allow_schema_evolution,
         stats_columns=stats_columns,
-    )
-    return True
+    ) is not None
 
 
 def _published_since_last_compact(path: str) -> int:
-    """Number of manifests of ANY mode published AFTER the newest
-    ``compact`` version (all of them if the table was never compacted) —
-    the DURABLE compaction-cadence counter for
-    :func:`streaming_snapshot_sink`. Counting every mode is deliberate
-    (VERDICT r12 naming advisory — the old name said "appends"): a
-    manual overwrite between stream batches contributes a small file
-    set exactly like an append does, so it advances the cadence too.
-    Reads manifests newest-first and stops at the first compact one, so
-    the cost is O(publishes since last compact) tiny JSON reads —
-    bounded by the sink's ``compact_every`` between compactions, never
-    O(versions) over the stream's lifetime."""
+    """Number of manifests of ANY mode published after the newest
+    ``compact`` one (all of them on a never-compacted table) — the
+    durable compaction cadence of :func:`_drive_batches`. A manual
+    overwrite or a checkpoint seed adds a small file set like an append
+    does, so it counts too. Reads manifests newest-first up to the
+    compact one: O(publishes since it), never O(versions)."""
     import json as _json
 
     fs = _fs.for_path(path)
@@ -1207,6 +1236,38 @@ def _published_since_last_compact(path: str) -> int:
             break
         since += 1
     return since
+
+
+def _drive_batches(
+    stream_df: DataFrame, path: str, stream_checkpoint: str,
+    commit: Callable[[DataFrame, int], bool], compact: Callable[[], object],
+    compact_every: int | None,
+):
+    """The one ``foreachBatch`` driver of every streamed table — the
+    snapshot sink and the dedup checkpoints' streaming ingests: an
+    ``availableNow`` stream over ``stream_df`` that hands each
+    micro-batch to ``commit(batch_df, batch_id)`` (True: published,
+    False: a replay, a raise: a collision — :func:`_admit_batch`) and,
+    after a publish, runs ``compact()`` once ``compact_every`` (0/None:
+    never) publishes have landed at ``path`` since its newest
+    ``compact`` manifest. That cadence is counted from the manifests, so
+    a restarted stream still compacts on the Nth publish and a replay,
+    which publishes nothing, never compacts. Returns the
+    ``DataStreamWriter``; callers ``.start()`` it."""
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        if (
+            commit(batch_df, int(batch_id))
+            and compact_every
+            and _published_since_last_compact(path) >= compact_every
+        ):
+            compact()
+
+    return (
+        stream_df.writeStream.foreachBatch(_process)
+        .option("checkpointLocation", stream_checkpoint)
+        .trigger(availableNow=True)
+    )
 
 
 def streaming_snapshot_sink(
@@ -1220,32 +1281,20 @@ def streaming_snapshot_sink(
     every micro-batch publishes ONE new table version (manifest-level
     append — zero bytes rewritten), so downstream consumers get MVCC
     reads, time travel across batch boundaries, and full isolation from
-    in-flight publishes, on a plain filesystem. Composes the r10 MVCC
-    table with the ingest-loop replay discipline: the streaming
-    checkpoint makes restarts re-process nothing, and
-    :func:`snapshot_publish_batch`'s manifest id guard makes a
-    mid-batch crash replay publish exactly once. Returns a
-    ``DataStreamWriter``; callers ``.start()`` it.
+    in-flight publishes, on a plain filesystem. Runs on
+    :func:`_drive_batches` with :func:`snapshot_publish_batch` per
+    micro-batch, so the batch-commit rule is the one every streamed
+    table keeps: an id above the mark publishes, an id below it raises,
+    and the mark's own id is a no-op replay only with the committed
+    content. Returns a ``DataStreamWriter``; callers ``.start()`` it.
 
     ``compact_every=N`` folds :func:`compact_parquet_snapshot` into the
-    drain (r11 — d22's ``compact_every`` discipline ported to the MVCC
-    layer): after every Nth PUBLISHED batch the latest version's file
-    set is rewritten as ``target_files`` files and published as a new
-    ``compact`` version, so a long-lived stream appending one tiny file
-    set per micro-batch never degrades readers — without this, file
-    count grows linearly with batches exactly like the pre-d22
-    checkpoint buckets. Semantics untouched: compaction versions are
-    additive, every pre-compact version stays time-travelable until
-    vacuumed, and a replayed batch (publish no-op) never triggers a
-    compaction. Compaction runs between batches of the ONE serialized
-    foreachBatch writer, so the lost-publish-race retry inside
-    compact_parquet_snapshot is a safety net, not an expected path.
-
-    The cadence is DURABLE (ADVICE r11 / VERDICT r11 #5): it counts
-    published manifests since the table's last ``compact`` version, not
-    a per-process counter, so a stream stopped and restarted mid-cadence
-    still compacts on the Nth GLOBAL publish — a sink restarted every
-    N−1 batches compacts exactly as often as one that never restarts.
+    drain on the driver's durable cadence: after every Nth publish the
+    latest version's file set is rewritten as ``target_files`` files and
+    published as a new ``compact`` version, so a long-lived stream
+    appending one tiny file set per micro-batch never degrades readers.
+    Compaction versions are additive and every pre-compact version stays
+    time-travelable until vacuumed.
 
     ``allow_schema_evolution`` lets a sink RESTARTED after an upstream
     schema upgrade widen its table (merge-read with nulls padded for
@@ -1259,24 +1308,18 @@ def streaming_snapshot_sink(
     on the skip columns as the stream grows — the combination is what
     keeps a ``where=`` read of a months-old streaming table from
     scanning every micro-batch's files."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if not snapshot_publish_batch(
+    return _drive_batches(
+        stream_df, path, stream_checkpoint,
+        lambda batch_df, batch_id: snapshot_publish_batch(
             batch_df, batch_id, path,
             allow_schema_evolution=allow_schema_evolution,
             stats_columns=stats_columns,
-        ):
-            return
-        if compact_every and _published_since_last_compact(path) >= compact_every:
-            compact_parquet_snapshot(
-                batch_df.sparkSession, path, target_files=target_files,
-                cluster_by=cluster_by,
-            )
-
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", stream_checkpoint)
-        .trigger(availableNow=True)
+        ),
+        lambda: compact_parquet_snapshot(
+            stream_df.sparkSession, path, target_files=target_files,
+            cluster_by=cluster_by,
+        ),
+        compact_every,
     )
 
 
@@ -1294,12 +1337,8 @@ def compact_parquet_snapshot(
     are isolated throughout because the manifest IS the atomicity — no
     window where the table is missing.
 
-    Race protocol: :func:`_rmw_publish_snapshot` — the compacted data is
-    staged in a fresh immutable dir, count-verified against the base
-    manifest's row count, then published with one O_EXCL manifest link;
-    a lost race (the table ADVANCED during the rewrite, so publishing
-    the stale compaction would silently drop the winner's rows)
-    abandons the attempt and recompacts the new latest. Already-compact
+    Race protocol: :func:`_rmw_publish_snapshot` (staged, count-verified,
+    recompacted against the new latest on a lost race). Already-compact
     tables (``<= target_files`` files) are a no-op — unless
     ``cluster_by`` asks for a layout change, or ``force=True`` demands
     the rewrite anyway (r13: how a SHALLOW CLONE materializes — a
@@ -1325,10 +1364,8 @@ def compact_parquet_snapshot(
 
     def rewrite(src):
         if cluster_by:
-            # legacy pre-schema manifests record no schema — resolve it
-            # from the file footers (plan-only dtypes probe, the same
-            # fallback snapshot_changes uses) so the eager unknown-column
-            # refusal below still fires (ADVICE r13)
+            # legacy pre-schema manifests record no schema: resolve it
+            # from the footers so the unknown-column refusal still fires
             tbl_schema = src.get("schema") or [
                 list(p) for p in _read_snapshot_files(spark, src).dtypes
             ]
@@ -1397,11 +1434,10 @@ def _rmw_publish_snapshot(
     4. publish ``v(src+1)``: ``fields`` plus the staged files, rows and
        schema, data-skipping stats recomputed from the new footers for
        the manifest's ``stats_columns`` (the rewrite replaces every
-       file), and the table's effective stream high-water (a rewrite is
-       maintenance ON the stream's lineage, not a reset — a crashed
-       stream's replay after a mid-stream compaction or delete must
-       still be a publish no-op, and a vacuum that leaves the rewrite as
-       the only manifest must not lose the stamp). One O_EXCL link;
+       file), and the table's batch mark (:func:`_carried_mark`; a
+       rewrite is maintenance on the stream's
+       lineage, not a reset: a replay after it must still be a no-op,
+       even once a vacuum keeps only the rewrite). One O_EXCL link;
        losing it means the table ADVANCED between the read and the
        publish — committing the stale rewrite would silently drop the
        winner's rows (the lost-update anomaly), so the attempt is
@@ -1413,7 +1449,6 @@ def _rmw_publish_snapshot(
     published manifest (None when ``rewrite`` had nothing to do) and the
     number of lost races."""
     fs = _fs.for_path(path)
-    hwm_cache: dict = {}  # per base version, shared across retries
     for retries in range(_PUBLISH_ATTEMPTS):
         src = _latest_manifest(path)
         if src is None:
@@ -1443,9 +1478,7 @@ def _rmw_publish_snapshot(
             payload["stats"] = _collect_file_stats(
                 staged.files, payload["stats_columns"]
             )
-        hwm = _effective_hwm(path, src, hwm_cache)
-        if hwm is not None:
-            payload["src_batch"] = int(hwm)
+        payload.update(_carried_mark(path, src))
         if _link_manifest(path, version, payload):
             return src, payload, retries
     raise RuntimeError(

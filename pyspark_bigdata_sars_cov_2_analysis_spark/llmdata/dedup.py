@@ -26,6 +26,7 @@ reproducible in any engine (this is what the DuckDB oracles rely on).
 
 from __future__ import annotations
 
+import functools
 import time
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -328,129 +329,14 @@ def ingest_high_water_mark(path: str) -> int:
 
 
 def _batch_fingerprint(batch_df: DataFrame, id_col: str, text_col: str) -> str:
-    """Order- and partitioning-independent fingerprint of a batch's
-    CONTENT (``count:sum-of-bounded-(id,text)-hashes``) — cheap enough
-    for one tiny agg per micro-batch, discriminating enough to tell
-    "the same batch replayed" from "a DIFFERENT batch reusing the same
-    ids" (review r9: the ``== hwm`` allowance is only safe for the
-    former). The hash covers id AND text (second review pass): ids
-    alone miss the common restart shape where a new incarnation's
-    sequential id assignment reproduces the exact id range with
-    different documents. The per-row hash is bounded below 2^30 so the
-    sum stays far from bigint overflow (ANSI would throw) at any
-    plausible batch size. Format note: changing this fingerprint's
-    definition makes every ``== hwm`` replay across the code-version
-    boundary look like a different batch — upgrade at a clean boundary
-    (no crashed in-flight batch)."""
-    row = batch_df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.pmod(
-                F.xxhash64(F.col(id_col), F.col(text_col)),
-                F.lit(1_000_000_007),
-            )
-        ).alias("h"),
-    ).collect()[0]
-    return f"{int(row['n'])}:{int(row['h'] or 0)}"
-
-
-def _resolve_append_batch_id(
-    mode: str, batch_id: int | None, what: str
-) -> int:
-    """Resolve the checkpoint writers' ``batch_id=None`` default: -1
-    (seed) on an overwrite, REFUSED on an append (ADVICE r9) — every
-    append says which batch is committing, so the high-water guard can
-    refuse a colliding id; an explicit -1 asserts a clean-boundary seed
-    extension, which commits no batch. An overwrite is a seed and
-    resets the high-water mark to -1, so any other ``batch_id`` there
-    is refused: it would claim a commit the state does not hold.
-
-    Only ``overwrite`` (seed) and ``append`` (ingest) are meaningful
-    checkpoint modes — anything else is refused here for BOTH writers
-    (review r14: ``mode='ignore'`` made the data write a no-op but
-    still re-stamped the recorded parameters with the CALLER's values,
-    relabeling state computed under different parameters)."""
-    if mode not in ("overwrite", "append"):
-        raise ValueError(
-            f"{what} mode must be 'overwrite' (seed) or 'append' "
-            f"(ingest), got {mode!r}"
-        )
-    if batch_id is None:
-        if mode == "append":
-            raise ValueError(
-                f"appending to a {what} requires an explicit batch_id: "
-                "pass the writing batch's id (>= 0) so the high-water "
-                "guard can refuse a colliding id, or batch_id=-1 to "
-                "assert a clean-boundary seed extension (no crashed "
-                "in-flight batch)"
-            )
-        return -1
-    if mode == "overwrite" and int(batch_id) != -1:
-        raise ValueError(
-            f"a {what} seed (mode='overwrite') commits no batch, got "
-            f"batch_id={batch_id}: the seed resets the high-water mark to "
-            "-1, so it cannot record a batch. Seed without a batch_id "
-            "and add a batch's rows with mode='append'."
-        )
-    return int(batch_id)
-
-
-def _committed(snap: dict | None, batch_id: int, fingerprint: str,
-               what: str, path: str) -> bool:
-    """True when ``batch_id`` with this content fingerprint is the
-    newest committed batch of the manifest ``snap`` — a replay, nothing
-    to do. Raise when the id collides with the committed high-water
-    mark (ADVICE r9): ``foreachBatch`` ids restart at 0 under a new
-    STREAMING checkpoint (or a second pipeline on the same state path),
-    and a colliding id would clobber the prior incarnation's same-id
-    output partition. ``batch_id == hwm`` is a replay ONLY with the
-    committed content fingerprint (review r9: otherwise it is a
-    restarted incarnation whose first epoch hits the newest committed
-    id). Higher ids never collide within one incarnation."""
-    hwm = -1 if snap is None else int(snap["src_batch"])
-    if batch_id < hwm:
-        raise ValueError(
-            f"batch_id {batch_id} is below the {what}'s committed "
-            f"high-water mark {hwm} at {path}: batch ids restarted (new "
-            "streaming checkpoint over kept dedup state?) or a second "
-            "pipeline shares this state path. A colliding id would "
-            "overwrite the prior incarnation's same-id output partition. "
-            "Continue numbering above the mark (keep the original stream "
-            "checkpoint), or seed a fresh state path for a genuinely new "
-            "corpus run."
-        )
-    if batch_id == hwm and snap["fingerprint"] != fingerprint:
-        raise ValueError(
-            f"batch_id {batch_id} equals the {what}'s committed "
-            f"high-water mark at {path} but carries DIFFERENT content "
-            f"than the committed batch (fingerprint {fingerprint} != "
-            f"{snap['fingerprint']}): this is not a replay — batch ids "
-            "restarted at the newest committed id (new streaming "
-            "checkpoint over kept state, or a second pipeline on this "
-            "path). Proceeding would overwrite the committed batch's "
-            "output partition. Continue numbering above the mark or "
-            "seed a fresh state path."
-        )
-    return batch_id == hwm
-
-
-def _guard_batch_id_monotonic(
-    path: str, snap: dict | None, batch_id: int, what: str,
-    batch_df: DataFrame, id_col: str, text_col: str,
-) -> str | None:
-    """``batch_df``'s content fingerprint (:func:`_batch_fingerprint`,
-    what the batch's manifest will record), or None when the batch is
-    already the newest committed one (:func:`_committed`). Negative ids
-    are refused outright: -1 means "no batch" (a seed)."""
-    if int(batch_id) < 0:
-        raise ValueError(
-            f"batch_id must be >= 0 (got {batch_id}): -1 is reserved for "
-            "the seed corpus, which commits no batch"
-        )
-    fingerprint = _batch_fingerprint(batch_df, id_col, text_col)
-    if _committed(snap, int(batch_id), fingerprint, what, path):
-        return None
-    return fingerprint
+    """A checkpoint batch's content fingerprint: the snapshot layer's
+    (``io.writers._content_fingerprint``) over ``(id, text)``, one
+    aggregate job. It covers the text as well as the ids, so a restarted
+    stream whose sequential ids reproduce a committed id range with
+    other documents gets another fingerprint. Changing its definition
+    makes every equal-id replay across the change look like other
+    content: change it only at a clean batch boundary."""
+    return _writers._content_fingerprint(batch_df.select(id_col, text_col))
 
 
 def _lh_bucket(col: Column, n_buckets: int) -> Column:
@@ -610,8 +496,9 @@ class _CheckpointKind:
         the newest committed one with its ``fingerprint``; -1 carries
         the newest version's forward (a seed resets them). A lost
         publish race re-reads the newest manifest and publishes over it
-        — unless that manifest already commits this batch (a racing
-        replay won, and ours becomes unreferenced files)."""
+        after the batch-commit rule (:func:`io.writers._admit_batch`)
+        admits the batch against it again: a racing replay that won
+        makes ours unreferenced files, a racing collision raises."""
         snap = _writers._latest_manifest(path)
         frame, cols = self._layout(rows, params[self.grid])
         staged = _writers._stage(
@@ -628,8 +515,8 @@ class _CheckpointKind:
                         f"{self.what} at {path} was re-seeded with "
                         f"{snap['params']} while this write ran"
                     )
-                if batch_id >= 0 and _committed(
-                    snap, batch_id, fingerprint, self.what, path
+                if batch_id >= 0 and not _writers._admit_batch(
+                    path, snap, batch_id, lambda: fingerprint, self.what
                 ):
                     return
                 base = snap
@@ -655,25 +542,44 @@ class _CheckpointKind:
         """Seed (``mode='overwrite'``) or extend (``'append'``) the
         checkpoint at ``path`` with ``corpus_df``'s state rows.
 
-        Batch ids: a seed commits no batch (:func:`_resolve_append_batch_id`
-        refuses any id but -1, and requires an explicit id on an
-        append). An append with an id >= 0 passes the high-water guard
-        and commits that batch; replaying the newest committed batch
-        with the same content is a no-op.
+        Batch ids: a seed commits no batch and resets the mark to -1,
+        so it refuses any id but -1; an append needs an explicit id. An
+        append with an id >= 0 commits that batch under the batch-commit
+        rule (:func:`io.writers._admit_batch`), so replaying the newest
+        committed batch with the same content is a no-op; -1 extends the
+        state without committing a batch (a clean-boundary seed
+        extension).
 
-        Parameters (ADVICE r6/r8): an append VALIDATES the recorded
-        ``params`` and carries them forward, never relabelling old rows
-        with the caller's. An append onto an empty path is a fresh
-        write; a seed over a directory without manifests (a pre-manifest
-        checkpoint, say) replaces it, as Spark's overwrite did.
+        Parameters: an append VALIDATES the recorded ``params`` and
+        carries them forward, never relabelling old rows with the
+        caller's. An append onto an empty path is a fresh write; a seed
+        over a directory without manifests (a pre-manifest checkpoint,
+        say) replaces it, as Spark's overwrite did.
 
-        Grid (VERDICT r8 #4): ``n_grid=None`` adopts the recorded grid
+        Grid: ``n_grid=None`` adopts the recorded grid
         on an append (so flat or differently-sized checkpoints keep
         working with defaults) and ``default_grid`` on a fresh write; an
         explicit int asserts the grid. Size it to the state: every cell
         is a partition directory with a fixed per-write commit cost
         (~35 ms/dir measured on local FS), so aim for file-sized cells."""
-        batch_id = _resolve_append_batch_id(mode, batch_id, self.what)
+        if mode not in ("overwrite", "append"):
+            raise ValueError(
+                f"{self.what} mode must be 'overwrite' (seed) or 'append' "
+                f"(ingest), got {mode!r}"
+            )
+        if batch_id is None and mode == "append":
+            raise ValueError(
+                f"appending to a {self.what} requires an explicit batch_id:"
+                " the writing batch's id (>= 0), or -1 for a clean-boundary"
+                " seed extension (no crashed in-flight batch)"
+            )
+        batch_id = -1 if batch_id is None else int(batch_id)
+        if mode == "overwrite" and batch_id != -1:
+            raise ValueError(
+                f"a {self.what} seed (mode='overwrite') commits no batch, "
+                f"got batch_id={batch_id}: seed without one and append a "
+                "batch's rows with mode='append' and its id"
+            )
         snap = None
         if mode == "append":
             snap = _latest_checkpoint(path)
@@ -700,11 +606,12 @@ class _CheckpointKind:
                 params["sig_encoding"] = self.encoding
         fingerprint = None
         if batch_id >= 0:
-            fingerprint = _guard_batch_id_monotonic(
-                path, snap, batch_id, self.what, corpus_df, id_col, text_col
+            fp = functools.cache(
+                lambda: _batch_fingerprint(corpus_df, id_col, text_col)
             )
-            if fingerprint is None:
+            if not _writers._admit_batch(path, snap, batch_id, fp, self.what):
                 return
+            fingerprint = fp()
         rows = self.state_rows(
             self.key_rows(corpus_df, id_col, text_col, want), id_col
         )
@@ -713,23 +620,25 @@ class _CheckpointKind:
     def ingest(
         self, batch_df: DataFrame, batch_id: int, path: str, out_path: str,
         id_col: str, text_col: str, want: dict,
-    ) -> None:
+    ) -> bool:
         """One micro-batch of the streaming dedup ingest, REPLAY-SAFE:
         dedup ``batch_df`` against the checkpoint, publish the output,
-        commit the batch's own state rows.
+        commit the batch's own state rows; True when the batch
+        published, False when it replayed the committed one.
+
+        Batch ids follow the one batch-commit rule of every streamed
+        table (:func:`io.writers._admit_batch`): an id above the
+        checkpoint's mark publishes, an id below it raises, and the
+        mark's own id is a no-op replay only with the committed content
+        fingerprint (:func:`_batch_fingerprint`, an aggregate job the
+        manifest records) and raises otherwise.
 
         Output: lands in an ``ingest_batch=<id>`` partition via DYNAMIC
-        partition overwrite, so a replay of a crashed batch (same
-        batch_id under ``foreachBatch``) rewrites its own partition
-        instead of appending a second copy; earlier partitions are
-        untouched.
-
-        State: the batch's rows go to a fresh directory and one manifest
-        publish commits them with the batch id and content fingerprint,
-        so the probe only ever sees committed state. A crash before the
-        publish leaves nothing a reader sees, and the replay recomputes
-        the identical output. A replay of the newest COMMITTED batch is
-        a no-op; a colliding id is refused (:func:`_committed`). A batch
+        partition overwrite, so the replay of a crashed batch rewrites
+        its own partition instead of appending a second copy. State: the
+        batch's rows go to a fresh directory and one manifest publish
+        commits them, so the probe only ever sees committed state and a
+        crash before the publish leaves nothing a reader sees. A batch
         that adds no state rows still publishes, to record its commit.
         An id re-delivered in a LATER batch meets its earlier state and
         is dropped as the duplicate it is.
@@ -743,11 +652,11 @@ class _CheckpointKind:
         raise never pins the batch frame in a long-lived session."""
         bid = int(batch_id)
         snap = self.latest(path)
-        fingerprint = _guard_batch_id_monotonic(
-            path, snap, bid, self.what, batch_df, id_col, text_col
+        fingerprint = functools.cache(
+            lambda: _batch_fingerprint(batch_df, id_col, text_col)
         )
-        if fingerprint is None:
-            return
+        if not _writers._admit_batch(path, snap, bid, fingerprint, self.what):
+            return False
         keys = self.key_rows(batch_df, id_col, text_col, want).cache()
         held = [keys]
         try:
@@ -769,44 +678,45 @@ class _CheckpointKind:
                 .partitionBy("ingest_batch")
                 .parquet(out_path)
             )
-            self._commit(path, add, "append", snap["params"], bid, fingerprint)
+            self._commit(
+                path, add, "append", snap["params"], bid, fingerprint()
+            )
         finally:
             for frame in held:
                 frame.unpersist()
+        return True
 
     def stream(
         self, spark, source_dir: str, schema: str, path: str, out_path: str,
         stream_checkpoint: str, id_col: str, text_col: str, want: dict,
         max_files_per_trigger: int, compact_every: int,
     ):
-        """An ``availableNow`` + ``foreachBatch`` loop running
-        :meth:`ingest` per micro-batch; returns the ``DataStreamWriter``
-        (callers ``.start()`` it). The stream checkpoint records which
-        source files each batch consumed, so a restart re-processes
-        nothing, and :meth:`ingest` makes a mid-batch crash replay
-        idempotent. The checkpoint must already be seeded (that pins
-        the parameters every batch must use); it is validated before
-        any batch runs.
+        """The streaming ingest: :func:`io.writers._drive_batches` (the
+        one ``foreachBatch`` driver of every streamed table) over the
+        parquet files of ``source_dir``, running :meth:`ingest` per
+        micro-batch under the batch-commit rule it states (an id above
+        the mark publishes, below it raises, the mark's own id replays
+        only with the committed content); returns the
+        ``DataStreamWriter`` (callers ``.start()`` it). The stream
+        checkpoint makes a restart re-process nothing. The checkpoint
+        must already be seeded (that pins the parameters every batch
+        must use); it is validated before any batch runs.
 
-        ``compact_every`` (r10): :meth:`compact` after every Nth batch
-        (ids N-1, 2N-1, …), after the batch's publish, so per-cell file
-        counts stay O(N); 0 disables it."""
+        ``compact_every``: :meth:`compact` on the driver's durable
+        cadence — after a publish that brings the publishes since the
+        newest ``compact`` manifest to N — so per-cell file counts stay
+        O(N); a replayed batch never compacts; 0 disables it."""
         self.read(spark, path, id_col, want)
-
-        def _process(batch_df: DataFrame, batch_id: int) -> None:
-            self.ingest(
-                batch_df, batch_id, path, out_path, id_col, text_col, want
-            )
-            if compact_every and (int(batch_id) + 1) % compact_every == 0:
-                self.compact(spark, path)
-
-        return (
+        return _writers._drive_batches(
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(source_dir)
-            .writeStream.foreachBatch(_process)
-            .option("checkpointLocation", stream_checkpoint)
-            .trigger(availableNow=True)
+            .parquet(source_dir),
+            path, stream_checkpoint,
+            lambda batch_df, batch_id: self.ingest(
+                batch_df, batch_id, path, out_path, id_col, text_col, want
+            ),
+            lambda: self.compact(spark, path),
+            compact_every,
         )
 
     def compact(self, spark, path: str) -> dict:

@@ -352,6 +352,44 @@ def test_streaming_ingest_with_compact_every_matches_plain(
     assert admitted["compacted"] == admitted["plain"] == [102, 103, 203]
 
 
+def test_replayed_cadence_batch_compacts_once(spark, tmp_path):
+    """The streaming ingest compacts on the one durable cadence, after a
+    publish: a cadence batch replayed after its stream commit was lost
+    (the crash between the checkpoint's publish and the stream's commit)
+    is a no-op and publishes no second ``compact`` manifest. A cadence
+    on the batch id re-ran the full rewrite for every such replay."""
+    corpus = spark.createDataFrame(
+        [(d, _rngtext(d)) for d in range(5)], "doc_id long, text string"
+    )
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(100 + d, _freshtext(d)) for d in range(3)],
+        "doc_id long, text string",
+    ).coalesce(1).write.parquet(src)
+    band_path, out = str(tmp_path / "bands"), str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    dedup.write_band_checkpoint(corpus, band_path, "doc_id", "text")
+
+    def drain():
+        q = dedup.streaming_neardup_ingest(
+            spark, src, "doc_id long, text string", band_path, out, ckpt,
+            compact_every=1,
+        ).start()
+        assert q.awaitTermination(120), "stream drain timed out"
+
+    drain()
+    after = writers.list_parquet_snapshots(band_path)
+    assert [s["mode"] for s in after] == ["compact"]
+    assert after[0]["src_batch"] == 0
+    for name in ("0", ".0.crc"):  # the lost commit and its checksum
+        os.remove(os.path.join(ckpt, "commits", name))
+    drain()  # the restart replays batch 0
+    assert writers.list_parquet_snapshots(band_path) == after
+    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [
+        100, 101, 102,
+    ]
+
+
 def test_marker_race_first_publisher_wins_whole(spark, tmp_path,
                                                monkeypatch):
     """Two writers racing the same uncommitted batch id can never both

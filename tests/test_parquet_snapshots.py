@@ -198,15 +198,114 @@ def test_streaming_snapshot_sink_exactly_once_publish(spark, tmp_path):
     drain()
     assert [s["version"] for s in W.list_parquet_snapshots(tbl)] == [1, 2]
 
-    # a replayed batch (same id) is a publish no-op even without the
-    # stream checkpoint's help
-    assert W.snapshot_publish_batch(_df(spark, 0, 5), 0, tbl) is False
+    # a replayed batch (the newest id, its own rows) is a publish no-op
+    # even without the stream checkpoint's help; an id below the mark
+    # is a restarted stream, refused
+    assert W.snapshot_publish_batch(_df(spark, 5, 8), 1, tbl) is False
+    with pytest.raises(ValueError, match="below"):
+        W.snapshot_publish_batch(_df(spark, 0, 5), 0, tbl)
     assert [s["version"] for s in W.list_parquet_snapshots(tbl)] == [1, 2]
     # a genuinely new batch id still publishes
     assert W.snapshot_publish_batch(_df(spark, 8, 9), 7, tbl) is True
     assert sorted(
         r.id for r in W.read_parquet_snapshot(spark, tbl).collect()
     ) == list(range(9))
+
+
+def test_restarted_sink_stream_is_refused(spark, tmp_path):
+    """A sink table holds batches 0 and 1; a second incarnation of the
+    stream (a new stream checkpoint, ids from 0 again) sends 0 and 1
+    with other rows. Batch 0 is below the mark and batch 1 reuses the
+    mark with other content: each call raises naming the path and the
+    mark, and the versions and rows stay as the first incarnation left
+    them (they used to be silent no-ops that dropped the batches)."""
+    tbl = str(tmp_path / "tbl")
+    assert W.snapshot_publish_batch(_df(spark, 0, 2), 0, tbl) is True
+    assert W.snapshot_publish_batch(_df(spark, 2, 4), 1, tbl) is True
+    before = W.list_parquet_snapshots(tbl)
+    for bid, lo in ((0, 100), (1, 102)):
+        with pytest.raises(ValueError, match=f"mark 1 at {tbl}"):
+            W.snapshot_publish_batch(_df(spark, lo, lo + 2), bid, tbl)
+    assert W.list_parquet_snapshots(tbl) == before
+    assert sorted(
+        r.id for r in W.read_parquet_snapshot(spark, tbl).collect()
+    ) == [0, 1, 2, 3]
+
+
+def test_sink_lost_race_is_admitted_again(spark, tmp_path, monkeypatch):
+    """A sink publish that loses its manifest race is judged again, by
+    the same batch-commit rule, against the manifest that won: a racing
+    publish of the same batch makes ours a no-op, the same id with other
+    rows raises, and so does an id below the racer's. Simulate the worst
+    interleaving: the racer publishes between our write and our link.
+    The racer's commit stands whole in each case."""
+    cases = (
+        (1, 2, None),  # the racer published our batch 1 with our rows
+        (1, 50, "DIFFERENT content"),  # ... with other rows
+        (5, 2, "below"),  # the racer's batch 5 lands first
+    )
+    for i, (racer_bid, ours_lo, refused) in enumerate(cases):
+        tbl = str(tmp_path / f"tbl_{i}")
+        assert W.snapshot_publish_batch(_df(spark, 0, 2), 0, tbl) is True
+        real_link = os.link
+        state = {"raced": False}
+
+        def racing_link(src, dst, tbl=tbl, racer_bid=racer_bid, state=state):
+            if not state["raced"]:
+                state["raced"] = True
+                assert W.snapshot_publish_batch(
+                    _df(spark, 2, 4), racer_bid, tbl
+                ) is True
+            return real_link(src, dst)
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "link", racing_link)
+            ours = _df(spark, ours_lo, ours_lo + 2)
+            if refused:
+                with pytest.raises(ValueError, match=refused):
+                    W.snapshot_publish_batch(ours, 1, tbl)
+            else:
+                assert W.snapshot_publish_batch(ours, 1, tbl) is False
+        assert state["raced"]
+        snaps = W.list_parquet_snapshots(tbl)
+        assert [s["src_batch"] for s in snaps] == [0, racer_bid]
+        assert sorted(
+            r.id for r in W.read_parquet_snapshot(spark, tbl).collect()
+        ) == [0, 1, 2, 3]
+
+
+def test_pre_fingerprint_manifests_replay_by_id(spark, tmp_path):
+    """Manifests written before the batch-commit rule carry a mark with
+    neither a fingerprint nor the batch's files, so there is no content
+    to compare: on such a table the newest id is taken as the replay (a
+    no-op, whatever its rows) and an id below it is refused. The next id
+    publishes a mark that names its files, and its own id is compared by
+    content again."""
+    tbl = str(tmp_path / "tbl")
+    W.snapshot_publish_batch(_df(spark, 0, 2), 0, tbl)
+    W.snapshot_publish_batch(_df(spark, 2, 4), 1, tbl)
+    for s in W.list_parquet_snapshots(tbl):
+        mpath = os.path.join(tbl, W._SNAP_DIR, f"v{s['version']:08d}.json")
+        s.pop("fingerprint")
+        s.pop("batch_files")
+        with open(mpath, "w") as fh:
+            json.dump(s, fh)
+    assert W.snapshot_publish_batch(_df(spark, 2, 4), 1, tbl) is False
+    assert W.snapshot_publish_batch(_df(spark, 50, 52), 1, tbl) is False
+    with pytest.raises(ValueError, match="below"):
+        W.snapshot_publish_batch(_df(spark, 0, 2), 0, tbl)
+    assert [s["version"] for s in W.list_parquet_snapshots(tbl)] == [1, 2]
+    assert W.snapshot_publish_batch(_df(spark, 4, 6), 2, tbl) is True
+    newest = W._latest_manifest(tbl)
+    assert set(newest["batch_files"]) == set(newest["files"]) - set(
+        W.list_parquet_snapshots(tbl)[-2]["files"]
+    )
+    assert W.snapshot_publish_batch(_df(spark, 4, 6), 2, tbl) is False
+    with pytest.raises(ValueError, match="DIFFERENT content"):
+        W.snapshot_publish_batch(_df(spark, 60, 62), 2, tbl)
+    assert sorted(
+        r.id for r in W.read_parquet_snapshot(spark, tbl).collect()
+    ) == list(range(6))
 
 
 def test_snapshot_stale_manifest_tmp_is_invisible(spark, tmp_path):
@@ -307,7 +406,7 @@ def test_publish_batch_hwm_skips_full_history_scan(spark, tmp_path):
     # an untagged maintenance APPEND lands on top (post-ADVICE-r11 it
     # inherits the stamp, so the latest manifest answers directly)
     W.write_parquet_snapshot(_df(spark, 5, 7), path, mode="append")
-    assert W._latest_src_batch(path) == 1
+    assert W._batch_mark(path, W._latest_manifest(path))["src_batch"] == 1
     # a LEGACY pre-carry-forward manifest has no stamp at all: simulate
     # one by stripping the newest manifest's stamp in place — the scan
     # must walk past the untagged append suffix to the stamped base
@@ -318,11 +417,12 @@ def test_publish_batch_hwm_skips_full_history_scan(spark, tmp_path):
     legacy.pop("src_batch")
     with open(mpath, "w") as fh:
         json.dump(legacy, fh)
-    assert W._latest_src_batch(path) == 1
-    # replays of already-published ids are no-ops even behind the
-    # untagged suffix
+    assert W._batch_mark(path, W._latest_manifest(path))["src_batch"] == 1
+    # the newest id's replay is a no-op even behind the untagged
+    # suffix, and an id below it is refused
     assert W.snapshot_publish_batch(_df(spark, 3, 5), 1, path) is False
-    assert W.snapshot_publish_batch(_df(spark, 0, 3), 0, path) is False
+    with pytest.raises(ValueError, match="below"):
+        W.snapshot_publish_batch(_df(spark, 0, 3), 0, path)
     assert W.snapshot_publish_batch(_df(spark, 7, 9), 2, path) is True
     assert sorted(
         r.id for r in W.read_parquet_snapshot(spark, path).collect()
@@ -569,7 +669,7 @@ def test_unstamped_append_carries_high_water_forward(spark, tmp_path):
     # silently swallow the fresh stream's first batches.
     W.write_parquet_snapshot(_df(spark, 100, 102), tbl, mode="overwrite")
     assert W.list_parquet_snapshots(tbl)[-1].get("src_batch") is None
-    assert W._latest_src_batch(tbl) is None
+    assert W._batch_mark(tbl, W._latest_manifest(tbl)) is None
     assert W.snapshot_publish_batch(_df(spark, 102, 104), 0, tbl) is True
     assert sorted(
         r.id for r in W.read_parquet_snapshot(spark, tbl).collect()
@@ -1030,7 +1130,7 @@ def test_stray_files_in_snapshots_dir_ignored(spark, tmp_path):
     assert [s["version"] for s in W.list_parquet_snapshots(tbl)] == [1, 2]
     assert W.read_parquet_snapshot(spark, tbl).count() == 8
     assert W.compact_parquet_snapshot(spark, tbl)["compacted"] is True
-    assert W._latest_src_batch(tbl) is None
+    assert W._batch_mark(tbl, W._latest_manifest(tbl)) is None
 
 
 def test_evolution_refuses_case_collisions_and_reorders(spark, tmp_path):
@@ -1143,7 +1243,7 @@ def test_snapshot_dml_preserves_stream_high_water(spark, tmp_path):
     assert W.list_parquet_snapshots(tbl)[-1]["src_batch"] == 7
     W.delete_from_snapshot(spark, tbl, "id = 4")
     W.vacuum_parquet_snapshots(tbl, keep=1, orphan_grace_sec=0)
-    assert W._latest_src_batch(tbl) == 7
+    assert W._batch_mark(tbl, W._latest_manifest(tbl))["src_batch"] == 7
     assert W.snapshot_publish_batch(_df(spark, 0, 5), 7, tbl) is False
     assert W.snapshot_publish_batch(_df(spark, 5, 6), 8, tbl) is True
     assert res["version"] == 2

@@ -4,7 +4,8 @@ The MVCC layer's unit tests pin individual scenarios; this drives RANDOM
 operation sequences — overwrite, same-schema append, schema-evolution
 append (both widening and narrowing directions), refused drift, refused
 type conflict, compaction, vacuum, vacuum-under-writer-contention,
-predicate delete (the r13 DML op) — against a
+predicate delete (the r13 DML op), a stream batch's publish, its
+replay and a colliding batch — against a
 driver-side in-memory model of what every surviving version must
 contain, column by column, null padding included. Overwrites declare
 data-skipping stats (r13), so every surviving version is also read
@@ -45,6 +46,7 @@ _OPS = st.lists(
         ),
         st.tuples(st.just("publish_new"), st.none()),
         st.tuples(st.just("publish_replay"), st.none()),
+        st.tuples(st.just("publish_collision"), st.none()),
         st.tuples(st.just("delete_even"), st.none()),
     ),
     min_size=1,
@@ -126,6 +128,13 @@ def _check_version(spark, tbl, model_version, version, pruned=False):
     ("overwrite", "narrow"), ("append_same", None),
     ("delete_even", None), ("overwrite", "wide"),
 ])
+# the batch-commit rule: the committed batch's own rows replay as a
+# no-op, before and after a compaction carries the mark forward, and
+# the mark's id with other rows, or an id below it, is refused
+@example([
+    ("publish_new", None), ("publish_new", None), ("publish_replay", None),
+    ("publish_collision", None), ("compact", 1), ("publish_replay", None),
+])
 @settings(max_examples=10, deadline=None)
 def test_snapshot_table_matches_model(spark, tmp_path_factory, ops):
     tbl = str(tmp_path_factory.mktemp("snap_model") / "tbl")
@@ -134,23 +143,33 @@ def test_snapshot_table_matches_model(spark, tmp_path_factory, ops):
     #            column the row predates stays null forever, through
     #            merge-reads AND compaction rewrites)},
     #   "src": stream-batch stamp (int) or None,
+    #   "batch": (ids, cols) of the batch src names, or None,
     #   "mode": overwrite|append|compact} — src mirrors the manifest
     # rules: stamped on publish_batch, inherited through unstamped
     # appends, carried (as the effective high-water) into compact
-    # manifests. The effective high-water scans newest-first and an
+    # manifests; batch travels with it, as the manifest's batch_files
+    # do. The effective high-water scans newest-first and an
     # UNSTAMPED OVERWRITE is a lineage BARRIER (VERDICT r12 advisory,
     # decided here): an overwrite is a table reset after which a fresh
     # stream may reuse batch ids — older stamps must not swallow them.
     versions: dict[int, dict] = {}
     next_id = 0
 
-    def effective_hwm():
+    def effective_mark():
         for v in sorted(versions, reverse=True):
             if versions[v]["src"] is not None:
-                return versions[v]["src"]
+                return versions[v]
             if versions[v]["mode"] == "overwrite":
                 return None  # lineage barrier
         return None
+
+    def effective_hwm():
+        mark = effective_mark()
+        return None if mark is None else mark["src"]
+
+    def effective_batch():
+        mark = effective_mark()
+        return None if mark is None else mark["batch"]
 
     def fresh_ids():
         nonlocal next_id
@@ -177,6 +196,7 @@ def test_snapshot_table_matches_model(spark, tmp_path_factory, ops):
                 "schema": list(cols),
                 "rows": {i: set(cols) for i in ids},
                 "src": None,
+                "batch": None,
                 "mode": "overwrite",
             }
         elif op == "append_type_conflict":
@@ -229,6 +249,7 @@ def test_snapshot_table_matches_model(spark, tmp_path_factory, ops):
                     **{i: set(cols) for i in ids},
                 },
                 "src": cur["src"],  # unstamped appends inherit
+                "batch": cur["batch"],
                 "mode": "append",
             }
         elif op == "compact":
@@ -253,26 +274,43 @@ def test_snapshot_table_matches_model(spark, tmp_path_factory, ops):
                         i: set(cols) for i, cols in cur["rows"].items()
                     },
                     "src": effective_hwm(),
+                    "batch": effective_batch(),
                     "mode": "compact",
                 }
-        elif op in ("publish_new", "publish_replay"):
+        elif op in ("publish_new", "publish_replay", "publish_collision"):
             hwm = effective_hwm()
             if op == "publish_replay":
                 if hwm is None:
                     continue  # nothing published yet; skip op
+                # the committed batch's own rows, re-sent under its id
                 assert (
                     W.snapshot_publish_batch(
-                        _write_df(
-                            spark,
-                            fresh_ids(),
-                            cur["schema"] if cur else NARROW,
-                        ),
-                        hwm,
-                        tbl,
+                        _write_df(spark, *effective_batch()), hwm, tbl
                     )
                     is False
-                ), "replayed batch id must be a publish no-op"
+                ), "replayed batch must be a publish no-op"
                 continue  # table and model unchanged
+            if op == "publish_collision":
+                if hwm is None:
+                    continue
+                # the mark's id with other rows, and an id below the
+                # mark: both are a restarted stream, refused with the
+                # table and the model unchanged
+                before = W.list_parquet_snapshots(tbl)
+                sends = [(hwm, fresh_ids())]
+                if hwm > 0:
+                    sends.append((hwm - 1, effective_batch()[0]))
+                for bid, ids in sends:
+                    try:
+                        W.snapshot_publish_batch(
+                            _write_df(spark, ids, effective_batch()[1]),
+                            bid, tbl,
+                        )
+                        raise AssertionError("batch collision must refuse")
+                    except ValueError:
+                        pass
+                assert W.list_parquet_snapshots(tbl) == before
+                continue
             cols = cur["schema"] if cur else NARROW
             ids = fresh_ids()
             bid = (hwm if hwm is not None else -1) + 1
@@ -288,6 +326,7 @@ def test_snapshot_table_matches_model(spark, tmp_path_factory, ops):
                     **{i: set(cols) for i in ids},
                 },
                 "src": bid,
+                "batch": (ids, list(cols)),
                 "mode": "append",
             }
         elif op == "delete_even":
@@ -304,6 +343,7 @@ def test_snapshot_table_matches_model(spark, tmp_path_factory, ops):
                     i: set(c) for i, c in cur["rows"].items() if i % 2
                 },
                 "src": effective_hwm(),
+                "batch": effective_batch(),
                 "mode": "delete",
             }
         elif op == "vacuum":
@@ -346,7 +386,9 @@ def test_snapshot_table_matches_model(spark, tmp_path_factory, ops):
         if versions:
             newest = max(versions)
             _check_version(spark, tbl, versions[newest], newest)
-            assert W._latest_src_batch(tbl) == effective_hwm(), (
+            mark = W._batch_mark(tbl, W._latest_manifest(tbl))
+            hwm = None if mark is None else mark["src_batch"]
+            assert hwm == effective_hwm(), (
                 "replay-guard high-water diverged from the model"
             )
 
