@@ -69,10 +69,12 @@ def _sessionized(e):
     )
 
 
-@query(
-    "e02_sessionize",
-    oracle="""
-    WITH marked AS (
+def _sessions_ctes(carry: str = "") -> str:
+    """e02's gap sessionization: ``marked`` flags each event that opens a
+    session (its user's first, or more than 30 min after the previous
+    one) and ``sessions`` numbers them by a running sum. ``carry`` is the
+    select-list prefix of the columns sessions carry (e02: ``event_id, ``)."""
+    return f"""marked AS (
       SELECT user_id, event_id, epoch_us(ts) AS us,
              CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 1800000000
                        OR LAG(epoch_us(ts)) OVER w IS NULL
@@ -81,12 +83,18 @@ def _sessionized(e):
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ),
     sessions AS (
-      SELECT user_id, event_id, us,
+      SELECT user_id, {carry}us,
              CAST(SUM(new_session) OVER (PARTITION BY user_id
                   ORDER BY us, event_id
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
                AS session_id
-      FROM marked)
+      FROM marked)"""
+
+
+@query(
+    "e02_sessionize",
+    oracle=f"""
+    WITH {_sessions_ctes("event_id, ")}
     SELECT user_id, session_id, COUNT(*) AS n_events,
            MIN(us) AS session_start_us,
            MAX(us) - MIN(us) AS duration_us
@@ -117,22 +125,8 @@ def e02_sessionize(spark, sf_dir):
     # session while e02's `diff > gap` keeps it — microsecond-resolution
     # event times make an exact-boundary pair measure-zero, and the
     # hash compare would catch one loudly.)
-    oracle="""
-    WITH marked AS (
-      SELECT user_id, event_id, epoch_us(ts) AS us,
-             CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 1800000000
-                       OR LAG(epoch_us(ts)) OVER w IS NULL
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sessions AS (
-      SELECT user_id, us,
-             CAST(SUM(new_session) OVER (PARTITION BY user_id
-                  ORDER BY us, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-               AS session_id
-      FROM marked)
+    oracle=f"""
+    WITH {_sessions_ctes()}
     SELECT user_id, MIN(us) AS session_start_us,
            CAST(COUNT(*) AS BIGINT) AS n_events
     FROM sessions GROUP BY user_id, session_id
@@ -244,15 +238,19 @@ def e06_view_purchase_attribution(spark, sf_dir):
     return view_purchase_attribution(e)
 
 
-@query(
-    "e10_view_purchase_outer",
-    oracle="""
-    WITH v AS (
+# e10's interval-join sides: the views and the purchases
+_VIEW_PURCHASE_CTES = """v AS (
       SELECT user_id, event_id, ts FROM events WHERE event_type = 'view'
     ),
     p AS (
       SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'
-    )
+    )"""
+
+
+@query(
+    "e10_view_purchase_outer",
+    oracle=f"""
+    WITH {_VIEW_PURCHASE_CTES}
     SELECT v.user_id, v.event_id AS view_id, p.event_id AS purchase_id,
            epoch_us(p.ts) - epoch_us(v.ts) AS lag_us
     FROM v LEFT JOIN p
@@ -275,17 +273,22 @@ def e10_view_purchase_outer(spark, sf_dir):
     return view_purchase_attribution_outer(e).drop("v_ts")
 
 
-@query(
-    "j06_asof_join",
-    oracle="""
-    WITH v AS (
+# j06's as-of sides: one view per (user, instant), the latest event id
+# among ties, and the purchases
+_ASOF_SIDES_CTES = """v AS (
         SELECT user_id, ts, MAX(event_id) AS view_id
         FROM events WHERE event_type = 'view' GROUP BY user_id, ts
     ),
     p AS (
         SELECT user_id, event_id AS purchase_id, ts
         FROM events WHERE event_type = 'purchase'
-    )
+    )"""
+
+
+@query(
+    "j06_asof_join",
+    oracle=f"""
+    WITH {_ASOF_SIDES_CTES}
     SELECT p.user_id, p.purchase_id,
            v.view_id AS last_view_id,
            CAST(epoch_us(p.ts) - epoch_us(v.ts) AS BIGINT) AS gap_us
@@ -328,15 +331,8 @@ def j06_asof_join(spark, sf_dir):
     # (>= backward, <= forward) + a CASE pick; Spark computes both
     # candidates from ONE window sort. Tie (equidistant) → preceding,
     # the merge_asof 'nearest' rule both sides implement.
-    oracle="""
-    WITH v AS (
-        SELECT user_id, ts, MAX(event_id) AS view_id
-        FROM events WHERE event_type = 'view' GROUP BY user_id, ts
-    ),
-    p AS (
-        SELECT user_id, event_id AS purchase_id, ts
-        FROM events WHERE event_type = 'purchase'
-    ),
+    oracle=f"""
+    WITH {_ASOF_SIDES_CTES},
     b AS (
         SELECT p.user_id, p.purchase_id, p.ts,
                v.view_id AS b_id, v.ts AS b_ts
@@ -728,13 +724,8 @@ def e13_session_conversion(spark, sf_dir):
 
 @query(
     "e14_view_purchase_full_outer",
-    oracle="""
-    WITH v AS (
-      SELECT user_id, event_id, ts FROM events WHERE event_type = 'view'
-    ),
-    p AS (
-      SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'
-    )
+    oracle=f"""
+    WITH {_VIEW_PURCHASE_CTES}
     SELECT COALESCE(v.user_id, p.user_id) AS user_id,
            v.event_id AS view_id, p.event_id AS purchase_id,
            epoch_us(p.ts) - epoch_us(v.ts) AS lag_us
@@ -761,7 +752,7 @@ def e14_view_purchase_full_outer(spark, sf_dir):
 
 @query(
     "e16_scd2_stream_enrichment",
-    # j09's oracle verbatim: the streaming drain through the native
+    # j09's SCD2_TEMPORAL_JOIN_SQL: the streaming drain through the native
     # parquet file sink must reproduce the batch temporal join exactly
     oracle=SCD2_TEMPORAL_JOIN_SQL,
 )

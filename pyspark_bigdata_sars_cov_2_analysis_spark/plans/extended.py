@@ -13,6 +13,7 @@ from pyspark.sql.window import Window
 
 from pyspark_bigdata_sars_cov_2_analysis_spark.operators import sorts, windows
 from pyspark_bigdata_sars_cov_2_analysis_spark.plans.fragments import (
+    ORDERED_PARTS_SQL,
     SCD2_CHANGES_CTES,
 )
 from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import (
@@ -85,14 +86,19 @@ def a12_grouping_sets(spark, sf_dir):
     )
 
 
-@query(
-    "a13_pivot",
-    oracle=f"""
+# a13's pivot and sql07's: the DataFrame ``pivot()`` and the SQL
+# ``PIVOT`` clause answer the same question
+_PIVOT_SQL = f"""
     SELECT l_returnflag,
            {sql_round("SUM(CASE WHEN l_linestatus = 'F' THEN l_quantity END)", 2)} AS F,
            {sql_round("SUM(CASE WHEN l_linestatus = 'O' THEN l_quantity END)", 2)} AS O
     FROM lineitem GROUP BY l_returnflag
-    """,
+    """
+
+
+@query(
+    "a13_pivot",
+    oracle=_PIVOT_SQL,
 )
 def a13_pivot(spark, sf_dir):
     """Pivot: linestatus columns × returnflag rows (the DataFrame-native
@@ -828,9 +834,9 @@ def a18_theta_sketch_setops(spark, sf_dir):
     )
 
 
-@query(
-    "a21_unpivot_melt",
-    oracle=f"""
+# a21's melt of four lineitem measures, and sql12's: the DataFrame
+# ``unpivot`` and the SQL ``UNPIVOT`` clause answer the same question
+_UNPIVOT_SQL = f"""
     SELECT l_orderkey, l_linenumber, metric,
            {sql_round("val", 2)} AS val
     FROM (
@@ -840,7 +846,12 @@ def a18_theta_sketch_setops(spark, sf_dir):
       ON l_quantity, l_extendedprice, l_discount, l_tax
       INTO NAME metric VALUE val
     )
-    """,
+    """
+
+
+@query(
+    "a21_unpivot_melt",
+    oracle=_UNPIVOT_SQL,
 )
 def a21_unpivot_melt(spark, sf_dir):
     """A10-family completion: UNPIVOT/melt — wide→long reshape, the
@@ -1057,12 +1068,7 @@ def sql06_relational_division(spark, sf_dir):
 
 @query(
     "sql07_pivot_clause",
-    oracle=f"""
-    SELECT l_returnflag,
-           {sql_round("SUM(CASE WHEN l_linestatus = 'F' THEN l_quantity END)", 2)} AS F,
-           {sql_round("SUM(CASE WHEN l_linestatus = 'O' THEN l_quantity END)", 2)} AS O
-    FROM lineitem GROUP BY l_returnflag
-    """,
+    oracle=_PIVOT_SQL,
 )
 def sql07_pivot_clause(spark, sf_dir):
     """SQL-surface twin of a13: the PIVOT clause through the spark.sql
@@ -1429,12 +1435,7 @@ def j12_runtime_filter(spark, sf_dir):
     # (orderkey, linenumber) pairs, so the value tiebreak appears on both
     # engines) — shared semantics, DIFFERENT Spark entry point: the
     # native listagg aggregate with WITHIN GROUP ordering
-    oracle="""
-    SELECT l_orderkey,
-           string_agg(CAST(l_partkey AS VARCHAR),
-                      ',' ORDER BY l_linenumber, l_partkey) AS parts
-    FROM lineitem GROUP BY l_orderkey
-    """,
+    oracle=ORDERED_PARTS_SQL,
 )
 def a28_listagg_within_group(spark, sf_dir):
     """A8's native-function twin — Spark 4.1's ``listagg(expr, delim)
@@ -1790,17 +1791,7 @@ def a29_weighted_quantiles(spark, sf_dir):
     "sql12_unpivot_clause",
     # a21's oracle shape via DuckDB's own UNPIVOT form — parser-path
     # attestation of the SQL clause over the same melt semantics
-    oracle=f"""
-    SELECT l_orderkey, l_linenumber, metric,
-           {sql_round("val", 2)} AS val
-    FROM (
-      UNPIVOT (SELECT l_orderkey, l_linenumber, l_quantity,
-                      l_extendedprice, l_discount, l_tax
-               FROM lineitem WHERE l_orderkey % 100 = 0)
-      ON l_quantity, l_extendedprice, l_discount, l_tax
-      INTO NAME metric VALUE val
-    )
-    """,
+    oracle=_UNPIVOT_SQL,
 )
 def sql12_unpivot_clause(spark, sf_dir):
     """SQL-surface completion (r10) — the ``UNPIVOT`` SQL clause

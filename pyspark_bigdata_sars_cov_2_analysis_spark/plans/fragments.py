@@ -1,16 +1,19 @@
-"""Shared DuckDB-oracle SQL fragments (review r14).
+"""DuckDB-oracle SQL fragments that more than one plan module uses.
 
-The oracle registry had three byte-identical copies of the SCD2
-dimension CTE chain (w08 / j09 / e16 — the Spark side already shares
-``w08_scd2_intervals``), two copies of the text-normalization
-expression, and two copies of the language-argmax CASE. Hand-kept
-copies are exactly the drift hazard the ``_bands_sql`` comment
-documents ("two drifting copies ... would let one query's sessions
-silently disagree"): an edit applied to one copy desynchronizes
-attested twins across files. Every multi-consumer oracle fragment
-lives here ONCE; this module imports nothing from the rest of
-``plans``, so any plan module can import it at top level without a
-cycle.
+Each piece of oracle SQL is written once: a CTE chain or expression that
+two oracles share is one module-level definition, and each consumer's
+``oracle=`` string is built from it. A fragment used by one plan module
+lives next to its family in that module (``llmdata._SIMHASH_CTE``,
+``llmdata._bands_sql``); a fragment used by several modules lives here.
+A builder takes a parameter only where its copies differ by a carried
+column (``llmdata._bands_sql(batch="b")``); copies that would need a
+branch on the calling query stay separate. No fragment is shared with a
+Spark-side plan, so the oracle stays independent of the code it checks.
+``tests/test_reachability.py`` fails when 8 consecutive lines appear in
+two string literals of ``plans/*.py``.
+
+This module imports nothing from the rest of ``plans``, so any plan
+module can import it at top level without a cycle.
 """
 
 from __future__ import annotations
@@ -39,9 +42,8 @@ SCD2_CHANGES_CTES = """
       SELECT user_id, d, attr FROM marked
       WHERE prev_attr IS NULL OR attr <> prev_attr)"""
 
-# j09's oracle — and e16's VERBATIM (the streaming drain through the
-# native parquet file sink must reproduce the batch temporal join
-# exactly, so the two attestations share one string by construction).
+# j09's oracle and e16's: the streaming drain through the native parquet
+# file sink must reproduce the batch temporal join exactly.
 SCD2_TEMPORAL_JOIN_SQL = f"""
     WITH {SCD2_CHANGES_CTES},
     dim AS (
@@ -58,8 +60,32 @@ SCD2_TEMPORAL_JOIN_SQL = f"""
     GROUP BY 1, 2
     """
 
+# a08's per-order part list in (linenumber, partkey) order — the value
+# tiebreak because lineitem repeats (orderkey, linenumber) pairs; a28's
+# listagg WITHIN GROUP keeps the same contract
+ORDERED_PARTS_SQL = """
+    SELECT l_orderkey,
+           string_agg(CAST(l_partkey AS VARCHAR),
+                      ',' ORDER BY l_linenumber, l_partkey) AS parts
+    FROM lineitem GROUP BY l_orderkey
+    """
+
+# t12's per-document word 3-grams (none under 3 words), next to the raw
+# text the quality scores read: toks → grams
+GRAMS_CTES = f"""toks AS (
+      SELECT doc_id, text, string_split({DUCK_NORM}, ' ') AS w FROM documents
+    ),
+    grams AS (
+      SELECT doc_id, text,
+             CASE WHEN len(w) >= 3
+                  THEN [array_to_string(w[i:i+2], ' ')
+                        for i in generate_series(1, len(w) - 2)]
+                  ELSE [] END AS g
+      FROM toks
+    )"""
+
 # Language-ID argmax with the deterministic lexicographic tiebreak —
-# t03's prediction CASE, reused verbatim by t17's confusion rollup.
+# t03's prediction CASE and t17's confusion rollup.
 LANG_ARGMAX_CASE = """
            CASE
              WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'

@@ -29,6 +29,7 @@ from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import (
 )
 from pyspark_bigdata_sars_cov_2_analysis_spark.plans.fragments import (
     DUCK_NORM,
+    GRAMS_CTES,
 )
 from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import (
     drain,
@@ -42,8 +43,7 @@ from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import (
 )
 from pyspark_bigdata_sars_cov_2_analysis_spark.plans.text import _QUALITY_EXPR
 
-# the shared fragment (review r14: text.py defined the same string as
-# _DUCK_NORM)
+# the text normalization every text/dedup oracle shares
 _NORM = DUCK_NORM
 
 # word 3-shingles, distinct, per doc — shared CTE text for dedup oracles
@@ -59,6 +59,16 @@ _SHINGLES_CTE = f"""
     FROM toks WHERE len(w) >= 3
   )
 """
+
+
+# d03's inverted-index join over an sh(doc_id, shingle) CTE: each doc's
+# shingle count and each sharing pair's overlap — never all-pairs
+_OVERLAP_CTES = """sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
+    inter AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
+      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    )"""
 
 
 @query(
@@ -86,43 +96,99 @@ _MH_SQL = {
     )
     for j in range(12)
 }
-def _bands_sql(extra: str = "") -> str:
-    """The 4-band UNION ALL over the mh CTE, optionally carrying extra
-    projected columns (d20 threads the arrival batch ``b`` through) —
-    ONE source of truth for the band layout every minhash oracle
-    shares, so a num_hashes/band_rows change can't desynchronize
-    d02/d07/d11's oracles from d20's."""
+def _bands_sql(batch: str = "") -> str:
+    """The 4-band UNION ALL over the ``mh`` CTE, carrying the arrival
+    batch column ``batch`` when one is given. Defined once here, beside
+    the MinHash family that is its only user, so a num_hashes/band_rows
+    change reaches every MinHash oracle (d02/d07/d11/d13/d24/d25 and the
+    batch-carrying d20/d22) at once; an oracle fragment that plan modules
+    other than this one use goes in :mod:`.fragments`."""
+    carry = f"{batch}, " if batch else ""
     return "\n      UNION ALL\n".join(
-        f"      SELECT doc_id, {extra}{b} AS band, concat_ws(',', "
+        f"      SELECT doc_id, {carry}{b} AS band, concat_ws(',', "
         + ", ".join(f"mh_{j}" for j in range(3 * b, 3 * b + 3))
         + ") AS band_sig FROM mh"
         for b in range(4)
     )
 
 
-_BANDS_SQL = _bands_sql()
-
-
-@query(
-    "d02_minhash_lsh",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents
-    ),
-    shl AS (
-      SELECT doc_id,
+def _minhash_ctes(batch: str = "") -> str:
+    """``shl → mh → bands`` over a ``toks(doc_id, w)`` CTE: the 3-word
+    shingle lists, the 12 min-hashes and the 4 bands, carrying the
+    arrival batch column ``batch`` through each step when one is given
+    (d20/d22)."""
+    carry = f", {batch}" if batch else ""
+    mh = ", ".join(f"{sql} AS mh_{j}" for j, sql in _MH_SQL.items())
+    return f"""shl AS (
+      SELECT doc_id{carry},
              [array_to_string(w[i:i+2], ' ')
               for i in generate_series(1, len(w) - 2)] AS s
       FROM toks WHERE len(w) >= 3
     ),
     mh AS (
-      SELECT doc_id,
-             {", ".join(f"{sql} AS mh_{j}" for j, sql in _MH_SQL.items())}
+      SELECT doc_id{carry},
+             {mh}
       FROM shl
     ),
     bands AS (
-{_BANDS_SQL}
+{_bands_sql(batch)}
+    )"""
+
+
+# the normalized word list the MinHash and 5-shingle oracles start from
+_TOKS_CTE = f"""toks AS (
+      SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents
+    )"""
+
+# d02's candidate generation: toks → shl → mh → bands
+_MINHASH_CTES = f"""{_TOKS_CTE},
+    {_minhash_ctes()}"""
+
+# d07's connected components over d02's candidate pairs: prs → edges →
+# reach, the transitive closure (the consumer says WITH RECURSIVE)
+_CLOSURE_CTES = f"""{_MINHASH_CTES},
+    prs AS (
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM bands a JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
+      WHERE a.doc_id < b.doc_id
+    ),
+    edges AS (
+      SELECT id_a AS src, id_b AS dst FROM prs
+      UNION SELECT id_b, id_a FROM prs
+    ),
+    reach AS (
+      SELECT src, dst FROM edges
+      UNION
+      SELECT r.src, e.dst FROM reach r JOIN edges e
+        ON r.dst = e.src AND e.dst <> r.src
+    )"""
+
+# d09's distinct word 5-shingles per doc (w[i:i+4] is inclusive slicing)
+_SH5_CTES = f"""{_TOKS_CTE},
+    sh5 AS (
+      SELECT doc_id,
+             unnest(list_distinct(
+               [array_to_string(w[i:i+4], ' ')
+                for i in generate_series(1, len(w) - 4)])) AS shingle
+      FROM toks WHERE len(w) >= 5
+    )"""
+
+# d10's keep-best argmax over a scored(fp, doc_id, q) CTE, and the head
+# of its keeper projection
+_KEEP_BEST_SQL = """r AS (
+      SELECT fp, doc_id, q,
+             row_number() OVER (PARTITION BY fp ORDER BY q DESC, doc_id) AS rn,
+             COUNT(*) OVER (PARTITION BY fp) AS n_copies
+      FROM scored
     )
+    SELECT fp, doc_id AS keeper, q AS best_quality,
+           CAST(n_copies AS BIGINT) AS n_copies"""
+
+
+@query(
+    "d02_minhash_lsh",
+    oracle=f"""
+    WITH {_MINHASH_CTES}
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
     FROM bands a JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
     WHERE a.doc_id < b.doc_id
@@ -143,38 +209,7 @@ def d02_minhash_lsh(spark, sf_dir):
     # closure (bounded: near-dup components are small cliques); cluster
     # label = min doc_id reachable
     oracle=f"""
-    WITH RECURSIVE toks AS (
-      SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents
-    ),
-    shl AS (
-      SELECT doc_id,
-             [array_to_string(w[i:i+2], ' ')
-              for i in generate_series(1, len(w) - 2)] AS s
-      FROM toks WHERE len(w) >= 3
-    ),
-    mh AS (
-      SELECT doc_id,
-             {", ".join(f"{sql} AS mh_{j}" for j, sql in _MH_SQL.items())}
-      FROM shl
-    ),
-    bands AS (
-{_BANDS_SQL}
-    ),
-    prs AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
-      WHERE a.doc_id < b.doc_id
-    ),
-    edges AS (
-      SELECT id_a AS src, id_b AS dst FROM prs
-      UNION SELECT id_b, id_a FROM prs
-    ),
-    reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e
-        ON r.dst = e.src AND e.dst <> r.src
-    )
+    WITH RECURSIVE {_CLOSURE_CTES}
     SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
     FROM reach GROUP BY src
     """,
@@ -192,42 +227,11 @@ def d07_dup_clusters(spark, sf_dir):
 
 @query(
     "d25_cluster_size_audit",
-    # d07's recursive-closure oracle verbatim, aggregated twice: per
-    # cluster -> size, per size -> histogram. removable = (size-1) per
-    # cluster: the docs a keep-one-per-cluster pass would drop.
+    # d07's _CLOSURE_CTES, aggregated twice: per cluster -> size, per
+    # size -> histogram. removable = (size-1) per cluster: the docs a
+    # keep-one-per-cluster pass would drop.
     oracle=f"""
-    WITH RECURSIVE toks AS (
-      SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents
-    ),
-    shl AS (
-      SELECT doc_id,
-             [array_to_string(w[i:i+2], ' ')
-              for i in generate_series(1, len(w) - 2)] AS s
-      FROM toks WHERE len(w) >= 3
-    ),
-    mh AS (
-      SELECT doc_id,
-             {", ".join(f"{sql} AS mh_{j}" for j, sql in _MH_SQL.items())}
-      FROM shl
-    ),
-    bands AS (
-{_BANDS_SQL}
-    ),
-    prs AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
-      WHERE a.doc_id < b.doc_id
-    ),
-    edges AS (
-      SELECT id_a AS src, id_b AS dst FROM prs
-      UNION SELECT id_b, id_a FROM prs
-    ),
-    reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e
-        ON r.dst = e.src AND e.dst <> r.src
-    ),
+    WITH RECURSIVE {_CLOSURE_CTES},
     lab AS (
       SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
       FROM reach GROUP BY src
@@ -277,23 +281,7 @@ def d25_cluster_size_audit(spark, sf_dir):
     # the incoming "batch" is the deterministic doc_id % 5 = 0 slice; the
     # oracle bands ALL docs once and keeps only cross-side bucket pairs
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents
-    ),
-    shl AS (
-      SELECT doc_id,
-             [array_to_string(w[i:i+2], ' ')
-              for i in generate_series(1, len(w) - 2)] AS s
-      FROM toks WHERE len(w) >= 3
-    ),
-    mh AS (
-      SELECT doc_id,
-             {", ".join(f"{sql} AS mh_{j}" for j, sql in _MH_SQL.items())}
-      FROM shl
-    ),
-    bands AS (
-{_BANDS_SQL}
-    )
+    WITH {_MINHASH_CTES}
     SELECT DISTINCT n.doc_id AS new_id, c.doc_id AS corpus_id
     FROM bands n JOIN bands c
       ON n.band = c.band AND n.band_sig = c.band_sig
@@ -338,16 +326,7 @@ def d11_incremental_dedup(spark, sf_dir):
     # word 5-shingles (w[i:i+4] is inclusive slicing = 5 tokens); the eval
     # "benchmark" is the deterministic doc_id % 13 = 7 slice of the corpus
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents
-    ),
-    sh5 AS (
-      SELECT doc_id,
-             unnest(list_distinct(
-               [array_to_string(w[i:i+4], ' ')
-                for i in generate_series(1, len(w) - 4)])) AS shingle
-      FROM toks WHERE len(w) >= 5
-    ),
+    WITH {_SH5_CTES},
     ev AS (SELECT DISTINCT shingle FROM sh5 WHERE doc_id % 13 = 7),
     tr AS (SELECT doc_id, shingle FROM sh5 WHERE doc_id % 13 <> 7)
     SELECT tr.doc_id, CAST(COUNT(*) AS BIGINT) AS n_hit_shingles
@@ -377,23 +356,7 @@ def d09_decontaminate(spark, sf_dir):
     # side: a hash-collision candidate pair sharing no shingle reads as
     # exact 0, keeping the report total.
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents
-    ),
-    shl AS (
-      SELECT doc_id,
-             [array_to_string(w[i:i+2], ' ')
-              for i in generate_series(1, len(w) - 2)] AS s
-      FROM toks WHERE len(w) >= 3
-    ),
-    mh AS (
-      SELECT doc_id,
-             {", ".join(f"{sql} AS mh_{j}" for j, sql in _MH_SQL.items())}
-      FROM shl
-    ),
-    bands AS (
-{_BANDS_SQL}
-    ),
+    WITH {_MINHASH_CTES},
     pairs AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM bands a JOIN bands b
@@ -412,12 +375,7 @@ def d09_decontaminate(spark, sf_dir):
     sh AS (
       SELECT doc_id, unnest(list_distinct(s)) AS shingle FROM shl
     ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
+    {_OVERLAP_CTES},
     exact AS (
       SELECT i.id_a, i.id_b,
              {sql_round('n_inter / (sa.n_sh + sb.n_sh - n_inter)', 4)}
@@ -626,14 +584,7 @@ def d23_contamination_report(spark, sf_dir):
              {sql_round(_QUALITY_EXPR, 4)} AS q
       FROM documents
     ),
-    r AS (
-      SELECT fp, doc_id, q,
-             row_number() OVER (PARTITION BY fp ORDER BY q DESC, doc_id) AS rn,
-             COUNT(*) OVER (PARTITION BY fp) AS n_copies
-      FROM scored
-    )
-    SELECT fp, doc_id AS keeper, q AS best_quality,
-           CAST(n_copies AS BIGINT) AS n_copies
+    {_KEEP_BEST_SQL}
     FROM r WHERE rn = 1
     """,
 )
@@ -656,19 +607,10 @@ def d10_dedup_keep_best(spark, sf_dir):
     "d12_decontaminated_split",
     # d09 ∘ d10 ∘ d08 composed: the eval slice's distinct 5-shingles knock
     # out contaminated train docs; survivors resolve to one keeper per
-    # normalized-content fp (argmax ≡ row_number, proven in d10); the
-    # 90/10 split gate hashes that same fp (salt 'split', cutoff 'e666').
+    # normalized-content fp (d10's _KEEP_BEST_SQL); the 90/10 split gate
+    # hashes that same fp (salt 'split', cutoff 'e666').
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents
-    ),
-    sh5 AS (
-      SELECT doc_id,
-             unnest(list_distinct(
-               [array_to_string(w[i:i+4], ' ')
-                for i in generate_series(1, len(w) - 4)])) AS shingle
-      FROM toks WHERE len(w) >= 5
-    ),
+    WITH {_SH5_CTES},
     ev AS (SELECT DISTINCT shingle FROM sh5 WHERE doc_id % 13 = 7),
     hits AS (
       SELECT DISTINCT t.doc_id FROM sh5 t JOIN ev USING (shingle)
@@ -680,14 +622,7 @@ def d10_dedup_keep_best(spark, sf_dir):
       WHERE doc_id % 13 <> 7
         AND doc_id NOT IN (SELECT doc_id FROM hits)
     ),
-    r AS (
-      SELECT fp, doc_id, q,
-             row_number() OVER (PARTITION BY fp ORDER BY q DESC, doc_id) AS rn,
-             COUNT(*) OVER (PARTITION BY fp) AS n_copies
-      FROM scored
-    )
-    SELECT fp, doc_id AS keeper, q AS best_quality,
-           CAST(n_copies AS BIGINT) AS n_copies,
+    {_KEEP_BEST_SQL},
            CASE WHEN substr(md5('split' || fp), 1, 4) < 'e666'
                 THEN 'train' ELSE 'eval' END AS split
     FROM r WHERE rn = 1
@@ -720,38 +655,7 @@ def d12_decontaminated_split(spark, sf_dir):
     # connected components → quality argmax per cluster (argmax ≡
     # row_number, the d10 equivalence)
     oracle=f"""
-    WITH RECURSIVE toks AS (
-      SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents
-    ),
-    shl AS (
-      SELECT doc_id,
-             [array_to_string(w[i:i+2], ' ')
-              for i in generate_series(1, len(w) - 2)] AS s
-      FROM toks WHERE len(w) >= 3
-    ),
-    mh AS (
-      SELECT doc_id,
-             {", ".join(f"{sql} AS mh_{j}" for j, sql in _MH_SQL.items())}
-      FROM shl
-    ),
-    bands AS (
-{_BANDS_SQL}
-    ),
-    prs AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
-      WHERE a.doc_id < b.doc_id
-    ),
-    edges AS (
-      SELECT id_a AS src, id_b AS dst FROM prs
-      UNION SELECT id_b, id_a FROM prs
-    ),
-    reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e
-        ON r.dst = e.src AND e.dst <> r.src
-    ),
+    WITH RECURSIVE {_CLOSURE_CTES},
     comp AS (
       SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
       FROM reach GROUP BY src
@@ -794,12 +698,7 @@ def d13_fuzzy_dedup_resolve(spark, sf_dir):
     "d03_ngram_jaccard",
     oracle=f"""
     WITH {_SHINGLES_CTE},
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
+    {_OVERLAP_CTES}
     SELECT id_a, id_b, jaccard FROM (
       SELECT id_a, id_b,
              {sql_round('n_inter / (sa.n_sh + sb.n_sh - n_inter)', 4)} AS jaccard
@@ -900,13 +799,24 @@ def _cos_sql(a: str, b: str) -> str:
     )
 
 
+# the embeddings as DOUBLE lists
+_V_CTE = """v AS (
+      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+      FROM embeddings
+    )"""
+
+# s01's per-probe top 5 over a scored(query_id, neighbor_id, cos_sim) CTE
+_TOP5_SQL = """ranked AS (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                 ORDER BY cos_sim DESC, neighbor_id) AS rank
+      FROM scored)
+    SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= 5"""
+
+
 @query(
     "s01_cosine_topk",
     oracle=f"""
-    WITH v AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      FROM embeddings
-    ),
+    WITH {_V_CTE},
     probes AS (
       SELECT vec_id AS query_id, e AS q FROM v
       WHERE vec_id IN ({", ".join(map(str, _PROBES))})
@@ -916,11 +826,7 @@ def _cos_sql(a: str, b: str) -> str:
              {sql_round(_cos_sql("q", "e"), 4)} AS cos_sim
       FROM v CROSS JOIN probes WHERE v.vec_id <> query_id
     ),
-    ranked AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY cos_sim DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= 5
+    {_TOP5_SQL}
     """,
 )
 def s01_cosine_topk(spark, sf_dir):
@@ -937,10 +843,8 @@ def _bucket_sql(e: str, m: int = 8) -> str:
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
 
-@query(
-    "s02_bucketed_topk",
-    oracle=f"""
-    WITH v AS (
+# s02's sign-bucketed vectors and probes
+_BUCKET_PROBE_CTES = f"""v AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
              {_bucket_sql("embedding")} AS bucket
       FROM embeddings
@@ -948,17 +852,19 @@ def _bucket_sql(e: str, m: int = 8) -> str:
     probes AS (
       SELECT vec_id AS query_id, e AS q, bucket FROM v
       WHERE vec_id IN ({", ".join(map(str, _PROBES))})
-    ),
+    )"""
+
+
+@query(
+    "s02_bucketed_topk",
+    oracle=f"""
+    WITH {_BUCKET_PROBE_CTES},
     scored AS (
       SELECT query_id, v.vec_id AS neighbor_id,
              {sql_round(_cos_sql("q", "e"), 4)} AS cos_sim
       FROM v JOIN probes USING (bucket) WHERE v.vec_id <> query_id
     ),
-    ranked AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY cos_sim DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= 5
+    {_TOP5_SQL}
     """,
 )
 def s02_bucketed_topk(spark, sf_dir):
@@ -1024,20 +930,33 @@ def m01_binary_stats(spark, sf_dir):
     return multimodal.binary_stats(multimodal.attach_binary_payload(d))
 
 
-@query(
-    "m02_image_decode_stats",
-    oracle=f"""
-    WITH hx AS (
+# a payload's UTF-8 bytes as hex (``h``) and their count (``nb``)
+_HX_CTE = """hx AS (
       SELECT doc_id, hex(encode(text)) AS h,
              octet_length(encode(text)) AS nb
       FROM documents
-    ),
+    )"""
+
+# m02's pixel list: every payload byte as an INT
+_BYTES_CTES = f"""{_HX_CTE},
     bytes AS (
       SELECT doc_id,
              list_transform(range(0, nb),
                  i -> CAST(('0x' || substr(h, i * 2 + 1, 2)) AS INT)) AS bs
       FROM hx
-    ),
+    )"""
+
+# m04's BMP geometry: 16 wide, nb // 16 rows, shorter payloads dropped
+_DIMS_CTES = f"""{_HX_CTE},
+    dims AS (
+      SELECT doc_id, h, nb // 16 AS ht FROM hx WHERE nb >= 16
+    )"""
+
+
+@query(
+    "m02_image_decode_stats",
+    oracle=f"""
+    WITH {_BYTES_CTES},
     sums AS (
       SELECT doc_id, len(bs) AS n,
              CAST(list_aggregate(bs, 'sum') AS DOUBLE) AS s,
@@ -1067,18 +986,8 @@ def m02_image_decode_stats(spark, sf_dir):
     "m03_frame_sample",
     # frame range derives from each payload's own length (no hard cap);
     # byte-true hex decode as in m01/m02
-    oracle="""
-    WITH hx AS (
-      SELECT doc_id, hex(encode(text)) AS h,
-             octet_length(encode(text)) AS nb
-      FROM documents
-    ),
-    bytes AS (
-      SELECT doc_id,
-             list_transform(range(0, nb),
-                 i -> CAST(('0x' || substr(h, i * 2 + 1, 2)) AS INT)) AS bs
-      FROM hx
-    ),
+    oracle=f"""
+    WITH {_BYTES_CTES},
     frames AS (
       SELECT doc_id, bs,
              unnest(range(0, CAST(ceil(len(bs) / 16.0) AS BIGINT))) AS i
@@ -1106,14 +1015,7 @@ def m03_frame_sample(spark, sf_dir):
     # leave the mean unchanged). Mean stays integer-sum/size — exact in
     # double on both engines, so rounding is drift-free.
     oracle=f"""
-    WITH hx AS (
-      SELECT doc_id, hex(encode(text)) AS h,
-             octet_length(encode(text)) AS nb
-      FROM documents
-    ),
-    dims AS (
-      SELECT doc_id, h, nb // 16 AS ht FROM hx WHERE nb >= 16
-    ),
+    WITH {_DIMS_CTES},
     bytes AS (
       SELECT doc_id, ht,
              list_transform(range(0, ht * 16),
@@ -1143,40 +1045,44 @@ def m04_real_bmp_roundtrip(spark, sf_dir):
     )
 
 
-@query(
-    "s03_ivf_topk",
-    oracle=f"""
-    WITH v AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      FROM embeddings
-    ),
+# s03's coarse quantizer: 16 deterministic centroids (the first 16
+# vectors) and every vector's cosine to each
+_IVF_CTES = f"""{_V_CTE},
     cents AS (SELECT vec_id AS cid, e AS c FROM v WHERE vec_id < 16),
     dists AS (
       SELECT v.vec_id, cid, {sql_round(_cos_sql("e", "c"), 6)} AS d
       FROM v CROSS JOIN cents
-    ),
+    )"""
+
+# each vector's nearest cell (tie: lower centroid id)
+_IVF_CELLS_CTES = f"""{_IVF_CTES},
     cells AS (
       SELECT vec_id, cid AS cell FROM (
         SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
                    ORDER BY d DESC, cid) AS rn FROM dists)
       WHERE rn = 1
-    ),
-    probes AS (
-      SELECT v.vec_id AS query_id, e AS q, cell
-      FROM v JOIN cells USING (vec_id)
-      WHERE vec_id IN ({", ".join(map(str, _PROBES))})
-    ),
-    scored AS (
+    )"""
+
+# s03's probe scan: each probe scores only the vectors of its cells
+_IVF_TOP5_SQL = f"""scored AS (
       SELECT query_id, v.vec_id AS neighbor_id,
              {sql_round(_cos_sql("q", "e"), 4)} AS cos_sim
       FROM v JOIN cells USING (vec_id) JOIN probes USING (cell)
       WHERE v.vec_id <> query_id
     ),
-    ranked AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY cos_sim DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= 5
+    {_TOP5_SQL}"""
+
+
+@query(
+    "s03_ivf_topk",
+    oracle=f"""
+    WITH {_IVF_CELLS_CTES},
+    probes AS (
+      SELECT v.vec_id AS query_id, e AS q, cell
+      FROM v JOIN cells USING (vec_id)
+      WHERE vec_id IN ({", ".join(map(str, _PROBES))})
+    ),
+    {_IVF_TOP5_SQL}
     """,
 )
 def s03_ivf_topk(spark, sf_dir):
@@ -1190,15 +1096,7 @@ def s03_ivf_topk(spark, sf_dir):
 @query(
     "s04_ivf_multiprobe",
     oracle=f"""
-    WITH v AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      FROM embeddings
-    ),
-    cents AS (SELECT vec_id AS cid, e AS c FROM v WHERE vec_id < 16),
-    dists AS (
-      SELECT v.vec_id, cid, {sql_round(_cos_sql("e", "c"), 6)} AS d
-      FROM v CROSS JOIN cents
-    ),
+    WITH {_IVF_CTES},
     ranked_cells AS (
       SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id
                  ORDER BY d DESC, cid) AS rn FROM dists
@@ -1212,17 +1110,7 @@ def s03_ivf_topk(spark, sf_dir):
       SELECT query_id, e AS q, cell
       FROM probe_cells JOIN v ON v.vec_id = query_id
     ),
-    scored AS (
-      SELECT query_id, v.vec_id AS neighbor_id,
-             {sql_round(_cos_sql("q", "e"), 4)} AS cos_sim
-      FROM v JOIN cells USING (vec_id) JOIN probes USING (cell)
-      WHERE v.vec_id <> query_id
-    ),
-    ranked AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY cos_sim DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= 5
+    {_IVF_TOP5_SQL}
     """,
 )
 def s04_ivf_multiprobe(spark, sf_dir):
@@ -2135,18 +2023,15 @@ def m05_audio_frame_energy(spark, sf_dir):
     return audio_frame_energy(wav, "doc_id", "payload", frame_len=64)
 
 
-@query(
-    "d14_chunk_dedup_keep_first",
-    # the oracle uses a ROW_NUMBER window over md5(chunk) — fine for an
-    # oracle; the ENGINE deliberately uses a min(struct) aggregate
-    # instead, because the window's hot keys are exactly the boilerplate
-    # being removed (see llmdata/dedup.chunk_dedup_keep_first)
-    oracle="""
-    WITH arrs AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    chunks AS (
-      SELECT doc_id,
+def _chunk_ctes(batch: str = "") -> str:
+    """d14's span chain over an ``arrs(doc_id, w)`` CTE: the 10-word
+    ``chunks``, each chunk's corpus-wide first occurrence (``firsts``) and
+    the documents ``rebuilt`` from their surviving chunks. With an
+    arrival batch column ``batch`` (d19) the chunks carry it and the
+    first occurrence ranks by it before ``(doc_id, pos)``."""
+    carry, rank = (f", {batch}", f"{batch}, ") if batch else ("", "")
+    return f"""chunks AS (
+      SELECT doc_id{carry},
              unnest(range(CAST(ceil(len(w) / 10.0) AS BIGINT))) AS pos,
              unnest(list_transform(range(CAST(ceil(len(w) / 10.0) AS BIGINT)),
                     i -> array_to_string(w[i*10+1 : i*10+10], ' '))) AS chunk
@@ -2156,7 +2041,7 @@ def m05_audio_frame_energy(spark, sf_dir):
       SELECT doc_id, pos FROM (
         SELECT doc_id, pos,
                ROW_NUMBER() OVER (PARTITION BY md5(chunk)
-                                  ORDER BY doc_id, pos) AS rn
+                                  ORDER BY {rank}doc_id, pos) AS rn
         FROM chunks) WHERE rn = 1
     ),
     rebuilt AS (
@@ -2165,7 +2050,27 @@ def m05_audio_frame_energy(spark, sf_dir):
              COUNT(*) AS n_kept
       FROM chunks c JOIN firsts f ON c.doc_id = f.doc_id AND c.pos = f.pos
       GROUP BY c.doc_id
+    )"""
+
+
+# d19's arrival split, shared by d20/d22: a third of the corpus seeds the
+# checkpoint (b = -1) and the rest arrives as batches 0 and 1, ids
+# interleaved across batches
+_ARRIVAL_B = """CASE CAST(doc_id % 3 AS INT)
+                  WHEN 0 THEN -1 WHEN 1 THEN 0 ELSE 1 END AS b"""
+
+
+@query(
+    "d14_chunk_dedup_keep_first",
+    # the oracle uses a ROW_NUMBER window over md5(chunk) — fine for an
+    # oracle; the ENGINE deliberately uses a min(struct) aggregate
+    # instead, because the window's hot keys are exactly the boilerplate
+    # being removed (see llmdata/dedup.chunk_dedup_keep_first)
+    oracle=f"""
+    WITH arrs AS (
+      SELECT doc_id, string_split(text, ' ') AS w FROM documents
     ),
+    {_chunk_ctes()},
     totals AS (
       SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_chunks
       FROM chunks GROUP BY doc_id
@@ -2190,21 +2095,7 @@ def d14_chunk_dedup_keep_first(spark, sf_dir):
 @query(
     "o09_cluster_balanced_sample",
     oracle=f"""
-    WITH v AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      FROM embeddings
-    ),
-    cents AS (SELECT vec_id AS cid, e AS c FROM v WHERE vec_id < 16),
-    dists AS (
-      SELECT v.vec_id, cid, {sql_round(_cos_sql("e", "c"), 6)} AS d
-      FROM v CROSS JOIN cents
-    ),
-    cells AS (
-      SELECT vec_id, cid AS cell FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                   ORDER BY d DESC, cid) AS rn FROM dists)
-      WHERE rn = 1
-    ),
+    WITH {_IVF_CELLS_CTES},
     picked AS (
       SELECT cell, vec_id,
              ROW_NUMBER() OVER (PARTITION BY cell
@@ -2240,18 +2131,10 @@ def o09_cluster_balanced_sample(spark, sf_dir):
 
 @query(
     "s05_ann_recall",
-    # both pipelines (exact + bucketed) rebuilt in SQL from the same CTEs
-    # as s01/s02, then joined — the oracle hashes the recall numbers
+    # both pipelines (exact + bucketed) rebuilt in SQL over s02's
+    # _BUCKET_PROBE_CTES, then joined — the oracle hashes the recall numbers
     oracle=f"""
-    WITH v AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
-             {_bucket_sql("embedding")} AS bucket
-      FROM embeddings
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, e AS q, bucket FROM v
-      WHERE vec_id IN ({", ".join(map(str, _PROBES))})
-    ),
+    WITH {_BUCKET_PROBE_CTES},
     exact_top AS (
       SELECT query_id, neighbor_id FROM (
         SELECT query_id, v.vec_id AS neighbor_id,
@@ -2316,15 +2199,8 @@ def s05_ann_recall(spark, sf_dir):
     # UTF-8 byte grid the BMP encodes, so the resized checksum is
     # closed-form: byte[(r*ht div 4)*16 + (c*16 div 4)] summed over the
     # 4x4 target grid
-    oracle="""
-    WITH hx AS (
-      SELECT doc_id, hex(encode(text)) AS h,
-             octet_length(encode(text)) AS nb
-      FROM documents
-    ),
-    dims AS (
-      SELECT doc_id, h, nb // 16 AS ht FROM hx WHERE nb >= 16
-    ),
+    oracle=f"""
+    WITH {_DIMS_CTES},
     cells AS (
       SELECT doc_id,
              CAST(list_aggregate(
@@ -2356,12 +2232,7 @@ def m06_resize_nn(spark, sf_dir):
     "d16_containment_neardup",
     oracle=f"""
     WITH {_SHINGLES_CTE},
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
+    {_OVERLAP_CTES},
     scored AS (
       SELECT CASE WHEN sa.n_sh < sb.n_sh
                     OR (sa.n_sh = sb.n_sh AND id_a < id_b)
@@ -2449,6 +2320,12 @@ _CURATION_MIN_Q = 0.35
 _CURATION_MAX_REP = 0.05
 _CURATION_SALT = "cur|"
 
+# the curation gate's three scores over t12's grams CTE (d18, d21)
+_CURATION_SCORES = f"""len(regexp_split_to_array(trim(text), '\\s+')) AS n_toks,
+             {sql_round(_QUALITY_EXPR, 4)} AS q,
+             {sql_round("CASE WHEN len(g) > 0 THEN (len(g) - len(list_distinct(g))) / CAST(len(g) AS DOUBLE) ELSE 0.0 END", 4)}
+               AS rep"""
+
 
 def _curation_scored(d, scorer: str):
     """The curation chain's CACHED score frame — ``(doc_id, fp, n_toks,
@@ -2514,27 +2391,13 @@ def _curation_gate():
 
 @query(
     "d18_curation_pipeline",
-    # t12's gate CTE ∘ d01's keep-first ∘ o08's weighted gate, all from
-    # the same SQL fragments their standalone oracles use — composition
-    # cannot drift from the attested components
+    # t12's GRAMS_CTES scored by _CURATION_SCORES ∘ d01's keep-first ∘
+    # o08's weighted gate
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, text, string_split({_NORM}, ' ') AS w FROM documents
-    ),
-    grams AS (
-      SELECT doc_id, text,
-             CASE WHEN len(w) >= 3
-                  THEN [array_to_string(w[i:i+2], ' ')
-                        for i in generate_series(1, len(w) - 2)]
-                  ELSE [] END AS g
-      FROM toks
-    ),
+    WITH {GRAMS_CTES},
     feats AS (
       SELECT doc_id, text,
-             len(regexp_split_to_array(trim(text), '\\s+')) AS n_toks,
-             {sql_round(_QUALITY_EXPR, 4)} AS q,
-             {sql_round("CASE WHEN len(g) > 0 THEN (len(g) - len(list_distinct(g))) / CAST(len(g) AS DOUBLE) ELSE 0.0 END", 4)}
-               AS rep
+             {_CURATION_SCORES}
       FROM grams
     ),
     kept AS (
@@ -2620,40 +2483,19 @@ def d18_curation_pipeline(spark, sf_dir):
 
 @query(
     "d19_chunk_ingest_incremental",
-    # d14's proven chunking/first-occurrence fragments, extended with the
-    # arrival-batch rank: first occurrence is by (batch, doc_id, pos),
-    # which is exactly what seeding the checkpoint then ingesting batches
-    # in order produces. Seed docs (b = -1) feed the state but emit no
+    # d14's _chunk_ctes over the _ARRIVAL_B split, with the arrival-batch
+    # rank: first occurrence is by (batch, doc_id, pos), which is exactly
+    # what seeding the checkpoint then ingesting batches in order
+    # produces. Seed docs (b = -1) feed the state but emit no
     # output rows.
-    oracle="""
+    oracle=f"""
     WITH arrs AS (
       SELECT doc_id,
-             CASE CAST(doc_id % 3 AS INT)
-                  WHEN 0 THEN -1 WHEN 1 THEN 0 ELSE 1 END AS b,
+             {_ARRIVAL_B},
              string_split(text, ' ') AS w
       FROM documents
     ),
-    chunks AS (
-      SELECT doc_id, b,
-             unnest(range(CAST(ceil(len(w) / 10.0) AS BIGINT))) AS pos,
-             unnest(list_transform(range(CAST(ceil(len(w) / 10.0) AS BIGINT)),
-                    i -> array_to_string(w[i*10+1 : i*10+10], ' '))) AS chunk
-      FROM arrs
-    ),
-    firsts AS (
-      SELECT doc_id, pos FROM (
-        SELECT doc_id, pos,
-               ROW_NUMBER() OVER (PARTITION BY md5(chunk)
-                                  ORDER BY b, doc_id, pos) AS rn
-        FROM chunks) WHERE rn = 1
-    ),
-    rebuilt AS (
-      SELECT c.doc_id,
-             string_agg(c.chunk, ' ' ORDER BY c.pos) AS clean_text,
-             COUNT(*) AS n_kept
-      FROM chunks c JOIN firsts f ON c.doc_id = f.doc_id AND c.pos = f.pos
-      GROUP BY c.doc_id
-    ),
+    {_chunk_ctes("b")},
     totals AS (
       SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS n_chunks
       FROM chunks WHERE b >= 0 GROUP BY doc_id, b
@@ -2713,40 +2555,16 @@ def d19_chunk_ingest_incremental(spark, sf_dir):
     )
 
 
-_BANDS20_SQL = _bands_sql(extra="b, ")
-
-
-@query(
-    "d20_band_ingest_incremental",
-    # d02's proven minhash/band fragments with the arrival batch carried:
-    # batch-0 admissions dedup against the seed's bands only; batch-1
-    # admissions dedup against seed + batch-0 ADMITTED docs (rejected
-    # docs never append their bands). Cross-side pairs only — intra-batch
-    # near-dups are both admitted, exactly the incremental operator's
-    # semantics. Docs too short to shingle have no bands and are always
-    # admitted on both sides.
-    oracle=f"""
-    WITH toks AS (
+# d20's admissions: the arrival-split docs' MinHash bands (seed b = -1),
+# batch 0's near-dups of the seed (dup0), batch 0's admitted docs (adm0)
+# and batch 1's near-dups of the seed and of adm0 (dup1)
+_ADMISSION_CTES = f"""toks AS (
       SELECT doc_id,
-             CASE CAST(doc_id % 3 AS INT)
-                  WHEN 0 THEN -1 WHEN 1 THEN 0 ELSE 1 END AS b,
+             {_ARRIVAL_B},
              string_split({_NORM}, ' ') AS w
       FROM documents
     ),
-    shl AS (
-      SELECT doc_id, b,
-             [array_to_string(w[i:i+2], ' ')
-              for i in generate_series(1, len(w) - 2)] AS s
-      FROM toks WHERE len(w) >= 3
-    ),
-    mh AS (
-      SELECT doc_id, b,
-             {", ".join(f"{sql} AS mh_{j}" for j, sql in _MH_SQL.items())}
-      FROM shl
-    ),
-    bands AS (
-{_BANDS20_SQL}
-    ),
+    {_minhash_ctes("b")},
     dup0 AS (
       SELECT DISTINCT n.doc_id
       FROM bands n JOIN bands c
@@ -2765,7 +2583,20 @@ _BANDS20_SQL = _bands_sql(extra="b, ")
       WHERE n.b = 1
         AND (c.b = -1
              OR (c.b = 0 AND c.doc_id IN (SELECT doc_id FROM adm0)))
-    )
+    )"""
+
+
+@query(
+    "d20_band_ingest_incremental",
+    # _ADMISSION_CTES: d02's _minhash_ctes with the arrival batch carried.
+    # Batch-0 admissions dedup against the seed's bands only; batch-1
+    # admissions dedup against seed + batch-0 ADMITTED docs (rejected
+    # docs never append their bands). Cross-side pairs only — intra-batch
+    # near-dups are both admitted, exactly the incremental operator's
+    # semantics. Docs too short to shingle have no bands and are always
+    # admitted on both sides.
+    oracle=f"""
+    WITH {_ADMISSION_CTES}
     SELECT doc_id, CAST(0 AS INT) AS ingest_batch FROM adm0
     UNION ALL
     SELECT doc_id, CAST(1 AS INT) AS ingest_batch FROM documents
@@ -2812,53 +2643,14 @@ def d20_band_ingest_incremental(spark, sf_dir):
 
 @query(
     "d22_compacted_ingest",
-    # d20's oracle VERBATIM in the admissions columns — compaction is a
+    # d20's _ADMISSION_CTES in the admissions columns — compaction is a
     # maintenance op and must be INVISIBLE to what the loop admits; any
     # admission drift under the mid-sequence compactions hash-fails.
     # max_files_per_bucket is the oracle's PREDICTION (1) against the
     # Spark side's measured post-compaction layout (p20's
     # prediction==actual pattern, here for a storage invariant).
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id,
-             CASE CAST(doc_id % 3 AS INT)
-                  WHEN 0 THEN -1 WHEN 1 THEN 0 ELSE 1 END AS b,
-             string_split({_NORM}, ' ') AS w
-      FROM documents
-    ),
-    shl AS (
-      SELECT doc_id, b,
-             [array_to_string(w[i:i+2], ' ')
-              for i in generate_series(1, len(w) - 2)] AS s
-      FROM toks WHERE len(w) >= 3
-    ),
-    mh AS (
-      SELECT doc_id, b,
-             {", ".join(f"{sql} AS mh_{j}" for j, sql in _MH_SQL.items())}
-      FROM shl
-    ),
-    bands AS (
-{_BANDS20_SQL}
-    ),
-    dup0 AS (
-      SELECT DISTINCT n.doc_id
-      FROM bands n JOIN bands c
-        ON n.band = c.band AND n.band_sig = c.band_sig AND c.b = -1
-      WHERE n.b = 0
-    ),
-    adm0 AS (
-      SELECT doc_id FROM documents
-      WHERE CAST(doc_id % 3 AS INT) = 1
-        AND doc_id NOT IN (SELECT doc_id FROM dup0)
-    ),
-    dup1 AS (
-      SELECT DISTINCT n.doc_id
-      FROM bands n JOIN bands c
-        ON n.band = c.band AND n.band_sig = c.band_sig
-      WHERE n.b = 1
-        AND (c.b = -1
-             OR (c.b = 0 AND c.doc_id IN (SELECT doc_id FROM adm0)))
-    )
+    WITH {_ADMISSION_CTES}
     SELECT doc_id, CAST(0 AS INT) AS ingest_batch,
            CAST(1 AS BIGINT) AS max_files_per_bucket
     FROM adm0
@@ -3199,29 +2991,16 @@ def o11_budgeted_mixture(spark, sf_dir):
 
 @query(
     "d21_curation_funnel",
-    # d18's own fragments, re-aggregated as stage flags: the funnel's
-    # numbers are BY CONSTRUCTION the stage cardinalities of the
-    # curation chain, so the report cannot drift from the pipeline it
-    # reports on. MIN(CASE WHEN gate ...) over an all-false fp group is
+    # d18's GRAMS_CTES and _CURATION_SCORES, re-aggregated as stage
+    # flags: the funnel's numbers are BY CONSTRUCTION the stage
+    # cardinalities of the curation chain, so the report cannot drift
+    # from the pipeline it reports on. MIN(CASE WHEN gate ...) over an all-false fp group is
     # NULL and NULL-compares false — identical in both engines.
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, text, string_split({_NORM}, ' ') AS w FROM documents
-    ),
-    grams AS (
-      SELECT doc_id, text,
-             CASE WHEN len(w) >= 3
-                  THEN [array_to_string(w[i:i+2], ' ')
-                        for i in generate_series(1, len(w) - 2)]
-                  ELSE [] END AS g
-      FROM toks
-    ),
+    WITH {GRAMS_CTES},
     feats AS (
       SELECT doc_id, md5({_NORM}) AS fp,
-             len(regexp_split_to_array(trim(text), '\\s+')) AS n_toks,
-             {sql_round(_QUALITY_EXPR, 4)} AS q,
-             {sql_round("CASE WHEN len(g) > 0 THEN (len(g) - len(list_distinct(g))) / CAST(len(g) AS DOUBLE) ELSE 0.0 END", 4)}
-               AS rep
+             {_CURATION_SCORES}
       FROM grams
     ),
     flags AS (

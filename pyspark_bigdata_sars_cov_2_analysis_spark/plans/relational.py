@@ -16,6 +16,9 @@ from pyspark_bigdata_sars_cov_2_analysis_spark.operators import (
     sorts,
     windows,
 )
+from pyspark_bigdata_sars_cov_2_analysis_spark.plans.fragments import (
+    ORDERED_PARTS_SQL,
+)
 from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import (
     tracked_cache,
     pround,
@@ -212,12 +215,7 @@ def a05_group_count(spark, sf_dir):
 
 @query(
     "a08_ordered_collect",
-    oracle="""
-    SELECT l_orderkey,
-           string_agg(CAST(l_partkey AS VARCHAR),
-                      ',' ORDER BY l_linenumber, l_partkey) AS parts
-    FROM lineitem GROUP BY l_orderkey
-    """,
+    oracle=ORDERED_PARTS_SQL,
 )
 def a08_ordered_collect(spark, sf_dir):
     """A8 — order-preserving list agg in one shuffle via

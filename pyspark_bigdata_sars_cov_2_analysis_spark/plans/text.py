@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark_bigdata_sars_cov_2_analysis_spark.functions import text as T
 from pyspark_bigdata_sars_cov_2_analysis_spark.plans.fragments import (
     DUCK_NORM,
+    GRAMS_CTES,
     LANG_ARGMAX_CASE,
 )
 from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import (
@@ -22,7 +23,7 @@ from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import (
 )
 
 
-# the shared fragment (review r14: llmdata.py re-defined the same string)
+# the text normalization every text/dedup oracle shares
 _DUCK_NORM = DUCK_NORM
 
 
@@ -451,28 +452,21 @@ _REP_EXPR = """CASE WHEN len(g) > 0
   THEN (len(g) - len(list_distinct(g))) / CAST(len(g) AS DOUBLE)
   ELSE 0.0 END"""
 
-
-@query(
-    "t12_quality_gate",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, text, string_split({_DUCK_NORM}, ' ') AS w FROM documents
-    ),
-    grams AS (
-      SELECT doc_id, text,
-             CASE WHEN len(w) >= 3
-                  THEN [array_to_string(w[i:i+2], ' ')
-                        for i in generate_series(1, len(w) - 2)]
-                  ELSE [] END AS g
-      FROM toks
-    ),
+# t12's three gate scores per document: toks → grams → feats
+_GATE_FEATS_CTES = f"""{GRAMS_CTES},
     feats AS (
       SELECT doc_id,
              {_NTOK} AS n_toks,
              {sql_round(_QUALITY_EXPR, 4)} AS q,
              {sql_round(_REP_EXPR, 4)} AS rep
       FROM grams
-    )
+    )"""
+
+
+@query(
+    "t12_quality_gate",
+    oracle=f"""
+    WITH {_GATE_FEATS_CTES}
     SELECT doc_id,
            (n_toks >= 30 AND q >= 0.35 AND rep <= 0.05) AS keep,
            concat_ws(',',
@@ -670,28 +664,11 @@ def t15_sentence_stats(spark, sf_dir):
 
 @query(
     "t16_quality_audit_frame",
-    # same fragments as t12's oracle, rolled up to the audit shape; the
+    # t12's _GATE_FEATS_CTES, rolled up to the audit shape; the
     # share division is forced to DOUBLE (DuckDB SUM over BIGINT is
     # HUGEINT — the u08/o06 hash class)
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, text, string_split({_DUCK_NORM}, ' ') AS w FROM documents
-    ),
-    grams AS (
-      SELECT doc_id, text,
-             CASE WHEN len(w) >= 3
-                  THEN [array_to_string(w[i:i+2], ' ')
-                        for i in generate_series(1, len(w) - 2)]
-                  ELSE [] END AS g
-      FROM toks
-    ),
-    feats AS (
-      SELECT doc_id,
-             {_NTOK} AS n_toks,
-             {sql_round(_QUALITY_EXPR, 4)} AS q,
-             {sql_round(_REP_EXPR, 4)} AS rep
-      FROM grams
-    ),
+    WITH {_GATE_FEATS_CTES},
     gate AS (
       SELECT (n_toks >= 30 AND q >= 0.35 AND rep <= 0.05) AS keep,
              concat_ws(',',

@@ -172,15 +172,20 @@ def u09_arrow_scalar_udf(spark, sf_dir):
     return d.select("doc_id", py_mix("n_chars", "doc_id").alias("py_mix"))
 
 
-@query(
-    "u13_grouped_arrow",
-    oracle="""
+# u13's per-label exact integer aggregate of the quantized embeddings;
+# u14's pandas UDAF computes the same numbers
+_QSUM_BY_LABEL_SQL = """
     SELECT label, CAST(COUNT(*) AS BIGINT) AS n,
            CAST(SUM(list_aggregate(list_transform(embedding,
              x -> CAST(floor(CAST(x AS DOUBLE) * 32768 + 0.5) AS BIGINT)),
              'sum')) AS BIGINT) AS qsum_total
     FROM embeddings GROUP BY label
-    """,
+    """
+
+
+@query(
+    "u13_grouped_arrow",
+    oracle=_QSUM_BY_LABEL_SQL,
 )
 def u13_grouped_arrow(spark, sf_dir):
     """D7-family completion — ``applyInArrow``, the last Python entry
@@ -204,13 +209,7 @@ def u13_grouped_arrow(spark, sf_dir):
 
 @query(
     "u14_pandas_udaf",
-    oracle="""
-    SELECT label, CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(list_aggregate(list_transform(embedding,
-             x -> CAST(floor(CAST(x AS DOUBLE) * 32768 + 0.5) AS BIGINT)),
-             'sum')) AS BIGINT) AS qsum_total
-    FROM embeddings GROUP BY label
-    """,
+    oracle=_QSUM_BY_LABEL_SQL,
 )
 def u14_pandas_udaf(spark, sf_dir):
     """§2.9 D8 — the grouped-AGGREGATE pandas UDF (UDAF), the last UDF

@@ -8,7 +8,6 @@ from __future__ import annotations
 import json
 import os
 import random
-import uuid
 
 EUROPE = ["Serbia", "Croatia", "Slovenia", "Montenegro", "Italy", "Norway"]
 COUNTRIES = EUROPE + ["Mainland China", "US", "Brazil", "India", "Japan"]
@@ -242,15 +241,20 @@ def write_radiography_parquet(tmpdir: str, spark) -> str:
 
 
 def jobs_during(spark, fn):
-    """``(fn(), number of Spark jobs fn ran)``, counted in a job group of
-    its own: a fresh name per call, so a re-run never counts an earlier
-    call's jobs. The group and description are cleared afterwards."""
-    sc = spark.sparkContext
-    group = f"jobs-during-{uuid.uuid4().hex[:12]}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    """``(fn(), number of Spark jobs started while fn ran)``, whatever
+    thread started them: a stream drained inside ``fn`` runs its
+    micro-batches on the stream's own thread, under the stream's own job
+    group. Spark numbers every job in submission order, so the count is
+    the job ids the scheduler handed out meanwhile. Raises if a
+    streaming query is already active, since its jobs would be counted
+    too."""
+    active = spark.streams.active
+    if active:
+        raise RuntimeError(
+            "jobs_during: streaming queries already active, their jobs "
+            f"would be counted: {[str(q.id) for q in active]}"
+        )
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.nextJobId()
+    out = fn()
+    return out, scheduler.nextJobId() - before

@@ -19,6 +19,9 @@ import os
 import pytest
 
 from pyspark_bigdata_sars_cov_2_analysis_spark.io import writers as W
+from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import (
+    write_ordered_files,
+)
 from tests.fixtures import jobs_during
 
 
@@ -210,6 +213,43 @@ def test_streaming_snapshot_sink_exactly_once_publish(spark, tmp_path):
     assert sorted(
         r.id for r in W.read_parquet_snapshot(spark, tbl).collect()
     ) == list(range(9))
+
+
+def test_jobs_during_counts_a_drained_streams_publishes(spark, tmp_path):
+    """A stream drained inside ``jobs_during`` runs its micro-batches on
+    the stream's own thread, under the stream's job group; the count
+    still includes them: here the two ``foreachBatch`` publishes, one
+    write job each. A streaming query already running when the count
+    starts is refused, since its jobs would be counted too."""
+    src, tbl = str(tmp_path / "src"), str(tmp_path / "tbl")
+    write_ordered_files(src, [_df(spark, 0, 5), _df(spark, 5, 8)])
+
+    def drain():
+        q = W.streaming_snapshot_sink(
+            spark.readStream.schema("id long, v long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src),
+            tbl,
+            str(tmp_path / "ckpt"),
+        ).start()
+        assert q.awaitTermination(120), "stream drain timed out"
+        return q
+
+    q, jobs = jobs_during(spark, drain)
+    assert [s["src_batch"] for s in W.list_parquet_snapshots(tbl)] == [0, 1]
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert jobs == len(sc.statusTracker().getJobIdsForGroup(str(q.runId))) == 2
+
+    stray = (
+        spark.readStream.format("rate").load()
+        .writeStream.format("noop").start()
+    )
+    try:
+        with pytest.raises(RuntimeError, match="already active"):
+            jobs_during(spark, lambda: None)
+    finally:
+        stray.stop()
 
 
 def test_restarted_sink_stream_is_refused(spark, tmp_path):

@@ -21,7 +21,10 @@ The same parse checks two rules the package keeps: no ``assert``
 statement (``python -O`` strips it, and the guard with it), and
 construction-time scratch dirs and stream drains have one owner,
 ``plans/registry.py`` (``scratch_dir`` and ``drain``): ``tempfile`` and
-``.awaitTermination(`` appear nowhere else.
+``.awaitTermination(`` appear nowhere else. And each piece of oracle SQL
+is written once: no 8 consecutive lines appear in two string literals
+of ``plans/*.py`` (a fragment two oracles share is one definition that
+both build from, see ``plans/fragments.py``).
 """
 
 from __future__ import annotations
@@ -213,4 +216,57 @@ def test_scratch_dirs_and_drains_only_in_registry():
     assert not found, (
         f"tempfile / awaitTermination outside plans/registry.py: {found} — "
         "use registry.scratch_dir and registry.drain"
+    )
+
+
+_COPY_WINDOW = 8
+
+
+def _plan_literals():
+    """``(location, stripped non-blank lines)`` of every multi-line string
+    literal in ``plans/*.py``, an f-string as written: a literal inside an
+    f-string's braces is part of that f-string, not a literal of its own."""
+    plans = os.path.join(REPO, PKG, "plans")
+    for fname in sorted(os.listdir(plans)):
+        if not fname.endswith(".py"):
+            continue
+        with open(os.path.join(plans, fname)) as fh:
+            src = fh.read()
+        tree = ast.parse(src)
+        src_lines = src.splitlines()
+        nested = {
+            id(inner)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.JoinedStr)
+            for inner in ast.walk(n)
+            if inner is not n
+        }
+        for n in ast.walk(tree):
+            is_str = isinstance(n, ast.JoinedStr) or (
+                isinstance(n, ast.Constant) and isinstance(n.value, str)
+            )
+            if is_str and n.end_lineno > n.lineno and id(n) not in nested:
+                # ast.get_source_segment, without re-splitting the file
+                # per literal (col offsets count UTF-8 bytes)
+                seg = src_lines[n.lineno - 1 : n.end_lineno]
+                seg[0] = seg[0].encode()[n.col_offset :].decode()
+                seg[-1] = seg[-1].encode()[: n.end_col_offset].decode()
+                lines = [ln.strip() for ln in seg if ln.strip()]
+                yield f"plans/{fname}:{n.lineno}", lines
+
+
+def test_no_oracle_sql_copied():
+    first: dict[tuple[str, ...], str] = {}
+    copies: dict[tuple[str, str], str] = {}
+    for loc, lines in _plan_literals():
+        for i in range(len(lines) - _COPY_WINDOW + 1):
+            window = tuple(lines[i : i + _COPY_WINDOW])
+            seen = first.setdefault(window, loc)
+            if seen != loc:
+                copies.setdefault((seen, loc), " / ".join(window)[:100])
+    assert not copies, (
+        f"{_COPY_WINDOW} consecutive lines appear in two string literals: "
+        + "; ".join(f"{a} and {b} ({text!r}...)" for (a, b), text in copies.items())
+        + " — define the shared SQL once (plans/fragments.py when several "
+        "plan modules use it) and build both from it"
     )
